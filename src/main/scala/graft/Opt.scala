@@ -70,12 +70,12 @@ object Opt {
         (System.nanoTime() - t0) / 1e9
       }
       // steady-state job count: one extra invocation inside its own job
-      // group, counted via the public status tracker (listener updates
-      // are async — the short sleep lets the bus drain)
+      // group, counted via the public status tracker once the (async)
+      // listener bus has drained
       spark.sparkContext.setJobGroup(s"optjobs:$n", s"optjobs:$n")
       fn(spark, sfDir).count()
       spark.sparkContext.clearJobGroup()
-      Thread.sleep(200)
+      org.apache.spark.sql.graft.BusShim.waitUntilEmpty(spark.sparkContext)
       val jobs =
         spark.sparkContext.statusTracker.getJobIdsForGroup(s"optjobs:$n").length
       println(f"[opt] $n%-28s min=${ts.min}%6.3f  jobs=$jobs%2d  runs=" +

@@ -28,11 +28,11 @@ import graft.util.Tables
   *
   * Scale posture: the edge derivation is one shuffle on the order key +
   * one distinct; every iterative op below follows the repo's loop
-  * invariant (localCheckpoint per round via [[graft.util.Iterate]],
-  * cache-before-count, unpersist in finally) and coalesces the loop to
-  * a few partitions below 1M edges where per-task overhead would
-  * dominate — above that the full-parallelism shape is unchanged, which
-  * is the 1000-executor path.
+  * invariant (localCheckpoint per round via [[graft.util.Iterate]]),
+  * budget-dispatched ops go through [[graft.util.Probes.byBudget]], and
+  * loops coalesce to a few partitions below 1M edges
+  * ([[graft.util.Iterate.coalesceSmall]]) — above that the
+  * full-parallelism shape is unchanged, which is the 1000-executor path.
   */
 object Graph {
 
@@ -118,71 +118,60 @@ object Graph {
       driverBudgetEdges: Long, memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17: ONE bounded probe replaces cache + count + collect
-    // (Probes.probeCollect); over budget the distributed arm caches and
-    // counts exactly as before.
-    graft.util.Probes.probeCollect(symIn.as[(Long, Long)],
-        driverBudgetEdges, memoKey).map { es =>
-      {
-        if (es.isEmpty) Seq.empty[(Long, Int)].toDF("node", "hops")
-        else {
-          val adj = es.groupBy(_._1).map { case (v, xs) =>
-            v -> xs.map(_._2)
-          }
-          val seed = es.iterator.map(_._1).min
-          val hops = scala.collection.mutable.LinkedHashMap(seed -> 0)
-          var frontier = Seq(seed)
-          for (h <- 1 to 4) {
-            frontier = frontier
-              .flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-              .distinct.filterNot(hops.contains)
-            frontier.foreach(u => hops(u) = h)
-          }
-          s.createDataset(hops.toSeq).toDF("node", "hops")
-            .orderBy("node")
+    graft.util.Probes.byBudget(symIn.as[(Long, Long)], driverBudgetEdges,
+        memoKey) { es =>
+      if (es.isEmpty) Seq.empty[(Long, Int)].toDF("node", "hops")
+      else {
+        val adj = es.groupBy(_._1).map { case (v, xs) =>
+          v -> xs.map(_._2)
         }
+        val seed = es.iterator.map(_._1).min
+        val hops = scala.collection.mutable.LinkedHashMap(seed -> 0)
+        var frontier = Seq(seed)
+        for (h <- 1 to 4) {
+          frontier = frontier
+            .flatMap(v => adj.getOrElse(v, Array.empty[Long]))
+            .distinct.filterNot(hops.contains)
+          frontier.foreach(u => hops(u) = h)
+        }
+        s.createDataset(hops.toSeq).toDF("node", "hops")
+          .orderBy("node")
       }
-    }.getOrElse {
-      val sym = symIn.cache()
-      try bfsDistributed(s, sym, sym.count()) finally sym.unpersist()
-    }
+    }(sym => bfsDistributed(s, sym.toDF()))
   }
 
-  private def bfsDistributed(s: SparkSession, sym: DataFrame,
-      nEdges: Long): DataFrame = {
+  private def bfsDistributed(s: SparkSession, sym: DataFrame): DataFrame = {
     val sp = s
     import sp.implicits._
-    {
-      val g = if (nEdges < (1L << 20)) sym.coalesce(4) else sym
-      val seedRow = g.agg(min(col("v"))).head()
-      if (seedRow.isNullAt(0)) {
-        // empty graph (possible at tiny SF): empty result, stable schema
-        Seq.empty[(Long, Int)].toDF("node", "hops")
-      } else {
-        val seed = seedRow.getLong(0)
-        var visited = graft.util.Iterate.checkpoint(
-          Seq((seed, 0)).toDF("node", "hops"))
-        // the frontier must be checkpointed too: the next round's plan
-        // reads it, so it cannot reference blocks the round releases
-        var frontier = visited
-        for (h <- 1 to 4) {
-          val nextF = graft.util.Iterate.checkpoint(
-            frontier._1.select(col("node").as("v"))
-              .join(g, "v").select(col("u").as("node")).distinct()
-              .join(visited._1, Seq("node"), "left_anti")
-              .withColumn("hops", lit(h)))
-          val grown = graft.util.Iterate.checkpoint(
-            visited._1.union(nextF._1))
-          if (frontier._2 ne visited._2)
-            frontier._2.unpersist(blocking = false)
-          visited._2.unpersist(blocking = false)
-          frontier = nextF
-          visited = grown
-        }
-        frontier._2.unpersist(blocking = false)
-        graft.util.Iterate.registerResult("graph_bfs", visited._2)
-        visited._1.orderBy("node")
+    val g = graft.util.Iterate.coalesceSmall(sym, sym.count())
+    val seedRow = g.agg(min(col("v"))).head()
+    if (seedRow.isNullAt(0)) {
+      // empty graph (possible at tiny SF): empty result, stable schema
+      Seq.empty[(Long, Int)].toDF("node", "hops")
+    } else {
+      val seed = seedRow.getLong(0)
+      var visited = graft.util.Iterate.checkpoint(
+        Seq((seed, 0)).toDF("node", "hops"))
+      // the frontier must be checkpointed too: the next round's plan
+      // reads it, so it cannot reference blocks the round releases
+      var frontier = visited
+      for (h <- 1 to 4) {
+        val nextF = graft.util.Iterate.checkpoint(
+          frontier._1.select(col("node").as("v"))
+            .join(g, "v").select(col("u").as("node")).distinct()
+            .join(visited._1, Seq("node"), "left_anti")
+            .withColumn("hops", lit(h)))
+        val grown = graft.util.Iterate.checkpoint(
+          visited._1.union(nextF._1))
+        if (frontier._2 ne visited._2)
+          frontier._2.unpersist(blocking = false)
+        visited._2.unpersist(blocking = false)
+        frontier = nextF
+        visited = grown
       }
+      frontier._2.unpersist(blocking = false)
+      graft.util.Iterate.registerResult("graph_bfs", visited._2)
+      visited._1.orderBy("node")
     }
   }
 
@@ -236,52 +225,45 @@ object Graph {
       driverBudgetEdges: Long, memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17: probe-and-collect, see bfsOnSym
-    graft.util.Probes.probeCollect(symIn.as[(Long, Long)],
-        driverBudgetEdges, memoKey).map { es =>
-      {
-        val deg = scala.collection.mutable.HashMap[Long, Long]()
-        es.foreach { case (v, _) =>
-          deg(v) = deg.getOrElse(v, 0L) + 1L
-        }
-        var rank = deg.keysIterator.map(_ -> 1000000000000L).toMap
-        for (_ <- 1 to 8) {
-          val inc = scala.collection.mutable.HashMap[Long, Long]()
-          es.foreach { case (v, u) =>
-            inc(u) = inc.getOrElse(u, 0L) + rank(v) / deg(v)
-          }
-          rank = rank.map { case (n, _) =>
-            n -> (150000000000L + inc.getOrElse(n, 0L) * 85 / 100)
-          }
-        }
-        s.createDataset(rank.toSeq).toDF("node", "rank")
-          .orderBy(desc("rank"), asc("node"))
+    graft.util.Probes.byBudget(symIn.as[(Long, Long)], driverBudgetEdges,
+        memoKey) { es =>
+      val deg = scala.collection.mutable.HashMap[Long, Long]()
+      es.foreach { case (v, _) =>
+        deg(v) = deg.getOrElse(v, 0L) + 1L
       }
-    }.getOrElse {
-      val sym = symIn.cache()
-      try {
-        val nEdges = sym.count()
-        val g = if (nEdges < (1L << 20)) sym.coalesce(4) else sym
-        val deg = g.groupBy(col("v").as("node"))
-          .agg(count(lit(1)).as("od"))
-        val nodes = g.select(col("v").as("node")).distinct()
-        var cur = graft.util.Iterate.checkpoint(
-          nodes.withColumn("rank", lit(1000000000000L)))
-        for (_ <- 1 to 8) {
-          val share = cur._1.join(deg, "node")
-            .select(col("node").as("v"), expr("rank div od").as("c"))
-          val contrib = share.join(g, "v")
-            .groupBy(col("u").as("node")).agg(sum(col("c")).as("inc"))
-          val next = graft.util.Iterate.checkpoint(
-            nodes.join(contrib, Seq("node"), "left")
-              .select(col("node"), (lit(150000000000L) +
-                expr("coalesce(inc, 0L) * 85 div 100")).as("rank")))
-          cur._2.unpersist(blocking = false)
-          cur = next
+      var rank = deg.keysIterator.map(_ -> 1000000000000L).toMap
+      for (_ <- 1 to 8) {
+        val inc = scala.collection.mutable.HashMap[Long, Long]()
+        es.foreach { case (v, u) =>
+          inc(u) = inc.getOrElse(u, 0L) + rank(v) / deg(v)
         }
-        graft.util.Iterate.registerResult("graph_pagerank", cur._2)
-        cur._1.orderBy(desc("rank"), asc("node"))
-      } finally sym.unpersist()
+        rank = rank.map { case (n, _) =>
+          n -> (150000000000L + inc.getOrElse(n, 0L) * 85 / 100)
+        }
+      }
+      s.createDataset(rank.toSeq).toDF("node", "rank")
+        .orderBy(desc("rank"), asc("node"))
+    } { sym =>
+      val g = graft.util.Iterate.coalesceSmall(sym.toDF(), sym.count())
+      val deg = g.groupBy(col("v").as("node"))
+        .agg(count(lit(1)).as("od"))
+      val nodes = g.select(col("v").as("node")).distinct()
+      var cur = graft.util.Iterate.checkpoint(
+        nodes.withColumn("rank", lit(1000000000000L)))
+      for (_ <- 1 to 8) {
+        val share = cur._1.join(deg, "node")
+          .select(col("node").as("v"), expr("rank div od").as("c"))
+        val contrib = share.join(g, "v")
+          .groupBy(col("u").as("node")).agg(sum(col("c")).as("inc"))
+        val next = graft.util.Iterate.checkpoint(
+          nodes.join(contrib, Seq("node"), "left")
+            .select(col("node"), (lit(150000000000L) +
+              expr("coalesce(inc, 0L) * 85 div 100")).as("rank")))
+        cur._2.unpersist(blocking = false)
+        cur = next
+      }
+      graft.util.Iterate.registerResult("graph_pagerank", cur._2)
+      cur._1.orderBy(desc("rank"), asc("node"))
     }
   }
 
@@ -451,35 +433,27 @@ object Graph {
       driverBudgetEdges: Long, memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17: probe-and-collect, see bfsOnSym
-    graft.util.Probes.probeCollect(
-        e.select(col("a"), col("b")).as[(Long, Long)],
-        driverBudgetEdges, memoKey).map { probed =>
-      {
-        var es = probed.toSet
-        var rounds = 0
-        var changed = true
-        while (changed) {
-          val deg = degreesOf(es)
-          val next = es.filter { case (a, b) => deg(a) >= 2 && deg(b) >= 2 }
-          changed = next.size != es.size
-          if (changed) {
-            rounds += 1
-            require(rounds <= KcoreMaxRounds,
-              s"2-core peel exceeded $KcoreMaxRounds rounds — raise " +
-                "KcoreMaxRounds AND the oracle unroll together")
-            es = next
-          }
+    graft.util.Probes.byBudget(e.select(col("a"), col("b")).as[(Long, Long)],
+        driverBudgetEdges, memoKey) { probed =>
+      var es = probed.toSet
+      var rounds = 0
+      var changed = true
+      while (changed) {
+        val deg = degreesOf(es)
+        val next = es.filter { case (a, b) => deg(a) >= 2 && deg(b) >= 2 }
+        changed = next.size != es.size
+        if (changed) {
+          rounds += 1
+          require(rounds <= KcoreMaxRounds,
+            s"2-core peel exceeded $KcoreMaxRounds rounds — raise " +
+              "KcoreMaxRounds AND the oracle unroll together")
+          es = next
         }
-        s.createDataset(degreesOf(es).toSeq.sortBy(_._1))
-          .toDF("node", "core_deg")
-          .orderBy("node")
       }
-    }.getOrElse {
-      val edges = e.select(col("a"), col("b")).cache()
-      try kcoreDistributed(s, edges, edges.count())
-      finally edges.unpersist()
-    }
+      s.createDataset(degreesOf(es).toSeq.sortBy(_._1))
+        .toDF("node", "core_deg")
+        .orderBy("node")
+    }(edges => kcoreDistributed(s, edges.toDF(), edges.count()))
   }
 
   private def degreesOf(es: Set[(Long, Long)]): Map[Long, Long] =
@@ -489,7 +463,7 @@ object Graph {
   private def kcoreDistributed(s: SparkSession, edges: DataFrame,
       n0: Long): DataFrame = {
     var cur = graft.util.Iterate.checkpoint(
-      if (n0 < (1L << 20)) edges.coalesce(4) else edges)
+      graft.util.Iterate.coalesceSmall(edges, n0))
     var size = n0
     var rounds = 0
     var changed = true
@@ -574,70 +548,63 @@ object Graph {
       driverBudgetEdges: Long, memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17: probe-and-collect, see bfsOnSym
-    graft.util.Probes.probeCollect(
+    graft.util.Probes.byBudget(
         symIn.select(col("v"), col("u")).as[(Long, Long)],
-        driverBudgetEdges, memoKey).map { es =>
-      {
-        // symmetric-input contract, guarded LOUDLY: the distributed arm
-        // takes its node set from sources only, so a node appearing only
-        // as a target would make the two arms silently diverge (here: a
-        // bare NoSuchElementException from lbl(u); there: a different
-        // node universe). Misuse must fail the same way on both arms.
-        val srcs = es.map(_._1).distinct
-        val srcSet = srcs.toSet
-        require(es.forall(e => srcSet(e._2)),
-          "lpaOf requires a symmetrized adjacency: every target node " +
-            "must also appear as a source (run symmetrize() first)")
-        var lbl: Map[Long, Long] = srcs.map(v => v -> v).toMap
-        for (_ <- 1 to LpaRounds) {
-          val freq = scala.collection.mutable.HashMap[(Long, Long), Long]()
-          es.foreach { case (v, u) =>
-            val k = (v, lbl(u)); freq(k) = freq.getOrElse(k, 0L) + 1L
-          }
-          lbl = freq.toSeq.groupBy(_._1._1).map { case (v, xs) =>
-            v -> xs.map { case ((_, l), c) => (c, l) }
-              .min(Ordering.by[(Long, Long), (Long, Long)] {
-                case (c, l) => (-c, l)
-              })._2
-          }
+        driverBudgetEdges, memoKey) { es =>
+      // symmetric-input contract, guarded LOUDLY: the distributed arm
+      // takes its node set from sources only, so a node appearing only
+      // as a target would make the two arms silently diverge (here: a
+      // bare NoSuchElementException from lbl(u); there: a different
+      // node universe). Misuse must fail the same way on both arms.
+      val srcs = es.map(_._1).distinct
+      val srcSet = srcs.toSet
+      require(es.forall(e => srcSet(e._2)),
+        "lpaOf requires a symmetrized adjacency: every target node " +
+          "must also appear as a source (run symmetrize() first)")
+      var lbl: Map[Long, Long] = srcs.map(v => v -> v).toMap
+      for (_ <- 1 to LpaRounds) {
+        val freq = scala.collection.mutable.HashMap[(Long, Long), Long]()
+        es.foreach { case (v, u) =>
+          val k = (v, lbl(u)); freq(k) = freq.getOrElse(k, 0L) + 1L
         }
-        s.createDataset(lbl.toSeq).toDF("node", "label").orderBy("node")
+        lbl = freq.toSeq.groupBy(_._1._1).map { case (v, xs) =>
+          v -> xs.map { case ((_, l), c) => (c, l) }
+            .min(Ordering.by[(Long, Long), (Long, Long)] {
+              case (c, l) => (-c, l)
+            })._2
+        }
       }
-    }.getOrElse {
-      val sym = symIn.select(col("v"), col("u")).cache()
-      try {
-        val nEdges = sym.count()
-        val g = if (nEdges < (1L << 20)) sym.coalesce(4) else sym
-        val nodes = g.select(col("v").as("node")).distinct()
-        // the SAME symmetric-input contract as the driver arm, enforced
-        // distributed (review finding, r12: a one-arm guard lets the
-        // above-budget path silently compute over a sources-only node
-        // universe): one anti-join existence probe on the cached input,
-        // paid once per kernel call — not per round
-        require(g.select(col("u").as("node")).distinct()
-          .join(nodes, Seq("node"), "left_anti").limit(1).count() == 0,
-          "lpaOf requires a symmetrized adjacency: every target node " +
-            "must also appear as a source (run symmetrize() first)")
-        var cur = graft.util.Iterate.checkpoint(
-          nodes.withColumn("lbl", col("node")))
-        for (_ <- 1 to LpaRounds) {
-          val freq = g
-            .join(cur._1.select(col("node").as("u"), col("lbl")), "u")
-            .groupBy(col("v"), col("lbl"))
-            .agg(count(lit(1)).as("c"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("v").orderBy(desc("c"), asc("lbl"))
-          val next = graft.util.Iterate.checkpoint(
-            freq.withColumn("rn", row_number().over(w))
-              .where(col("rn") === 1)
-              .select(col("v").as("node"), col("lbl")))
-          cur._2.unpersist(blocking = false)
-          cur = next
-        }
-        graft.util.Iterate.registerResult("graph_lpa", cur._2)
-        cur._1.select(col("node"), col("lbl").as("label")).orderBy("node")
-      } finally sym.unpersist()
+      s.createDataset(lbl.toSeq).toDF("node", "label").orderBy("node")
+    } { sym =>
+      val g = graft.util.Iterate.coalesceSmall(sym.toDF(), sym.count())
+      val nodes = g.select(col("v").as("node")).distinct()
+      // the SAME symmetric-input contract as the driver arm, enforced
+      // distributed (review finding, r12: a one-arm guard lets the
+      // above-budget path silently compute over a sources-only node
+      // universe): one anti-join existence probe on the cached input,
+      // paid once per kernel call — not per round
+      require(g.select(col("u").as("node")).distinct()
+        .join(nodes, Seq("node"), "left_anti").limit(1).count() == 0,
+        "lpaOf requires a symmetrized adjacency: every target node " +
+          "must also appear as a source (run symmetrize() first)")
+      var cur = graft.util.Iterate.checkpoint(
+        nodes.withColumn("lbl", col("node")))
+      for (_ <- 1 to LpaRounds) {
+        val freq = g
+          .join(cur._1.select(col("node").as("u"), col("lbl")), "u")
+          .groupBy(col("v"), col("lbl"))
+          .agg(count(lit(1)).as("c"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("v").orderBy(desc("c"), asc("lbl"))
+        val next = graft.util.Iterate.checkpoint(
+          freq.withColumn("rn", row_number().over(w))
+            .where(col("rn") === 1)
+            .select(col("v").as("node"), col("lbl")))
+        cur._2.unpersist(blocking = false)
+        cur = next
+      }
+      graft.util.Iterate.registerResult("graph_lpa", cur._2)
+      cur._1.select(col("node"), col("lbl").as("label")).orderBy("node")
     }
   }
 
@@ -803,25 +770,12 @@ object Graph {
       memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // probe-and-collect in ONE CollectLimit job (no distinct shuffle, no
-    // cache/count pair): if the raw edge list fits budget+1 rows we
-    // already hold the whole set — the driver BFS dedups edges itself
-    // (HashSet frontier/reached), so the distinct is only needed on the
-    // distributed arm. A raw count above budget+1 stops the collect
-    // early and falls through. An over-budget verdict is memoized per
-    // (application, memoKey, budget) — r17 ADVICE: at a 100 TB SF the
-    // budget is always exceeded and re-collecting budget+1 Rows per
-    // invocation is pure driver-allocation churn; null memoKey (the
-    // generic/test entry) never memoizes.
-    val raw = edgesIn.select(col("s"), col("t"))
-    val limN = (math.min(driverBudgetEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val es =
-      if (graft.util.Probes.knownOverBudget(s, memoKey, driverBudgetEdges))
-        null
-      else raw.limit(limN).as[(Long, Long)].collect()
-    if (es != null && es.length > driverBudgetEdges)
-      graft.util.Probes.recordOverBudget(s, memoKey, driverBudgetEdges)
-    if (es != null && es.length <= driverBudgetEdges) {
+    // the raw edge list is probed (no distinct shuffle): the driver BFS
+    // dedups edges itself (HashSet frontier/reached), so the distinct is
+    // only needed on the distributed arm
+    graft.util.Probes.byBudget(
+        edgesIn.select(col("s"), col("t")).as[(Long, Long)],
+        driverBudgetEdges, memoKey) { es =>
       val adj = es.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).distinct }
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val out = nodes.map { src =>
@@ -839,49 +793,45 @@ object Graph {
         }
         (src, reached.size.toLong)
       }
-      return s.createDataset(out.toSeq).toDF("node", s"n_reach$k")
+      s.createDataset(out.toSeq).toDF("node", s"n_reach$k")
+    } { raw =>
+      // small, reused k+1 times: materialize once, truncate lineage;
+      // superseded frontiers release their blocks, the two relations the
+      // RESULT reads (edges + final walk) outlive the loop and are
+      // released by the NEXT invocation (the Iterate.registerResult
+      // contract every Graph loop follows — review finding, r13)
+      val e = graft.util.Iterate.checkpoint(raw.toDF().distinct())
+      var walk = e
+      for (_ <- 2 to k) {
+        val next = graft.util.Iterate.checkpoint(
+          walk._1.union(
+            walk._1.as("w").join(e._1.as("x"), col("w.t") === col("x.s"))
+              .select(col("w.s").as("s"), col("x.t").as("t")))
+            .distinct())
+        if (walk._2 ne e._2) walk._2.unpersist(blocking = false)
+        walk = next
+      }
+      val nodes = e._1.select(col("s").as("node"))
+        .union(e._1.select(col("t").as("node"))).distinct()
+      graft.util.Iterate.registerResult("graph_reach_edges", e._2)
+      graft.util.Iterate.registerResult("graph_reach_walk", walk._2)
+      nodes.join(walk._1.groupBy("s").agg(count(lit(1)).as("n")),
+          nodes("node") === col("s"), "left")
+        .select(col("node"),
+          coalesce(col("n"), lit(0L)).as(s"n_reach$k"))
     }
-    // small, reused k+1 times: materialize once, truncate lineage;
-    // superseded frontiers release their blocks, the two relations the
-    // RESULT reads (edges + final walk) outlive the loop and are
-    // released by the NEXT invocation (the Iterate.registerResult
-    // contract every Graph loop follows — review finding, r13)
-    val e = graft.util.Iterate.checkpoint(raw.distinct())
-    var walk = e
-    for (_ <- 2 to k) {
-      val next = graft.util.Iterate.checkpoint(
-        walk._1.union(
-          walk._1.as("w").join(e._1.as("x"), col("w.t") === col("x.s"))
-            .select(col("w.s").as("s"), col("x.t").as("t")))
-          .distinct())
-      if (walk._2 ne e._2) walk._2.unpersist(blocking = false)
-      walk = next
-    }
-    val nodes = e._1.select(col("s").as("node"))
-      .union(e._1.select(col("t").as("node"))).distinct()
-    graft.util.Iterate.registerResult("graph_reach_edges", e._2)
-    graft.util.Iterate.registerResult("graph_reach_walk", walk._2)
-    nodes.join(walk._1.groupBy("s").agg(count(lit(1)).as("n")),
-        nodes("node") === col("s"), "left")
-      .select(col("node"),
-        coalesce(col("n"), lit(0L)).as(s"n_reach$k"))
   }
 
   private[graft] def sccOf(s: SparkSession, edgesIn: DataFrame,
       driverBudgetEdges: Long, memoKey: String = null): DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17: probe-and-collect, see bfsOnSym
-    graft.util.Probes.probeCollect(
+    graft.util.Probes.byBudget(
         edgesIn.select(col("s").cast("long"), col("t").cast("long"))
           .as[(Long, Long)],
-        driverBudgetEdges, memoKey).map { es =>
+        driverBudgetEdges, memoKey) { es =>
       s.createDataset(tarjanScc(es)).toDF("node", "scc")
-    }.getOrElse {
-      val edges = edgesIn.select(col("s").cast("long"), col("t").cast("long"))
-        .cache()
-      try sccDistributed(s, edges) finally edges.unpersist()
-    }
+    }(edges => sccDistributed(s, edges.toDF()))
   }
 
   /** Iterative (explicit-stack) Tarjan — the driver arm. Linear in
@@ -1095,50 +1045,32 @@ object Graph {
   val graph_topo: Q = (s, d) => {
     val sp = s
     import sp.implicits._
-    // r16 optimization: both inputs are persisted, tiny relations (SCC
-    // labels, condensation edges) — under the shared budget the whole
-    // query is two CollectLimit jobs + the Kahn DP + one createDataset
-    // (was: cache + distinct + members agg + DP collects + join +
-    // unpersist, ~7 jobs). Same integer DP (topoLayersLocal is the
-    // exact driver-arm code), members counted off the same label rows.
-    val limN = (math.min(Llm.CcDriverBudgetEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    // over-budget verdict memoized per (application, key, budget) —
-    // r17 ADVICE, see reachOf
+    // both inputs are persisted, tiny relations (SCC labels,
+    // condensation edges) — under the shared budget the whole query is
+    // two probe jobs + the Kahn DP + one createDataset, members counted
+    // off the same label rows. One key for both probes: either input
+    // over budget sends every later call straight to the distributed
+    // path.
+    val budget = Llm.CcDriverBudgetEdges
     val topoKey = s"graph_topo|$d"
-    val known = graft.util.Probes.knownOverBudget(
-      s, topoKey, Llm.CcDriverBudgetEdges)
-    val labels =
-      if (known) null
-      else sccLabels(s, d).limit(limN).as[(Long, Long)].collect()
-    val ces =
-      if (labels == null || labels.length > Llm.CcDriverBudgetEdges) null
-      else condensedEdges(s, d).limit(limN).as[(Long, Long)].collect()
-    if (!known && (labels.length > Llm.CcDriverBudgetEdges ||
-        ces.length > Llm.CcDriverBudgetEdges))
-      graft.util.Probes.recordOverBudget(s, topoKey, Llm.CcDriverBudgetEdges)
-    if (labels != null && ces != null &&
-        labels.length <= Llm.CcDriverBudgetEdges &&
-        ces.length <= Llm.CcDriverBudgetEdges) {
-      val members = labels.groupBy(_._2).map { case (c, xs) =>
-        c -> xs.length.toLong
-      }
-      val layers = topoLayersLocal(members.keys.toArray, ces)
-      s.createDataset(layers.map { case (c, l) => (c, l, members(c)) })
-        .toDF("scc", "layer", "n_members")
+    def distributed(comp: DataFrame, ced: DataFrame): DataFrame =
+      topoLayersOf(sp, comp.select(col("scc")).distinct(), ced, budget)
+        .join(comp.groupBy("scc").agg(count(lit(1)).as("n_members")), "scc")
+        .select(col("scc"), col("layer"), col("n_members"))
         .orderBy("scc")
-    } else {
-      val comp = sccLabels(s, d).cache()
-      try {
-        val ced = condensedEdges(s, d)
-        val comps = comp.select(col("scc")).distinct()
-        val members = comp.groupBy("scc")
-          .agg(count(lit(1)).as("n_members"))
-        topoLayersOf(sp, comps, ced, Llm.CcDriverBudgetEdges)
-          .join(members, "scc")
-          .select(col("scc"), col("layer"), col("n_members"))
+    graft.util.Probes.byBudget(sccLabels(s, d).as[(Long, Long)], budget,
+        topoKey) { labels =>
+      graft.util.Probes.byBudget(condensedEdges(s, d).as[(Long, Long)],
+          budget, topoKey) { ces =>
+        val members = labels.groupBy(_._2).map { case (c, xs) =>
+          c -> xs.length.toLong
+        }
+        val layers = topoLayersLocal(members.keys.toArray, ces)
+        s.createDataset(layers.map { case (c, l) => (c, l, members(c)) })
+          .toDF("scc", "layer", "n_members")
           .orderBy("scc")
-      } finally comp.unpersist()
-    }
+      }(ced => distributed(sccLabels(s, d), ced.toDF()))
+    }(comp => distributed(comp.toDF(), condensedEdges(s, d)))
   }
 
   /** layer(c) = longest path from any source to c over a DAG, budget-
@@ -1152,17 +1084,14 @@ object Graph {
       cedIn: DataFrame, driverBudgetEdges: Long): DataFrame = {
     val sp = s
     import sp.implicits._
-    val ced = cedIn.select(col("cs").cast("long"), col("ct").cast("long"))
-      .cache()
-    val comps = compsIn.select(col("scc").cast("long")).cache()
-    try {
-      val n = ced.count()
-      if (n <= driverBudgetEdges) {
-        val es = ced.as[(Long, Long)].collect()
-        val all = comps.as[Long].collect()
-        s.createDataset(topoLayersLocal(all, es)).toDF("scc", "layer")
-      } else topoLayersDistributed(s, comps, ced)
-    } finally { ced.unpersist(); comps.unpersist() }
+    val comps = compsIn.select(col("scc").cast("long"))
+    graft.util.Probes.byBudget(
+        cedIn.select(col("cs").cast("long"), col("ct").cast("long"))
+          .as[(Long, Long)],
+        driverBudgetEdges, null) { es =>
+      s.createDataset(topoLayersLocal(comps.as[Long].collect(), es))
+        .toDF("scc", "layer")
+    }(ced => topoLayersDistributed(s, comps, ced.toDF()))
   }
 
   /** the pure Kahn longest-path DP — shared by [[topoLayersOf]]'s driver
@@ -1313,38 +1242,27 @@ object Graph {
     import sp.implicits._
     val sel = edgesIn.select(col("s").cast("long"),
       col("t").cast("long"), col("w").cast("long"))
-    // r16 optimization (the closenessOf treatment): probe-and-collect in
-    // ONE CollectLimit job; on the driver arm the node set, the min-id
-    // source and the unreachable-node NULLs all derive from the
-    // collected edges (was: cache + count + distinct + min-agg +
-    // collect + left join, ~6 jobs). Value-identical — dist is the same
-    // Dijkstra, absent nodes get NULL exactly as the left join gave.
-    val limN = (math.min(driverBudgetEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    // over-budget verdict memoized per (application, memoKey, budget) —
-    // r17 ADVICE, see reachOf
-    val esProbe =
-      if (graft.util.Probes.knownOverBudget(s, memoKey, driverBudgetEdges))
-        null
-      else sel.limit(limN).as[(Long, Long, Long)].collect()
-    if (esProbe != null && esProbe.length > driverBudgetEdges)
-      graft.util.Probes.recordOverBudget(s, memoKey, driverBudgetEdges)
-    if (esProbe != null && esProbe.length <= driverBudgetEdges) {
-      if (esProbe.isEmpty)
-        return Seq.empty[(Long, Option[Long])].toDF("node", "dist")
-      val nodesL = (esProbe.map(_._1) ++ esProbe.map(_._2)).distinct.sorted
-      val dm = dijkstra(esProbe, nodesL.min).toMap
-      return s.createDataset(nodesL.map(n => (n, dm.get(n))).toSeq)
-        .toDF("node", "dist")
-    }
-    val edges = sel.cache()
-    try {
+    // on the driver arm the node set, the min-id source and the
+    // unreachable-node NULLs all derive from the collected edges —
+    // value-identical to the distributed arm's left join.
+    graft.util.Probes.byBudget(sel.as[(Long, Long, Long)], driverBudgetEdges,
+        memoKey) { es =>
+      if (es.isEmpty) Seq.empty[(Long, Option[Long])].toDF("node", "dist")
+      else {
+        val nodesL = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
+        val dm = dijkstra(es, nodesL.min).toMap
+        s.createDataset(nodesL.map(n => (n, dm.get(n))).toSeq)
+          .toDF("node", "dist")
+      }
+    } { ds =>
+      val edges = ds.toDF()
       val nodes = edges.select(col("s").as("node"))
         .union(edges.select(col("t").as("node"))).distinct()
       val src = nodes.agg(min(col("node"))).head().getLong(0)
       val dist: DataFrame = ssspDistributed(s, edges, src)
       nodes.join(dist, Seq("node"), "left")
         .select(col("node"), col("dist"))
-    } finally edges.unpersist()
+    }
   }
 
   /** Driver arm: binary-heap Dijkstra over positive integer weights,
@@ -1455,35 +1373,21 @@ object Graph {
     import sp.implicits._
     val sel = edgesIn.select(col("s").cast("long"),
       col("t").cast("long"), col("w").cast("long"))
-    // r16 optimization: probe-and-collect in ONE CollectLimit job (the
-    // reachOf pattern) and, on the driver arm, fold the harmonic
-    // aggregate on the driver too — src list, per-source Dijkstra,
-    // n_reach and the integer h_bp all derive from the collected edge
-    // list, so the arm is one job in, one createDataset out (was:
-    // cache+count+distinct+limit+agg+left-join, 6 jobs). Integer
-    // arithmetic (10000 div dist, dist > 0) — identical values; arm
-    // equality vs the distributed Bellman–Ford is GraphSpec's.
-    val limN = (math.min(driverBudgetEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    // over-budget verdict memoized per (application, memoKey, budget) —
-    // r17 ADVICE, see reachOf
-    val esProbe =
-      if (graft.util.Probes.knownOverBudget(s, memoKey, driverBudgetEdges))
-        null
-      else sel.limit(limN).as[(Long, Long, Long)].collect()
-    if (esProbe != null && esProbe.length > driverBudgetEdges)
-      graft.util.Probes.recordOverBudget(s, memoKey, driverBudgetEdges)
-    if (esProbe != null && esProbe.length <= driverBudgetEdges) {
-      val es = esProbe
+    // on the driver arm the src list, per-source Dijkstra, n_reach and
+    // the integer h_bp (10000 div dist, dist > 0) all derive from the
+    // collected edge list; arm equality vs the distributed Bellman–Ford
+    // is GraphSpec's.
+    graft.util.Probes.byBudget(sel.as[(Long, Long, Long)], driverBudgetEdges,
+        memoKey) { es =>
       val nodesL = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val srcsL = nodesL.take(ClosenessSources)
       val out = srcsL.map { src =>
         val dm = dijkstra(es, src).filter(_._1 != src)
         (src, dm.size.toLong, dm.map { case (_, dd) => 10000L / dd }.sum)
       }
-      return s.createDataset(out.toSeq).toDF("node", "n_reach", "h_bp")
-    }
-    val edges = sel.cache()
-    try {
+      s.createDataset(out.toSeq).toDF("node", "n_reach", "h_bp")
+    } { ds =>
+      val edges = ds.toDF()
       val nodes = edges.select(col("s").as("node"))
         .union(edges.select(col("t").as("node"))).distinct()
       // S smallest ids — a bounded driver payload at any graph size
@@ -1499,7 +1403,7 @@ object Graph {
         .select(col("node"),
           coalesce(col("nr"), lit(0L)).as("n_reach"),
           coalesce(col("hb"), lit(0L)).as("h_bp"))
-    } finally edges.unpersist()
+    }
   }
 
   /** Distributed arm: ONE Bellman–Ford min-relaxation fixpoint over

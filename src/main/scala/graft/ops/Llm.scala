@@ -725,7 +725,7 @@ object Llm {
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val e = embDouble(s, d)
-    val nVec = memoProbe(s, d, "hardneg_n_vec")(e.count())
+    val nVec = graft.util.Probes.memoProbe(s, d, "hardneg_n_vec")(e.count())
     val stride = anchorStrideFor(nVec)
     val anchors = e.where(col("vec_id") % stride === 0)
       .select(col("vec_id").as("anchor_id"), col("emb").as("av"),
@@ -740,7 +740,8 @@ object Llm {
       SimjoinBroadcastBytes, anchorRowCap)
     val ok =
       if (anchorRowCap == Long.MaxValue)
-        memoProbe(s, d, "hardneg_fit")(if (fits) 1L else 0L) == 1L
+        graft.util.Probes.memoProbe(s, d, "hardneg_fit")(
+          if (fits) 1L else 0L) == 1L
       else fits
     require(ok,
       s"hard-negative anchor slice (stride $stride over $nVec vectors) " +
@@ -865,11 +866,6 @@ object Llm {
     import s.implicits._
     val rows = embDouble(s, d).select(col("vec_id"), col("emb"))
       .as[(Long, Array[Double])]
-    def dotArr(x: Array[Double], y: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < x.length) { acc += x(i) * y(i); i += 1 }
-      acc
-    }
     val side = rows.collect().sortBy(_._1)
       .map { case (id, v) => (id, v, math.sqrt(dotArr(v, v))) }
     val bc = s.sparkContext.broadcast(side)
@@ -1268,22 +1264,11 @@ object Llm {
     val symAll = edges.select(col("a").as("v"), col("b").as("u"))
       .union(edges.select(col("b").as("v"), col("a").as("u")))
       .distinct()
-    // r17 (verdict #4): ONE bounded probe-and-collect replaces the
-    // cache + count + collect triple (3 jobs + a cache materialization
-    // → 1 job) — under budget the probe's rows ARE the union-find
-    // input, so the possibly-expensive edge producer still evaluates
-    // exactly once. Over budget the probe is discarded once per
-    // (application, memoKey, budget) — Probes.knownOverBudget skips it
-    // afterwards — and the distributed arm caches the edge set exactly
-    // as before. memoKey is null for the generic/test kernels (distinct
-    // synthetic inputs must not share a verdict), set at the four
-    // production call sites whose edge relation is fixed per run.
-    val probeCap = math.min(driverBudgetEdges, Int.MaxValue.toLong - 2L)
-    val probed =
-      if (graft.util.Probes.knownOverBudget(s, memoKey,
-          driverBudgetEdges)) null
-      else symAll.as[(Long, Long)].limit(probeCap.toInt + 1).collect()
-    if (probed != null && probed.length <= driverBudgetEdges) {
+    // memoKey is null for the generic/test kernels (distinct synthetic
+    // inputs must not share a verdict), set at the four production call
+    // sites whose edge relation is fixed per run.
+    graft.util.Probes.byBudget(symAll.as[(Long, Long)], driverBudgetEdges,
+        memoKey) { es =>
       // SMALL pair graph — the common case after a similarity
       // threshold: the distributed loop below is pure per-job overhead
       // here (~10 jobs for two rounds on a few hundred edges), so the
@@ -1292,55 +1277,39 @@ object Llm {
       // member after the union pass, so the output is independent of
       // union order — identical to the distributed result (equality
       // directly tested with driverBudgetEdges = 0 forcing the loop).
-      {
-        val es = probed
-        val parent = scala.collection.mutable.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
+      val parent = scala.collection.mutable.HashMap[Long, Long]()
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) {
+          val n = parent(c); parent(c) = r; c = n
         }
-        es.foreach { case (v, u) =>
-          parent.getOrElseUpdate(v, v); parent.getOrElseUpdate(u, u)
-          val rv = find(v); val ru = find(u)
-          if (rv != ru) parent(ru) = rv
-        }
-        val nodes = parent.keys.toArray // snapshot: find() mutates parent
-        val minOfRoot = scala.collection.mutable.HashMap[Long, Long]()
-        nodes.foreach { n =>
-          val r = find(n)
-          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
-        }
-        s.createDataset(nodes.toSeq.map(n => (n, minOfRoot(find(n)))))
-          .toDF("gid", "comp")
+        r
       }
-    } else {
-      if (probed != null)
-        graft.util.Probes.recordOverBudget(s, memoKey, driverBudgetEdges)
-      // cache BEFORE the sizing count so the (possibly expensive) edge
-      // producer materializes exactly once; the count reads the cache
-      val symC = symAll.cache()
-      try distributedComponents(symC, symC.count(), key)
-      finally symC.unpersist()
-    }
+      es.foreach { case (v, u) =>
+        parent.getOrElseUpdate(v, v); parent.getOrElseUpdate(u, u)
+        val rv = find(v); val ru = find(u)
+        if (rv != ru) parent(ru) = rv
+      }
+      val nodes = parent.keys.toArray // snapshot: find() mutates parent
+      val minOfRoot = scala.collection.mutable.HashMap[Long, Long]()
+      nodes.foreach { n =>
+        val r = find(n)
+        minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
+      }
+      s.createDataset(nodes.toSeq.map(n => (n, minOfRoot(find(n)))))
+        .toDF("gid", "comp")
+    }(symC => distributedComponents(symC.toDF(), key))
   }
 
   /** the beyond-budget closure: distributed hook + pointer-jump rounds
     * (the 100 TB path). `sym` is cached by the caller and stays valid for
     * the loop's lifetime; the returned labels are checkpointed, so the
     * caller's unpersist cannot invalidate them. */
-  private def distributedComponents(symAll: DataFrame, nEdges: Long,
+  private def distributedComponents(symAll: DataFrame,
       key: String): DataFrame = {
-    // the iteration runs ~6 shuffle stages per round; on a small pair
-    // graph (the common case after a similarity threshold) that's pure
-    // per-task overhead at the session's shuffle parallelism, so coalesce
-    // the loop to a handful of partitions below 1M edges — above the
-    // threshold the full-parallelism shape is unchanged
-    val sym = if (nEdges < (1L << 20)) symAll.coalesce(4) else symAll
+    val sym = graft.util.Iterate.coalesceSmall(symAll, symAll.count())
     // localCheckpoint per round truncates lineage — each round references
     // the previous labels three times, so the un-truncated logical plan
     // grows 3^rounds and OOMs Catalyst analysis long before the round
@@ -3334,7 +3303,7 @@ object Llm {
     val scored = s.table(t)
     // by construction the largest per-term candidate set is the top
     // query term's df = the corpus max df
-    val maxDf = memoProbe(s, d, "bm25_max_df")(
+    val maxDf = graft.util.Probes.memoProbe(s, d, "bm25_max_df")(
       scored.groupBy("term").count().agg(max(col("count")))
         .head().getLong(0))
     val ranked = topKByKey(scored, Seq("term"),
@@ -3448,7 +3417,7 @@ object Llm {
       .withColumn("sim_raw",
         call_function("graft_cosine", col("emb"), col("qv")))
       .select(col("term"), col("vec_id").as("doc_id"), col("sim_raw"))
-    val nDocs = memoProbe(s, d, "hybrid_ndocs")(
+    val nDocs = graft.util.Probes.memoProbe(s, d, "hybrid_ndocs")(
       documents(s, d).count())
     val dense = topKByKey(sims, Seq("term"),
       Seq(desc("sim_raw"), asc("doc_id")), hash(col("doc_id")),
@@ -3890,7 +3859,7 @@ object Llm {
       // O(tokens²) splits per doc (measured 3.4 s vs 1.0 s at sf0.1)
       .select(col("lang"), split(col("text"), " ").as("l"))
       .where(size(col("l")) >= 2)
-    val maxPerKey = memoProbe(s, d, "ngram_freq") {
+    val maxPerKey = graft.util.Probes.memoProbe(s, d, "ngram_freq") {
       val r = docs.groupBy("lang")
         .agg(sum(size(col("l")).cast("long") - 1L).as("__n"))
         .agg(max("__n")).collect()(0)
@@ -4182,18 +4151,6 @@ object Llm {
     }
   }
 
-  /** Skew probes memoized per (application, sfDir): the fixture tables
-    * are immutable for the application's lifetime (the [[broadcastFit]]
-    * assumption) and the probe answers a plan-shape question, so paying
-    * its scan once per application — not once per query invocation — is
-    * the bench-hot-path discipline simjoinAuto set. ngram_freq's probe
-    * would otherwise re-split every document per call (~1 s at sf0.1);
-    * cap_source's would rescan for a count-by-source. Moved to
-    * [[graft.util.Probes]] (r9) so the window dispatches share it. */
-  private def memoProbe(s: org.apache.spark.sql.SparkSession, d: String,
-      id: String)(run: => Long): Long =
-    graft.util.Probes.memoProbe(s, d, id)(run)
-
   /** Test seam for [[llm_cap_source]]: `skewThreshold` forces the salted
     * path on fixtures. The probe is one tiny two-phase count-by-source —
     * O(sources) rows to the driver, the simjoinAuto probe shape. */
@@ -4201,7 +4158,7 @@ object Llm {
       d: String, skewThreshold: Long = 8000000L): DataFrame = {
     val capBucket = (col("doc_id") % CapP) * CapA % CapP % 10000L
     val docs = documents(s, d)
-    val maxPerKey = memoProbe(s, d, "cap_source") {
+    val maxPerKey = graft.util.Probes.memoProbe(s, d, "cap_source") {
       val r = docs.groupBy("source").agg(count(lit(1)).as("__n"))
         .agg(max("__n")).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)

@@ -1100,20 +1100,14 @@ object Relational {
       driverBudgetEdges: Long): org.apache.spark.sql.DataFrame = {
     val sp = s
     import sp.implicits._
-    // r17 (verdict #4 probe-and-collect consolidation): the edge relation
-    // is DERIVED from the key column (parent = child div 10), so the
-    // driver arm needs exactly ONE bounded job — collect up to budget+11
-    // keys (≤ 10 possible sub-10 roots); an un-truncated probe proves the
-    // edge count ≤ budget and the parent map is rebuilt driver-side from
-    // the same values the old edge collect carried (keys positive where
-    // they walk, so `/` ≡ `div`). cache + count + two collects (4 jobs)
-    // → 1. A truncated probe dispatches distributed, which is always
-    // value-equal (arm-equality-tested), so the corner costs nothing.
-    val probeCap = math.min(driverBudgetEdges + 11, Int.MaxValue.toLong).toInt
-    val keys = customer(s, d).select(col("c_custkey")).as[Long]
-      .limit(probeCap).collect()
-    if (keys.length < probeCap &&
-        keys.count(_ >= 10).toLong <= driverBudgetEdges) {
+    // the edge relation is DERIVED from the key column (parent = child
+    // div 10), so the budget covers the key relation itself (edges ≤
+    // keys): the driver arm is ONE bounded job and the parent map is
+    // rebuilt driver-side from the collected keys (keys positive where
+    // they walk, so `/` ≡ `div`).
+    graft.util.Probes.byBudget(
+        customer(s, d).select(col("c_custkey")).as[Long],
+        driverBudgetEdges, "rel_recursive|" + d) { keys =>
       val parent = keys.iterator.filter(_ >= 10).map(k => k -> k / 10).toMap
       val out = keys.sorted.map { key =>
         var node = key; var depth = 0
@@ -1122,30 +1116,28 @@ object Relational {
       }
       s.createDataset(out.toSeq).toDF("key", "root", "depth")
         .orderBy("key")
-    } else {
-      val edges = customer(s, d).where(col("c_custkey") >= 10)
+    } { keys =>
+      val edges = keys.where(col("c_custkey") >= 10)
         .select(col("c_custkey").as("child"),
-          expr("c_custkey div 10").as("parent")).cache()
-      try {
-        val base = customer(s, d).select(col("c_custkey").as("key"),
-          col("c_custkey").as("node"), lit(0).as("depth"))
-        var cur = graft.util.Iterate.checkpoint(base)
-        var walking = cur._1.where(col("node") >= 10).count()
-        while (walking > 0) {
-          val done = cur._1.where(col("node") < 10)
-          val step = cur._1.where(col("node") >= 10)
-            .join(edges, col("node") === col("child"))
-            .select(col("key"), col("parent").as("node"),
-              (col("depth") + 1).as("depth"))
-          val next = graft.util.Iterate.checkpoint(done.unionAll(step))
-          cur._2.unpersist(blocking = false)
-          cur = next
-          walking = cur._1.where(col("node") >= 10).count()
-        }
-        graft.util.Iterate.registerResult("rel_recursive", cur._2)
-        cur._1.select(col("key"), col("node").as("root"), col("depth"))
-          .orderBy("key")
-      } finally edges.unpersist()
+          expr("c_custkey div 10").as("parent"))
+      val base = keys.select(col("c_custkey").as("key"),
+        col("c_custkey").as("node"), lit(0).as("depth"))
+      var cur = graft.util.Iterate.checkpoint(base)
+      var walking = cur._1.where(col("node") >= 10).count()
+      while (walking > 0) {
+        val done = cur._1.where(col("node") < 10)
+        val step = cur._1.where(col("node") >= 10)
+          .join(edges, col("node") === col("child"))
+          .select(col("key"), col("parent").as("node"),
+            (col("depth") + 1).as("depth"))
+        val next = graft.util.Iterate.checkpoint(done.unionAll(step))
+        cur._2.unpersist(blocking = false)
+        cur = next
+        walking = cur._1.where(col("node") >= 10).count()
+      }
+      graft.util.Iterate.registerResult("rel_recursive", cur._2)
+      cur._1.select(col("key"), col("node").as("root"), col("depth"))
+        .orderBy("key")
     }
   }
 

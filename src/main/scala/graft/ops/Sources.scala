@@ -210,61 +210,53 @@ object Sources {
   private[graft] def resolveRoots(tasks: DataFrame,
       driverBudgetRows: Long = Llm.CcDriverBudgetEdges,
       memoKey: String = null): DataFrame = {
-    // r16 optimization — budget dispatch (the graph_cc/bfs/reach
-    // discipline): under the row budget the parent chase runs as a
+    // under the row budget the parent chase runs as a
     // driver walk with path memoization over the collected (gid,
     // parent) pairs — the distributed doubling loop is 3-4 jobs PER
     // ROUND of pure overhead on a fixture-sized task set. Identical
     // semantics: absent parents terminate the chain (the task anchors
     // its own subtree), cycles/depth > 4096 fail loudly with the same
-    // "did not converge" contract. Probe-and-collect is ONE
-    // CollectLimit job; budget+1 rows falls through to the loop.
-    {
-      val sp = tasks.sparkSession
-      import sp.implicits._
-      val limN = (math.min(driverBudgetRows, Int.MaxValue.toLong - 1) + 1).toInt
-      // over-budget verdict memoized per (application, memoKey, budget)
-      // — r17 ADVICE, see Graph.reachOf
-      val rows =
-        if (graft.util.Probes.knownOverBudget(tasks.sparkSession, memoKey,
-            driverBudgetRows)) null
-        else tasks.select(col("gid"), col("parent")).limit(limN).collect()
-      if (rows != null && rows.length > driverBudgetRows)
-        graft.util.Probes.recordOverBudget(tasks.sparkSession, memoKey,
-          driverBudgetRows)
-      if (rows != null && rows.length <= driverBudgetRows) {
-        val par = rows.iterator.map { r =>
-          r.getString(0) -> (if (r.isNullAt(1)) null else r.getString(1))
-        }.toMap
-        val root = scala.collection.mutable.HashMap.empty[String, String]
-        def rootOf(g0: String): String = {
-          val path = scala.collection.mutable.ArrayBuffer.empty[String]
-          var g = g0
-          var r: String = null
-          while (r == null) {
-            root.get(g) match {
-              case Some(x) => r = x
-              case None =>
-                // <= 4096 (r17 ADVICE): the distributed doubling loop
-                // resolves depth up to 2^12 HOPS (4097-node chains) —
-                // the strict < failed one node earlier than the arm it
-                // must mirror.
-                require(path.length <= 4096,
-                  "root resolution did not converge within depth 2^12: " +
-                    "parent cycle or pathological nesting")
-                path += g
-                val p = par.getOrElse(g, null)
-                if (p == null || !par.contains(p)) r = g else g = p
-            }
+    // "did not converge" contract.
+    val sp = tasks.sparkSession
+    import sp.implicits._
+    graft.util.Probes.byBudget(tasks.select(col("gid"), col("parent")),
+        driverBudgetRows, memoKey) { rows =>
+      val par = rows.iterator.map { r =>
+        r.getString(0) -> (if (r.isNullAt(1)) null else r.getString(1))
+      }.toMap
+      val root = scala.collection.mutable.HashMap.empty[String, String]
+      def rootOf(g0: String): String = {
+        val path = scala.collection.mutable.ArrayBuffer.empty[String]
+        var g = g0
+        var r: String = null
+        while (r == null) {
+          root.get(g) match {
+            case Some(x) => r = x
+            case None =>
+              // <= 4096 (r17 ADVICE): the distributed doubling loop
+              // resolves depth up to 2^12 HOPS (4097-node chains) —
+              // the strict < failed one node earlier than the arm it
+              // must mirror.
+              require(path.length <= 4096,
+                "root resolution did not converge within depth 2^12: " +
+                  "parent cycle or pathological nesting")
+              path += g
+              val p = par.getOrElse(g, null)
+              if (p == null || !par.contains(p)) r = g else g = p
           }
-          path.foreach(x => root(x) = r)
-          r
         }
-        return sp.createDataset(rows.map(x => x.getString(0))
-            .map(g => (g, rootOf(g))).toSeq)
-          .toDF("gid", "root")
+        path.foreach(x => root(x) = r)
+        r
       }
-    }
+      sp.createDataset(rows.map(x => x.getString(0))
+          .map(g => (g, rootOf(g))).toSeq)
+        .toDF("gid", "root")
+    }(rootsDistributed)
+  }
+
+  /** the distributed arm of [[resolveRoots]]: pointer-jumping rounds to
+    * verified convergence over the cached (gid, parent) pairs. */
+  private def rootsDistributed(tasks: DataFrame): DataFrame = {
     val gids = tasks.select(col("gid").as("pg"))
     // pg == parent when the parent exists in the dataset, null otherwise
     val norm = tasks.select("gid", "parent")
@@ -332,7 +324,7 @@ object Sources {
         col("num_likes"))
     tasks.select(col("gid"), col("completed"), col("num_likes"))
       .join(resolveRoots(tasks.select("gid", "parent"),
-        memoKey = "asana_task_roots"), "gid")
+        memoKey = "asana_task_roots|" + fixtureDir), "gid")
       .groupBy("root")
       .agg(count(lit(1)).as("n_tasks"),
         sum(when(col("completed"), 1).otherwise(0)).as("n_done"),

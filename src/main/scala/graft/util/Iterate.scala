@@ -33,6 +33,13 @@ object Iterate {
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
+  /** A loop input of n rows, coalesced to 4 partitions below 1M rows:
+    * each round runs several shuffle stages, and on a small graph that
+    * is pure per-task overhead at the session's shuffle parallelism.
+    * Above the threshold the full-parallelism shape is unchanged. */
+  def coalesceSmall(df: DataFrame, n: Long): DataFrame =
+    if (n < (1L << 20)) df.coalesce(4) else df
+
   private val lastResult =
     new java.util.concurrent.ConcurrentHashMap[String, RDD[Row]]()
 

@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.spark.sql.{Dataset, SparkSession}
+
 /** Skew/size probes memoized per (application, sfDir, id): fixture
   * tables are immutable for the application's lifetime, and a probe
   * answers a plan-shape question (which dispatch arm runs), so paying
@@ -10,55 +12,58 @@ object Probes {
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  def memoProbe(s: org.apache.spark.sql.SparkSession, d: String,
-      id: String)(run: => Long): Long =
+  def memoProbe(s: SparkSession, d: String, id: String)(run: => Long): Long =
     memo.computeIfAbsent(
       s.sparkContext.applicationId + "|" + d + "|" + id,
       _ => java.lang.Long.valueOf(run)).longValue()
 
-  /** Memoized OVER-BUDGET verdicts for the probe-and-collect dispatches
-    * (r17 ADVICE): the fixture relations are immutable for the
-    * application's lifetime, so once a probe has collected budget+1
-    * rows and fallen through to the distributed arm, re-paying that
-    * ~budget-sized driver allocation on every later invocation buys
-    * nothing — at a 100 TB SF the budget is ALWAYS exceeded and the
-    * probe would otherwise pull ~10 MB of Rows per call. Keys carry
-    * applicationId + sfDir + call site + the budget value, so a
-    * test-seam budget (0, MaxValue) never poisons the default-budget
-    * dispatch. Under-budget probes are NOT memoized — their collect IS
-    * the result. */
+  /** Budget dispatch for every driver-or-distributed operator (the graph
+    * loops, the dedup closure, rel_recursive, asana root resolution):
+    * ONE bounded probe job collects up to budget+1 rows of `ds`. When
+    * they fit, the rows ARE the driver arm's input; otherwise `distArm`
+    * runs over `ds.cache()`, unpersisted in finally. An arm that needs
+    * the row count calls `count()` itself.
+    *
+    * Over-budget verdicts are memoized per (application, memoKey,
+    * budget): the inputs are immutable for the application's lifetime,
+    * so once a probe has fallen through, re-collecting ~budget rows per
+    * invocation is pure driver churn (at a 100 TB SF the budget is
+    * always exceeded). `memoKey` is call site + input tag (the sfDir,
+    * a fixture directory); the budget in the key keeps a test-seam
+    * budget (0, Long.MaxValue) from poisoning the default dispatch.
+    * Under-budget probes are not memoized — their collect is the
+    * result. A null key (generic kernels, tests) never memoizes, and
+    * caches `ds` BEFORE the probe instead, so the producer is evaluated
+    * exactly once on either arm. */
+  def byBudget[T, R](ds: Dataset[T], budget: Long, memoKey: String)(
+      driverArm: Array[T] => R)(distArm: Dataset[T] => R): R = {
+    val s = ds.sparkSession
+    var cached = memoKey == null
+    if (cached) ds.cache()
+    try {
+      val rows =
+        if (knownOverBudget(s, memoKey, budget)) null
+        else ds.limit((math.min(budget, Int.MaxValue - 1L) + 1L).toInt)
+          .collect()
+      if (rows != null && rows.length <= budget) driverArm(rows)
+      else {
+        if (rows != null) recordOverBudget(s, memoKey, budget)
+        if (!cached) { ds.cache(); cached = true }
+        distArm(ds)
+      }
+    } finally if (cached) ds.unpersist()
+  }
+
   private val overBudget =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** key = call site + sfDir (or any input-identifying tag); a null key
-    * disables memoization (the generic/test entry points). */
-  def knownOverBudget(s: org.apache.spark.sql.SparkSession, key: String,
+  private def knownOverBudget(s: SparkSession, key: String,
       budget: Long): Boolean =
     key != null && overBudget.contains(
       s.sparkContext.applicationId + "|" + key + "|" + budget)
 
-  def recordOverBudget(s: org.apache.spark.sql.SparkSession, key: String,
+  private def recordOverBudget(s: SparkSession, key: String,
       budget: Long): Unit =
     if (key != null) overBudget.add(
       s.sparkContext.applicationId + "|" + key + "|" + budget)
-
-  /** ONE bounded probe job for the budget-dispatched arms (r17 verdict
-    * #4): collect up to budget+1 rows — Some(rows) when the relation
-    * fits (the rows ARE the driver arm's input, so the producer is
-    * evaluated exactly once and the old cache + count + collect triple
-    * collapses to this single job); None when over budget, memoized per
-    * (application, memoKey, budget) so a 100 TB run pays the discarded
-    * probe once per call site, after which the caller's distributed arm
-    * caches and counts exactly as before. */
-  def probeCollect[T](ds: org.apache.spark.sql.Dataset[T], budget: Long,
-      memoKey: String): Option[Array[T]] = {
-    val s = ds.sparkSession
-    if (knownOverBudget(s, memoKey, budget)) None
-    else {
-      val cap = math.min(budget, Int.MaxValue.toLong - 2L)
-      val rows = ds.limit(cap.toInt + 1).collect()
-      if (rows.length <= budget) Some(rows)
-      else { recordOverBudget(s, memoKey, budget); None }
-    }
-  }
 }
