@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Steady-state per-query costs (sec, sf0.1, local[32]) recorded from a
     * measured-stable local run — the reference profile for the adaptive
@@ -18,16 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the NTZ→LTZ cast in Tables.events follows the session timezone;
-      // Verify and the test base pin UTC — the bench session must match or
-      // a non-UTC host reads shifted instants (round-7 ADVICE)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(cpus)
     // JIT/codegen warmup at the smallest SF: compiles every query's code
     // paths cheaply so measured times reflect steady state, not which query
     // happened to run first (observed 8s→40s swings without this).

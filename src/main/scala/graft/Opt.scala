@@ -24,13 +24,7 @@ object Opt {
     val reps = sys.env.getOrElse("GRAFT_OPT_REPS", "5").toInt
     val planDir = sys.env.get("GRAFT_PLAN_DIR")
     val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(cpus)
     val all = SparkEntry.queries
     val names =
       if (args.isEmpty || args.sameElements(Array("ALL"))) all.keys.toSeq.sorted

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A/B/C measurement behind the 100×-scale skew story (round-7 verdict
@@ -35,15 +35,9 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "4000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // broadcast off: the regime where skew mitigation is the only lever
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // broadcast off: the regime where skew mitigation is the only lever
+    val spark = graft.util.Sessions.local(cpus,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
     // 1M-row dim: big enough that broadcast is off the table in the
     // regime being modeled, small enough that the salted arm's ×SALT

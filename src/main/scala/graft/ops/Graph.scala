@@ -49,27 +49,14 @@ object Graph {
       .select("a", "b").distinct()
   }
 
-  private val edgesBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The edge relation, persisted once per (application, sfDir, m) —
-    * all four graph ops traverse the same two derived graphs, so the
-    * lineitem self-join + distinct is paid once and every later op
-    * reads the (tiny) edge table: the same pay-the-layout-once
-    * discipline as the LSH band tables. Deterministic over immutable
-    * inputs, so reuse cannot change an oracle row. */
+  /** The persisted edge relation: every graph op traverses one of the
+    * same two derived graphs, so the lineitem self-join + distinct is
+    * paid once and every later op reads the (tiny) edge table. */
   private[graft] def supplierEdges(s: SparkSession, d: String,
-      m: Int): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_m" + m)
-    val t = s"graft_graph_edges_$tag"
-    graft.util.AppCleanup.buildOnce(edgesBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_edges")
-      graft.util.AppCleanup.resetTable(s, t)
-      supplierEdgesRaw(s, d, m).write.mode("overwrite").saveAsTable(t)
+      m: Int): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_edges", d + "_m" + m) {
+      supplierEdgesRaw(s, d, m)
     }
-    s.table(t)
-  }
 
   /** (v, u) both directions — the adjacency the iterative ops traverse. */
   private def symmetrize(e: DataFrame): DataFrame =
@@ -298,55 +285,27 @@ object Graph {
     jaccardFromCommon(jaccardCommonPersisted(s, d, 11),
       supplierEdges(s, d, 11), supplierDeg(s, d, 11))
 
-  private val commonBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The hub-capped common-neighbor relation of [[graph_jaccard]],
-    * persisted once per (application, sfDir, m) — r16 optimization,
-    * one step past [[supplierDeg]] in the same pay-layout-once
-    * discipline (graph_topo's condensation edges set the precedent of
-    * persisting a deterministic join of already-persisted relations):
-    * the wedge self-join + count is ~10 M wedge rows at sf0.1 paid on
-    * every invocation for a relation bounded by node PAIRS (≤ 500 k),
-    * deterministic over the immutable edge table. The live kernel
-    * stays [[jaccardCommon]] (spec-driven; equality seam in
+  /** The persisted hub-capped common-neighbor relation of
+    * [[graph_jaccard]]: the wedge self-join + count is ~10 M wedge rows
+    * at sf0.1 for a relation bounded by node PAIRS (≤ 500 k). The live
+    * kernel stays [[jaccardCommon]] (spec-driven; equality seam in
     * OperatorSpec's persisted-artifact proofs). */
   private[graft] def jaccardCommonPersisted(s: SparkSession, d: String,
-      m: Int): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_m" + m)
-    val t = s"graft_graph_common_$tag"
-    graft.util.AppCleanup.buildOnce(commonBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_common")
-      graft.util.AppCleanup.resetTable(s, t)
+      m: Int): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_common", d + "_m" + m) {
       jaccardCommon(supplierEdges(s, d, m), supplierDeg(s, d, m),
         JaccardDegreeCap)
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
-  private val degBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The degree relation of [[supplierEdges]], persisted once per
-    * (application, sfDir, m) like the edge table itself: jaccardTopK
+  /** The persisted degree relation of [[supplierEdges]]: jaccardTopK
     * reads it THREE times (hub filter + both denominator broadcasts),
     * and re-aggregating the symmetrized adjacency per read measured
     * +0.3 s at sf0.1 (r10 verdict). One row per node — tiny. */
   private[graft] def supplierDeg(s: SparkSession, d: String,
-      m: Int): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_m" + m)
-    val t = s"graft_graph_deg_$tag"
-    graft.util.AppCleanup.buildOnce(degBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_deg")
-      graft.util.AppCleanup.resetTable(s, t)
-      jaccardDeg(supplierEdges(s, d, m)).write.mode("overwrite")
-        .saveAsTable(t)
+      m: Int): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_deg", d + "_m" + m) {
+      jaccardDeg(supplierEdges(s, d, m))
     }
-    s.table(t)
-  }
 
   /** Wedge-center degree cap for [[graph_jaccard]]: far above any
     * fixture degree (sf0.1's densest supplier sits near 60), low
@@ -519,28 +478,15 @@ object Graph {
 
   private[graft] val LpaRounds = 4
 
-  private val lpaBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The (node, label) LPA partition, persisted once per (application,
-    * sfDir, m) like [[supplierEdges]]/[[supplierDeg]]: graph_lpa emits
-    * it and graph_modularity joins it twice — the pay-the-rounds-once
-    * discipline. Deterministic over immutable inputs (synchronous
-    * rounds, min-label ties), so reuse cannot change an oracle row. */
+  /** The persisted (node, label) LPA partition: graph_lpa emits it and
+    * graph_modularity joins it twice, so the rounds run once
+    * (synchronous rounds, min-label ties — deterministic). */
   private[graft] def lpaLabels(s: SparkSession, d: String,
-      m: Int): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_m" + m)
-    val t = s"graft_graph_lpa_$tag"
-    graft.util.AppCleanup.buildOnce(lpaBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_lpa")
-      graft.util.AppCleanup.resetTable(s, t)
+      m: Int): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_lpa", d + "_m" + m) {
       lpaOf(s, symmetrize(supplierEdges(s, d, m)), Llm.CcDriverBudgetEdges,
         memoKey = "graph_lpa|" + d + "|" + m)
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   /** kernel over a symmetric (v, u) adjacency — GraphSpec hand-checks a
     * planted two-clique bridge graph and arm-equality-tests budget 0. */
@@ -704,28 +650,14 @@ object Graph {
     oriented.union(reversed).distinct()
   }
 
-  private val sccBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The SCC label relation (node, scc), persisted once per
-    * (application, sfDir): [[graph_scc]] orders it and [[graph_topo]]'s
-    * condensation joins it, so the Tarjan / min-label matching pass is
-    * paid once — the same pay-the-layout-once discipline as the edge
-    * relation itself. Deterministic over immutable inputs, so reuse
-    * cannot change an oracle row. */
-  private[graft] def sccLabels(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_graph_scc_$tag"
-    graft.util.AppCleanup.buildOnce(sccBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_scc")
-      graft.util.AppCleanup.resetTable(s, t)
+  /** The persisted SCC label relation (node, scc): [[graph_scc]] orders
+    * it and [[graph_topo]]'s condensation joins it, so the Tarjan /
+    * min-label matching pass is paid once. */
+  private[graft] def sccLabels(s: SparkSession, d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_scc", d) {
       sccOf(s, directedSupplierEdges(s, d), Llm.CcDriverBudgetEdges,
-          memoKey = "graph_scc|" + d)
-        .write.mode("overwrite").saveAsTable(t)
+        memoKey = "graph_scc|" + d)
     }
-    s.table(t)
-  }
 
   /** Strongly connected components of the directed supplier graph:
     * (node, scc) with scc = the smallest member id. Budget-dispatched
@@ -1001,6 +933,22 @@ object Graph {
     } finally eR.foreach(_.unpersist(blocking = false))
   }
 
+  /** The persisted SCC-condensation edge relation (cs, ct — distinct
+    * cross-component edges), a join of the directed edges with
+    * [[sccLabels]]; what stays live in [[graph_topo]] is the
+    * longest-path layering — the scheduling computation the operator
+    * exists for. */
+  private def condensedEdges(s: SparkSession, d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_ced", d) {
+      val comp = sccLabels(s, d)
+      val labS = comp.select(col("node").as("s"), col("scc").as("cs"))
+      val labT = comp.select(col("node").as("t"), col("scc").as("ct"))
+      directedSupplierEdges(s, d)
+        .join(broadcast(labS), "s").join(broadcast(labT), "t")
+        .where(col("cs") =!= col("ct"))
+        .select("cs", "ct").distinct()
+    }
+
   /** Topological LAYERING of the SCC condensation — the directed
     * family's scheduling primitive (what "which task batches can run in
     * parallel" asks of a dependency graph): condense the directed graph
@@ -1013,35 +961,6 @@ object Graph {
     * never edge-sized, and the label join broadcasts (labels ≪ edges).
     * The oracle replays condensation + the layer as a recursive max-
     * depth walk (finite BECAUSE the condensation is a DAG). */
-  private val cedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The SCC-condensation edge relation (cs, ct — distinct
-    * cross-component edges), persisted once per (application, sfDir):
-    * a deterministic join of two relations that are THEMSELVES
-    * persisted artifacts (the directed edges and the [[sccLabels]]),
-    * so it follows the same pay-once discipline; what stays live in
-    * [[graph_topo]] is the longest-path layering — the scheduling
-    * computation the operator exists for. */
-  private def condensedEdges(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_graph_ced_$tag"
-    graft.util.AppCleanup.buildOnce(cedBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_ced")
-      graft.util.AppCleanup.resetTable(s, t)
-      val comp = sccLabels(s, d)
-      val labS = comp.select(col("node").as("s"), col("scc").as("cs"))
-      val labT = comp.select(col("node").as("t"), col("scc").as("ct"))
-      directedSupplierEdges(s, d)
-        .join(broadcast(labS), "s").join(broadcast(labT), "t")
-        .where(col("cs") =!= col("ct"))
-        .select("cs", "ct").distinct()
-        .write.mode("overwrite").saveAsTable(t)
-    }
-    s.table(t)
-  }
-
   val graph_topo: Q = (s, d) => {
     val sp = s
     import sp.implicits._
@@ -1166,8 +1085,8 @@ object Graph {
     * unordered a<b pair contributes one orientation, plus at most one
     * reverse edge — a different tuple), so no aggregation is needed
     * after the union and both engines replay the relation verbatim.
-    * Persisted once per (application, sfDir), the supplierEdges
-    * discipline. */
+    * Persisted ([[weightedDirectedEdges]]): graph_sssp and
+    * graph_closeness both traverse it. */
   private[graft] def weightedDirectedEdgesRaw(s: SparkSession,
       d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -1194,17 +1113,10 @@ object Graph {
   }
 
   private[graft] def weightedDirectedEdges(s: SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_wdir23")
-    val t = s"graft_graph_wedges_$tag"
-    graft.util.AppCleanup.buildOnce(edgesBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_graph_edges")
-      graft.util.AppCleanup.resetTable(s, t)
-      weightedDirectedEdgesRaw(s, d).write.mode("overwrite").saveAsTable(t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_graph_wedges", d + "_wdir23") {
+      weightedDirectedEdgesRaw(s, d)
     }
-    s.table(t)
-  }
 
   /** The ONE hop/round bound shared by the driver arm's hop check, the
     * distributed arm's relaxation-round bound, AND the oracle's

@@ -28,29 +28,18 @@ object Llm {
     * explode`) runs interpreted per element and profiled at 9.5 s of every
     * ~10 s shingle-based query at sf0.1 — this loop does the identical set
     * construction in ~0.5 s. Shared by jaccard / minhash / the UDAF / the
-    * pipeline, so the win applies four times. */
-  private val shingleTableBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def shingleRows(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    // persisted once per (application, sfDir) — the shingle relation is
-    // deterministic over the immutable corpus and feeds FIVE operators
-    // (jaccard, minhash, minhash_agg, dedup_text, udf_scalar), several of
-    // which read it 2–3× inside one plan (DF-cap groupBy + join + window),
-    // so the in-flight kernel used to run up to three times per
-    // invocation. Same pay-layout-once discipline as the LSH band / τ≥0.8
-    // edge tables; at 100 TB the tokenized relation is an ingest artifact.
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_shingle_$tag"
-    graft.util.AppCleanup.buildOnce(shingleTableBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_shingle")
-      graft.util.AppCleanup.resetTable(s, t)
+    * pipeline, so the win applies four times.
+    *
+    * Persisted: the relation feeds SIX operators (jaccard, minhash,
+    * minhash_agg, dedup_text, dedup_incr, udf_scalar), several of which
+    * read it 2–3× inside one plan (DF-cap groupBy + join + window), so
+    * the in-flight kernel used to run up to three times per invocation;
+    * at 100 TB the tokenized relation is an ingest artifact. */
+  private def shingleRows(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_shingle", d) {
       shingleRowsOf(documents(s, d))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   /** kernel over an arbitrary (doc_id, text) frame — also accepts a
     * STREAMING frame (stateless flatMap), which is how the incremental
@@ -200,30 +189,16 @@ object Llm {
   /** all candidate pairs with RAW (unrounded) Jaccard — shared by the
     * oracle-facing query (τ=0.8) and llm_pipeline's victim list (τ=0.9);
     * thresholds must compare the raw ratio, never the display-rounded one. */
-  private val jacSizedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The DF-capped, per-doc-sized shingle relation persisted once per
-    * (application, sfDir) — one step past the raw shingle table in the
-    * same pay-layout-once discipline: the cap and the sizes are
-    * deterministic over the immutable corpus (an INGEST artifact), and
-    * every exact-Jaccard consumer (the τ=0.8 row, keep_best's edges,
-    * the pipeline's τ=0.9 victims) used to re-run the cap groupBy +
-    * join + size window per invocation. The live operator work stays
-    * the pair kernel + intersection aggregate. */
+  /** The persisted DF-capped, per-doc-sized shingle relation: every
+    * exact-Jaccard consumer (the τ=0.8 row, keep_best's edges, the
+    * pipeline's τ=0.9 victims) used to re-run the cap groupBy + join +
+    * size window per invocation. The live operator work stays the pair
+    * kernel + intersection aggregate. */
   private def jaccardSized(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_jacsized_$tag"
-    graft.util.AppCleanup.buildOnce(jacSizedBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_jacsized")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_jacsized", d) {
       capAndSize(shingleRows(s, d).select("doc_id", "sh"))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   private def jaccardPairsRaw(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
@@ -300,33 +275,17 @@ object Llm {
     keepBestSurvivors(qualityScored(s, d).select("doc_id", "bp"),
       jaccardEdges08(s, d), memoKey = "keep_best_cc|" + d)
 
-  private val edges08Built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The τ ≥ 0.8 near-dup EDGE relation, persisted once per
-    * (application, sfDir) — the same pay-layout-once discipline as the
-    * LSH band table and the τ ≥ 0.9 victims memo: over an immutable
-    * corpus the capped-Jaccard pairs are an INGEST artifact, and every
-    * survivor-selection pass consumes the (tiny) persisted edges instead
-    * of re-running the shingle/pair machinery. Deterministic over
-    * immutable inputs, so reuse cannot change an oracle row;
-    * [[llm_dedup_jaccard]] itself stays fully in-flight — it IS the pair
-    * operator, and its green row is what proves the persisted relation's
-    * generator every round. */
+  /** The persisted τ ≥ 0.8 near-dup EDGE relation: every
+    * survivor-selection pass consumes the (tiny) edges instead of
+    * re-running the shingle/pair machinery. [[llm_dedup_jaccard]] itself
+    * stays fully in-flight — it IS the pair operator, and its green row
+    * is what proves the persisted relation's generator every round. */
   private def jaccardEdges08(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_edges08_$tag"
-    graft.util.AppCleanup.buildOnce(edges08Built, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_edges08")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_edges08", d) {
       jaccardPairsRaw(s, d).where(col("jac_raw") >= 0.8)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   /** kernel of [[llm_dedup_keep_best]], unit-testable on synthetic
     * (doc_id, bp) + (a, b) inputs: argmax-bp (tie → min doc_id) per
@@ -559,8 +518,6 @@ object Llm {
     * strided cells stay aligned and only position-1 cells flip) so
     * the dedup path provably fires at every SF; the oracle replays
     * cells, bands, banding AND the Hamming verify in SQL. */
-  private val phashBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Twin ids are planted ABOVE the corpus: max(doc_id)+1, probed once
     * per (application, sfDir) and replayed by the oracle as the identical
@@ -580,16 +537,11 @@ object Llm {
       _ => documents(s, d).agg(max(col("doc_id"))).head.getLong(0) + 1L)
 
   val llm_phash: Q = (s, d) => {
-    // the band table is persisted once per (application, sfDir) — the
-    // LSH pay-layout-once discipline: the hash pass scans every
-    // payload's bytes exactly once; the measured operator is the
-    // banding joins + Hamming verify over the (tiny) band relation
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d + "_phash")
-    val t = s"graft_phash_bands_$tag"
-    graft.util.AppCleanup.buildOnce(phashBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_phash")
-      graft.util.AppCleanup.resetTable(s, t)
+    // the band table is persisted: the hash pass scans every payload's
+    // bytes once; the measured operator is the banding joins + Hamming
+    // verify over the (tiny) band relation
+    val h = graft.util.AppCleanup.persisted(s, "graft_phash_bands",
+        d + "_phash") {
       val base = documents(s, d).select(col("doc_id"), col("text"))
       val twins = base.where(col("doc_id") % 25 === 0)
         .select((col("doc_id") + phashTwinOffset(s, d)).as("doc_id"),
@@ -598,9 +550,7 @@ object Llm {
       base.unionByName(twins)
         .select(col("doc_id") +: (0 to 3).map(k =>
           expr(phashBandSql(k)).cast("int").as(s"b$k")): _*)
-        .write.mode("overwrite").saveAsTable(t)
     }
-    val h = s.table(t)
     // ONE self-join on the unpivoted (band index, band value) key instead
     // of four per-band self-joins + union + two hash-table join-backs
     // (r17, guide §2.4): a pair matches the union of per-k joins iff it
@@ -1097,82 +1047,45 @@ object Llm {
         LshBands, LshRowsPerBand)
     }
 
-  private val lshCandBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The distinct LSH candidate-pair relation persisted once per
-    * (application, sfDir): bands are deterministic (splitmix
-    * hyperplanes over immutable vectors), so the band self-join's
-    * output is too — candidates are an artifact of the persisted
-    * index, like the band table itself ([[lshCandidates]] keeps the
-    * in-flight derivation for the parity tests, and
-    * [[llm_simjoin_lsh_bucketed]] keeps the zero-Exchange band join
-    * as a LIVE plan). Re-banding + re-joining the full corpus per
-    * invocation was the r14 verdict's one `weak` mark (~2 s of its
-    * 3.05 s driver measurement); what stays live in the measured row
-    * is the exact rerank — the query-time work a dedup pass actually
-    * repeats. */
+  /** The persisted distinct LSH candidate-pair relation, an artifact of
+    * the band index ([[lshCandidates]] keeps the in-flight derivation
+    * for the parity tests, and [[llm_simjoin_lsh_bucketed]] keeps the
+    * zero-Exchange band join as a LIVE plan). Re-banding + re-joining
+    * the full corpus per invocation was the r14 verdict's one `weak`
+    * mark (~2 s of its 3.05 s driver measurement); what stays live in
+    * the measured row is the exact rerank — the query-time work a dedup
+    * pass actually repeats. */
   private def lshCandPersisted(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_lshcand_$tag"
-    graft.util.AppCleanup.buildOnce(lshCandBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_lshcand")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_lshcand", d) {
       dumpLshBands(s, d)
       bandSelfJoin(s.read.parquet(
           s"${graft.util.OracleAux.dirFor(d)}/lshband"))
         .select("a", "b").distinct()
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   val llm_simjoin_lsh: Q = (s, d) => {
     dumpLshBands(s, d)
     rerankExact(s, d, lshCandPersisted(s, d))
   }
 
-  /** the band table persisted bucketed+sorted on band_key (8 buckets,
-    * join_bucketed's pattern applied to the dedup path): pay the banding
-    * and the layout ONCE, then every candidate self-join scans co-located
-    * buckets and plans with zero Exchange on the joined sides — for a
-    * 100 TB corpus deduplicated repeatedly (each incremental ingest batch
-    * re-joins against the full band table) the per-run shuffle of the
-    * dominant table disappears. Table name carries applicationId + sfDir
-    * so concurrent runs can't collide; the shutdown hook removes this
-    * application's warehouse entries (idempotent with join_bucketed's). */
-  private val bandTableBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+  /** the band table persisted bucketed+sorted on band_key
+    * (join_bucketed's pattern applied to the dedup path): every candidate
+    * self-join scans co-located buckets and plans with zero Exchange on
+    * the joined sides — for a 100 TB corpus deduplicated repeatedly (each
+    * incremental ingest batch re-joins against the full band table) the
+    * per-run shuffle of the dominant table disappears. That reuse, not
+    * the first write, is what the persisted index buys; the build/memo
+    * rules live in [[graft.util.AppCleanup.persisted]]. */
   private[graft] def lshBandTable(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    import s.implicits._
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_lshband_$tag"
-    // pay the layout ONCE per (application, sfDir): the banding is
-    // deterministic (splitmix-seeded hyperplanes over immutable source
-    // data), so a later invocation in the same JVM — bench's second pass,
-    // every incremental re-dedup in the 100 TB story — reads the existing
-    // bucketed table instead of rebuilding it. That reuse, not the first
-    // write, is what the persisted index buys. Memo/locking rules live
-    // in AppCleanup.buildOnce (record only after a successful build,
-    // lock spans reset+write), shared by all five persisted-artifact
-    // sites.
-    graft.util.AppCleanup.buildOnce(bandTableBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_lshband")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_lshband", d, "band_key") {
+      import s.implicits._
       lshBandedVecs(
         embDouble(s, d).select(col("vec_id"), col("emb"))
           .as[(Long, Array[Double])],
         LshBands, LshRowsPerBand)
-        .write.bucketBy(8, "band_key").sortBy("band_key")
-        .mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   private[graft] def lshCandidatesBucketed(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
@@ -1390,31 +1303,18 @@ object Llm {
     * dispatch llm_simjoin_auto exposes, with `budget` as the test seam.
     * The oracle is a DuckDB recursive CTE computing reachability over the
     * same pairs — a genuinely different closure strategy. */
-  private val embcosPairsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The τ≥0.45 cosine pair relation persisted once per (application,
-    * sfDir) — deterministic over immutable embeddings (the exact kernel
-    * or the banded candidates, whichever the budget dispatch picks,
-    * produce the same thresholded pairs), so it's a pay-once artifact
-    * like the LSH candidate relation; what stays live in the measured
-    * dedup row is the transitive closure + survivor join. Only the
-    * default-budget path reads it: explicit-budget callers are the
-    * arm-equality test seam and must run their arm for real. */
+  /** The persisted τ≥0.45 cosine pair relation (the exact kernel or the
+    * banded candidates, whichever the budget dispatch picks, produce the
+    * same thresholded pairs); what stays live in the measured dedup row
+    * is the transitive closure + survivor join. Only the default-budget
+    * path reads it: explicit-budget callers are the arm-equality test
+    * seam and must run their arm for real. */
   private def embcosPairsPersisted(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_embcospairs_$tag"
-    graft.util.AppCleanup.buildOnce(embcosPairsBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_embcospairs")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_embcospairs", d) {
       simjoinAuto(s, d, Long.MaxValue).where(col("sim") >= 0.45)
         .select("a", "b")
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   private[graft] def dedupEmbcos(s: org.apache.spark.sql.SparkSession,
       d: String, budget: Long = Long.MaxValue): DataFrame = {
@@ -1530,56 +1430,37 @@ object Llm {
     * every SF it runs (the oracle generates pairs from the full shingle
     * self-join and closes them with recursive-CTE reachability: a
     * different candidate strategy AND a different closure strategy). */
-  /** The dedup working set persisted ONCE per (application, sfDir) — the
-    * llm_simjoin_lsh_bucketed / ivfIndexDir pay-layout-once story applied
-    * to the flagship text dedup (round-4 verdict #1): ONE cached shingle
-    * pass feeds both tables, then every later invocation (bench's second
-    * pass; each incremental re-dedup batch in the 100 TB story) reads
+  /** The persisted dedup working set of the flagship text dedup
+    * (round-4 verdict #1), both tables built from the persisted shingle
+    * relation; every later invocation (bench's second pass; each
+    * incremental re-dedup batch in the 100 TB story) reads
     *  - the MinHash band table, bucketed+sorted on band_key, so the
     *    candidate self-join plans with zero Exchange on the joined sides;
     *  - the per-doc distinct-shingle arrays, bucketed on doc_id, so the
-    *    exact-verify joins shuffle only the (small) candidate pairs.
-    * Deterministic hashes over immutable source data make the reuse
-    * sound; memoized only AFTER both writes succeed, under a lock (the
-    * band-table rationale at [[lshBandTable]] applies verbatim). */
-  private val dedupTextBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+    *    exact-verify joins shuffle only the (small) candidate pairs. */
   private[graft] def dedupTextTables(s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val bandT = s"graft_mhband_$tag"
-    val setsT = s"graft_docsets_$tag"
-    graft.util.AppCleanup.buildOnce(dedupTextBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_mhband")
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_docsets")
-      graft.util.AppCleanup.resetTable(s, bandT)
-      graft.util.AppCleanup.resetTable(s, setsT)
-      val sh = shingleRows(s, d).cache()
-      try {
-        minhashBandedOf(sh.select("doc_id", "sh"))
-          .write.bucketBy(8, "band_key").sortBy("band_key")
-          .mode("overwrite").saveAsTable(bandT)
-        sh.groupBy("doc_id").agg(collect_list(col("sh")).as("shs"))
-          .write.bucketBy(8, "doc_id").sortBy("doc_id")
-          .mode("overwrite").saveAsTable(setsT)
-      } finally sh.unpersist(blocking = false)
+      d: String): (DataFrame, DataFrame) =
+    minhashTables(s, d, "graft_mhband", "graft_docsets", shingleRows(s, d))
+
+  /** (band, sets): the MinHash band table and per-doc shingle-set table
+    * of `sh`, persisted bucketed on band_key / doc_id. */
+  private def minhashTables(s: org.apache.spark.sql.SparkSession, d: String,
+      bandPrefix: String, setsPrefix: String,
+      sh: => DataFrame): (DataFrame, DataFrame) = {
+    val band = graft.util.AppCleanup.persisted(s, bandPrefix, d, "band_key") {
+      minhashBandedOf(sh.select("doc_id", "sh"))
     }
-    (s.table(bandT), s.table(setsT))
+    val sets = graft.util.AppCleanup.persisted(s, setsPrefix, d, "doc_id") {
+      sh.groupBy("doc_id").agg(collect_list(col("sh")).as("shs"))
+    }
+    (band, sets)
   }
 
-  private val textPairsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The VERIFIED τ ≥ 0.8 near-dup pair relation of the flagship text
-    * dedup, persisted once per (application, sfDir) — candidates and
-    * shingle sets are already persisted artifacts ([[dedupTextTables]]),
-    * and the exact verify over them is deterministic, so the verified
-    * edges are an ingest artifact too (the [[jaccardEdges08]] /
-    * embcos-pairs discipline). The exact-verify kernel itself stays
-    * LIVE in [[llm_dedup_incr]] (batch-vs-corpus verify every
-    * invocation) and the all-pairs twin in [[llm_dedup_jaccard]].
+  /** The persisted VERIFIED τ ≥ 0.8 near-dup pair relation of the
+    * flagship text dedup: the exact verify over the [[dedupTextTables]]
+    * candidates and shingle sets runs once. The exact-verify kernel
+    * itself stays LIVE in [[llm_dedup_incr]] (batch-vs-corpus verify
+    * every invocation) and the all-pairs twin in [[llm_dedup_jaccard]].
     *
     * Exact verify over candidate PAIRS: each doc's distinct shingles
     * collapse into ONE array row, so the candidate join moves two
@@ -1590,13 +1471,8 @@ object Llm {
     * ordering assumption — so the count (and the driver-proven
     * equality vs the all-pairs oracle) stays structural. */
   private def textVerifiedPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_textpairs_$tag"
-    graft.util.AppCleanup.buildOnce(textPairsBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_textpairs")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_textpairs", d) {
       import s.implicits._
       val (band, sets) = dedupTextTables(s, d)
       minhashCandidatesOf(band)
@@ -1614,10 +1490,7 @@ object Llm {
           if (jac >= 0.8) Iterator.single((da, db)) else Iterator.empty
         }
         .toDF("doc_a", "doc_b")
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   val llm_dedup_text: Q = (s, d) => {
     val verified = textVerifiedPairs(s, d)
@@ -1634,37 +1507,14 @@ object Llm {
   }
 
   /** The incremental-dedup corpus tables: the EVEN-doc_id half of
-    * `documents` as the "existing corpus", its MinHash band table and
-    * per-doc shingle-set table persisted bucketed+sorted once per
-    * (application, sfDir) — the [[dedupTextTables]] discipline on the
-    * corpus side of the cross-batch dedup. */
-  private val dedupIncrBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+    * `documents` as the "existing corpus", its band and shingle-set
+    * tables persisted as in [[dedupTextTables]]. The shingle kernel is
+    * per-document, so the even half of the persisted shingle relation is
+    * exactly the corpus half's shingles. */
   private[graft] def dedupIncrCorpus(s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val bandT = s"graft_incrband_$tag"
-    val setsT = s"graft_incrsets_$tag"
-    graft.util.AppCleanup.buildOnce(dedupIncrBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_incrband")
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_incrsets")
-      graft.util.AppCleanup.resetTable(s, bandT)
-      graft.util.AppCleanup.resetTable(s, setsT)
-      val sh = shingleRowsOf(
-        documents(s, d).where(col("doc_id") % 2 === 0)).cache()
-      try {
-        minhashBandedOf(sh.select("doc_id", "sh"))
-          .write.bucketBy(8, "band_key").sortBy("band_key")
-          .mode("overwrite").saveAsTable(bandT)
-        sh.groupBy("doc_id").agg(collect_list(col("sh")).as("shs"))
-          .write.bucketBy(8, "doc_id").sortBy("doc_id")
-          .mode("overwrite").saveAsTable(setsT)
-      } finally sh.unpersist(blocking = false)
-    }
-    (s.table(bandT), s.table(setsT))
-  }
+      d: String): (DataFrame, DataFrame) =
+    minhashTables(s, d, "graft_incrband", "graft_incrsets",
+      shingleRows(s, d).where(col("doc_id") % 2 === 0))
 
   /** Candidate (new, corpus) pairs from the cross-batch band equi-join —
     * split out so OperatorSpec can prove candidates ⊇ every true ≥0.8
@@ -3256,27 +3106,16 @@ object Llm {
         r4(col("score_raw")).as("score"), col("__rk").as("rk"))
       .orderBy("term", "rk")
 
-  private val bm25ScoredBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** (scored, ranked, maxDf): the full per-(query term, doc) BM25
     * scored relation, its top-10-per-term ranking (`__rk`), and the
     * skew probe — shared by [[llm_bm25]] (which emits the ranking) and
     * [[llm_ndcg]] (which evaluates it), so the eval op provably scores
     * the exact relation the retrieval op ships. The scored relation is
     * TINY (query terms × their df, never token-grain) but derives from
-    * the corpus-wide tokenize aggregates, so it persists once per
-    * (application, sfDir) — the supplierEdges/dedupTextTables
-    * pay-once discipline; deterministic over immutable inputs, so
-    * reuse cannot change an oracle row. */
+    * the corpus-wide tokenize aggregates, so it is persisted. */
   private[graft] def bm25Relations(s: org.apache.spark.sql.SparkSession,
       d: String): (DataFrame, DataFrame, Long) = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_bm25_scored_$tag"
-    graft.util.AppCleanup.buildOnce(bm25ScoredBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_bm25_scored")
-      graft.util.AppCleanup.resetTable(s, t)
+    val scored = graft.util.AppCleanup.persisted(s, "graft_bm25_scored", d) {
       val tok = documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -3298,9 +3137,7 @@ object Llm {
             * (col("tf") * lit(2.2))
             / (col("tf") + lit(1.2) *
               (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    val scored = s.table(t)
     // by construction the largest per-term candidate set is the top
     // query term's df = the corpus max df
     val maxDf = graft.util.Probes.memoProbe(s, d, "bm25_max_df")(
@@ -3512,27 +3349,14 @@ object Llm {
         sum(when(!col("is_cand"), 1L)).as("r_cnt"))
   }
 
-  private val gramCountsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** [[gramCountsOf]] over the documents pairing, persisted once per
-    * (application, sfDir) — bm25Relations' pay-once discipline applied
-    * to the generation-eval family: llm_bleu and llm_rouge aggregate
-    * the SAME tokenize+pivot relation, deterministic over the immutable
-    * corpus; equality seam in OperatorSpec's persisted-artifact proofs. */
+  /** [[gramCountsOf]] over the documents pairing, persisted: llm_bleu
+    * and llm_rouge aggregate the SAME tokenize+pivot relation; equality
+    * seam in OperatorSpec's persisted-artifact proofs. */
   private[graft] def gramCountsPersisted(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_gramcounts_$tag"
-    graft.util.AppCleanup.buildOnce(gramCountsBuilt, t) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_gramcounts")
-      graft.util.AppCleanup.resetTable(s, t)
+      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_gramcounts", d) {
       gramCountsOf(documents(s, d))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   /** live kernel over any (doc_id, text) relation — OperatorSpec drives
     * planted identical / disjoint / partial-overlap / short-candidate
@@ -3984,35 +3808,20 @@ object Llm {
               + 30 * long_cnt) + n_tokens) div (2 * n_tokens)"""))
   }
 
-  /** J ≥ 0.9 near-dup victims (the doc_b of every pair), persisted ONCE
-    * per (application, sfDir): the victim list is an INGEST artifact of
-    * the immutable corpus — at 100 TB the dedup pass computes it when a
-    * batch lands, and every downstream assembly/manifest query anti-joins
-    * the persisted (tiny) result instead of re-deriving the all-pairs
-    * machinery. llm_pipeline and llm_corpus both consume it, so the
-    * bench's two passes previously ran the full shingle-pair pipeline
-    * FOUR times. Same memo discipline as the LSH band table: recorded
-    * only after a successful write, under a lock; deterministic over
-    * immutable inputs, so reuse cannot change any oracle row
+  /** The persisted J ≥ 0.9 near-dup victims (the doc_b of every pair):
+    * at 100 TB the dedup pass computes the list when a batch lands, and
+    * every downstream assembly/manifest query anti-joins the (tiny)
+    * result instead of re-deriving the all-pairs machinery. llm_pipeline
+    * and llm_corpus both consume it, so the bench's two passes
+    * previously ran the full shingle-pair pipeline FOUR times
     * (llm_dedup_jaccard itself stays fully in-flight — it IS the pair
     * operator). */
-  private val victimsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def jaccardVictims(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_victims_$tag"
-    graft.util.AppCleanup.buildOnce(victimsBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_victims")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_victims", d) {
       jaccardPairsRaw(s, d).where(col("jac_raw") >= 0.9)
         .select(col("doc_b")).distinct()
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   /** the (ax mod p) mod 100 hash family — rationale in llm_sample's
     * scaladoc; the two members use different multipliers AND primes so

@@ -394,32 +394,17 @@ object Relational {
     * PlanShapeSpec's bucketed test; HERE the oracle proves bucketing
     * changes the plan, never the answer — the same join/agg over the raw
     * source files must hash-match). Table names carry the applicationId +
-    * sfDir so concurrent runs can't collide in the shared warehouse; a
-    * once-per-JVM shutdown hook removes this application's tables so the
-    * dev loop doesn't grow the warehouse unboundedly. */
-  private val bucketedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+    * sfDir so concurrent runs can't collide in the shared warehouse.
+    * Persisted: rebuilding the tables on every invocation only
+    * re-measured the WRITE in the bench's steady-state passes (1.6 s/run
+    * at sf0.1, r8 plan audit) — exactly what a real warehouse never does
+    * after ingest. */
   val join_bucketed: Q = (s, d) => {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val custT = s"graft_cust_$tag"; val ordT = s"graft_ord_$tag"
-    // pay-layout-once, like every other persisted artifact (buildOnce):
-    // the bucketed tables are deterministic over the immutable source, so
-    // rebuilding them on every invocation only re-measured the WRITE in
-    // the bench's steady-state passes (1.6 s/run at sf0.1, r8 plan audit)
-    // — exactly what a real warehouse never does after ingest
-    graft.util.AppCleanup.buildOnce(bucketedBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_bucketed")
-      graft.util.AppCleanup.resetTable(s, custT)
-      graft.util.AppCleanup.resetTable(s, ordT)
-      customer(s, d).write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .mode("overwrite").saveAsTable(custT)
-      orders(s, d).write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .mode("overwrite").saveAsTable(ordT)
-    }
-    s.table(custT)
-      .join(s.table(ordT), col("c_custkey") === col("o_custkey"))
+    val cust = graft.util.AppCleanup.persisted(s, "graft_cust", d,
+      "c_custkey")(customer(s, d))
+    val ord = graft.util.AppCleanup.persisted(s, "graft_ord", d,
+      "o_custkey")(orders(s, d))
+    cust.join(ord, col("c_custkey") === col("o_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
         moneySum(col("o_totalprice")).as("revenue"))
@@ -447,32 +432,19 @@ object Relational {
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  private val blowupBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** lineitem replicated 10×, persisted once per (application, sfDir):
-    * the DATA-DOMINATED flagship anchor (r15 verdict stretch #8) — at
-    * sf0.1 every other row's runtime is mostly fixed cost, so a plan
-    * regression that scales with DATA (a lost map-side combine, a
-    * broken pushdown) hides inside the flat profile; this relation is
-    * big enough that [[agg_pricing_10x]]'s runtime follows bytes
-    * scanned, the honest canary. Replication is a cross join with
-    * `range(10)` — deterministic, and the oracle replays the identical
-    * product. */
+  /** lineitem replicated 10×, persisted: the DATA-DOMINATED flagship
+    * anchor (r15 verdict stretch #8) — at sf0.1 every other row's
+    * runtime is mostly fixed cost, so a plan regression that scales with
+    * DATA (a lost map-side combine, a broken pushdown) hides inside the
+    * flat profile; this relation is big enough that [[agg_pricing_10x]]'s
+    * runtime follows bytes scanned, the honest canary. Replication is a
+    * cross join with `range(10)` — deterministic, and the oracle replays
+    * the identical product. */
   private def lineitem10x(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_li10x_$tag"
-    graft.util.AppCleanup.buildOnce(blowupBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_li10x")
-      graft.util.AppCleanup.resetTable(s, t)
-      lineitem(s, d)
-        .crossJoin(s.range(10).select(col("id").as("rep")))
-        .write.mode("overwrite").saveAsTable(t)
+      d: String): org.apache.spark.sql.DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_li10x", d) {
+      lineitem(s, d).crossJoin(s.range(10).select(col("id").as("rep")))
     }
-    s.table(t)
-  }
 
   /** ★ the flagship aggregate over the 10× blow-up: same shape as
     * [[agg_pricing]] (filter → partial/final hash agg → sort), runtime

@@ -681,24 +681,15 @@ object Windows {
     * sum; (day, ts) order ≡ global ts order since day prefixes ts. A
     * day a session merely SPANS (no start/end event) emits no row —
     * documented, identical in the oracle. */
-  private val sessBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The sessionized (user_id, session_id, start_ts, end_ts) relation,
-    * persisted once per (application, sfDir) — the identical 30-minute-
-    * gap derivation [[win_session]] demonstrates LIVE (that row stays a
-    * live window plan; this table exists so consumers that merely need
-    * the spans — [[win_concurrent]]'s sweep-line — don't re-pay the
-    * events-sized window scan per invocation). Deterministic over
-    * immutable inputs, so reuse cannot change an oracle row. */
+  /** The persisted sessionized (user_id, session_id, start_ts, end_ts)
+    * relation — the identical 30-minute-gap derivation [[win_session]]
+    * demonstrates LIVE (that row stays a live window plan; this table
+    * exists so consumers that merely need the spans —
+    * [[win_concurrent]]'s sweep-line — don't re-pay the events-sized
+    * window scan per invocation). */
   private[graft] def sessionSpans(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    val t = s"graft_win_sessions_$tag"
-    graft.util.AppCleanup.buildOnce(sessBuilt, tag) {
-      graft.util.AppCleanup.registerWarehouseCleanup(s, "graft_win_sessions")
-      graft.util.AppCleanup.resetTable(s, t)
+      d: String): org.apache.spark.sql.DataFrame =
+    graft.util.AppCleanup.persisted(s, "graft_win_sessions", d) {
       val byUser = Window.partitionBy("user_id")
         .orderBy(asc("ts"), asc("event_id"))
       events(s, d)
@@ -714,10 +705,7 @@ object Windows {
             Window.currentRow)))
         .groupBy("user_id", "session_id")
         .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
-        .write.mode("overwrite").saveAsTable(t)
     }
-    s.table(t)
-  }
 
   val win_concurrent: Q = (s, d) => {
     val sess = sessionSpans(s, d)
