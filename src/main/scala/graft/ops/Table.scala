@@ -1005,9 +1005,10 @@ object Table {
     * replays the final state statically from the source relation, so a
     * green row proves the SQL path classifies and commits exactly like
     * the DSL the table format is tested on. Scale: classification is
-    * three shuffled joins; the commit rewrites only files holding
-    * touched keys (stats+bloom pruning) — cost follows DML locality,
-    * not table size. */
+    * ONE presence-marker join (FULL OUTER here: the statement has both
+    * unmatched arm classes) and every guard ONE grouped aggregate; the
+    * commit rewrites only files holding touched keys (stats+bloom
+    * pruning) — cost follows DML locality, not table size. */
   val table_sql_merge: Q = (s, d) => {
     import graft.util.Det._
     val root = Sources.sinkDir(s, d, "sql_merge_orders")

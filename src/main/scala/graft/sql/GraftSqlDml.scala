@@ -2,12 +2,12 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{col, lit, max, sum, when}
 import org.apache.spark.sql.graft.SqlShim
 import org.apache.spark.sql.types.IntegerType
 
@@ -43,10 +43,13 @@ import graft.table.GraftTable
   * rows, duplicate upsert keys, or an insert arm re-using an existing
   * key all fail the statement.
   *
-  * Scale posture: classification is three ordinary joins against the
-  * source (inner for matched, anti each way for the unmatched sides) —
+  * Scale posture: a MERGE classifies every row with ONE join of the
+  * snapshot and the source, each side tagged with a presence marker
+  * (FULL/one-sided OUTER or INNER, by which arm classes exist) —
   * shuffle-partitioned on whatever Catalyst picks, never a driver
-  * loop — and the commits rewrite only stats/bloom-candidate files that
+  * loop — checks every loud guard in ONE grouped aggregate over the
+  * persisted classification before any file is written, and the
+  * commits rewrite only stats/bloom-candidate files that
   * actually hold touched keys (the DSL's two-level pruning), so cost
   * scales with the DML's key locality, not table size. Snapshot
   * semantics: all arms read the SAME base snapshot (captured at
@@ -551,14 +554,27 @@ private[sql] object GraftDml {
     }
   }
 
-  /** First-matching-action dispatch: the 0-based index of the first
-    * action whose condition holds (absent = always), null if none —
-    * `when` treats a null condition as non-matching, per SQL. */
-  def disposition(conds: Seq[Option[Expression]]): Column =
+  /** First-matching-action dispatch: `from` + the 0-based index of the
+    * first action whose condition holds (absent = always), null if none
+    * — `when` treats a null condition as non-matching, per SQL. */
+  def disposition(conds: Seq[Option[Expression]], from: Int): Column =
     conds.zipWithIndex.foldRight(lit(null).cast(IntegerType): Column) {
       case ((cnd, i), acc) =>
-        when(cnd.map(c).getOrElse(lit(true)), lit(i)).otherwise(acc)
+        when(cnd.map(c).getOrElse(lit(true)), lit(from + i)).otherwise(acc)
     }
+
+  /** One MERGE WHEN arm after star expansion: the row class it applies
+    * to, its condition (absent = always) and its assignments (None =
+    * DELETE). */
+  final case class Arm(cls: Arm.Class, cond: Option[Expression],
+      assigns: Option[Seq[Assignment]])
+
+  object Arm {
+    sealed trait Class
+    case object Matched extends Class
+    case object NotMatched extends Class
+    case object BySource extends Class
+  }
 
   /** The value `assignments` give target column `ta` (cast to its
     * type), or `ta` itself when unassigned (SQL leaves it untouched for
@@ -641,12 +657,13 @@ private[sql] object GraftDml {
         t.ref.statsCols, t.ref.clusterCols, t.ref.numFiles,
         baseSnapshot = Some(t.snapshot), bloomCols = t.ref.bloomCols)
 
+  /** Commit a key-addressed delete through the DSL delete, which
+    * declines to commit when no key matches (no emptiness probe). */
   def commitDelete(spark: SparkSession, t: GraftSqlTarget,
       keys: DataFrame): Unit =
-    if (!keys.isEmpty)
-      GraftTable.delete(spark, t.ref.root, keys, t.ref.keyCol,
-        t.ref.statsCols, t.ref.clusterCols, t.ref.numFiles,
-        baseSnapshot = Some(t.snapshot), bloomCols = t.ref.bloomCols)
+    GraftTable.delete(spark, t.ref.root, keys, t.ref.keyCol,
+      t.ref.statsCols, t.ref.clusterCols, t.ref.numFiles,
+      baseSnapshot = Some(t.snapshot), bloomCols = t.ref.bloomCols)
 }
 
 /** `INSERT INTO t [(cols)] SELECT ...` → schema-aligned
@@ -738,11 +755,11 @@ case class GraftDeleteCommand(t: GraftSqlTarget, filtered: LogicalPlan)
 
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
-    // persist: GraftTable.delete evaluates its input more than once
-    // (pruning range, provenance semi-join, survivor anti-join), so a
-    // nondeterministic predicate (rand()) must be frozen first
+    // persist: GraftTable.delete's contract is a deterministic input
+    // (it may evaluate it more than once), so a nondeterministic
+    // predicate (rand()) must be frozen first; the delete dedups keys
     val keys = SqlShim.ofRows(spark, filtered)
-      .select(c(keyAttrOf(t)).as(t.ref.keyCol)).distinct().persist()
+      .select(c(keyAttrOf(t)).as(t.ref.keyCol)).persist()
     try commitDelete(spark, t, keys) finally keys.unpersist()
     Seq.empty
   }
@@ -766,10 +783,12 @@ case class GraftUpdateCommand(t: GraftSqlTarget,
   }
 }
 
-/** `MERGE INTO t USING s ON cond WHEN ...` — row classification by
-  * three joins against the captured snapshot, then at most one upsert
-  * commit + one delete commit. See the module doc for the key-addressed
-  * contract and its loud requires. */
+/** `MERGE INTO t USING s ON cond WHEN ...` — every row classified by
+  * ONE presence-marker join of the captured snapshot and the source
+  * into one persisted tagged frame, every loud guard checked by ONE
+  * grouped aggregate over it, then at most one atomic upsert+delete
+  * commit. See the module doc for the key-addressed contract and its
+  * loud requires. */
 case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     extends LeafRunnableCommand {
 
@@ -784,7 +803,12 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
   private def notMatchedActions = merge.notMatchedActions
   private def notMatchedBySourceActions = merge.notMatchedBySourceActions
 
+  // the tagged frame's internal columns
   private val ActCol = "__graft_act"
+  private val MatchCol = "__graft_matched"
+  private val TgtMark = "__graft_in_target"
+  private val SrcMark = "__graft_in_source"
+  private val GuardKey = "__graft_key"
 
   /** Does this hand-written (or analyzer-pre-expanded) assignment list
     * have the star shape — every column of `baseOut` (minus the key
@@ -867,61 +891,72 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     }
   }
 
-  /** Apply first-match dispatch over `rel`: full-row frames for the
-    * update/insert arms (target schema, casts + aliases applied) and a
-    * key frame for the delete arms. The TAGGED frame persists (third
-    * return value — caller unpersists): the update and delete frames
-    * each run their own job over it, and a nondeterministic arm
-    * condition must classify each row exactly once, never roll a row
-    * into both (or neither) frame. */
-  private def applyActions(rel: DataFrame,
-      acts: Seq[(Option[Expression], Option[Seq[Assignment]])],
-      tgtOut: Seq[Attribute], keyAttr: Attribute, insertArm: Boolean,
-      extraNames: Set[String] = Set.empty)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val tagged = rel.withColumn(ActCol, disposition(acts.map(_._1)))
-      .persist()
-    val updIdx = acts.zipWithIndex.collect {
-      case ((_, Some(_)), i) => i
+  /** Classify every row of `joined` (the ONE marker-column join of
+    * snapshot and source) and freeze the result: the persisted tagged
+    * frame (caller unpersists) carries per row the first-matching arm's
+    * index in `arms` (matched arms first, then NOT MATCHED, then NOT
+    * MATCHED BY SOURCE — each class dispatches only over its own arms,
+    * chosen by the presence markers, never by column nullness), whether
+    * the row is a target⋈source match, and the full post-image in the
+    * target schema (casts + aliases applied). Only rows some arm fired
+    * on — plus every match when the cardinality rule applies — are kept.
+    * Persisting freezes arm conditions, assignments and the source
+    * itself: the guard aggregate and the commit each read the frame, and
+    * a nondeterministic condition, value or source must classify each
+    * row exactly once, never roll it into both (or neither) set.
+    *
+    * The post-image key is the TARGET key wherever a target row exists
+    * (a matched arm may assign the key only as the ON-proven identity,
+    * a by-source arm never), the insert arm's key otherwise — so one
+    * column keys every guard. */
+  private def applyActions(joined: DataFrame, arms: Seq[Arm],
+      tgtOut: Seq[Attribute], keyAttr: Attribute, keepMatches: Boolean,
+      extraNames: Set[String]): DataFrame = {
+    val inT = col(TgtMark).isNotNull
+    val inS = col(SrcMark).isNotNull
+    def armsOf(cls: Arm.Class) =
+      arms.zipWithIndex.filter(_._1.cls == cls)
+    def dispatch(cls: Arm.Class): Column = armsOf(cls) match {
+      case Seq() => lit(null).cast(IntegerType)
+      case as => disposition(as.map(_._1.cond), from = as.head._2)
     }
-    val delIdx = acts.zipWithIndex.collect { case ((_, None), i) => i }
-    val rows =
-      if (updIdx.isEmpty) None
-      else Some(tagged
-        .where(col(ActCol).isin(updIdx.map(Integer.valueOf): _*))
-        .select(tgtOut.map { ta =>
-          // evolution extras have no target column to carry forward —
-          // a matched row that an arm doesn't assign gets NULL (the
-          // rows-that-never-received-the-column semantics); their
-          // synthetic attribute must never reach c(ta)
-          val keep =
-            if (insertArm || extraNames(
-                ta.name.toLowerCase(java.util.Locale.ROOT)))
-              lit(null).cast(ta.dataType)
-            else c(ta)
-          updIdx.foldRight(keep) { (i, acc) =>
-            when(col(ActCol) === i,
-              assignedValue(ta, acts(i)._2.get, insertArm,
-                orKeep = Some(keep)))
+    val act = when(inT && inS, dispatch(Arm.Matched))
+      .when(inS, dispatch(Arm.NotMatched))
+      .when(inT, dispatch(Arm.BySource))
+    val upserts = arms.zipWithIndex.filter(_._1.assigns.isDefined)
+    val insertKey = armsOf(Arm.NotMatched).foldRight(
+        lit(null).cast(keyAttr.dataType)) { case ((a, i), acc) =>
+      when(col(ActCol) === i, assignedValue(keyAttr, a.assigns.get,
+        orElseNull = true)).otherwise(acc)
+    }
+    val post = tgtOut.map { ta =>
+      if (ta.exprId == keyAttr.exprId)
+        when(inT, c(keyAttr)).otherwise(insertKey).as(ta.name)
+      else {
+        // evolution extras have no target column to carry forward — a
+        // matched row that an arm doesn't assign gets NULL (the rows-
+        // that-never-received-the-column semantics); their synthetic
+        // attribute must never reach c(ta)
+        val keep =
+          if (extraNames(ta.name.toLowerCase(java.util.Locale.ROOT)))
+            lit(null).cast(ta.dataType)
+          else c(ta)
+        upserts.foldRight(lit(null).cast(ta.dataType)) {
+          case ((a, i), acc) =>
+            val insert = a.cls == Arm.NotMatched
+            when(col(ActCol) === i, assignedValue(ta, a.assigns.get,
+              orElseNull = insert,
+              orKeep = Some(if (insert) lit(null).cast(ta.dataType) else keep)))
               .otherwise(acc)
-          }.as(ta.name)
-        }.toSeq: _*))
-    val dels =
-      if (delIdx.isEmpty) None
-      else Some(tagged
-        .where(col(ActCol).isin(delIdx.map(Integer.valueOf): _*))
-        .select(c(keyAttr).as(t.ref.keyCol)))
-    (rows.getOrElse(emptyLike(rel.sparkSession, tgtOut)),
-      dels.getOrElse(emptyKeys(rel.sparkSession, keyAttr)), tagged)
+        }.as(ta.name)
+      }
+    }
+    val fired = col(ActCol).isNotNull
+    joined.withColumn(ActCol, act)
+      .where(if (keepMatches) fired || (inT && inS) else fired)
+      .select(((inT && inS).as(MatchCol) +: col(ActCol) +: post): _*)
+      .persist()
   }
-
-  private def emptyLike(spark: SparkSession,
-      tgtOut: Seq[Attribute]): DataFrame =
-    SqlShim.ofRows(spark, LocalRelation(tgtOut.map(_.toAttribute)))
-
-  private def emptyKeys(spark: SparkSession, keyAttr: Attribute): DataFrame =
-    SqlShim.ofRows(spark, LocalRelation(Seq(keyAttr.toAttribute)))
-      .toDF(t.ref.keyCol)
 
   override def run(spark: SparkSession): Seq[Row] = {
     val tgtOut0 = t.child.output
@@ -1011,101 +1046,101 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       case _ => ()
     }
 
-    // materialize the source ONCE before classifying: the three joins
-    // below each embed the source plan, and without a frozen snapshot a
-    // nondeterministic source (USING (SELECT ... WHERE rand()<p)) can
-    // classify a row as both matched and not-matched (loud dup-key
-    // failure) or neither (silently dropped). persist + count registers
-    // the plan in the CacheManager, so every join reads the one
-    // materialized InMemoryRelation instead of re-evaluating.
-    val srcDf = SqlShim.ofRows(spark, source).persist()
-    srcDf.count()
-    // persist the three classification relations: every guard and both
-    // output frames below read them (without this each guard re-runs a
-    // full snapshot×source join), and nondeterministic conditions must
-    // classify each row exactly once
-    val matchedRel = SqlShim.ofRows(spark,
-      Join(t.child, source, Inner, Some(cond), JoinHint.NONE)).persist()
-    val srcOnlyRel = SqlShim.ofRows(spark,
-      Join(source, t.child, LeftAnti, Some(cond), JoinHint.NONE)).persist()
-    val tgtOnlyRel = SqlShim.ofRows(spark,
-      Join(t.child, source, LeftAnti, Some(cond), JoinHint.NONE)).persist()
-
-    try {
-      // SQL cardinality rule: a target row matches at most one source row
-      if (matchedActions.nonEmpty) {
-        val dup = matchedRel.groupBy(c(keyAttr)).count()
-          .where(col("count") > 1).limit(1).count()
-        require(dup == 0, "MERGE cardinality violation: a target row " +
-          "matches more than one source row")
-      }
-
-      val (matchedUpd, matchedDel, tagM) = applyActions(matchedRel,
-        expanded(matchedActions, tgtOut, srcOut, extras), tgtOut,
-        keyAttr, insertArm = false, extraNames = extraNames)
-      val (insRows, _, tagI) = applyActions(srcOnlyRel,
-        expanded(notMatchedActions, tgtOut, srcOut, extras), tgtOut,
-        keyAttr, insertArm = true, extraNames = extraNames)
-      val (bySrcUpd, bySrcDel, tagS) = applyActions(tgtOnlyRel,
-        expanded(notMatchedBySourceActions, tgtOut, srcOut), tgtOut,
-        keyAttr, insertArm = false, extraNames = extraNames)
-      try {
-        // an insert arm must not re-use a live key (the key-addressed
-        // upsert would silently REPLACE the existing row) nor mint a
-        // NULL key (unaddressable forever: every later key-addressed
-        // statement equi-joins on the key and skips it)
-        if (notMatchedActions.nonEmpty) {
-          val clash = insRows.select(col(t.ref.keyCol))
-            .join(SqlShim.ofRows(spark, t.child)
-              .select(c(keyAttr).as(t.ref.keyCol)), t.ref.keyCol,
-              "left_semi")
-            .limit(1).count()
-          require(clash == 0, "MERGE insert arm produced a key that " +
-            "already exists in the target (matched by a failing extra " +
-            "ON conjunct?)")
-          val nulls = insRows.where(col(t.ref.keyCol).isNull)
-            .limit(1).count()
-          require(nulls == 0,
-            "MERGE insert arm produced a NULL key")
-        }
-
-        val upserts = matchedUpd.unionByName(bySrcUpd)
-          .unionByName(insRows).persist()
-        val delKeys = matchedDel.unionByName(bySrcDel).persist()
-        try {
-          val dupUp = upserts.groupBy(col(t.ref.keyCol)).count()
-            .where(col("count") > 1).limit(1).count()
-          require(dupUp == 0, "MERGE produced duplicate upsert keys")
-          // defense in depth behind the persisted tagged frames: a key
-          // in both sets would make the atomic rewrite re-add the row
-          // the delete side meant to drop
-          val overlap = upserts.select(col(t.ref.keyCol))
-            .join(delKeys, t.ref.keyCol, "left_semi").limit(1).count()
-          require(overlap == 0,
-            "MERGE produced a key in both the upsert and delete sets")
-          // ONE commit for the whole statement, derived against the
-          // ANALYSIS-time snapshot: a merge-then-delete pair could be
-          // observed (or die) half-applied, and a concurrent commit in
-          // between must fail the optimistic check loudly
-          if (!upserts.isEmpty || !delKeys.isEmpty)
-            GraftTable.upsertDelete(spark, t.ref.root, upserts, delKeys,
-              t.ref.keyCol, t.ref.statsCols, t.ref.clusterCols,
-              t.ref.numFiles, baseSnapshot = Some(t.snapshot),
-              bloomCols = t.ref.bloomCols,
-              allowEvolution = extras.nonEmpty)
-        } finally {
-          upserts.unpersist()
-          delKeys.unpersist()
-        }
-      } finally {
-        tagM.unpersist(); tagI.unpersist(); tagS.unpersist()
-      }
-    } finally {
-      matchedRel.unpersist()
-      srcOnlyRel.unpersist()
-      tgtOnlyRel.unpersist()
-      srcDf.unpersist()
+    // ONE join classifies every row: each side carries a presence
+    // marker, so after the join a row is matched (both markers), NOT
+    // MATCHED (source only) or NOT MATCHED BY SOURCE (target only) by
+    // marker, whatever its columns hold. The join keeps exactly the
+    // sides some arm reads: FULL OUTER with both unmatched classes, an
+    // outer join keeping the target (by-source arms) or the source
+    // (insert arms) with one, INNER otherwise.
+    val marked = (p: LogicalPlan, mark: String) =>
+      Project(p.output :+ Alias(Literal.TrueLiteral, mark)(), p)
+    val joinType = (notMatchedActions.nonEmpty,
+        notMatchedBySourceActions.nonEmpty) match {
+      case (true, true) => FullOuter
+      case (true, false) => RightOuter
+      case (false, true) => LeftOuter
+      case (false, false) => Inner
     }
+    val joined = SqlShim.ofRows(spark, Join(marked(t.child, TgtMark),
+      marked(source, SrcMark), joinType, Some(cond), JoinHint.NONE))
+    val arms =
+      expanded(matchedActions, tgtOut, srcOut, extras)
+        .map { case (cd, as) => Arm(Arm.Matched, cd, as) } ++
+      expanded(notMatchedActions, tgtOut, srcOut, extras)
+        .map { case (cd, as) => Arm(Arm.NotMatched, cd, as) } ++
+      expanded(notMatchedBySourceActions, tgtOut, srcOut)
+        .map { case (cd, as) => Arm(Arm.BySource, cd, as) }
+    // the persisted frame is the statement's only materialization: the
+    // source (and every arm condition and value) is evaluated once, as
+    // the join that builds it runs
+    val tagged = applyActions(joined, arms, tgtOut, keyAttr,
+      keepMatches = matchedActions.nonEmpty, extraNames = extraNames)
+    try {
+      def armsWhere(p: Arm => Boolean): Column = col(ActCol).isin(
+        arms.zipWithIndex.collect { case (a, i) if p(a) => i }: _*)
+      val isUpsert = armsWhere(_.assigns.isDefined)
+      val isDelete = armsWhere(_.assigns.isEmpty)
+      val isInsert = armsWhere(_.cls == Arm.NotMatched)
+      // every loud guard and both emptiness counts in ONE grouped
+      // aggregate, before any file is written. Per post-image key:
+      // matches (cardinality), inserts vs live target keys (clash — the
+      // target-key leg joins only when an insert arm exists), upserts
+      // (duplicates) and deletes (overlap). NULL keys equal nothing,
+      // like the equi-joins these rules are defined by, except that a
+      // NULL insert key is its own failure and duplicate NULL upserts
+      // still count.
+      val one = (b: Column) => when(b, 1L).otherwise(0L)
+      val flags = tagged.select(col(t.ref.keyCol).as(GuardKey),
+        one(col(MatchCol)).as("m"), one(isInsert).as("ins"),
+        lit(0L).as("live"), one(isUpsert).as("up"), one(isDelete).as("del"))
+      val keyed =
+        if (notMatchedActions.isEmpty) flags
+        else flags.unionByName(SqlShim.ofRows(spark, t.child).select(
+          c(keyAttr).as(GuardKey), lit(0L).as("m"), lit(0L).as("ins"),
+          lit(1L).as("live"), lit(0L).as("up"), lit(0L).as("del")))
+      val k = col(GuardKey)
+      val perKey = keyed.groupBy(k).agg(sum("m").as("m"),
+        sum("ins").as("ins"), sum("live").as("live"), sum("up").as("up"),
+        sum("del").as("del"))
+      val anyOf = (b: Column) => max(one(b))
+      val g = perKey.agg(
+        anyOf(col("m") > 1), // 0
+        anyOf(k.isNotNull && col("ins") > 0 && col("live") > 0), // 1
+        anyOf(k.isNull && col("ins") > 0), // 2
+        anyOf(col("up") > 1), // 3
+        anyOf(k.isNotNull && col("up") > 0 && col("del") > 0), // 4
+        sum("up"), sum("del")).head() // 5, 6
+      val n = (i: Int) => if (g.isNullAt(i)) 0L else g.getLong(i)
+      // SQL cardinality rule: a target row matches at most one source row
+      require(n(0) == 0, "MERGE cardinality violation: a target row " +
+        "matches more than one source row")
+      // an insert arm must not re-use a live key (the key-addressed
+      // upsert would silently REPLACE the existing row) nor mint a NULL
+      // key (unaddressable forever: every later key-addressed statement
+      // equi-joins on the key and skips it)
+      require(n(1) == 0, "MERGE insert arm produced a key that " +
+        "already exists in the target (matched by a failing extra " +
+        "ON conjunct?)")
+      require(n(2) == 0, "MERGE insert arm produced a NULL key")
+      require(n(3) == 0, "MERGE produced duplicate upsert keys")
+      // a key in both sets would make the atomic rewrite re-add the row
+      // the delete side meant to drop
+      require(n(4) == 0,
+        "MERGE produced a key in both the upsert and delete sets")
+      // ONE commit for the whole statement, derived against the
+      // ANALYSIS-time snapshot: a merge-then-delete pair could be
+      // observed (or die) half-applied, and a concurrent commit in
+      // between must fail the optimistic check loudly
+      if (n(5) > 0 || n(6) > 0)
+        GraftTable.upsertDelete(spark, t.ref.root,
+          tagged.where(isUpsert).select(tgtOut.map(a => col(a.name)): _*),
+          tagged.where(isDelete).select(col(t.ref.keyCol).as(t.ref.keyCol)),
+          t.ref.keyCol, t.ref.statsCols, t.ref.clusterCols,
+          t.ref.numFiles, baseSnapshot = Some(t.snapshot),
+          bloomCols = t.ref.bloomCols,
+          allowEvolution = extras.nonEmpty)
+    } finally tagged.unpersist()
     Seq.empty
   }
 }

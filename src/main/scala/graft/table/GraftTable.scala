@@ -300,12 +300,46 @@ object GraftTable {
     bloomPositionsStr(key).forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
   }
 
-  private def packBloom(positions: Iterable[Int]): String = {
-    val bits = new Array[Byte]((BloomBits + 7) / 8)
-    positions.foreach { p =>
-      bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte
-    }
-    java.util.Base64.getEncoder.encodeToString(bits)
+  /** Commit-time bloom build for one (file, column) group: the OR of the
+    * probe-position bits of every non-NULL key into one packed bitset,
+    * so the buffer is bounded at 8 KiB whatever the file's row count.
+    * Bit for bit the packing of the distinct positions; an EMPTY result
+    * means the file holds no non-NULL key and records no bloom. The
+    * build calls the same `bloomPositions*` as the driver-side probe, so
+    * build/probe identity holds by construction. */
+  private final class BloomAgg[K](positions: K => Array[Int])
+      extends org.apache.spark.sql.expressions.Aggregator[K, Array[Byte],
+        Array[Byte]] {
+    def zero: Array[Byte] = Array.emptyByteArray
+    def reduce(b: Array[Byte], k: K): Array[Byte] =
+      if (k == null) b
+      else {
+        val bits = if (b.isEmpty) new Array[Byte]((BloomBits + 7) / 8) else b
+        positions(k).foreach(p =>
+          bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte)
+        bits
+      }
+    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+      if (a.isEmpty) b
+      else {
+        var i = 0
+        while (i < b.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
+        a
+      }
+    def finish(b: Array[Byte]): Array[Byte] = b
+    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
+      org.apache.spark.sql.Encoders.BINARY
+    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
+      org.apache.spark.sql.Encoders.BINARY
+  }
+
+  private def bloomBits(c: Column, t: DataType): Column = t match {
+    case org.apache.spark.sql.types.StringType =>
+      udaf(new BloomAgg[String](bloomPositionsStr),
+        org.apache.spark.sql.Encoders.STRING)(c)
+    case _ =>
+      udaf(new BloomAgg[java.lang.Long](k => bloomPositions(k.longValue())),
+        org.apache.spark.sql.Encoders.LONG)(c.cast("long"))
   }
 
   private[graft] def bloomMayContain(b64: String, key: Long): Boolean = {
@@ -811,8 +845,9 @@ object GraftTable {
 
   /** Write `df`'s rows as immutable parquet files under a fresh commit
     * subdirectory and return their manifest entries. One extra
-    * distributed job computes per-file row counts and min/max stats via
-    * `input_file_name` — no driver-side data movement, driver payload is
+    * distributed job ([[fileEntries]]) computes per-file row counts,
+    * min/max stats and every bloom column via `input_file_name` — the
+    * job count does not grow with `bloomCols`, and the driver payload is
     * O(files). `clusterCols` range-partitions the write so the stats are
     * TIGHT (a file covers a narrow key band → pruning actually skips);
     * an unclustered write would give every file near-global bounds. */
@@ -851,52 +886,54 @@ object GraftTable {
         else df.repartition(numFiles)
     }
     clustered.write.mode("overwrite").parquet(dir)
+    // explicit schema: skips footer inference and keeps an all-rows-
+    // deleted rewrite (zero part files) a valid empty commit
+    fileEntries(root, spark.read.schema(df.schema).parquet(dir), statsCols,
+      bloomCols, partitioned = false)
+  }
+
+  /** The manifest entries of the files one write just landed, read back
+    * through `scan`: per file the row count, min/max of every stats
+    * column and the bloom of every bloom column, from ONE
+    * `groupBy(input_file_name)` job — no driver-side data movement, the
+    * driver payload is O(files) plus one 8 KiB bitset per file and bloom
+    * column ([[BloomAgg]]). Shared by the flat and partitioned kernels;
+    * `partitioned` records each file's `k=v` tuple from its path. */
+  private def fileEntries(root: String, scan: DataFrame,
+      statsCols: Seq[String], bloomCols: Seq[String],
+      partitioned: Boolean): List[FileEntry] = {
     val rootUri = new org.apache.hadoop.fs.Path(root).toUri.getPath
     def rel(fileUri: String): String = {
       val local = new org.apache.hadoop.fs.Path(fileUri).toUri.getPath
       require(local.startsWith(rootUri), s"file outside table root: $local")
       local.stripPrefix(rootUri).stripPrefix("/")
     }
-    val aggs = count(lit(1)).as("rows") +: statsCols.flatMap(c => Seq(
+    def partsOfRel(r: String): Map[String, String] =
+      r.split('/').iterator.filter(_.contains('='))
+        .map { seg =>
+          val i = seg.indexOf('=')
+          seg.substring(0, i) -> seg.substring(i + 1)
+        }.toMap
+    val aggs = count(lit(1)).as("rows") +: (statsCols.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"min_$c"),
-      max(col(c)).cast("double").as(s"max_$c")))
-    // one extra commit-time job per bloom column: distinct probe
-    // positions per file (≤ BloomBits ints each — bounded driver
-    // payload), packed to 8 KiB bitsets. A UDF, deliberately: the build
-    // MUST hash exactly like the driver-side probe, so both call
-    // bloomPositions — commit-time metadata, not a query hot path.
-    val posUdf = udf((k: java.lang.Long) =>
-      if (k == null) Array.empty[Int] else bloomPositions(k.longValue()))
-    val posUdfStr = udf((k: String) =>
-      if (k == null) Array.empty[Int] else bloomPositionsStr(k))
-    val blooms: Map[String, Map[String, String]] = bloomCols.map { c =>
-      val probe = df.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType => posUdfStr(col(c))
-        case _ => posUdf(col(c).cast("long"))
-      }
-      c -> spark.read.schema(df.schema).parquet(dir)
-        .select(input_file_name().as("f"),
-          explode(probe).as("pos"))
-        .groupBy("f").agg(collect_set(col("pos")).as("ps"))
-        .collect()
-        .map(r => rel(r.getString(0)) ->
-          packBloom(r.getSeq[Int](1)))
-        .toMap
-    }.toMap
-    // explicit schema: skips footer inference and keeps an all-rows-
-    // deleted rewrite (zero part files) a valid empty commit
-    spark.read.schema(df.schema).parquet(dir)
-      .groupBy(input_file_name().as("f"))
+      max(col(c)).cast("double").as(s"max_$c"))) ++
+      bloomCols.map(c =>
+        bloomBits(col(c), scan.schema(c).dataType).as(s"bloom_$c")))
+    scan.groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toList
       .map { r =>
         val p = rel(r.getAs[String]("f"))
-        val perFile = bloomCols
-          .flatMap(c => blooms(c).get(p).map(c -> _)).toMap
+        val perFile = bloomCols.flatMap { c =>
+          val bits = r.getAs[Array[Byte]](s"bloom_$c")
+          if (bits.isEmpty) None
+          else Some(c -> java.util.Base64.getEncoder.encodeToString(bits))
+        }.toMap
         FileEntry(p, r.getAs[Long]("rows"),
           statsCols.map(c => c -> r.getAs[Double](s"min_$c")).toMap,
           statsCols.map(c => c -> r.getAs[Double](s"max_$c")).toMap,
-          if (perFile.isEmpty) None else Some(perFile))
+          if (perFile.isEmpty) None else Some(perFile),
+          parts = if (partitioned) Some(partsOfRel(p)) else None)
       }
       .sortBy(_.path)
   }
@@ -985,54 +1022,10 @@ object GraftTable {
       }
       finally graft.util.AppCleanup.recursiveDelete(stagePath.toFile)
     if (moved.isEmpty) return Nil
-    val scan = spark.read.schema(df.schema)
-      .option("basePath", s"$root/data")
-      .parquet(moved.map(r => s"$root/$r"): _*)
-    val rootUri = new org.apache.hadoop.fs.Path(root).toUri.getPath
-    def rel(fileUri: String): String = {
-      val local = new org.apache.hadoop.fs.Path(fileUri).toUri.getPath
-      require(local.startsWith(rootUri), s"file outside table root: $local")
-      local.stripPrefix(rootUri).stripPrefix("/")
-    }
-    def partsOfRel(r: String): Map[String, String] =
-      r.split('/').iterator.filter(_.contains('='))
-        .map { seg =>
-          val i = seg.indexOf('=')
-          seg.substring(0, i) -> seg.substring(i + 1)
-        }.toMap
-    val aggs = count(lit(1)).as("rows") +: statsCols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"min_$c"),
-      max(col(c)).cast("double").as(s"max_$c")))
-    val posUdf = udf((k: java.lang.Long) =>
-      if (k == null) Array.empty[Int] else bloomPositions(k.longValue()))
-    val posUdfStr = udf((k: String) =>
-      if (k == null) Array.empty[Int] else bloomPositionsStr(k))
-    val blooms: Map[String, Map[String, String]] = bloomCols.map { c =>
-      val probe = df.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType => posUdfStr(col(c))
-        case _ => posUdf(col(c).cast("long"))
-      }
-      c -> scan
-        .select(input_file_name().as("f"), explode(probe).as("pos"))
-        .groupBy("f").agg(collect_set(col("pos")).as("ps"))
-        .collect()
-        .map(r => rel(r.getString(0)) -> packBloom(r.getSeq[Int](1)))
-        .toMap
-    }.toMap
-    scan.groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toList
-      .map { r =>
-        val p = rel(r.getAs[String]("f"))
-        val perFile = bloomCols
-          .flatMap(c => blooms(c).get(p).map(c -> _)).toMap
-        FileEntry(p, r.getAs[Long]("rows"),
-          statsCols.map(c => c -> r.getAs[Double](s"min_$c")).toMap,
-          statsCols.map(c => c -> r.getAs[Double](s"max_$c")).toMap,
-          if (perFile.isEmpty) None else Some(perFile),
-          parts = Some(partsOfRel(p)))
-      }
-      .sortBy(_.path)
+    fileEntries(root, spark.read.schema(df.schema)
+        .option("basePath", s"$root/data")
+        .parquet(moved.map(r => s"$root/$r"): _*),
+      statsCols, bloomCols, partitioned = true)
   }
 
   /** Name→type shape of a schema, nullability excluded (parquet read-back
@@ -1541,7 +1534,7 @@ object GraftTable {
     * commit, like [[delete]]); both inputs follow merge's
     * deterministic-evaluation contract and their key sets must be
     * disjoint (the SQL layer guarantees both — it persists the
-    * classified frames and rejects overlaps). */
+    * classified frame and rejects overlaps). */
   def upsertDelete(spark: SparkSession, root: String, updates: DataFrame,
       deleteKeys: DataFrame, keyCol: String, statsCols: Seq[String],
       clusterCols: Seq[String], numFiles: Int = 4,
@@ -1592,55 +1585,49 @@ object GraftTable {
     enforceChecks(updates,
       withNotNull(schemaOf(parent), updates, checksOf(parent)),
       s"in the merge post-image at $root")
+    // the distinct touched-key set, built once: the key-range agg, the
+    // affected-file semi-join and the survivor anti-join all read it
     val touched = updates.select(col(keyCol))
-      .unionByName(deleteKeys.select(col(keyCol))).distinct()
-    val candidates = prunableKeyRange(touched, keyCol, "upsertDelete") match {
-      case None => Nil // no touched keys: nothing can match
-      case Some((kLo, kHi)) => parent.files.filter(f =>
-        f.maxs.get(keyCol).forall(_ >= kLo) &&
-          f.mins.get(keyCol).forall(_ <= kHi))
-    }
-    // DV-aware on both legs: detection must not flag (and the rewrite
-    // must not resurrect) rows an earlier merge-on-read commit already
-    // deleted — readEntries* apply the parent's deletion vectors, and
-    // the copy-on-write rewrite therefore MATERIALIZES them (new
-    // entries carry no DV)
-    val affectedPaths: List[String] =
-      if (candidates.isEmpty) Nil
-      else readEntriesWithPos(spark, root, parent, candidates)
-        .select(col(keyCol), col("__rel"))
-        .join(touched, Seq(keyCol), "left_semi")
-        .select("__rel").distinct().collect()
-        .map(_.getString(0)).toList.sorted
-    if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) return v
-    val affected = parent.files.filter(f => affectedPaths.contains(f.path))
-    val survivors =
-      if (affected.isEmpty) updates
-      else {
-        val base0 = readEntries(spark, root, parent, affected)
-        // evolved commit: rewritten survivors pad the new columns NULL
-        // (rows that never received the column — Delta's autoMerge
-        // semantics); untouched files stay bytes-identical and read
-        // NULL via the absent-column path
-        val base = extraFields.foldLeft(base0)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        base.join(touched, Seq(keyCol), "left_anti")
-          .select(base.columns.map(col): _*)
-          .unionByName(updates)
-      }
-    val entries = writeFiles(spark, root, survivors, statsCols,
-      clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
-    val m = child(parent, if (evolved) "merge_evolve" else "merge",
-      parent.files.filterNot(f => affectedPaths.contains(f.path)) ++ entries)
-      .copy(schemaJson =
-        if (evolved) updates.schema.json else parent.schemaJson,
-        stream = streamTxn.map { case (qid, b) =>
-          parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
-        }.orElse(parent.stream))
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"upsertDelete derived from stale snapshot $v at $root")
-    v + 1
+      .unionByName(deleteKeys.select(col(keyCol))).distinct().persist()
+    try {
+      // DV-aware on both legs: detection must not flag (and the rewrite
+      // must not resurrect) rows an earlier merge-on-read commit already
+      // deleted — readEntries* apply the parent's deletion vectors, and
+      // the copy-on-write rewrite therefore MATERIALIZES them (new
+      // entries carry no DV)
+      val affectedPaths = affectedFiles(spark, root, parent,
+        keyCandidates(parent, touched, keyCol, "upsertDelete"), touched,
+        keyCol)
+      if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) return v
+      val affected = parent.files.filter(f => affectedPaths(f.path))
+      val survivors =
+        if (affected.isEmpty) updates
+        else {
+          val base0 = readEntries(spark, root, parent, affected)
+          // evolved commit: rewritten survivors pad the new columns NULL
+          // (rows that never received the column — Delta's autoMerge
+          // semantics); untouched files stay bytes-identical and read
+          // NULL via the absent-column path
+          val base = extraFields.foldLeft(base0)((acc, f) =>
+            acc.withColumn(f.name, lit(null).cast(f.dataType)))
+          base.join(touched, Seq(keyCol), "left_anti")
+            .select(base.columns.map(col): _*)
+            .unionByName(updates)
+        }
+      val entries = writeFiles(spark, root, survivors, statsCols,
+        clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+      val m = child(parent, if (evolved) "merge_evolve" else "merge",
+        parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
+        .copy(schemaJson =
+          if (evolved) updates.schema.json else parent.schemaJson,
+          stream = streamTxn.map { case (qid, b) =>
+            parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
+          }.orElse(parent.stream))
+      if (!tryCommit(root, m))
+        throw new java.util.ConcurrentModificationException(
+          s"upsertDelete derived from stale snapshot $v at $root")
+      v + 1
+    } finally touched.unpersist()
   }
 
   /** DYNAMIC PARTITION OVERWRITE — the incremental-rerun verb a
@@ -1710,36 +1697,55 @@ object GraftTable {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"delete from non-existent table $root")
     val parent = manifest(root, v)
-    val keys = deleteKeys.select(col(keyCol)).distinct()
-    val candidates = prunableKeyRange(keys, keyCol, "delete") match {
+    // the distinct key set, built once for the key-range agg, the
+    // affected-file semi-join and the survivor anti-join
+    val keys = deleteKeys.select(col(keyCol)).distinct().persist()
+    try {
+      // DV-aware, same as merge: an already-DV-deleted row neither flags
+      // its file nor survives the rewrite (which materializes the DV)
+      val affectedPaths = affectedFiles(spark, root, parent,
+        keyCandidates(parent, keys, keyCol, "delete"), keys, keyCol)
+      if (affectedPaths.isEmpty) return v // nothing matched; no empty commit
+      val affected = parent.files.filter(f => affectedPaths(f.path))
+      val base = readEntries(spark, root, parent, affected)
+      val survivors = base.join(keys, Seq(keyCol), "left_anti")
+        .select(base.columns.map(col): _*)
+      val entries = writeFiles(spark, root, survivors, statsCols,
+        clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+      val m = child(parent, "delete",
+        parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
+      if (!tryCommit(root, m))
+        throw new java.util.ConcurrentModificationException(
+          s"delete derived from stale snapshot $v at $root")
+      v + 1
+    } finally keys.unpersist()
+  }
+
+  /** Files of `parent` whose [min,max] of `keyCol` overlaps the key
+    * range of `keys` — the driver-side, zero-I/O first pruning level;
+    * no keys, no candidates. */
+  private def keyCandidates(parent: Manifest, keys: DataFrame,
+      keyCol: String, what: String): List[FileEntry] =
+    prunableKeyRange(keys, keyCol, what) match {
       case None => Nil
       case Some((kLo, kHi)) => parent.files.filter(f =>
         f.maxs.get(keyCol).forall(_ >= kLo) &&
           f.mins.get(keyCol).forall(_ <= kHi))
     }
-    // DV-aware, same as merge: an already-DV-deleted row neither flags
-    // its file nor survives the rewrite (which materializes the DV)
-    val affectedPaths: List[String] =
-      if (candidates.isEmpty) Nil
-      else readEntriesWithPos(spark, root, parent, candidates)
-        .select(col(keyCol), col("__rel"))
-        .join(keys, Seq(keyCol), "left_semi")
-        .select("__rel").distinct().collect()
-        .map(_.getString(0)).toList.sorted
-    if (affectedPaths.isEmpty) return v // nothing matched; no empty commit
-    val affected = parent.files.filter(f => affectedPaths.contains(f.path))
-    val base = readEntries(spark, root, parent, affected)
-    val survivors = base.join(keys, Seq(keyCol), "left_anti")
-      .select(base.columns.map(col): _*)
-    val entries = writeFiles(spark, root, survivors, statsCols,
-      clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
-    val m = child(parent, "delete",
-      parent.files.filterNot(f => affectedPaths.contains(f.path)) ++ entries)
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"delete derived from stale snapshot $v at $root")
-    v + 1
-  }
+
+  /** The second pruning level: paths of the `candidates` that actually
+    * hold one of `keys`, by a provenance (`__rel`) semi-join over only
+    * those files (DV-aware: a row an earlier merge-on-read commit
+    * deleted flags nothing). Driver payload is the affected-path set. */
+  private def affectedFiles(spark: SparkSession, root: String,
+      parent: Manifest, candidates: List[FileEntry], keys: DataFrame,
+      keyCol: String): Set[String] =
+    if (candidates.isEmpty) Set.empty
+    else readEntriesWithPos(spark, root, parent, candidates)
+      .select(col(keyCol), col("__rel"))
+      .join(keys, Seq(keyCol), "left_semi")
+      .select("__rel").distinct().collect()
+      .map(_.getString(0)).toSet
 
   /** Mark rows of `parent`'s stats-candidate files whose `keyCol` matches
     * `keys` as deleted, by (file, row ordinal). Returns the per-file NEW
@@ -1798,14 +1804,12 @@ object GraftTable {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"delete from non-existent table $root")
     val parent = manifest(root, v)
-    val keys = deleteKeys.select(col(keyCol)).distinct()
-    val candidates = prunableKeyRange(keys, keyCol, "delete") match {
-      case None => Nil
-      case Some((kLo, kHi)) => parent.files.filter(f =>
-        f.maxs.get(keyCol).forall(_ >= kLo) &&
-          f.mins.get(keyCol).forall(_ <= kHi))
-    }
-    val marks = dvMark(spark, root, parent, candidates, keys, keyCol)
+    // the distinct key set, built once for the key-range agg and dvMark
+    val keys = deleteKeys.select(col(keyCol)).distinct().persist()
+    val marks =
+      try dvMark(spark, root, parent,
+        keyCandidates(parent, keys, keyCol, "delete"), keys, keyCol)
+      finally keys.unpersist()
     if (marks.isEmpty) return v // nothing matched; no empty commit
     val m = child(parent, "delete_mor", applyDvMarks(root, parent, marks))
     if (!tryCommit(root, m))
@@ -1835,13 +1839,8 @@ object GraftTable {
       withNotNull(schemaOf(parent), updates, checksOf(parent)),
       s"in the merge post-image at $root")
     val keys = updates.select(col(keyCol)).distinct()
-    val candidates = prunableKeyRange(updates, keyCol, "merge") match {
-      case None => Nil
-      case Some((kLo, kHi)) => parent.files.filter(f =>
-        f.maxs.get(keyCol).forall(_ >= kLo) &&
-          f.mins.get(keyCol).forall(_ <= kHi))
-    }
-    val marks = dvMark(spark, root, parent, candidates, keys, keyCol)
+    val marks = dvMark(spark, root, parent,
+      keyCandidates(parent, updates, keyCol, "merge"), keys, keyCol)
     val entries = writeFiles(spark, root, updates, statsCols,
       clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
     val m = child(parent, "merge_mor",
