@@ -504,7 +504,7 @@ object Relational {
       s"* 2654435761 + 43) % $CanaryPeriod"
 
   val agg_scaling_canary: Q = (s, d) => {
-    val n = graft.util.Probes.memoProbe(s, d, "scaling_canary_rows") {
+    val n = graft.util.Probes.memo(s, d, "scaling_canary_rows") {
       lineitem(s, d).count()
     } * CanaryReps
     // the group key DERIVES FROM the chain: the bench times `.count()`,

@@ -11,8 +11,9 @@ import graft.util.Tables.orders
   * parquet (no Delta/Iceberg jars resolve offline; the format is the
   * public Delta/Iceberg design re-expressed minimally).
   *
-  * One fixture table is built ONCE per (application, sfDir) — the house
-  * buildOnce memo, same as the IVF index — with three commits:
+  * One fixture table is built ONCE per (application, sfDir) through
+  * [[Sources.builtDir]], like every other fixture directory, with three
+  * commits:
   *   v1 create  : orders through 1997, range-clustered
   *   v2 append  : orders 1998+
   *   v3 merge   : 1998 orders with o_orderkey % 3 = 0, price doubled
@@ -26,17 +27,13 @@ import graft.util.Tables.orders
   */
 object Table {
 
-  private val tableBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private val statsCols = Seq("o_year", "o_orderkey")
   private val bloomCols = Seq("o_orderkey")
 
   /** Build the three-snapshot orders table; returns its root. */
   private[graft] def ordersTable(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val root = Sources.sinkDir(s, d, "graft_table_orders")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+      d: String): String =
+    Sources.builtDir(s, d, "graft_table_orders") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src.where(col("o_year") <= 1997),
@@ -49,8 +46,6 @@ object Table {
         keyCol = "o_orderkey", statsCols, clusterCols = statsCols,
         bloomCols = bloomCols)
     }
-    root
-  }
 
   /** Latest-snapshot read after the full create→append→merge history:
     * the MERGE's doubled prices are visible, everything else unchanged —
@@ -152,8 +147,7 @@ object Table {
     * aggregate equals the same aggregate over the source slice. */
   val table_compact: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_compact")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_compact") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .where(col("o_year") === 1996)
@@ -182,8 +176,7 @@ object Table {
     * oracle replays the delete as a static NOT-predicate. */
   val table_delete: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_delete")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_delete") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .where(col("o_year") === 1996)
@@ -214,8 +207,7 @@ object Table {
     * oracle replays both commits statically. */
   val table_delete_mor: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_mor")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_mor") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .where(col("o_year") === 1996)
@@ -248,8 +240,7 @@ object Table {
     * predicate still applies — pruning is file-granular. */
   val table_zorder: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_zorder")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_zorder") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src,
@@ -275,8 +266,7 @@ object Table {
     * expired-target edges). */
   val table_restore: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_restore")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_restore") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src.where(col("o_year") <= 1997),
@@ -317,8 +307,7 @@ object Table {
     * writers that have landed files but not yet linked a manifest. */
   val table_vacuum: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "graft_table_vacuum")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "graft_table_vacuum") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src.where(col("o_year") <= 1997),
@@ -488,13 +477,11 @@ object Table {
     * second sfDir (the table_sql_ddl naming discipline). */
   private[graft] def partOrdersName(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    "part_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    "part_orders_" + graft.util.AppCleanup.appTag(s, d)
 
   val table_sql_partitioned: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_part_orders")
     val name = partOrdersName(s, d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sql_part_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft PARTITIONED BY (o_year)
             LOCATION '$root'
@@ -527,10 +514,8 @@ object Table {
     * planned-file set. The oracle replays the slice statically over
     * the raw source; pruning is never correctness-load-bearing. */
   val table_sql_part_transform: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_ptx_orders")
-    val name = "ptx_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "ptx_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_ptx_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft
             PARTITIONED BY (months(o_orderdate))
@@ -567,10 +552,8 @@ object Table {
     * upstream adds a field and the pipeline must not stop — nor
     * silently drop the field. */
   val table_evolution: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_evo_orders")
-    val name = "evo_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "evo_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_evo_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -610,10 +593,8 @@ object Table {
     * one leg or the other. Oracle replays both worlds statically. */
   val table_sql_replace: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_replace_orders")
-    val name = "repl_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "repl_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_replace_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -658,10 +639,8 @@ object Table {
     * slices statically. */
   val table_truncate: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_truncate_orders")
-    val name = "trunc_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "trunc_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_truncate_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -704,10 +683,8 @@ object Table {
   val table_sql_analyze: Q = (s, d) => {
     val sp = s
     import sp.implicits._
-    val root = Sources.sinkDir(s, d, "sql_analyze_orders")
-    val name = "anl_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "anl_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_analyze_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey')
@@ -739,10 +716,8 @@ object Table {
     * each breaks the hash. Scale: the widen commit is O(manifest) at
     * any table size — zero data movement. */
   val table_widen: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_widen_orders")
-    val name = "widen_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "widen_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_widen_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -781,10 +756,8 @@ object Table {
     * partition's file entries); untouched partitions carry over by
     * reference. */
   val table_sql_part_overwrite: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_part_ow_orders")
-    val name = "part_ow_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "part_ow_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_part_ow_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft PARTITIONED BY (o_year)
             LOCATION '$root'
@@ -824,8 +797,7 @@ object Table {
     * optimistic append commit — O(batch), never O(table). */
   val table_stream_sink: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "stream_sink_orders")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "stream_sink_orders") { root =>
       val src = orders(s, d)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       GraftTable.create(s, root, src.limit(0),
@@ -868,8 +840,7 @@ object Table {
     * never O(table). */
   val table_stream_upsert: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "stream_upsert_orders")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "stream_upsert_orders") { root =>
       val src = orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), year(col("o_orderdate")).as("o_year"))
@@ -935,9 +906,8 @@ object Table {
     * high-cardinality at any scale. */
   val table_cdc_replay: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "cdc_replay_orders")
     // the feed is deterministic over the fixture story, so it is dumped
-    // ONCE inside the same buildOnce as the table (the band/edge-table
+    // ONCE inside the same build as the table (the band/edge-table
     // discipline, r13 verdict #1): changesBetweenRows re-diffs every
     // commit's files per invocation — correct but the most expensive
     // part of the row, and pure fixture prep here. The replay fold
@@ -945,8 +915,7 @@ object Table {
     // plain parquet scan of the memoized feed. A production CDC
     // consumer does exactly this: the feed lands once per commit range,
     // downstream folds read the landed feed.
-    val feed = s"$root/_cdcfeed"
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "cdc_replay_orders") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")).cast("int"))
         .select("o_orderkey", "o_totalprice", "o_year")
@@ -967,9 +936,9 @@ object Table {
         Seq("o_year", "o_orderkey"))
       GraftTable.changesBetweenRows(s, root, 0,
         GraftTable.latestSnapshot(root), "o_orderkey")
-        .write.mode("overwrite").parquet(feed)
+        .write.mode("overwrite").parquet(s"$root/_cdcfeed")
     }
-    replayOf(s.read.parquet(feed), "o_orderkey")
+    replayOf(s.read.parquet(s"$root/_cdcfeed"), "o_orderkey")
       .groupBy("o_year")
       .agg(count(lit(1)).as("n_orders"),
         moneySum(col("o_totalprice")).as("sum_price"))
@@ -1011,8 +980,7 @@ object Table {
     * pruning) — cost follows DML locality, not table size. */
   val table_sql_merge: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_merge_orders")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sql_merge_orders") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src.where(col("o_year") <= 1997),
@@ -1049,8 +1017,7 @@ object Table {
     * familiar static replay. */
   val table_sql_dml: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_dml_orders")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sql_dml_orders") { root =>
       val src = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       GraftTable.create(s, root, src.where(col("o_year") <= 1997),
@@ -1092,10 +1059,8 @@ object Table {
     * JVM — an untagged second CREATE would loudly (and correctly)
     * collide. */
   val table_sql_ddl: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_ddl_orders")
-    val name = "sql_ddl_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_ddl_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_ddl_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
@@ -1137,10 +1102,8 @@ object Table {
     * rows are genuinely NULL (and Spark sorts NULL first where DuckDB
     * sorts it last — coalescing keeps the total order engine-neutral). */
   val table_sql_alter: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_alter_orders")
-    val name = "sql_alter_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_alter_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_alter_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1194,10 +1157,8 @@ object Table {
     * history literally — five retained snapshots instead of two is a
     * row-count mismatch, a silently no-op vacuum. */
   val table_sql_maint: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_maint_orders")
-    val name = "sql_maint_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_maint_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_maint_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1262,12 +1223,10 @@ object Table {
     * inlines the re-parsed body before optimization, so both reach the
     * parquet scan — the pushdown pin is PlanShapeSpec's). */
   val table_sql_view: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_view_orders")
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val tag = graft.util.AppCleanup.appTag(s, d)
     val name = "sql_view_orders_" + tag
     val vname = "v_recent_orders_" + tag
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sql_view_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -1319,8 +1278,7 @@ object Table {
     * splice. */
   val table_sql_describe: Q = (s, d) => {
     table_sql_alter(s, d) // ensures the fixture table + its ALTER commit
-    val name = "sql_alter_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val name = "sql_alter_orders_" + graft.util.AppCleanup.appTag(s, d)
     graft.sql.GraftSql.sql(s, s"DESCRIBE TABLE $name").orderBy("ord")
   }
 
@@ -1337,11 +1295,9 @@ object Table {
     * GraftTableSpec's. */
   val table_sql_branch: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_branch_orders")
-    val name = "sql_branch_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val name = "sql_branch_orders_" + graft.util.AppCleanup.appTag(s, d)
     graft.functions.GraftTableFunctions.register(s)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sql_branch_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -1410,10 +1366,8 @@ object Table {
     * tag absent from both. Literal oracle like table_sql_show — every
     * id is pinned by the fixture's commit recipe. */
   val table_sql_refs: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_refs_orders")
-    val name = "sql_refs_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_refs_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_refs_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (o_orderkey BIGINT, o_year INT)
             USING graft OPTIONS (key 'o_orderkey') LOCATION '$root'""")
@@ -1463,10 +1417,8 @@ object Table {
     * type changes stay loudly rejected (GraftTableSpec). */
   val table_sql_rename_col: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_rencol_orders")
-    val name = "sql_rencol_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_rencol_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_rencol_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1528,10 +1480,8 @@ object Table {
     * The key column stays undroppable (GraftTableSpec). */
   val table_sql_drop_col: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_dropcol_orders")
-    val name = "sql_dropcol_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_dropcol_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_dropcol_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1593,12 +1543,10 @@ object Table {
     * returning so the oracle can pin the names LITERALLY. Driver-side
     * registry reads; no job runs at any scale. */
   val table_sql_show: Q = (s, d) => {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val tag = graft.util.AppCleanup.appTag(s, d)
       .toLowerCase(java.util.Locale.ROOT)
     val p = s"show_story_$tag"
-    val rootA = Sources.sinkDir(s, d, "show_story_ta")
-    graft.util.AppCleanup.buildOnce(tableBuilt, rootA) {
+    val rootA = Sources.builtDir(s, d, "show_story_ta") { rootA =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE ${p}_ta (o_orderkey BIGINT, o_year INT)
             USING graft OPTIONS (key 'o_orderkey') LOCATION '$rootA'""")
@@ -1644,12 +1592,10 @@ object Table {
     * round-trip by re-executing the emitted DDL at a fresh location.
     * Driver-side metadata reads; no job at any scale. */
   val table_sql_show_create: Q = (s, d) => {
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val tag = graft.util.AppCleanup.appTag(s, d)
       .toLowerCase(java.util.Locale.ROOT)
     val p = s"sc_story_$tag"
-    val root = Sources.sinkDir(s, d, "sc_story_t")
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val root = Sources.builtDir(s, d, "sc_story_t") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE ${p}_sc (o_orderkey BIGINT, o_price DOUBLE)
             USING graft
@@ -1690,10 +1636,8 @@ object Table {
     * write; ADD pays one full scan (the cost of constraining late). */
   val table_sql_constraint: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_con_orders")
-    val name = "sql_con_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_con_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_con_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT,
@@ -1762,10 +1706,8 @@ object Table {
     * count recomputes from the source slice. Driver-side metadata
     * reads; no job at any scale. */
   val table_sql_detail: Q = (s, d) => {
-    val root = Sources.sinkDir(s, d, "sql_detail_orders")
-    val name = "sql_detail_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_detail_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_detail_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1803,13 +1745,11 @@ object Table {
     * OPTIMIZE as the progressive materializer. */
   val table_sql_clone: Q = (s, d) => {
     import graft.util.Det._
-    val rootA = Sources.sinkDir(s, d, "sql_clone_src")
     val rootB = Sources.sinkDir(s, d, "sql_clone_dst")
-    val tag = graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
+    val tag = graft.util.AppCleanup.appTag(s, d)
     val src = s"sql_clone_src_$tag"
     val dst = s"sql_clone_dst_$tag"
-    graft.util.AppCleanup.buildOnce(tableBuilt, rootA) {
+    val rootA = Sources.builtDir(s, d, "sql_clone_src") { rootA =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $src (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1863,10 +1803,8 @@ object Table {
     * in Spark's grammar. */
   val table_sql_restore: Q = (s, d) => {
     import graft.util.Det._
-    val root = Sources.sinkDir(s, d, "sql_restore_orders")
-    val name = "sql_restore_orders_" + graft.util.AppCleanup.tagOf(
-      s.sparkContext.applicationId + "_" + d)
-    graft.util.AppCleanup.buildOnce(tableBuilt, root) {
+    val name = "sql_restore_orders_" + graft.util.AppCleanup.appTag(s, d)
+    val root = Sources.builtDir(s, d, "sql_restore_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE,

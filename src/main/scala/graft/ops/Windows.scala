@@ -496,7 +496,7 @@ object Windows {
     * serves both [[winEma]] and [[winPattern]]). */
   private def maxUserHistory(s: org.apache.spark.sql.SparkSession,
       d: String): Long =
-    graft.util.Probes.memoProbe(s, d, "win_user_hist") {
+    graft.util.Probes.memo(s, d, "win_user_hist") {
       val r = events(s, d).groupBy("user_id")
         .agg(count(lit(1)).as("__n")).agg(max("__n")).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)

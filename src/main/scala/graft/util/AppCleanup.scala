@@ -46,34 +46,49 @@ object AppCleanup {
     raw.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
       Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(raw))
 
-  /** Build-once memo shared by every pay-once artifact ([[persisted]]
-    * warehouse tables, IVF index dirs, binary and table fixtures, oracle
-    * dumps): runs `build` the first time `tag` is seen in this JVM and
-    * records the tag only AFTER build returns — a failed build retries on
-    * the next call instead of poisoning every later invocation — under a
-    * lock spanning the whole build so two concurrent first callers
-    * cannot race a reset against an in-flight write. The subtle rules
-    * live here once instead of being re-audited per call site. */
+  /** Per-(application, key) readable tag: the house name of every
+    * artifact scoped to one application and one sfDir (fixture tables
+    * claiming a registry name, [[persisted]] tables). */
+  def appTag(s: SparkSession, key: String): String =
+    tagOf(s.sparkContext.applicationId + "_" + key)
+
+  /** Build-once rule behind every pay-once artifact: runs `build` the
+    * first time `tag` is seen in `seen` and records the tag only AFTER
+    * build returns — a failed build retries on the next call instead of
+    * poisoning every later invocation — under a lock spanning the whole
+    * build so two concurrent first callers cannot race a reset against
+    * an in-flight write. Production artifacts reach it through [[once]]
+    * ([[persisted]], [[graft.ops.Sources.builtDir]], [[Probes.memo]]). */
   def buildOnce(seen: java.util.Set[String], tag: String)(build: => Unit): Unit =
     seen.synchronized {
       if (!seen.contains(tag)) { build; seen.add(tag); () }
     }
 
-  private val tablesBuilt =
+  private val built =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** [[buildOnce]] over the one JVM-wide set every pay-once artifact
+    * shares: [[persisted]] tables (keyed by table name), built
+    * directories (by absolute path) and memoized driver values (by
+    * `applicationId|sfDir|id`) — three key shapes that never collide.
+    * One set is one reentrant lock, so a build that calls another (an
+    * index directory training a memoized quantizer, a persisted table
+    * reading a memoized offset) nests instead of ordering two locks. */
+  private[graft] def once(tag: String)(build: => Unit): Unit =
+    buildOnce(built, tag)(build)
 
   /** The warehouse table `df` writes, built once per JVM and read back —
     * every persisted ingest artifact (deterministic over immutable
     * inputs, so reuse cannot change a row) goes through here. The name is
-    * `<prefix>_` + [[tagOf]]`(applicationId_key)`, so concurrent
+    * `<prefix>_` + [[appTag]]`(s, key)`, so concurrent
     * applications and sfDirs never share a table, and the memo is keyed
     * by that full name: two prefixes over one key are two artifacts. A
     * crash leftover is reset before the write; `bucketCol` writes 8
     * buckets sorted on that column (zero-Exchange joins on it). */
   def persisted(s: SparkSession, prefix: String, key: String,
       bucketCol: String = null)(df: => DataFrame): DataFrame = {
-    val t = s"${prefix}_" + tagOf(s.sparkContext.applicationId + "_" + key)
-    buildOnce(tablesBuilt, t) {
+    val t = s"${prefix}_" + appTag(s, key)
+    once(t) {
       registerWarehouseCleanup(s)
       resetTable(s, t)
       val w = df.write.mode("overwrite")
@@ -88,12 +103,12 @@ object AppCleanup {
     * the catalog's on-disk casing). */
   private def registerWarehouseCleanup(s: SparkSession): Unit = {
     val warehouse = localFile(s.conf.get("spark.sql.warehouse.dir"))
-    val appTag = s.sparkContext.applicationId
+    val idTag = s.sparkContext.applicationId
       .replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
     onExit(s"warehouse_${s.sparkContext.applicationId}") {
       val entries = warehouse.listFiles()
       if (entries != null)
-        entries.filter(_.getName.toLowerCase.contains(appTag))
+        entries.filter(_.getName.toLowerCase.contains(idTag))
           .foreach(recursiveDelete)
     }
   }

@@ -2,20 +2,26 @@ package graft.util
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Skew/size probes memoized per (application, sfDir, id): fixture
-  * tables are immutable for the application's lifetime, and a probe
-  * answers a plan-shape question (which dispatch arm runs), so paying
-  * its scan once per application — not once per query invocation — is
-  * the bench-hot-path discipline simjoinAuto set. Shared by the Llm
-  * top-k escalations and the array-building window dispatches. */
+/** Driver-side values memoized per (application, sfDir, id), and the
+  * budget dispatch. Fixture tables are immutable for the application's
+  * lifetime, so a probe answering a plan-shape question (which dispatch
+  * arm runs), a fit verdict or a trained quantizer is paid once per
+  * application, not once per query invocation. */
 object Probes {
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val values =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  def memoProbe(s: SparkSession, d: String, id: String)(run: => Long): Long =
-    memo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d + "|" + id,
-      _ => java.lang.Long.valueOf(run)).longValue()
+  /** `run`'s value for (application, `d`, `id`), computed on the first
+    * call. The computation runs under [[AppCleanup.once]]'s reentrant
+    * lock and the value is recorded only after `run` returns: a body
+    * that throws records nothing, and a body that calls `memo` for
+    * another id nests (it never computes inside `computeIfAbsent`, whose
+    * contract forbids a mapping function that updates the same map). */
+  def memo[T](s: SparkSession, d: String, id: String)(run: => T): T = {
+    val key = s.sparkContext.applicationId + "|" + d + "|" + id
+    AppCleanup.once(key)(values.put(key, run.asInstanceOf[AnyRef]))
+    values.get(key).asInstanceOf[T]
+  }
 
   /** Budget dispatch for every driver-or-distributed operator (the graph
     * loops, the dedup closure, rel_recursive, asana root resolution):
