@@ -268,7 +268,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
       // phase 1: give the analyzer real attributes to resolve against.
       // INSERT collapses immediately — the command analyzes its own
       // query plan at run time, so nothing here waits on resolution.
-      case i @ InsertIntoStatement(u: UnresolvedRelation, part, cols,
+      case InsertIntoStatement(u: UnresolvedRelation, part, cols,
           query, overwrite, _, byName)
           if GraftSqlTables.lookup(u.multipartIdentifier).isDefined =>
         require(part.isEmpty,
@@ -755,12 +755,11 @@ case class GraftDeleteCommand(t: GraftSqlTarget, filtered: LogicalPlan)
 
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
-    // persist: GraftTable.delete's contract is a deterministic input
-    // (it may evaluate it more than once), so a nondeterministic
-    // predicate (rand()) must be frozen first; the delete dedups keys
-    val keys = SqlShim.ofRows(spark, filtered)
-      .select(c(keyAttrOf(t)).as(t.ref.keyCol)).persist()
-    try commitDelete(spark, t, keys) finally keys.unpersist()
+    // no persist: GraftTable.delete evaluates its key input once (its
+    // key probe caches it), which also freezes a nondeterministic
+    // predicate (rand()); the delete dedups keys
+    commitDelete(spark, t, SqlShim.ofRows(spark, filtered)
+      .select(c(keyAttrOf(t)).as(t.ref.keyCol)))
     Seq.empty
   }
 }
@@ -775,8 +774,8 @@ case class GraftUpdateCommand(t: GraftSqlTarget,
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
     // persist: GraftTable.merge evaluates its input more than once
-    // (pruning range, affected-file semi-join, survivor rewrite), so a
-    // nondeterministic predicate or assignment must be frozen first
+    // (key probe, survivor rewrite), so a nondeterministic predicate or
+    // assignment must be frozen first
     val updates = SqlShim.ofRows(spark, updatesPlan).persist()
     try commitUpsert(spark, t, updates) finally updates.unpersist()
     Seq.empty
@@ -1086,31 +1085,46 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       // aggregate, before any file is written. Per post-image key:
       // matches (cardinality), inserts vs live target keys (clash — the
       // target-key leg joins only when an insert arm exists), upserts
-      // (duplicates) and deletes (overlap). NULL keys equal nothing,
+      // (duplicates), deletes (overlap) and upsert rows violating each
+      // CHECK / NOT NULL condition. NULL keys equal nothing,
       // like the equi-joins these rules are defined by, except that a
       // NULL insert key is its own failure and duplicate NULL upserts
       // still count.
       val one = (b: Column) => when(b, 1L).otherwise(0L)
-      val flags = tagged.select(col(t.ref.keyCol).as(GuardKey),
+      val updates =
+        tagged.where(isUpsert).select(tgtOut.map(a => col(a.name)): _*)
+      // the post-image CHECK and NOT NULL conditions the commit kernel
+      // would enforce in a job of its own, counted per upsert row here
+      val checks = GraftTable.postImageChecks(
+        GraftTable.manifest(t.ref.root, t.snapshot), updates)
+        .toSeq.sortBy(_._1)
+      val chk = checks.indices.map(i => s"chk$i")
+      val flags = tagged.select((Seq(col(t.ref.keyCol).as(GuardKey),
         one(col(MatchCol)).as("m"), one(isInsert).as("ins"),
-        lit(0L).as("live"), one(isUpsert).as("up"), one(isDelete).as("del"))
+        lit(0L).as("live"), one(isUpsert).as("up"),
+        one(isDelete).as("del")) ++ checks.zip(chk).map {
+          case ((_, cd), a) => one(isUpsert && GraftTable.violates(cd)).as(a)
+        }): _*)
       val keyed =
         if (notMatchedActions.isEmpty) flags
-        else flags.unionByName(SqlShim.ofRows(spark, t.child).select(
+        else flags.unionByName(SqlShim.ofRows(spark, t.child).select((Seq(
           c(keyAttr).as(GuardKey), lit(0L).as("m"), lit(0L).as("ins"),
-          lit(1L).as("live"), lit(0L).as("up"), lit(0L).as("del")))
+          lit(1L).as("live"), lit(0L).as("up"), lit(0L).as("del")) ++
+          chk.map(lit(0L).as(_))): _*))
       val k = col(GuardKey)
       val perKey = keyed.groupBy(k).agg(sum("m").as("m"),
-        sum("ins").as("ins"), sum("live").as("live"), sum("up").as("up"),
-        sum("del").as("del"))
+        (Seq(sum("ins").as("ins"), sum("live").as("live"),
+          sum("up").as("up"), sum("del").as("del")) ++
+          chk.map(a => sum(a).as(a))): _*)
       val anyOf = (b: Column) => max(one(b))
       val g = perKey.agg(
         anyOf(col("m") > 1), // 0
-        anyOf(k.isNotNull && col("ins") > 0 && col("live") > 0), // 1
-        anyOf(k.isNull && col("ins") > 0), // 2
-        anyOf(col("up") > 1), // 3
-        anyOf(k.isNotNull && col("up") > 0 && col("del") > 0), // 4
-        sum("up"), sum("del")).head() // 5, 6
+        (Seq(anyOf(k.isNotNull && col("ins") > 0 && col("live") > 0), // 1
+          anyOf(k.isNull && col("ins") > 0), // 2
+          anyOf(col("up") > 1), // 3
+          anyOf(k.isNotNull && col("up") > 0 && col("del") > 0), // 4
+          sum("up"), sum("del")) ++ // 5, 6
+          chk.map(a => sum(a))): _*).head() // 7..
       val n = (i: Int) => if (g.isNullAt(i)) 0L else g.getLong(i)
       // SQL cardinality rule: a target row matches at most one source row
       require(n(0) == 0, "MERGE cardinality violation: a target row " +
@@ -1128,18 +1142,20 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       // the delete side meant to drop
       require(n(4) == 0,
         "MERGE produced a key in both the upsert and delete sets")
+      GraftTable.requireNoViolations(checks, i => n(7 + i),
+        s"in the merge post-image at ${t.ref.root}")
       // ONE commit for the whole statement, derived against the
       // ANALYSIS-time snapshot: a merge-then-delete pair could be
       // observed (or die) half-applied, and a concurrent commit in
       // between must fail the optimistic check loudly
       if (n(5) > 0 || n(6) > 0)
-        GraftTable.upsertDelete(spark, t.ref.root,
-          tagged.where(isUpsert).select(tgtOut.map(a => col(a.name)): _*),
+        GraftTable.upsertDeleteKernel(spark, t.ref.root, updates,
           tagged.where(isDelete).select(col(t.ref.keyCol).as(t.ref.keyCol)),
           t.ref.keyCol, t.ref.statsCols, t.ref.clusterCols,
           t.ref.numFiles, baseSnapshot = Some(t.snapshot),
-          bloomCols = t.ref.bloomCols,
-          allowEvolution = extras.nonEmpty)
+          bloomCols = t.ref.bloomCols, commitEmpty = false,
+          allowEvolution = extras.nonEmpty, streamTxn = None,
+          postImageChecked = true)
     } finally tagged.unpersist()
     Seq.empty
   }

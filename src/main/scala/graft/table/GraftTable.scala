@@ -33,8 +33,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * 100 TB posture: a commit costs O(files changed), never O(table) — a
   * MERGE rewrites only the files whose key-range stats overlap the
-  * update keys (two-level pruning: stats overlap, then a provenance
-  * semi-join scans only the candidates), and the merge-on-read variants
+  * update keys (two-level pruning: stats overlap — per key, with the
+  * file blooms, when the key set fits the driver — then an exact scan
+  * of only the candidates), and the merge-on-read variants
   * ([[deleteMor]]/[[mergeMor]]) drop even that to O(rows changed) via
   * per-file deletion-vector sidecars, deferring the rewrite to
   * [[compact]] — the update-heavy-pipeline shape. The manifest
@@ -295,10 +296,12 @@ object GraftTable {
     Array.tabulate(BloomK)(i => ((h1.toLong + i.toLong * step) % p).toInt)
   }
 
-  private[graft] def bloomMayContainStr(b64: String, key: String): Boolean = {
-    val bits = java.util.Base64.getDecoder.decode(b64)
-    bloomPositionsStr(key).forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
-  }
+  private[graft] def bloomMayContainStr(b64: String, key: String): Boolean =
+    bloomHas(java.util.Base64.getDecoder.decode(b64), bloomPositionsStr(key))
+
+  /** True when every probe position is set in the packed `bits`. */
+  private def bloomHas(bits: Array[Byte], positions: Array[Int]): Boolean =
+    positions.forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
 
   /** Commit-time bloom build for one (file, column) group: the OR of the
     * probe-position bits of every non-NULL key into one packed bitset,
@@ -342,10 +345,8 @@ object GraftTable {
         org.apache.spark.sql.Encoders.LONG)(c.cast("long"))
   }
 
-  private[graft] def bloomMayContain(b64: String, key: Long): Boolean = {
-    val bits = java.util.Base64.getDecoder.decode(b64)
-    bloomPositions(key).forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
-  }
+  private[graft] def bloomMayContain(b64: String, key: Long): Boolean =
+    bloomHas(java.util.Base64.getDecoder.decode(b64), bloomPositions(key))
 
   /** Write a deletion-vector sidecar (sorted ordinals as big-endian
     * longs) under `data/dv/` and return its table-relative path. Binary,
@@ -853,9 +854,9 @@ object GraftTable {
     * an unclustered write would give every file near-global bounds. */
   private def writeFiles(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String], clusterCols: Seq[String],
-      numFiles: Int, bloomCols: Seq[String] = Nil,
+      numFiles: Int, bloomCols: Seq[String],
       zorderCols: Seq[String] = Nil,
-      partSpec: Seq[PartField] = Nil): List[FileEntry] = {
+      partSpec: Seq[PartField]): List[FileEntry] = {
     // string stats would silently read back as 0.0 bounds through the
     // double-typed min/max maps and mis-prune — strings get bloom
     // skipping (readWhereKeyInStr), never range stats
@@ -1209,20 +1210,35 @@ object GraftTable {
   private def schemaOf(m: Manifest): StructType =
     DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
+  /** The conditions merge post-image rows `updates` must pass against
+    * `parent`: its CHECKs plus NOT NULL of its non-nullable fields. */
+  private[graft] def postImageChecks(parent: Manifest,
+      updates: DataFrame): Map[String, String] =
+    withNotNull(schemaOf(parent), updates, checksOf(parent))
+
+  /** True on a row that violates condition `c` (exactly FALSE). */
+  private[graft] def violates(c: String): Column =
+    not(coalesce(expr(c).cast("boolean"), lit(true)))
+
+  /** The first of the name-ordered `checks` with a non-zero count in
+    * `bad` fails loudly. */
+  private[graft] def requireNoViolations(checks: Seq[(String, String)],
+      bad: Int => Long, ctx: String): Unit =
+    checks.zipWithIndex.foreach { case ((n, c), i) =>
+      if (bad(i) > 0) throw new IllegalArgumentException(
+        s"CHECK constraint '$n' ($c) violated by ${bad(i)} row(s) $ctx")
+    }
+
   private def enforceChecks(df: DataFrame,
       checks: Map[String, String], ctx: String): Unit = {
     if (checks.isEmpty) return
     val ordered = checks.toSeq.sortBy(_._1)
     val flags = ordered.map { case (n, c) =>
-      sum(when(not(coalesce(expr(c).cast("boolean"), lit(true))), 1L)
-        .otherwise(0L)).as(n)
+      sum(when(violates(c), 1L).otherwise(0L)).as(n)
     }
     val row = df.agg(flags.head, flags.tail: _*).head()
-    ordered.zipWithIndex.foreach { case ((n, c), i) =>
-      val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
-      if (bad > 0) throw new IllegalArgumentException(
-        s"CHECK constraint '$n' ($c) violated by $bad row(s) $ctx")
-    }
+    requireNoViolations(ordered,
+      i => if (row.isNullAt(i)) 0L else row.getLong(i), ctx)
   }
 
   private[graft] def checksOf(m: Manifest): Map[String, String] =
@@ -1462,51 +1478,62 @@ object GraftTable {
     df.select((parent.fieldNames.toSeq ++ extras).map(col): _*)
   }
 
-  /** Key range of `df[keyCol]` for merge/delete stats pruning, guarded:
-    * a string (or otherwise double-uncastable) key column would cast its
-    * min/max to null and read as "no matching keys", silently turning
-    * merge into a duplicate-key append and delete into a no-op. Guard
-    * the type up front (the statsCols twin of writeFiles' string check)
-    * and distinguish a genuinely empty update set (None — prune
-    * everything) from an all-null key column (loud failure: null keys
+  /** Merge/delete key pruning guard: a string (or otherwise
+    * double-uncastable) key column would cast its min/max to null and
+    * read as "no matching keys", silently turning merge into a
+    * duplicate-key append and delete into a no-op. Checked on the schema
+    * before any job (the statsCols twin of writeFiles' string check). */
+  private def requireNumericKey(t: DataType, keyCol: String,
+      what: String): Unit = t match {
+    case _: org.apache.spark.sql.types.NumericType => ()
+    case _ => throw new IllegalArgumentException(
+      s"$what key column '$keyCol' must be numeric for range pruning; " +
+        s"got ${t.sql} (string keys carry bloom skipping, not range stats)")
+  }
+
+  /** A non-empty key set whose every key is null fails loudly: null keys
     * join to nothing, so the caller's update rows could never replace a
-    * base row anyway). */
+    * base row anyway. `n` is the distinct key set's row count. */
+  private def allNullKeys(keyCol: String, what: String,
+      n: Long): IllegalArgumentException = new IllegalArgumentException(
+    s"$what key column '$keyCol': $n rows, every key " +
+      "null — null keys match no base rows; refusing the commit")
+
+  /** Key range of the distinct key set `df` for the distributed arm's
+    * stats pruning: None for a genuinely empty key set (prune
+    * everything), [[allNullKeys]] for an all-null one. */
   private def prunableKeyRange(df: DataFrame, keyCol: String,
-      what: String): Option[(Double, Double)] = {
-    df.schema(keyCol).dataType match {
-      case _: org.apache.spark.sql.types.NumericType => ()
-      case t => throw new IllegalArgumentException(
-        s"$what key column '$keyCol' must be numeric for range pruning; " +
-          s"got ${t.sql} (string keys carry bloom skipping, not range stats)")
-    }
+      what: String): Option[(Double, Double)] =
     df.agg(min(col(keyCol)).cast("double"), max(col(keyCol)).cast("double"),
         count(lit(1))).collect()(0) match {
       case r if r.getLong(2) == 0L => None
-      case r if r.isNullAt(0) => throw new IllegalArgumentException(
-        s"$what key column '$keyCol': ${r.getLong(2)} rows, every key " +
-          "null — null keys match no base rows; refusing the commit")
+      case r if r.isNullAt(0) => throw allNullKeys(keyCol, what, r.getLong(2))
       case r => Some((r.getDouble(0), r.getDouble(1)))
     }
-  }
 
   /** Copy-on-write MERGE (upsert on `keyCol`): rows of `updates` replace
     * same-key rows; new keys are inserted. Only files that can contain a
-    * matching key are rewritten:
-    *  1. stats pruning — candidate files are those whose [min,max] of
-    *     `keyCol` overlaps the updates' overall key range (driver-side,
-    *     zero I/O);
-    *  2. exact check — an `input_file_name` semi-join over ONLY the
-    *     candidates finds the files actually holding a matching key
-    *     (distributed; driver payload is the affected-file name list).
-    * Untouched files carry over by reference, so the commit cost scales
-    * with the update's key locality, not the table size. Single-attempt
-    * optimistic: the commit targets `baseSnapshot + 1` (base defaults to
-    * the latest at entry — pass it explicitly to pin the snapshot the
-    * update set was derived against); if a concurrent commit took that
-    * id, the rewrite is stale — fail loudly, caller re-derives.
+    * matching key are rewritten, chosen by [[touchedKeys]] in two
+    * levels:
+    *  1. stats pruning — on the driver arm (at most [[CommitKeyBudget]]
+    *     key rows, collected by one probe) a file is a candidate
+    *     when some key falls in its [min,max] of `keyCol` and passes the
+    *     file's bloom; on the distributed arm, when its [min,max]
+    *     overlaps the key set's overall range (one aggregate);
+    *  2. exact check — a scan of ONLY the candidates finds the files
+    *     actually holding a matching key: an `IN (keys)` filter on the
+    *     driver arm, a semi-join against the key set on the distributed
+    *     arm (driver payload is the affected-file name list).
+    * Both arms choose the same files. Untouched files carry over by
+    * reference, so the commit cost scales with the update's key
+    * locality, not the table size. Single-attempt optimistic: the commit
+    * targets `baseSnapshot + 1` (base defaults to the latest at entry —
+    * pass it explicitly to pin the snapshot the update set was derived
+    * against); if a concurrent commit took that id, the rewrite is
+    * stale — fail loudly, caller re-derives.
     *
-    * `updates` is evaluated MORE THAN ONCE (key-range agg, semi-join,
-    * anti-join ∪ insert) — it must be deterministic. A nondeterministic
+    * `updates` is evaluated MORE THAN ONCE (key set, survivors ∪
+    * insert) — it must be deterministic. A nondeterministic
     * frame (sample(), rand()-derived) can disagree between evaluations
     * and silently lose or duplicate rows; cache or materialize such
     * inputs first. Same contract as [[delete]]'s `deleteKeys`. */
@@ -1528,8 +1555,10 @@ object GraftTable {
     * commit can be observed (or die, or lose an optimistic-concurrency
     * race) half-applied, and CDC/SCD2 consumers would see one statement
     * as two snapshots. Pruning and rewrite are [[merge]]'s with the
-    * touched-key set = updates' keys ∪ deleteKeys: affected files
-    * rewrite minus ALL touched keys, then only the updates re-enter.
+    * touched-key set = updates' keys ∪ deleteKeys, on the arm
+    * [[touchedKeys]] picks for its size: affected files rewrite minus
+    * ALL touched keys (NULL-keyed rows survive), then only the updates
+    * re-enter.
     * Matching-nothing with no updates declines to commit (no empty
     * commit, like [[delete]]); both inputs follow merge's
     * deterministic-evaluation contract and their key sets must be
@@ -1541,7 +1570,20 @@ object GraftTable {
       baseSnapshot: Option[Int] = None,
       bloomCols: Seq[String] = Nil, commitEmpty: Boolean = false,
       allowEvolution: Boolean = false,
-      streamTxn: Option[(String, Long)] = None): Int = {
+      streamTxn: Option[(String, Long)] = None): Int =
+    upsertDeleteKernel(spark, root, updates, deleteKeys, keyCol, statsCols,
+      clusterCols, numFiles, baseSnapshot, bloomCols, commitEmpty,
+      allowEvolution, streamTxn, postImageChecked = false)
+
+  /** [[upsertDelete]] for a caller that has already counted the
+    * violations of [[postImageChecks]] in an aggregate of its own (SQL
+    * MERGE's guard aggregate), so the kernel's check job is skipped. */
+  private[graft] def upsertDeleteKernel(spark: SparkSession, root: String,
+      updates: DataFrame, deleteKeys: DataFrame, keyCol: String,
+      statsCols: Seq[String], clusterCols: Seq[String], numFiles: Int,
+      baseSnapshot: Option[Int], bloomCols: Seq[String],
+      commitEmpty: Boolean, allowEvolution: Boolean,
+      streamTxn: Option[(String, Long)], postImageChecked: Boolean): Int = {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"upsertDelete into non-existent table $root")
     val parent = manifest(root, v)
@@ -1582,52 +1624,48 @@ object GraftTable {
     // post-image enforcement on the NEW rows only: survivors were
     // validated at their own write time and ADD CONSTRAINT validated
     // the whole table, so induction covers them
-    enforceChecks(updates,
-      withNotNull(schemaOf(parent), updates, checksOf(parent)),
-      s"in the merge post-image at $root")
-    // the distinct touched-key set, built once: the key-range agg, the
-    // affected-file semi-join and the survivor anti-join all read it
-    val touched = updates.select(col(keyCol))
-      .unionByName(deleteKeys.select(col(keyCol))).distinct().persist()
-    try {
+    if (!postImageChecked)
+      enforceChecks(updates, postImageChecks(parent, updates),
+        s"in the merge post-image at $root")
+    touchedKeys(parent, updates.select(col(keyCol))
+        .unionByName(deleteKeys.select(col(keyCol))), keyCol,
+        "upsertDelete") { touched =>
       // DV-aware on both legs: detection must not flag (and the rewrite
       // must not resurrect) rows an earlier merge-on-read commit already
       // deleted — readEntries* apply the parent's deletion vectors, and
       // the copy-on-write rewrite therefore MATERIALIZES them (new
       // entries carry no DV)
-      val affectedPaths = affectedFiles(spark, root, parent,
-        keyCandidates(parent, touched, keyCol, "upsertDelete"), touched,
-        keyCol)
-      if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) return v
-      val affected = parent.files.filter(f => affectedPaths(f.path))
-      val survivors =
-        if (affected.isEmpty) updates
-        else {
-          val base0 = readEntries(spark, root, parent, affected)
-          // evolved commit: rewritten survivors pad the new columns NULL
-          // (rows that never received the column — Delta's autoMerge
-          // semantics); untouched files stay bytes-identical and read
-          // NULL via the absent-column path
-          val base = extraFields.foldLeft(base0)((acc, f) =>
-            acc.withColumn(f.name, lit(null).cast(f.dataType)))
-          base.join(touched, Seq(keyCol), "left_anti")
-            .select(base.columns.map(col): _*)
-            .unionByName(updates)
-        }
-      val entries = writeFiles(spark, root, survivors, statsCols,
-        clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
-      val m = child(parent, if (evolved) "merge_evolve" else "merge",
-        parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
-        .copy(schemaJson =
-          if (evolved) updates.schema.json else parent.schemaJson,
-          stream = streamTxn.map { case (qid, b) =>
-            parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
-          }.orElse(parent.stream))
-      if (!tryCommit(root, m))
-        throw new java.util.ConcurrentModificationException(
-          s"upsertDelete derived from stale snapshot $v at $root")
-      v + 1
-    } finally touched.unpersist()
+      val affectedPaths = affectedFiles(spark, root, parent, touched, keyCol)
+      if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) v
+      else {
+        val affected = parent.files.filter(f => affectedPaths(f.path))
+        val survivors =
+          if (affected.isEmpty) updates
+          else {
+            val base0 = readEntries(spark, root, parent, affected)
+            // evolved commit: rewritten survivors pad the new columns
+            // NULL (rows that never received the column — Delta's
+            // autoMerge semantics); untouched files stay bytes-identical
+            // and read NULL via the absent-column path
+            val base = extraFields.foldLeft(base0)((acc, f) =>
+              acc.withColumn(f.name, lit(null).cast(f.dataType)))
+            touched.untouched(base).unionByName(updates)
+          }
+        val entries = writeFiles(spark, root, survivors, statsCols,
+          clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+        val m = child(parent, if (evolved) "merge_evolve" else "merge",
+          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
+          .copy(schemaJson =
+            if (evolved) updates.schema.json else parent.schemaJson,
+            stream = streamTxn.map { case (qid, b) =>
+              parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
+            }.orElse(parent.stream))
+        if (!tryCommit(root, m))
+          throw new java.util.ConcurrentModificationException(
+            s"upsertDelete derived from stale snapshot $v at $root")
+        v + 1
+      }
+    }
   }
 
   /** DYNAMIC PARTITION OVERWRITE — the incremental-rerun verb a
@@ -1677,19 +1715,19 @@ object GraftTable {
   }
 
   /** Copy-on-write row-level DELETE: rows whose `keyCol` appears in
-    * `deleteKeys` are removed. Same two-level pruning as [[merge]] —
-    * stats-range overlap narrows to candidate files, an
-    * `input_file_name` semi-join over only those finds the files
-    * actually holding a doomed key — and only the affected files are
-    * rewritten (minus their matching rows); everything else carries over
+    * `deleteKeys` are removed. Same two-level pruning on the same two
+    * arms as [[merge]] — per-key range and bloom (driver arm) or
+    * overall-range overlap (distributed arm) narrows to candidate
+    * files, a scan of only those finds the files actually holding a
+    * doomed key — and only the affected files are rewritten (minus
+    * their matching rows, NULL keys kept); everything else carries over
     * by reference, so cost scales with the delete's key locality. A
     * delete matching nothing declines to commit (returns the base
     * snapshot — no empty commit, like [[compact]]); a delete emptying
     * every affected file commits a manifest that simply drops them.
     * Single-attempt optimistic like merge: a concurrent commit means the
     * rewrite is stale — fail loudly, caller re-derives. `deleteKeys` is
-    * evaluated more than once and must be deterministic — see the
-    * [[merge]] contract note. */
+    * evaluated once: the key probe caches it ([[touchedKeys]]). */
   def delete(spark: SparkSession, root: String, deleteKeys: DataFrame,
       keyCol: String, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, baseSnapshot: Option[Int] = None,
@@ -1697,32 +1735,140 @@ object GraftTable {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"delete from non-existent table $root")
     val parent = manifest(root, v)
-    // the distinct key set, built once for the key-range agg, the
-    // affected-file semi-join and the survivor anti-join
-    val keys = deleteKeys.select(col(keyCol)).distinct().persist()
-    try {
-      // DV-aware, same as merge: an already-DV-deleted row neither flags
-      // its file nor survives the rewrite (which materializes the DV)
-      val affectedPaths = affectedFiles(spark, root, parent,
-        keyCandidates(parent, keys, keyCol, "delete"), keys, keyCol)
-      if (affectedPaths.isEmpty) return v // nothing matched; no empty commit
-      val affected = parent.files.filter(f => affectedPaths(f.path))
-      val base = readEntries(spark, root, parent, affected)
-      val survivors = base.join(keys, Seq(keyCol), "left_anti")
-        .select(base.columns.map(col): _*)
-      val entries = writeFiles(spark, root, survivors, statsCols,
-        clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
-      val m = child(parent, "delete",
-        parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
-      if (!tryCommit(root, m))
-        throw new java.util.ConcurrentModificationException(
-          s"delete derived from stale snapshot $v at $root")
-      v + 1
-    } finally keys.unpersist()
+    // DV-aware, same as merge: an already-DV-deleted row neither flags
+    // its file nor survives the rewrite (which materializes the DV)
+    touchedKeys(parent, deleteKeys, keyCol, "delete") { keys =>
+      val affectedPaths = affectedFiles(spark, root, parent, keys, keyCol)
+      if (affectedPaths.isEmpty) v // nothing matched; no empty commit
+      else {
+        val affected = parent.files.filter(f => affectedPaths(f.path))
+        val survivors =
+          keys.untouched(readEntries(spark, root, parent, affected))
+        val entries = writeFiles(spark, root, survivors, statsCols,
+          clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+        val m = child(parent, "delete",
+          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
+        if (!tryCommit(root, m))
+          throw new java.util.ConcurrentModificationException(
+            s"delete derived from stale snapshot $v at $root")
+        v + 1
+      }
+    }
   }
 
-  /** Files of `parent` whose [min,max] of `keyCol` overlaps the key
-    * range of `keys` — the driver-side, zero-I/O first pruning level;
+  /** Touched-key columns of at most this many rows take a commit's
+    * driver arm ([[touchedKeys]]); perfbench's table_ingest commits
+    * land 100–750. */
+  private[table] val CommitKeyBudget = 10000L
+
+  /** The budget [[touchedKeys]] dispatches on: [[CommitKeyBudget]]
+    * unless a test runs a commit under `withValue(0L)` to force the
+    * distributed arm. */
+  private[graft] val commitKeyBudget =
+    new scala.util.DynamicVariable[Long](CommitKeyBudget)
+
+  /** One commit's distinct touched-key set, resolved to the arm that
+    * filters rows by it. `candidates` are the files of the parent that
+    * may hold a touched key (the first, zero-I/O pruning level). */
+  private sealed trait TouchedKeys {
+    def candidates: List[FileEntry]
+    /** Rows of `df` whose key is touched. */
+    def matching(df: DataFrame): DataFrame
+    /** Rows of `df` whose key is not touched — NULL keys included, as a
+      * NULL key equals no touched key. */
+    def untouched(df: DataFrame): DataFrame
+    /** The distinct strings of `df`'s one string column. */
+    def distinctStrings(df: DataFrame): Set[String]
+  }
+
+  /** Driver arm: the keys are a local array, so the row filters are one
+    * `IN` list (no shuffle, no broadcast) and distinct values dedupe on
+    * the driver. */
+  private final class DriverKeys(val candidates: List[FileEntry],
+      keyCol: String, keys: Seq[Any]) extends TouchedKeys {
+    private def in = col(keyCol).isin(keys: _*)
+    def matching(df: DataFrame): DataFrame = df.where(in)
+    def untouched(df: DataFrame): DataFrame =
+      df.where(col(keyCol).isNull || !in)
+    def distinctStrings(df: DataFrame): Set[String] =
+      df.collect().iterator.map(_.getString(0)).toSet
+  }
+
+  /** Distributed arm: `keys` is the persisted distinct key set, joined. */
+  private final class DistKeys(val candidates: List[FileEntry],
+      keyCol: String, keys: DataFrame) extends TouchedKeys {
+    def matching(df: DataFrame): DataFrame =
+      df.join(keys, Seq(keyCol), "left_semi")
+    def untouched(df: DataFrame): DataFrame =
+      df.join(keys, Seq(keyCol), "left_anti").select(df.columns.map(col): _*)
+    def distinctStrings(df: DataFrame): Set[String] =
+      df.distinct().collect().iterator.map(_.getString(0)).toSet
+  }
+
+  /** Run `body` over the distinct key set of `keys[keyCol]`. The key
+    * column goes through [[graft.util.Probes.byBudget]] with a null memo
+    * key (a commit's input is not immutable): one probe collects up to
+    * the budget + 1 key rows, deduplicated on the driver. Probing the
+    * column rather than its `distinct()` spares the probe a shuffle job,
+    * and a key-addressed commit's keys are distinct already; a batch
+    * built on the driver (a local relation) probes with no job at all.
+    *
+    * Within the budget, the driver arm chooses candidate files PER KEY,
+    * with zero jobs: a file is a candidate when some key falls in its
+    * [min,max] of `keyCol` and, when the file carries a bloom for an
+    * integral key column, the key passes it (the build's
+    * `bloomPositions` over the key cast to long, so no false negative).
+    * Over the budget, the distributed arm persists the distinct key set
+    * and takes [[keyCandidates]]' overall range (one aggregate). Per-key
+    * candidates are a subset of the range candidates that keeps every
+    * file holding a key, so after the exact check both arms touch the
+    * same files. The key type is checked before the probe, and an
+    * all-null key set fails with the same message on both arms. */
+  private def touchedKeys[R](parent: Manifest, keys: DataFrame,
+      keyCol: String, what: String)(body: TouchedKeys => R): R = {
+    val keyType = keys.schema(keyCol).dataType
+    requireNumericKey(keyType, keyCol, what)
+    val integral = keyType match {
+      case org.apache.spark.sql.types.ByteType |
+          org.apache.spark.sql.types.ShortType |
+          org.apache.spark.sql.types.IntegerType |
+          org.apache.spark.sql.types.LongType => true
+      case _ => false
+    }
+    graft.util.Probes.byBudget(keys.select(col(keyCol)),
+        commitKeyBudget.value, null) { rows =>
+      val distinct = rows.iterator.map(_.get(0)).distinct.toArray
+      val ks = distinct.filter(_ != null)
+      if (ks.isEmpty && distinct.nonEmpty)
+        throw allNullKeys(keyCol, what, distinct.length)
+      val values = ks.map(_.asInstanceOf[Number].doubleValue)
+      val probes =
+        if (integral) ks.map(k => bloomPositions(k.asInstanceOf[Number]
+          .longValue))
+        else Array.empty[Array[Int]]
+      val candidates = parent.files.filter { f =>
+        val (lo, hi) = (f.mins.get(keyCol), f.maxs.get(keyCol))
+        lazy val bloom = if (!integral) None
+          else f.bloom.flatMap(_.get(keyCol))
+            .map(java.util.Base64.getDecoder.decode)
+        values.indices.exists { i =>
+          lo.forall(_ <= values(i)) && hi.forall(_ >= values(i)) &&
+            bloom.forall(bloomHas(_, probes(i)))
+        }
+      }
+      body(new DriverKeys(candidates, keyCol, ks.toSeq))
+    } { ds =>
+      // the distinct key set, built once for the key-range agg, the
+      // affected-file semi-join and the survivor anti-join
+      val distinct = ds.distinct().persist()
+      try body(new DistKeys(keyCandidates(parent, distinct, keyCol, what),
+        keyCol, distinct))
+      finally distinct.unpersist()
+    }
+  }
+
+  /** The distributed arm's first pruning level: files of `parent` whose
+    * [min,max] of `keyCol` overlaps the overall key range of `keys`;
     * no keys, no candidates. */
   private def keyCandidates(parent: Manifest, keys: DataFrame,
       keyCol: String, what: String): List[FileEntry] =
@@ -1733,37 +1879,34 @@ object GraftTable {
           f.mins.get(keyCol).forall(_ <= kHi))
     }
 
-  /** The second pruning level: paths of the `candidates` that actually
-    * hold one of `keys`, by a provenance (`__rel`) semi-join over only
-    * those files (DV-aware: a row an earlier merge-on-read commit
-    * deleted flags nothing). Driver payload is the affected-path set. */
+  /** The second pruning level: paths of the candidates that actually
+    * hold a touched key, by a provenance (`__rel`) scan of only those
+    * files (DV-aware: a row an earlier merge-on-read commit deleted
+    * flags nothing) — one job with no shuffle on the driver arm. Driver
+    * payload is the affected-path set. */
   private def affectedFiles(spark: SparkSession, root: String,
-      parent: Manifest, candidates: List[FileEntry], keys: DataFrame,
-      keyCol: String): Set[String] =
-    if (candidates.isEmpty) Set.empty
-    else readEntriesWithPos(spark, root, parent, candidates)
-      .select(col(keyCol), col("__rel"))
-      .join(keys, Seq(keyCol), "left_semi")
-      .select("__rel").distinct().collect()
-      .map(_.getString(0)).toSet
+      parent: Manifest, keys: TouchedKeys, keyCol: String): Set[String] =
+    if (keys.candidates.isEmpty) Set.empty
+    else keys.distinctStrings(keys.matching(
+        readEntriesWithPos(spark, root, parent, keys.candidates)
+          .select(col(keyCol), col("__rel")))
+      .select("__rel"))
 
-  /** Mark rows of `parent`'s stats-candidate files whose `keyCol` matches
-    * `keys` as deleted, by (file, row ordinal). Returns the per-file NEW
-    * ordinals (DV-aware read, so already-deleted rows can't re-mark).
-    * Driver payload is O(rows deleted by THIS commit) — the positional
-    * metadata itself, not data movement; the same bound Delta's DV writer
+  /** Mark rows of the candidate files whose `keyCol` is touched as
+    * deleted, by (file, row ordinal). Returns the per-file NEW ordinals
+    * (DV-aware read, so already-deleted rows can't re-mark). Driver
+    * payload is O(rows deleted by THIS commit) — the positional metadata
+    * itself, not data movement; the same bound Delta's DV writer
     * carries. */
   private def dvMark(spark: SparkSession, root: String, parent: Manifest,
-      candidates: List[FileEntry], keys: DataFrame,
-      keyCol: String): Map[String, Array[Long]] = {
-    if (candidates.isEmpty) Map.empty
-    else readEntriesWithPos(spark, root, parent, candidates)
-      .select(col(keyCol), col("__rel"), col("__ri"))
-      .join(keys, Seq(keyCol), "left_semi")
+      keys: TouchedKeys, keyCol: String): Map[String, Array[Long]] =
+    if (keys.candidates.isEmpty) Map.empty
+    else keys.matching(
+        readEntriesWithPos(spark, root, parent, keys.candidates)
+          .select(col(keyCol), col("__rel"), col("__ri")))
       .select("__rel", "__ri").collect()
       .groupBy(_.getString(0))
       .map { case (p, rows) => p -> rows.map(_.getLong(1)) }
-  }
 
   /** Fold new deletion ordinals into `parent`'s entries: a marked file
     * gets a fresh immutable sidecar holding the UNION of its old and new
@@ -1793,8 +1936,9 @@ object GraftTable {
     * ordinals per commit where copy-on-write would rewrite gigabytes;
     * the rewrite is deferred to [[compact]] (materializeDvs), which
     * also bounds accumulated read-side DV cost. Same two-level pruning
-    * (stats range, then an exact provenance semi-join), same
-    * deterministic-`deleteKeys` contract, and the same single-attempt
+    * on the same two arms ([[touchedKeys]]: per-key range and bloom or
+    * overall range, then an exact provenance scan), the same
+    * once-evaluated `deleteKeys`, and the same single-attempt
     * optimistic commit as [[delete]] — DVs derived against a superseded
     * snapshot must fail loudly, never blind-stack on someone else's
     * commit. A delete matching nothing returns the base snapshot
@@ -1804,12 +1948,8 @@ object GraftTable {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"delete from non-existent table $root")
     val parent = manifest(root, v)
-    // the distinct key set, built once for the key-range agg and dvMark
-    val keys = deleteKeys.select(col(keyCol)).distinct().persist()
-    val marks =
-      try dvMark(spark, root, parent,
-        keyCandidates(parent, keys, keyCol, "delete"), keys, keyCol)
-      finally keys.unpersist()
+    val marks = touchedKeys(parent, deleteKeys, keyCol, "delete")(
+      dvMark(spark, root, parent, _, keyCol))
     if (marks.isEmpty) return v // nothing matched; no empty commit
     val m = child(parent, "delete_mor", applyDvMarks(root, parent, marks))
     if (!tryCommit(root, m))
@@ -1823,8 +1963,10 @@ object GraftTable {
     * appended files — so a commit costs O(update bytes + deleted-row
     * ordinals) regardless of how wide the touched base files are, the
     * property that makes frequent upserts viable at 100 TB.
-    * [[compact]] later folds DV'd files into clean ones. Same schema,
-    * determinism, and stale-snapshot contracts as [[merge]]. */
+    * [[compact]] later folds DV'd files into clean ones. The matched
+    * rows are found by [[deleteMor]]'s pruning over the updates'
+    * distinct key set. Same schema, determinism, and stale-snapshot
+    * contracts as [[merge]]. */
   def mergeMor(spark: SparkSession, root: String, updates: DataFrame,
       keyCol: String, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, baseSnapshot: Option[Int] = None,
@@ -1835,12 +1977,10 @@ object GraftTable {
     require(shape(updates.schema) ==
       shape(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]),
       s"merge schema mismatch vs snapshot $v at $root")
-    enforceChecks(updates,
-      withNotNull(schemaOf(parent), updates, checksOf(parent)),
+    enforceChecks(updates, postImageChecks(parent, updates),
       s"in the merge post-image at $root")
-    val keys = updates.select(col(keyCol)).distinct()
-    val marks = dvMark(spark, root, parent,
-      keyCandidates(parent, updates, keyCol, "merge"), keys, keyCol)
+    val marks = touchedKeys(parent, updates, keyCol, "merge")(
+      dvMark(spark, root, parent, _, keyCol))
     val entries = writeFiles(spark, root, updates, statsCols,
       clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
     val m = child(parent, "merge_mor",
@@ -2610,7 +2750,7 @@ object GraftTable {
       schema: StructType, files: List[FileEntry],
       project: DataFrame => DataFrame = identity,
       extraNames: Seq[String] = Nil,
-      partSpec: Seq[PartField] = Nil): DataFrame = {
+      partSpec: Seq[PartField]): DataFrame = {
     val outNames = schema.fieldNames.toSeq ++ extraNames
     // hidden-transform partition fields: present in directory names and
     // the scan's partition schema (pinned to STRING — the written form —

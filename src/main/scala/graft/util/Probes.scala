@@ -38,13 +38,16 @@ object Probes {
     * a fixture directory); the budget in the key keeps a test-seam
     * budget (0, Long.MaxValue) from poisoning the default dispatch.
     * Under-budget probes are not memoized — their collect is the
-    * result. A null key (generic kernels, tests) never memoizes, and
-    * caches `ds` BEFORE the probe instead, so the producer is evaluated
-    * exactly once on either arm. */
+    * result. A null key (generic kernels, table commits, tests) never
+    * memoizes, and caches `ds` BEFORE the probe instead, so the producer
+    * is evaluated exactly once on either arm — unless `ds` optimizes to
+    * a local relation, whose rows already sit on the driver: its probe
+    * runs no job, and caching it would add some. */
   def byBudget[T, R](ds: Dataset[T], budget: Long, memoKey: String)(
       driverArm: Array[T] => R)(distArm: Dataset[T] => R): R = {
     val s = ds.sparkSession
-    var cached = memoKey == null
+    var cached = memoKey == null && !ds.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     if (cached) ds.cache()
     try {
       val rows =

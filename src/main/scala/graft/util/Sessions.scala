@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session every main runs in (Verify, Bench, Opt, SkewBench):
+/** The local session every main runs in (Verify, Bench, Opt):
   * `local[cpus]`, shuffle partitions = cpus, UI off, and UTC — the
   * NTZ→LTZ cast in [[Tables.events]] follows the session timezone, so a
   * non-UTC host would read shifted instants (round-7 ADVICE). `extra`
