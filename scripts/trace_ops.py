@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-operation-kind cost table from a perfbench span trace.
 
-Usage: python3 scripts/trace_ops.py <workload>-seed<n>.spans.jsonl
+Usage: python3 scripts/trace_ops.py <trace.spans.jsonl> [<trace2.spans.jsonl>]
 
 A traced perfbench run (`perfbench/run.py --trace 1`) writes its spans to
 `.bench_build/traces/<workload>-seed<n>.spans.jsonl`: one JSON object per
@@ -12,15 +12,19 @@ script walks each job and stage up to its operation and prints, per
 operation kind: operations, jobs, stages, wall seconds, driver-gap
 seconds, and jobs and wall seconds per operation. An operation's driver
 gap is its wall time minus the union of its jobs' intervals (clipped to
-the operation), the definition of perfbench's `sched.driver_gap_s`. It
-only reads the trace.
+the operation), the definition of perfbench's `sched.driver_gap_s`.
+
+Given a second trace (say, the parent commit's run first and a change's
+run second), it prints each operation kind's ops, jobs, wall_s and gap_s
+as "first -> second", and the totals. It only reads the traces.
 """
 import collections
 import json
 import sys
 
 
-def main(path: str) -> None:
+def summarize(path: str) -> dict:
+    """Operation kind -> {ops, jobs, stages, wall, gap} for one trace."""
     spans = {}
     with open(path) as f:
         for line in f:
@@ -47,10 +51,7 @@ def main(path: str) -> None:
                 cur_e = max(cur_e, e)
         return total + (cur_e - cur_s if cur_e is not None else 0)
 
-    ops = collections.Counter()
-    wall = collections.Counter()
-    jobs = collections.Counter()
-    stages = collections.Counter()
+    out = collections.defaultdict(collections.Counter)
     job_iv = collections.defaultdict(list)  # op id -> its job intervals
     for s in spans.values():
         if s["kind"] in ("job", "stage"):
@@ -58,31 +59,62 @@ def main(path: str) -> None:
             if op is None:
                 continue
             k = op["name"].split(" ")[0]
-            (jobs if s["kind"] == "job" else stages)[k] += 1
+            out[k]["jobs" if s["kind"] == "job" else "stages"] += 1
             if s["kind"] == "job":
                 job_iv[op["id"]].append((s["start_ms"], s["end_ms"]))
-    gap = collections.Counter()
     for s in spans.values():
         if s["kind"] == "op":
             k = s["name"].split(" ")[0]
-            ops[k] += 1
             ms = s["end_ms"] - s["start_ms"]
-            wall[k] += ms / 1000.0
-            gap[k] += (ms - covered_ms(job_iv[s["id"]], s["start_ms"],
-                                       s["end_ms"])) / 1000.0
+            out[k]["ops"] += 1
+            out[k]["wall"] += ms / 1000.0
+            out[k]["gap"] += (ms - covered_ms(job_iv[s["id"]], s["start_ms"],
+                                              s["end_ms"])) / 1000.0
+    return {k: v for k, v in out.items() if v["ops"]}
 
+
+def total(table: dict) -> collections.Counter:
+    t = collections.Counter()
+    for v in table.values():
+        t.update(v)
+    return t
+
+
+def show(path: str) -> None:
+    table = summarize(path)
     print(f"{'op':<14}{'ops':>5}{'jobs':>7}{'stages':>8}{'wall_s':>9}"
           f"{'gap_s':>8}{'jobs/op':>9}{'s/op':>8}")
-    for k in sorted(ops, key=lambda k: (-jobs[k], k)):
-        n = ops[k]
-        print(f"{k:<14}{n:>5}{jobs[k]:>7}{stages[k]:>8}{wall[k]:>9.2f}"
-              f"{gap[k]:>8.2f}{jobs[k] / n:>9.1f}{wall[k] / n:>8.3f}")
-    print(f"{'total':<14}{sum(ops.values()):>5}{sum(jobs.values()):>7}"
-          f"{sum(stages.values()):>8}{sum(wall.values()):>9.2f}"
-          f"{sum(gap.values()):>8.2f}")
+    for k in sorted(table, key=lambda k: (-table[k]["jobs"], k)):
+        v = table[k]
+        n = v["ops"]
+        print(f"{k:<14}{n:>5}{v['jobs']:>7}{v['stages']:>8}{v['wall']:>9.2f}"
+              f"{v['gap']:>8.2f}{v['jobs'] / n:>9.1f}{v['wall'] / n:>8.3f}")
+    t = total(table)
+    print(f"{'total':<14}{t['ops']:>5}{t['jobs']:>7}{t['stages']:>8}"
+          f"{t['wall']:>9.2f}{t['gap']:>8.2f}")
+
+
+def compare(first: str, second: str) -> None:
+    a, b = summarize(first), summarize(second)
+    zero = collections.Counter()
+
+    def cells(x, y):
+        return (f"{x['ops']:>5} -> {y['ops']:<5}"
+                f"{x['jobs']:>6} -> {y['jobs']:<6}"
+                f"{x['wall']:>8.2f} -> {y['wall']:<8.2f}"
+                f"{x['gap']:>7.2f} -> {y['gap']:<7.2f}")
+
+    print(f"{'op':<14}{'ops':^14}{'jobs':^16}{'wall_s':^20}{'gap_s':^18}")
+    for k in sorted(set(a) | set(b),
+                    key=lambda k: (-a.get(k, zero)["jobs"], k)):
+        print(f"{k:<14}" + cells(a.get(k, zero), b.get(k, zero)))
+    print(f"{'total':<14}" + cells(total(a), total(b)))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 2:
+    if len(sys.argv) == 2:
+        show(sys.argv[1])
+    elif len(sys.argv) == 3:
+        compare(sys.argv[1], sys.argv[2])
+    else:
         sys.exit(__doc__)
-    main(sys.argv[1])

@@ -259,7 +259,7 @@ class AsanaScan(entity: String, fixtureDir: String, schema: StructType,
       .map(p => AsanaInputPartition(p): InputPartition)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AsanaReaderFactory(entity, schema, cutoffs)
+    new AsanaReaderFactory(schema, cutoffs)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new AsanaMicroBatchStream(entity, fixtureDir, schema)
@@ -366,28 +366,28 @@ class AsanaMicroBatchStream(entity: String, fixtureDir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AsanaStreamReaderFactory(entity, schema)
+    new AsanaStreamReaderFactory(schema)
 }
 
 case class AsanaStreamPartition(path: String, fromLine: Long, untilLine: Long)
     extends InputPartition
 
-class AsanaStreamReaderFactory(entity: String, schema: StructType)
+class AsanaStreamReaderFactory(schema: StructType)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val sp = p.asInstanceOf[AsanaStreamPartition]
-    new AsanaPageReader(sp.path, entity, schema, Nil,
+    new AsanaPageReader(sp.path, schema, Nil,
       sp.fromLine, sp.untilLine)
   }
 }
 
 case class AsanaInputPartition(path: String) extends InputPartition
 
-class AsanaReaderFactory(entity: String, schema: StructType,
+class AsanaReaderFactory(schema: StructType,
     cutoffs: Seq[ModifiedCutoff]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new AsanaPageReader(p.asInstanceOf[AsanaInputPartition].path, entity,
-      schema, cutoffs)
+    new AsanaPageReader(p.asInstanceOf[AsanaInputPartition].path, schema,
+      cutoffs)
 }
 
 /** Retry/backoff policy for the live-HTTP seam. The public Asana API
@@ -582,7 +582,7 @@ object AsanaWriteBack {
   }
 }
 
-class AsanaPageReader(path: String, entity: String, schema: StructType,
+class AsanaPageReader(path: String, schema: StructType,
     cutoffs: Seq[ModifiedCutoff], fromLine: Long = 0L,
     untilLine: Long = Long.MaxValue) extends PartitionReader[InternalRow] {
 

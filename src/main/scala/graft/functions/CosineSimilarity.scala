@@ -143,7 +143,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL DDL (CREATE/CTAS/DROP ... USING graft) — parser seam, because
     // ResolveSessionCatalog would convert a resolved CreateTable before
     // any injected resolution rule could claim it
-    e.injectParser((session, delegate) =>
-      new graft.sql.GraftSqlParser(session, delegate))
+    e.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
   }
 }

@@ -481,7 +481,7 @@ object Table {
 
   val table_sql_partitioned: Q = (s, d) => {
     val name = partOrdersName(s, d)
-    val root = Sources.builtDir(s, d, "sql_part_orders") { root =>
+    Sources.builtDir(s, d, "sql_part_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft PARTITIONED BY (o_year)
             LOCATION '$root'
@@ -515,7 +515,7 @@ object Table {
     * the raw source; pruning is never correctness-load-bearing. */
   val table_sql_part_transform: Q = (s, d) => {
     val name = "ptx_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_ptx_orders") { root =>
+    Sources.builtDir(s, d, "sql_ptx_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft
             PARTITIONED BY (months(o_orderdate))
@@ -553,7 +553,7 @@ object Table {
     * silently drop the field. */
   val table_evolution: Q = (s, d) => {
     val name = "evo_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_evo_orders") { root =>
+    Sources.builtDir(s, d, "sql_evo_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -594,7 +594,7 @@ object Table {
   val table_sql_replace: Q = (s, d) => {
     import graft.util.Det._
     val name = "repl_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_replace_orders") { root =>
+    Sources.builtDir(s, d, "sql_replace_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -640,7 +640,7 @@ object Table {
   val table_truncate: Q = (s, d) => {
     import graft.util.Det._
     val name = "trunc_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_truncate_orders") { root =>
+    Sources.builtDir(s, d, "sql_truncate_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -684,7 +684,7 @@ object Table {
     val sp = s
     import sp.implicits._
     val name = "anl_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_analyze_orders") { root =>
+    Sources.builtDir(s, d, "sql_analyze_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey')
@@ -717,7 +717,7 @@ object Table {
     * any table size — zero data movement. */
   val table_widen: Q = (s, d) => {
     val name = "widen_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_widen_orders") { root =>
+    Sources.builtDir(s, d, "sql_widen_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft LOCATION '$root'
             OPTIONS (key 'o_orderkey', stats 'o_orderkey',
@@ -757,7 +757,7 @@ object Table {
     * reference. */
   val table_sql_part_overwrite: Q = (s, d) => {
     val name = "part_ow_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_part_ow_orders") { root =>
+    Sources.builtDir(s, d, "sql_part_ow_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name USING graft PARTITIONED BY (o_year)
             LOCATION '$root'
@@ -1060,7 +1060,7 @@ object Table {
     * collide. */
   val table_sql_ddl: Q = (s, d) => {
     val name = "sql_ddl_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_ddl_orders") { root =>
+    Sources.builtDir(s, d, "sql_ddl_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
@@ -1103,7 +1103,7 @@ object Table {
     * sorts it last — coalescing keeps the total order engine-neutral). */
   val table_sql_alter: Q = (s, d) => {
     val name = "sql_alter_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_alter_orders") { root =>
+    Sources.builtDir(s, d, "sql_alter_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1158,7 +1158,7 @@ object Table {
     * row-count mismatch, a silently no-op vacuum. */
   val table_sql_maint: Q = (s, d) => {
     val name = "sql_maint_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_maint_orders") { root =>
+    Sources.builtDir(s, d, "sql_maint_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1226,7 +1226,7 @@ object Table {
     val tag = graft.util.AppCleanup.appTag(s, d)
     val name = "sql_view_orders_" + tag
     val vname = "v_recent_orders_" + tag
-    val root = Sources.builtDir(s, d, "sql_view_orders") { root =>
+    Sources.builtDir(s, d, "sql_view_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -1367,7 +1367,7 @@ object Table {
     * id is pinned by the fixture's commit recipe. */
   val table_sql_refs: Q = (s, d) => {
     val name = "sql_refs_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_refs_orders") { root =>
+    Sources.builtDir(s, d, "sql_refs_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (o_orderkey BIGINT, o_year INT)
             USING graft OPTIONS (key 'o_orderkey') LOCATION '$root'""")
@@ -1418,7 +1418,7 @@ object Table {
   val table_sql_rename_col: Q = (s, d) => {
     import graft.util.Det._
     val name = "sql_rencol_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_rencol_orders") { root =>
+    Sources.builtDir(s, d, "sql_rencol_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1481,7 +1481,7 @@ object Table {
   val table_sql_drop_col: Q = (s, d) => {
     import graft.util.Det._
     val name = "sql_dropcol_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_dropcol_orders") { root =>
+    Sources.builtDir(s, d, "sql_dropcol_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1546,7 +1546,7 @@ object Table {
     val tag = graft.util.AppCleanup.appTag(s, d)
       .toLowerCase(java.util.Locale.ROOT)
     val p = s"show_story_$tag"
-    val rootA = Sources.builtDir(s, d, "show_story_ta") { rootA =>
+    Sources.builtDir(s, d, "show_story_ta") { rootA =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE ${p}_ta (o_orderkey BIGINT, o_year INT)
             USING graft OPTIONS (key 'o_orderkey') LOCATION '$rootA'""")
@@ -1637,7 +1637,7 @@ object Table {
   val table_sql_constraint: Q = (s, d) => {
     import graft.util.Det._
     val name = "sql_con_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_con_orders") { root =>
+    Sources.builtDir(s, d, "sql_con_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT,
@@ -1707,7 +1707,7 @@ object Table {
     * reads; no job at any scale. */
   val table_sql_detail: Q = (s, d) => {
     val name = "sql_detail_orders_" + graft.util.AppCleanup.appTag(s, d)
-    val root = Sources.builtDir(s, d, "sql_detail_orders") { root =>
+    Sources.builtDir(s, d, "sql_detail_orders") { root =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $name (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)
@@ -1749,7 +1749,7 @@ object Table {
     val tag = graft.util.AppCleanup.appTag(s, d)
     val src = s"sql_clone_src_$tag"
     val dst = s"sql_clone_dst_$tag"
-    val rootA = Sources.builtDir(s, d, "sql_clone_src") { rootA =>
+    Sources.builtDir(s, d, "sql_clone_src") { rootA =>
       graft.sql.GraftSql.exec(s,
         s"""CREATE TABLE $src (
               o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT)

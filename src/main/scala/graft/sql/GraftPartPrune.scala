@@ -55,9 +55,8 @@ object GraftPartPrune extends Rule[LogicalPlan] with PredicateHelper {
           case Seq() => f
           case spec =>
             val conj = splitConjunctivePredicates(cond)
-            val tz = conf.sessionLocalTimeZone
             val mapped = spec.flatMap(fld =>
-              conj.flatMap(c => mapConjunct(c, fld, rel, tz)))
+              conj.flatMap(c => mapConjunct(c, fld, rel)))
               .filterNot(m => conj.exists(_.semanticEquals(m)))
             if (mapped.isEmpty) f
             else f.copy(condition = (conj ++ mapped).reduce(And))
@@ -98,14 +97,14 @@ object GraftPartPrune extends Rule[LogicalPlan] with PredicateHelper {
   /** Map one conjunct on the field's SOURCE column to a predicate on
     * the derived partition column, when the shape admits one. */
   private def mapConjunct(c: Expression, fld: GraftTable.PartField,
-      rel: LogicalRelation, tz: String): Option[Expression] = {
+      rel: LogicalRelation): Option[Expression] = {
     val part = rel.output.find(_.name == fld.name).getOrElse(return None)
     def isSrc(e: Expression): Boolean = e match {
       case a: AttributeReference => a.name == fld.source
       case _ => false
     }
     def mapped(l: Literal): Option[Expression] =
-      derivedOf(l, fld, tz).map(s => Literal(
+      derivedOf(l, fld).map(s => Literal(
         org.apache.spark.unsafe.types.UTF8String.fromString(s),
         StringType))
     val timeT = fld.transform != "bucket"
@@ -147,8 +146,8 @@ object GraftPartPrune extends Rule[LogicalPlan] with PredicateHelper {
     * same wall clock so a mapped predicate can never disagree with a
     * directory name — including at DST-gap wall clocks in non-UTC
     * sessions, where date_format would have sheared. */
-  private[graft] def derivedOf(l: Literal, fld: GraftTable.PartField,
-      tz: String): Option[String] = {
+  private[graft] def derivedOf(l: Literal,
+      fld: GraftTable.PartField): Option[String] = {
     if (l.value == null) return None
     if (fld.transform == "bucket")
       return l.dataType match {
@@ -163,11 +162,11 @@ object GraftPartPrune extends Rule[LogicalPlan] with PredicateHelper {
       }
     val fmt = java.time.format.DateTimeFormatter.ofPattern(
       GraftTable.timePartFmt(fld.transform))
-    local(l.value, l.dataType, tz).map(fmt.format)
+    local(l.value, l.dataType).map(fmt.format)
   }
 
-  private def local(v: Any, dt: DataType,
-      tz: String): Option[java.time.LocalDateTime] = dt match {
+  private def local(v: Any,
+      dt: DataType): Option[java.time.LocalDateTime] = dt match {
     case DateType =>
       Some(java.time.LocalDate.ofEpochDay(
         v.asInstanceOf[Number].longValue()).atStartOfDay())

@@ -42,7 +42,7 @@ object GraftSqlDdl {
     * registered name become graft commands; everything else passes
     * through untouched (a DROP of an unregistered name stays Spark's —
     * the session catalog may legitimately own it). */
-  def splice(session: SparkSession, plan: LogicalPlan): LogicalPlan =
+  def splice(plan: LogicalPlan): LogicalPlan =
     GraftSqlViews.splice(plan).getOrElse(plan match {
       case CreateTable(UnresolvedIdentifier(parts, _), cols, partitioning,
           spec: UnresolvedTableSpec, ignoreIfExists)
@@ -832,19 +832,18 @@ case class GraftRenameTableCommand(parts: Seq[String],
   * swaps graft DDL for graft commands before the analyzer ever sees
   * them (see the object doc for why a resolution rule cannot win the
   * ResolveSessionCatalog race). */
-class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
+class GraftSqlParser(delegate: ParserInterface)
     extends ParserInterface {
   // maintenance verbs (VACUUM/OPTIMIZE/DESCRIBE HISTORY) splice on the
   // raw TEXT before delegation: they are not in Spark's grammar, so the
   // delegate would throw before any plan-level splice could run
   override def parsePlan(sqlText: String): LogicalPlan =
     GraftSqlMaint.parse(sqlText).getOrElse(
-      GraftSqlDdl.splice(session, delegate.parsePlan(sqlText)))
+      GraftSqlDdl.splice(delegate.parsePlan(sqlText)))
   override def parsePlanWithParameters(sqlText: String,
       ctx: ParameterContext): LogicalPlan =
     GraftSqlMaint.parse(sqlText).getOrElse(
-      GraftSqlDdl.splice(session,
-        delegate.parsePlanWithParameters(sqlText, ctx)))
+      GraftSqlDdl.splice(delegate.parsePlanWithParameters(sqlText, ctx)))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =

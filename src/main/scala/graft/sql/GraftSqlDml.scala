@@ -434,8 +434,7 @@ object GraftSql {
     // grammar); their commands are leaves, so the rule/analyzer passes
     // below are no-ops for them
     val parsed = GraftSqlMaint.parse(sql).getOrElse(
-      GraftSqlDdl.splice(spark,
-        spark.sessionState.sqlParser.parsePlan(sql)))
+      GraftSqlDdl.splice(spark.sessionState.sqlParser.parsePlan(sql)))
     val spliced = rule(parsed)
     rule(spark.sessionState.analyzer.execute(spliced))
   }
@@ -1155,7 +1154,7 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
           t.ref.numFiles, baseSnapshot = Some(t.snapshot),
           bloomCols = t.ref.bloomCols, commitEmpty = false,
           allowEvolution = extras.nonEmpty, streamTxn = None,
-          postImageChecked = true)
+          postImageChecked = true, updateRows = n(5))
     } finally tagged.unpersist()
     Seq.empty
   }

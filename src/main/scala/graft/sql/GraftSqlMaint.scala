@@ -212,7 +212,6 @@ object GraftSqlMaint {
     require(spec.nonEmpty,
       s"OPTIMIZE $name WHERE needs a PARTITIONED table (none declared " +
         s"at $root); plain OPTIMIZE rewrites the full table")
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
@@ -305,7 +304,7 @@ object GraftSqlMaint {
       } else {
         if (op != "=" && fld.transform == "bucket") loud(c)
         val mapped = lits.map(l =>
-          GraftPartPrune.derivedOf(l, fld, tz).getOrElse(loud(c)))
+          GraftPartPrune.derivedOf(l, fld).getOrElse(loud(c)))
         op match {
           case "=" =>
             val wanted = mapped.toSet

@@ -45,8 +45,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 object GraftTable {
 
   /** One immutable data file: path relative to the table root, row count,
-    * and min/max per tracked (numeric) column, all computed in a single
-    * distributed job at write time. Stats are doubles — exact for the
+    * and min/max per tracked (numeric) column, all computed at write time
+    * — in one distributed job, or on the driver for a small write
+    * ([[writeFiles]]' two arms). Stats are doubles — exact for the
     * int/date-derived columns tracked here; a production format keeps
     * typed bounds. `bloom` optionally carries a base64-packed per-column
     * bloom filter (see [[bloomPositions]]) for point-lookup file skipping
@@ -620,8 +621,8 @@ object GraftTable {
       cs
     }
     // partitioning is fixed at create, so any head's declaration works
-    val entries = writeFiles(spark, root, df, statsCols, clusterCols,
-      numFiles, bloomCols,
+    val entries = writeFiles(spark, root, df, localRows(df),
+      statsCols, clusterCols, numFiles, bloomCols,
       partSpec = partSpecOf(branchHeadManifest(root, name)))
     var attempts = 0
     // a pinned base forgoes the rebase loop, same contract as append():
@@ -844,16 +845,56 @@ object GraftTable {
         bounds.getDouble(2 * k + 1), (1L << zBits(zs.size)) - 1) }))
   }
 
+  /** Flat writes without `zorderCols` whose row bound is at most this
+    * many rows take [[writeFiles]]' driver arm. */
+  private[table] val WriteRowBudget = 10000L
+
+  /** The budget [[writeFiles]] dispatches on: [[WriteRowBudget]] unless
+    * a test runs a write under `withValue(0L)` to force the distributed
+    * arm. Separate from [[commitKeyBudget]], so forcing a commit's key
+    * arm leaves its write arm alone. */
+  private[graft] val writeRowBudget =
+    new scala.util.DynamicVariable[Long](WriteRowBudget)
+
+  /** Row bound of a frame that optimizes to a local relation (a batch
+    * built on the driver): its row count, known with no job; any other
+    * frame is unbounded. */
+  private def localRows(df: DataFrame): Long =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size.toLong
+      case _ => Long.MaxValue
+    }
+
+  /** Sum of row bounds, saturating at Long.MaxValue (unbounded). */
+  private def addBounds(a: Long, b: Long): Long =
+    if (a > Long.MaxValue - b) Long.MaxValue else a + b
+
+  /** Row bound of a rewrite of `files`: their live rows, as the manifest
+    * records them. */
+  private def liveRowsOf(files: Seq[FileEntry]): Long =
+    files.foldLeft(0L)((acc, f) => addBounds(acc, f.liveRows))
+
   /** Write `df`'s rows as immutable parquet files under a fresh commit
-    * subdirectory and return their manifest entries. One extra
-    * distributed job ([[fileEntries]]) computes per-file row counts,
-    * min/max stats and every bloom column via `input_file_name` — the
-    * job count does not grow with `bloomCols`, and the driver payload is
-    * O(files). `clusterCols` range-partitions the write so the stats are
-    * TIGHT (a file covers a narrow key band → pruning actually skips);
-    * an unclustered write would give every file near-global bounds. */
+    * subdirectory and return their manifest entries, on one of two arms
+    * chosen by `rowBound`, an upper bound on `df`'s rows the caller
+    * knows without a job (a rewrite's manifest live rows, a local
+    * batch's size, a count it already took; Long.MaxValue if unknown):
+    *  - driver arm ([[writeFilesOnDriver]]): a flat write without
+    *    `zorderCols` and a bound within [[writeRowBudget]] collects the
+    *    rows in at most one job, sorts and cuts them on the driver and
+    *    writes each file and its entry there — no job after the collect;
+    *  - distributed arm: `clusterCols` range-partitions the write, and
+    *    one extra job ([[fileEntries]]) computes per-file row counts,
+    *    min/max stats and every bloom column via `input_file_name` —
+    *    the job count does not grow with `bloomCols`, and the driver
+    *    payload is O(files).
+    * Clustering keeps the stats TIGHT on both arms (a file covers a
+    * narrow key band → pruning actually skips); an unclustered write
+    * would give every file near-global bounds. Both arms compute the same
+    * entry for the same file rows. */
   private def writeFiles(spark: SparkSession, root: String, df: DataFrame,
-      statsCols: Seq[String], clusterCols: Seq[String],
+      rowBound: Long, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int, bloomCols: Seq[String],
       zorderCols: Seq[String] = Nil,
       partSpec: Seq[PartField]): List[FileEntry] = {
@@ -867,6 +908,9 @@ object GraftTable {
     if (partSpec.nonEmpty)
       return writeFilesPartitioned(spark, root, df, statsCols,
         clusterCols, numFiles, bloomCols, zorderCols, partSpec)
+    if (zorderCols.isEmpty && rowBound <= writeRowBudget.value)
+      return writeFilesOnDriver(spark, root, df, statsCols, clusterCols,
+        numFiles, bloomCols)
     val sub = s"data/c-${java.util.UUID.randomUUID().toString}"
     val dir = s"$root/$sub"
     // Z-order clustering: one extra min/max agg over the commit (not the
@@ -893,13 +937,15 @@ object GraftTable {
       bloomCols, partitioned = false)
   }
 
-  /** The manifest entries of the files one write just landed, read back
-    * through `scan`: per file the row count, min/max of every stats
-    * column and the bloom of every bloom column, from ONE
+  /** The manifest entries of the files one distributed-arm write just
+    * landed, read back through `scan`: per file the row count, min/max
+    * of every stats column and the bloom of every bloom column, from ONE
     * `groupBy(input_file_name)` job — no driver-side data movement, the
     * driver payload is O(files) plus one 8 KiB bitset per file and bloom
     * column ([[BloomAgg]]). Shared by the flat and partitioned kernels;
-    * `partitioned` records each file's `k=v` tuple from its path. */
+    * `partitioned` records each file's `k=v` tuple from its path. The
+    * driver arm computes the same entry in memory ([[entryOnDriver]]):
+    * a new per-file statistic goes into both. */
   private def fileEntries(root: String, scan: DataFrame,
       statsCols: Seq[String], bloomCols: Seq[String],
       partitioned: Boolean): List[FileEntry] = {
@@ -937,6 +983,121 @@ object GraftTable {
           parts = if (partitioned) Some(partsOfRel(p)) else None)
       }
       .sortBy(_.path)
+  }
+
+  /** [[writeFiles]]' driver arm. Collects `df` in one job (none for a
+    * local relation) and splits the rows into at most `numFiles` files
+    * the way the distributed arm's partitioning does: with
+    * `clusterCols`, sorted in Spark's own ascending, nulls-first order
+    * and cut into contiguous chunks of near-equal size — a cut moves past
+    * rows whose cluster key equals the row before it, so equal keys
+    * share a file as they do under range partitioning; without them,
+    * dealt round-robin like `repartition(numFiles)`, so every file spans
+    * the commit's whole range. Each file lands under a fresh
+    * `data/c-<uuid>/`, written by the writer Spark's own write tasks
+    * use, over `schema.asNullable`, after the schema checks
+    * `df.write.parquet` runs: both arms accept and reject the same
+    * frames. Zero rows write no file. */
+  private def writeFilesOnDriver(spark: SparkSession, root: String,
+      df: DataFrame, statsCols: Seq[String], clusterCols: Seq[String],
+      numFiles: Int, bloomCols: Seq[String]): List[FileEntry] = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending,
+      BoundReference, InterpretedOrdering, SortOrder}
+    val format = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat()
+    val schema = df.schema
+    org.apache.spark.sql.graft.WriteShim.verifyWriteSchema(spark, format,
+      schema)
+    require(numFiles > 0, s"Number of partitions ($numFiles) must be positive.")
+    val rows = org.apache.spark.sql.graft.WriteShim.collectInternal(df)
+    val n = rows.length
+    val k = math.min(numFiles, n)
+    val chunks =
+      if (clusterCols.isEmpty)
+        (0 until k).map(i => (i until n by k).map(rows(_)))
+      else {
+        val order = new InterpretedOrdering(clusterCols.map { c =>
+          val i = Some(schema.fieldNames.indexOf(c)).filter(_ >= 0)
+            .getOrElse(schema.fieldNames.indexWhere(_.equalsIgnoreCase(c)))
+          SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
+            Ascending)
+        })
+        val sorted = rows.sorted(order)
+        val cuts = (1 until k).scanLeft(0) { (prev, i) =>
+          var c = math.max(prev, (i.toLong * n / k).toInt)
+          while (c > 0 && c < n &&
+              order.compare(sorted(c - 1), sorted(c)) == 0) c += 1
+          c
+        } :+ n
+        cuts.sliding(2).collect {
+          case Seq(a, b) if b > a => sorted.slice(a, b).toSeq
+        }.toSeq
+      }
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      org.apache.spark.sql.graft.WriteShim.hadoopConf(spark))
+    val dataSchema = org.apache.spark.sql.graft.WriteShim.asNullable(schema)
+    val factory = format.prepareWrite(spark, job, Map.empty, dataSchema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val id = java.util.UUID.randomUUID().toString
+    chunks.zipWithIndex.toList.map { case (chunk, i) =>
+      val rel =
+        f"data/c-$id/part-$i%05d-$id-c000" + factory.getFileExtension(ctx)
+      val w = factory.newInstance(s"$root/$rel", dataSchema, ctx)
+      try chunk.foreach(w.write) finally w.close()
+      entryOnDriver(spark, rel, chunk, schema, statsCols, bloomCols)
+    }
+  }
+
+  /** The [[FileEntry]] of one driver-arm file holding `rows`, with
+    * [[fileEntries]]' Catalyst semantics: min/max under Spark's ordering
+    * over non-NULL values, then `Cast` to double, a column with no
+    * non-NULL value (or a NULL cast) recorded as the boxed NULL the
+    * distributed arm's `getAs[Double]` records; blooms through the same
+    * [[BloomAgg]] over the same key — a string key as a string, any
+    * other cast to long — and none when no key is non-NULL. */
+  private def entryOnDriver(spark: SparkSession, rel: String,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String]): FileEntry = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending,
+      BoundReference, Cast, InterpretedOrdering, SortOrder}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    def ref(c: String) = {
+      val i = schema.fieldIndex(c)
+      (i, BoundReference(i, schema(i).dataType, nullable = true))
+    }
+    val bounds = statsCols.map { c =>
+      val (i, r) = ref(c)
+      val toDouble = Cast(r, DoubleType, tz)
+      val order = new InterpretedOrdering(Seq(SortOrder(r, Ascending)))
+      val vals = rows.filterNot(_.isNullAt(i))
+      if (vals.isEmpty) (c -> null, c -> null)
+      else (c -> toDouble.eval(vals.min(order)),
+        c -> toDouble.eval(vals.max(order)))
+    }
+    val blooms = bloomCols.flatMap { c =>
+      val (i, r) = ref(c)
+      val bits = schema(i).dataType match {
+        case StringType =>
+          val agg = new BloomAgg[String](bloomPositionsStr)
+          rows.foldLeft(agg.zero)((b, row) => agg.reduce(b,
+            if (row.isNullAt(i)) null else row.getUTF8String(i).toString))
+        case _ =>
+          val agg =
+            new BloomAgg[java.lang.Long](k => bloomPositions(k.longValue()))
+          val toLong = Cast(r, LongType, tz)
+          rows.foldLeft(agg.zero)((b, row) =>
+            agg.reduce(b, toLong.eval(row).asInstanceOf[java.lang.Long]))
+      }
+      if (bits.isEmpty) None
+      else Some(c -> java.util.Base64.getEncoder.encodeToString(bits))
+    }.toMap
+    FileEntry(rel, rows.length.toLong,
+      bounds.map(_._1).toMap.asInstanceOf[Map[String, Double]],
+      bounds.map(_._2).toMap.asInstanceOf[Map[String, Double]],
+      if (blooms.isEmpty) None else Some(blooms))
   }
 
   /** The partitioned-table write kernel: stage a dynamic-partition
@@ -1068,8 +1229,8 @@ object GraftTable {
           s"got ${dup.toSeq.sorted.mkString(", ")} at $root"))
     checks.keys.foreach(n => requireCheckRefsExist(df.schema, n, checks(n)))
     enforceChecks(df, checks, s"in CREATE at $root")
-    val entries = writeFiles(spark, root, df, statsCols, clusterCols,
-      numFiles, bloomCols, zorderCols, spec)
+    val entries = writeFiles(spark, root, df, localRows(df),
+      statsCols, clusterCols, numFiles, bloomCols, zorderCols, spec)
     val m = Manifest(1, 0, "create", df.schema.json, entries,
       checks = Option(checks).filter(_.nonEmpty),
       partitionCols = Option(spec.map(_.name).toList).filter(_.nonEmpty),
@@ -1401,8 +1562,8 @@ object GraftTable {
         s"in the appended batch at $root")
       cs
     }
-    val entries = writeFiles(spark, root, df, statsCols, clusterCols,
-      numFiles, bloomCols,
+    val entries = writeFiles(spark, root, df, localRows(df),
+      statsCols, clusterCols, numFiles, bloomCols,
       partSpec = partSpecOf(manifest(root, latestSnapshot(root))))
     var attempts = 0
     // a pinned base forgoes the rebase loop: the caller's guards (e.g.
@@ -1524,7 +1685,11 @@ object GraftTable {
     *     actually holding a matching key: an `IN (keys)` filter on the
     *     driver arm, a semi-join against the key set on the distributed
     *     arm (driver payload is the affected-file name list).
-    * Both arms choose the same files. Untouched files carry over by
+    * Both arms choose the same files. The rewrite (the affected files'
+    * survivors ∪ `updates`) goes through [[writeFiles]] with a row bound
+    * of the affected files' manifest live rows plus the updates' rows
+    * when a driver-built batch (or the caller) bounds them, so a small
+    * merge writes on the driver arm. Untouched files carry over by
     * reference, so the commit cost scales with the update's key
     * locality, not the table size. Single-attempt optimistic: the commit
     * targets `baseSnapshot + 1` (base defaults to the latest at entry —
@@ -1573,17 +1738,22 @@ object GraftTable {
       streamTxn: Option[(String, Long)] = None): Int =
     upsertDeleteKernel(spark, root, updates, deleteKeys, keyCol, statsCols,
       clusterCols, numFiles, baseSnapshot, bloomCols, commitEmpty,
-      allowEvolution, streamTxn, postImageChecked = false)
+      allowEvolution, streamTxn, postImageChecked = false,
+      updateRows = localRows(updates))
 
   /** [[upsertDelete]] for a caller that has already counted the
     * violations of [[postImageChecks]] in an aggregate of its own (SQL
-    * MERGE's guard aggregate), so the kernel's check job is skipped. */
+    * MERGE's guard aggregate), so the kernel's check job is skipped.
+    * `updateRows` bounds the rows of `updates` (Long.MaxValue when
+    * unknown); with the affected files' live rows it bounds the
+    * rewrite, choosing [[writeFiles]]' arm. */
   private[graft] def upsertDeleteKernel(spark: SparkSession, root: String,
       updates: DataFrame, deleteKeys: DataFrame, keyCol: String,
       statsCols: Seq[String], clusterCols: Seq[String], numFiles: Int,
       baseSnapshot: Option[Int], bloomCols: Seq[String],
       commitEmpty: Boolean, allowEvolution: Boolean,
-      streamTxn: Option[(String, Long)], postImageChecked: Boolean): Int = {
+      streamTxn: Option[(String, Long)], postImageChecked: Boolean,
+      updateRows: Long): Int = {
     val v = baseSnapshot.getOrElse(latestSnapshot(root))
     require(v > 0, s"upsertDelete into non-existent table $root")
     val parent = manifest(root, v)
@@ -1651,8 +1821,11 @@ object GraftTable {
               acc.withColumn(f.name, lit(null).cast(f.dataType)))
             touched.untouched(base).unionByName(updates)
           }
-        val entries = writeFiles(spark, root, survivors, statsCols,
-          clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+        val entries = writeFiles(spark, root, survivors,
+          if (affected.isEmpty) updateRows
+          else addBounds(liveRowsOf(affected), updateRows),
+          statsCols, clusterCols, numFiles, bloomCols,
+          partSpec = partSpecOf(parent))
         val m = child(parent, if (evolved) "merge_evolve" else "merge",
           parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
           .copy(schemaJson =
@@ -1702,8 +1875,9 @@ object GraftTable {
       s"overwritePartitions schema mismatch vs snapshot $v at $root")
     enforceChecks(df, withNotNull(schemaOf(parent), df, checksOf(parent)),
       s"in the overwrite batch at $root")
-    val entries = writeFiles(spark, root, df, statsCols, clusterCols,
-      numFiles, bloomCols, partSpec = partSpecOf(parent))
+    val entries = writeFiles(spark, root, df, localRows(df),
+      statsCols, clusterCols, numFiles, bloomCols,
+      partSpec = partSpecOf(parent))
     if (entries.isEmpty) return v // empty batch: nothing touched
     val touched = entries.flatMap(_.parts).toSet
     val m = child(parent, "overwrite_partitions",
@@ -1720,8 +1894,9 @@ object GraftTable {
     * overall-range overlap (distributed arm) narrows to candidate
     * files, a scan of only those finds the files actually holding a
     * doomed key — and only the affected files are rewritten (minus
-    * their matching rows, NULL keys kept); everything else carries over
-    * by reference, so cost scales with the delete's key locality. A
+    * their matching rows, NULL keys kept), through [[writeFiles]] with
+    * their manifest live rows as the row bound; everything else carries
+    * over by reference, so cost scales with the delete's key locality. A
     * delete matching nothing declines to commit (returns the base
     * snapshot — no empty commit, like [[compact]]); a delete emptying
     * every affected file commits a manifest that simply drops them.
@@ -1744,8 +1919,9 @@ object GraftTable {
         val affected = parent.files.filter(f => affectedPaths(f.path))
         val survivors =
           keys.untouched(readEntries(spark, root, parent, affected))
-        val entries = writeFiles(spark, root, survivors, statsCols,
-          clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+        val entries = writeFiles(spark, root, survivors,
+          liveRowsOf(affected), statsCols, clusterCols, numFiles, bloomCols,
+          partSpec = partSpecOf(parent))
         val m = child(parent, "delete",
           parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
         if (!tryCommit(root, m))
@@ -1807,8 +1983,9 @@ object GraftTable {
 
   /** Run `body` over the distinct key set of `keys[keyCol]`. The key
     * column goes through [[graft.util.Probes.byBudget]] with a null memo
-    * key (a commit's input is not immutable): one probe collects up to
-    * the budget + 1 key rows, deduplicated on the driver. Probing the
+    * key (a commit's input is not immutable): one `limit` probe collects
+    * up to the budget + 1 key rows, deduplicated on the driver, in
+    * 1 + ⌈log4 P⌉ jobs over the key column's P partitions. Probing the
     * column rather than its `distinct()` spares the probe a shuffle job,
     * and a key-addressed commit's keys are distinct already; a batch
     * built on the driver (a local relation) probes with no job at all.
@@ -1981,8 +2158,9 @@ object GraftTable {
       s"in the merge post-image at $root")
     val marks = touchedKeys(parent, updates, keyCol, "merge")(
       dvMark(spark, root, parent, _, keyCol))
-    val entries = writeFiles(spark, root, updates, statsCols,
-      clusterCols, numFiles, bloomCols, partSpec = partSpecOf(parent))
+    val entries = writeFiles(spark, root, updates, localRows(updates),
+      statsCols, clusterCols, numFiles, bloomCols,
+      partSpec = partSpecOf(parent))
     val m = child(parent, "merge_mor",
       applyDvMarks(root, parent, marks) ++ entries)
     if (!tryCommit(root, m))
@@ -1994,12 +2172,14 @@ object GraftTable {
   /** Small-file compaction as a COMMIT: files of the latest snapshot
     * holding fewer than `minRows` rows are rewritten together into
     * `numFiles` larger ones; everything else carries over by reference.
-    * Content-invariant by construction (same rows, new layout), and old
-    * snapshots still reference the small files — readable until
-    * [[expireSnapshots]] reclaims them. The maintenance twin of the
-    * streaming ingest path: many tiny append commits, one compact, zero
-    * reader disruption (readers of N-1 are unaffected; new readers plan
-    * the compacted layout). */
+    * The rewrite's row bound is the small files' manifest live rows, so
+    * a small compaction without `zorderCols` writes on [[writeFiles]]'
+    * driver arm. Content-invariant by construction (same rows, new
+    * layout), and old snapshots still reference the small files —
+    * readable until [[expireSnapshots]] reclaims them. The maintenance
+    * twin of the streaming ingest path: many tiny append commits, one
+    * compact, zero reader disruption (readers of N-1 are unaffected; new
+    * readers plan the compacted layout). */
   def compact(spark: SparkSession, root: String, minRows: Long,
       statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, bloomCols: Seq[String] = Nil,
@@ -2034,8 +2214,8 @@ object GraftTable {
     // zorderCols here = OPTIMIZE ZORDER: compact with minRows =
     // Long.MaxValue reclusters the whole table into the multi-dim
     // layout as one commit, past snapshots untouched
-    val entries = writeFiles(spark, root, rewritten, statsCols,
-      clusterCols, numFiles, bloomCols, zorderCols,
+    val entries = writeFiles(spark, root, rewritten, liveRowsOf(small),
+      statsCols, clusterCols, numFiles, bloomCols, zorderCols,
       partSpec = partSpecOf(parent))
     val smallPaths = small.map(_.path).toSet
     val m = child(parent,
@@ -2377,8 +2557,9 @@ object GraftTable {
           s"got ${dup.toSeq.sorted.mkString(", ")} at $root"))
     checks.keys.foreach(n => requireCheckRefsExist(df.schema, n, checks(n)))
     enforceChecks(df, checks, s"in REPLACE at $root")
-    val entries = writeFiles(spark, root, df, statsCols, clusterCols,
-      numFiles, bloomCols, zorderCols, partitionSpec)
+    val entries = writeFiles(spark, root, df, localRows(df),
+      statsCols, clusterCols, numFiles, bloomCols, zorderCols,
+      partitionSpec)
     var attempts = 0
     while (attempts < 20) {
       val v = latestSnapshot(root)

@@ -25,8 +25,13 @@ object Probes {
 
   /** Budget dispatch for every driver-or-distributed operator (the graph
     * loops, the dedup closure, rel_recursive, asana root resolution):
-    * ONE bounded probe job collects up to budget+1 rows of `ds`. When
-    * they fit, the rows ARE the driver arm's input; otherwise `distArm`
+    * ONE bounded probe, `limit(budget + 1).collect()`, collects up to
+    * budget+1 rows of `ds`. Spark runs it as `executeTake` rounds — one
+    * partition first, then 4× as many each round until the limit fills
+    * — so the probe costs 1 + ⌈log4 P⌉ jobs over P partitions (1 for a
+    * one-file scan, 2 for 2–4 files, 3 for a 2-file scan ∪ a local
+    * batch of 6 partitions) and none over a local relation. When the
+    * rows fit, they ARE the driver arm's input; otherwise `distArm`
     * runs over `ds.cache()`, unpersisted in finally. An arm that needs
     * the row count calls `count()` itself.
     *
