@@ -412,15 +412,14 @@ object Graph {
       s.createDataset(degreesOf(es).toSeq.sortBy(_._1))
         .toDF("node", "core_deg")
         .orderBy("node")
-    }(edges => kcoreDistributed(s, edges.toDF(), edges.count()))
+    }(edges => kcoreDistributed(edges.toDF(), edges.count()))
   }
 
   private def degreesOf(es: Set[(Long, Long)]): Map[Long, Long] =
     es.toSeq.flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
 
-  private def kcoreDistributed(s: SparkSession, edges: DataFrame,
-      n0: Long): DataFrame = {
+  private def kcoreDistributed(edges: DataFrame, n0: Long): DataFrame = {
     var cur = graft.util.Iterate.checkpoint(
       graft.util.Iterate.coalesceSmall(edges, n0))
     var size = n0
@@ -851,10 +850,9 @@ object Graph {
         require(round < 128,
           "sccDistributed exceeded 128 pivot rounds — adversarially " +
             "chain-ordered ids; raise the driver budget for this graph")
-        val (f, fR) = minReach(sp, edges, remaining, forward = true, "fmin")
+        val (f, fR) = minReach(edges, remaining, forward = true, "fmin")
         val mChkR = try {
-          val (b, bR) = minReach(sp, edges, remaining, forward = false,
-            "bmin")
+          val (b, bR) = minReach(edges, remaining, forward = false, "bmin")
           try {
             graft.util.Iterate.checkpoint(f.join(b, "node")
               .where(col("fmin") === col("bmin"))
@@ -893,8 +891,8 @@ object Graph {
     * (`forward = false` flips the edges for backward reach). One
     * equi-join + one aggregate per hop; converges in O(longest
     * shortest-path chain) hops, loudly bounded. */
-  private def minReach(s: SparkSession, edgesIn: DataFrame,
-      nodes: DataFrame, forward: Boolean, out: String)
+  private def minReach(edgesIn: DataFrame, nodes: DataFrame,
+      forward: Boolean, out: String)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
     // the forward direction reads the caller's already-checkpointed
     // edges verbatim — re-checkpointing it would materialize a
@@ -1010,7 +1008,7 @@ object Graph {
         driverBudgetEdges, null) { es =>
       s.createDataset(topoLayersLocal(comps.as[Long].collect(), es))
         .toDF("scc", "layer")
-    }(ced => topoLayersDistributed(s, comps, ced.toDF()))
+    }(ced => topoLayersDistributed(comps, ced.toDF()))
   }
 
   /** the pure Kahn longest-path DP — shared by [[topoLayersOf]]'s driver
@@ -1040,7 +1038,7 @@ object Graph {
     all.toSeq.map(c => (c, layer(c)))
   }
 
-  private def topoLayersDistributed(s: SparkSession, comps: DataFrame,
+  private def topoLayersDistributed(comps: DataFrame,
       ced: DataFrame): DataFrame = {
     var (lay, layR) = graft.util.Iterate.checkpoint(
       comps.select(col("scc"), lit(0).as("layer")))
@@ -1171,7 +1169,7 @@ object Graph {
       val nodes = edges.select(col("s").as("node"))
         .union(edges.select(col("t").as("node"))).distinct()
       val src = nodes.agg(min(col("node"))).head().getLong(0)
-      val dist: DataFrame = ssspDistributed(s, edges, src)
+      val dist: DataFrame = ssspDistributed(edges, src)
       nodes.join(dist, Seq("node"), "left")
         .select(col("node"), col("dist"))
     }
@@ -1221,8 +1219,7 @@ object Graph {
   /** Distributed arm: Bellman–Ford min-relaxation to fixpoint, one
     * shuffle join + one min-aggregate per round, loudly bounded by the
     * shared unroll constant. */
-  private def ssspDistributed(s: SparkSession, edges: DataFrame,
-      src: Long): DataFrame = {
+  private def ssspDistributed(edges: DataFrame, src: Long): DataFrame = {
     var (dist, distR) = graft.util.Iterate.checkpoint(
       edges.sparkSession.range(1).select(lit(src).as("node"),
         lit(0L).as("dist")))

@@ -594,21 +594,36 @@ object Llm {
   private def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
+  private def cosCol(a: Column, b: Column): Column =
+    dot(a, b) / (norm(a) * norm(b))
+
+  /** the typed (vec_id, emb) view of the embeddings every vector kernel
+    * reads. */
+  private def vecsOf(s: org.apache.spark.sql.SparkSession, d: String) = {
+    import s.implicits._
+    embDouble(s, d).select(col("vec_id"), col("emb"))
+      .as[(Long, Array[Double])]
+  }
+
   /** brute-force cosine top-10 for query vec_id=0 — the verifiable ANN
-    * baseline. The query vector is a 1-row broadcast; the scan streams. */
-  val llm_knn: Q = (s, d) => {
+    * baseline. The query vector is a 1-row broadcast; the scan streams.
+    * `cos` is the only difference between [[llm_knn]] and
+    * [[llm_knn_native]]. */
+  private def knnTop10(s: org.apache.spark.sql.SparkSession, d: String,
+      cos: (Column, Column) => Column): DataFrame = {
     val e = embDouble(s, d)
     val q = e.where(col("vec_id") === 0).select(col("emb").as("qv"))
     e.where(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .withColumn("sim_raw", dot(col("emb"), col("qv")) /
-        (norm(col("emb")) * norm(col("qv"))))
+      .withColumn("sim_raw", cos(col("emb"), col("qv")))
       .orderBy(desc("sim_raw"), asc("vec_id"))
       .limit(10)
       .select(col("vec_id").as("neighbor_id"), col("label"),
         r4(col("sim_raw")).as("sim"))
       .orderBy(desc("sim"), asc("neighbor_id"))
   }
+
+  val llm_knn: Q = (s, d) => knnTop10(s, d, cosCol)
 
   /** Anchor-stride prime ladder for [[llm_hard_negatives]]: the stride
     * is the first rung p with n ≤ [[AnchorTarget]]·p, so the anchor
@@ -775,12 +790,6 @@ object Llm {
     vecs.limit(math.min(rb + 1, Int.MaxValue.toLong).toInt).count() <= rb
   }
 
-  private def vecsOf(s: org.apache.spark.sql.SparkSession, d: String) = {
-    import s.implicits._
-    embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])]
-  }
-
   /** fit decision memoized per (application, sfDir, rowCap):
     * simjoinAuto's LSH branch plus rerankExact used to re-probe dim and
     * re-scan per query — two extra jobs per invocation on the bench hot
@@ -803,8 +812,7 @@ object Llm {
   private def simjoinExactUnguarded(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     import s.implicits._
-    val rows = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])]
+    val rows = vecsOf(s, d)
     val side = rows.collect().sortBy(_._1)
       .map { case (id, v) => (id, v, math.sqrt(dotArr(v, v))) }
     val bc = s.sparkContext.broadcast(side)
@@ -933,13 +941,8 @@ object Llm {
   }
 
   private[graft] def lshCandidates(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    import s.implicits._
-    lshCandidatesVecs(
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])],
-      LshBands, LshRowsPerBand)
-  }
+      d: String): DataFrame =
+    lshCandidatesVecs(vecsOf(s, d), LshBands, LshRowsPerBand)
 
   /** exact rerank: join the two vectors back and apply the same threshold
     * as llm_simjoin — candidate volume, not corpus volume, pays this join.
@@ -1022,13 +1025,8 @@ object Llm {
     * from it as plain SQL (full hash check, not rows-only). */
   private def dumpLshBands(s: org.apache.spark.sql.SparkSession,
       d: String): Unit =
-    dumpForOracle(s, d, "lshband") {
-      import s.implicits._
-      lshBandedVecs(
-        embDouble(s, d).select(col("vec_id"), col("emb"))
-          .as[(Long, Array[Double])],
-        LshBands, LshRowsPerBand)
-    }
+    dumpForOracle(s, d, "lshband")(
+      lshBandedVecs(vecsOf(s, d), LshBands, LshRowsPerBand))
 
   /** The persisted distinct LSH candidate-pair relation, an artifact of
     * the band index ([[lshCandidates]] keeps the in-flight derivation
@@ -1062,13 +1060,8 @@ object Llm {
     * rules live in [[graft.util.AppCleanup.persisted]]. */
   private[graft] def lshBandTable(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.util.AppCleanup.persisted(s, "graft_lshband", d, "band_key") {
-      import s.implicits._
-      lshBandedVecs(
-        embDouble(s, d).select(col("vec_id"), col("emb"))
-          .as[(Long, Array[Double])],
-        LshBands, LshRowsPerBand)
-    }
+    graft.util.AppCleanup.persisted(s, "graft_lshband", d, "band_key")(
+      lshBandedVecs(vecsOf(s, d), LshBands, LshRowsPerBand))
 
   private[graft] def lshCandidatesBucketed(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
@@ -1118,17 +1111,7 @@ object Llm {
     * UDF attempt at the same job benched 3× slower from Seq conversion). */
   val llm_knn_native: Q = (s, d) => {
     graft.functions.GraftFunctions.register(s)
-    val e = embDouble(s, d)
-    val q = e.where(col("vec_id") === 0).select(col("emb").as("qv"))
-    e.where(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .withColumn("sim_raw",
-        call_function("graft_cosine", col("emb"), col("qv")))
-      .orderBy(desc("sim_raw"), asc("vec_id"))
-      .limit(10)
-      .select(col("vec_id").as("neighbor_id"), col("label"),
-        r4(col("sim_raw")).as("sim"))
-      .orderBy(desc("sim"), asc("neighbor_id"))
+    knnTop10(s, d, call_function("graft_cosine", _, _))
   }
 
   /** Min-label connected components over an undirected edge list (cols
@@ -1344,11 +1327,7 @@ object Llm {
     * the kernel: planted exact duplicates always dedup to the min id,
     * and the within-cell pair set equals a brute-force recompute. */
   val llm_dedup_semantic: Q = (s, d) => {
-    import s.implicits._
-    val assigned = semAssign(
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])],
-      trainIvfCentroids(s, d))
+    val assigned = assignCells(vecsOf(s, d), trainIvfCentroids(s, d))
     // the trained quantizer is deterministic, so the assignments are a
     // dumpable TABLE — and once cells are a table, the within-cell pair
     // predicate + min-id survivor is plain SQL: the k-means stays
@@ -1358,28 +1337,12 @@ object Llm {
     semDedupFromAssigned(assigned, SemDedupTau)
   }
 
-  /** cell assignment of [[llm_dedup_semantic]]: nearest trained centroid
-    * by cosine, ties to the smaller cell id — deterministic, which is
-    * what makes the assignments oracle fixture data. */
-  private[graft] def semAssign(
-      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])]): DataFrame = {
-    val s = rows.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(centroids)
-    rows.map { case (id, v) =>
-      val cell = bc.value.map { case (cid, cv) => (cosArr(v, cv), cid) }
-        .maxBy { case (sim, cid) => (sim, -cid) }._2
-      (cell, id, v)
-    }.toDF("cell", "vec_id", "emb")
-  }
-
   /** kernel of [[llm_dedup_semantic]] — unit-testable on synthetic
     * vectors and centroids. */
   private[graft] def semDedupOf(
       rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
       centroids: Array[(Long, Array[Double])], tau: Double): DataFrame =
-    semDedupFromAssigned(semAssign(rows, centroids), tau)
+    semDedupFromAssigned(assignCells(rows, centroids), tau)
 
   private[graft] def semDedupFromAssigned(assigned: DataFrame,
       tau: Double): DataFrame = {
@@ -1670,23 +1633,30 @@ object Llm {
       .orderBy("qid")
   }
 
-  /** IVF-style approximate nearest neighbors — the scale path next to the
-    * brute-force baseline (llm_knn): a coarse quantizer of 16 deterministic
-    * centroids (the embeddings of vec_id 0..15 — no iterative training, so
-    * fully reproducible), every vector assigned to its nearest centroid
-    * (one broadcast + kernel pass), queries probe their 4 nearest cells and
-    * exact-rerank only those inverted lists. At 100 TB the assignment is
-    * one map pass and each probe touches nprobe/ncells of the data.
-    * Engine-specific traversal → no SQL oracle; the test suite measures
-    * recall against the brute-force baseline (bounded on these isotropic
-    * fixtures — noise is ANN's worst case, documented in BASELINE.md). */
+  // ----- vector search: one kernel per step ---------------------------------
+  // The ANN family (IVF seed/trained/q8/indexed/incremental, PQ, IVF-PQ
+  // in-flight and indexed, ANN eval) composes the IVFADC steps of Jégou,
+  // Douze & Schmid (TPAMI 2011), each defined ONCE below: the Lloyd's loop
+  // ([[lloyd]]), the nearest code and PQ encoder ([[nearestL2]],
+  // [[pqEncode]]), the query LUT ([[queryLut]], [[ivfPqProbeLuts]]), the ADC
+  // fold ([[adcOf]]) and the exact rerank tail ([[rerankL2]]). The DuckDB
+  // oracle replays everything downstream of the dumped centroids and
+  // codebooks, so each kernel's float fold order is part of the contract:
+  // per-partition accumulation, partials folded in partition-index order,
+  // the m = 0..15 ADC fold, strict `<` / `>` so a tie picks the lowest index.
+
   private[graft] def dotArr(x: Array[Double], y: Array[Double]): Double = {
     var acc = 0.0; var i = 0
     while (i < x.length) { acc += x(i) * y(i); i += 1 }
     acc
   }
+
+  /** the array cosine is [[graft.functions.CosineSimilarity.cosine]], the
+    * one fused loop every cosine path shares: its three accumulators sum
+    * in index order from 0.0 exactly like `dotArr(x, y)`, `dotArr(x, x)`
+    * and `dotArr(y, y)`, so equal-length inputs give the same bits. */
   private[graft] def cosArr(x: Array[Double], y: Array[Double]): Double =
-    dotArr(x, y) / (math.sqrt(dotArr(x, x)) * math.sqrt(dotArr(y, y)))
+    graft.functions.CosineSimilarity.cosine(x, y)
 
   /** nearest-centroid assignment, tie → lowest cell id — THE convention
     * every IVF variant and the DuckDB replay (`ORDER BY s DESC, cid
@@ -1703,129 +1673,113 @@ object Llm {
     cent.map { case (cid, cv) => (cosArr(qv, cv), cid) }
       .sortBy { case (sim, cid) => (-sim, cid) }.take(nprobe).map(_._2)
 
-  /** IVF probe over a given coarse quantizer: every vector assigned to
-    * its nearest centroid (one broadcast + kernel map pass — the inverted
-    * lists), queries probe their 4 nearest cells and exact-rerank only
-    * those lists. Shared by the untrained, Lloyd's-trained, and
-    * quantized-store variants. */
-  private[graft] def ivfSearch(s: org.apache.spark.sql.SparkSession,
-      d: String, centroids: Array[(Long, Array[Double])]): DataFrame = {
-    import s.implicits._
-    ivfSearchVecs(
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])],
-      centroids)
-  }
-
-  private[graft] def ivfSearchVecs(
+  /** the inverted lists: every vector tagged with its [[nearestCellOf]]
+    * cell in one broadcast map pass, as (cell, vec_id, emb) tuples — the
+    * in-flight probe scans them without a serialize round trip. */
+  private def cellsOf(
       rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])]): DataFrame = {
+      centroids: Array[(Long, Array[Double])])
+      : org.apache.spark.sql.Dataset[(Long, Long, Array[Double])] = {
     val s = rows.sparkSession
     import s.implicits._
-    val bcCent = s.sparkContext.broadcast(centroids)
-    // inverted lists: nearest centroid per vector (ties → lowest cell id)
-    val assigned = rows.map { case (id, v) =>
-      (nearestCellOf(bcCent.value, v), id, v)
+    val bc = s.sparkContext.broadcast(centroids)
+    rows.map { case (id, v) => (nearestCellOf(bc.value, v), id, v) }
+  }
+
+  /** [[cellsOf]] as named columns: both persisted index layouts and
+    * [[llm_dedup_semantic]], whose dumped assignments are oracle fixture
+    * data. */
+  private[graft] def assignCells(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      centroids: Array[(Long, Array[Double])]): DataFrame =
+    cellsOf(rows, centroids).toDF("cell", "vec_id", "emb")
+
+  /** the 20 standard queries (vec_id < 20), each with its probe cells.
+    * Column filter, not a closure (r17, guide §6): the lambda form
+    * deserialized EVERY vector through the tuple encoder just to keep
+    * 20 — the predicate reaches the parquet scan (PushedFilters) and the
+    * collect job reads ~20 rows. */
+  private def probedQueries(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      cent: Array[(Long, Array[Double])])
+      : Array[(Long, Array[Double], Set[Long])] =
+    rows.filter(col(rows.columns(0)) < 20).collect().sortBy(_._1).map {
+      case (qid, qv) => (qid, qv, probeCellsOf(cent, qv).toSet)
     }
-    // queries = vec_id < 20, probing their 4 nearest cells. Column
-    // filter, not a closure (r17, guide §6): the lambda form
-    // deserialized EVERY vector through the tuple encoder just to keep
-    // 20 — the predicate now reaches the parquet scan (PushedFilters)
-    // and the collect job reads ~20 rows.
-    val queries = rows.filter(col(rows.columns(0)) < 20)
-      .collect().sortBy(_._1).map {
-      case (qid, qv) =>
-        (qid, qv, probeCellsOf(bcCent.value, qv).toSet)
-    }
+
+  /** the inverted-list scan: each (cell, vec_id, emb) row scored by
+    * exact cosine against every query that probes its cell. */
+  private def probeScores(
+      cells: org.apache.spark.sql.Dataset[(Long, Long, Array[Double])],
+      queries: Array[(Long, Array[Double], Set[Long])]): DataFrame = {
+    val s = cells.sparkSession
+    import s.implicits._
     val bcQ = s.sparkContext.broadcast(queries)
-    assigned.flatMap { case (cell, id, v) =>
+    cells.flatMap { case (cell, id, v) =>
       bcQ.value.iterator
         .filter { case (qid, _, probes) => probes.contains(cell) && qid != id }
         .map { case (qid, qv, _) => (qid, id, cosArr(qv, v)) }
     }
       .toDF("qid", "neighbor_id", "sim_raw")
+  }
+
+  /** top-5 neighbours per query by (sim desc, id asc), numbered. */
+  private def top5PerQuery(scores: DataFrame): DataFrame =
+    scores
       .withColumn("rn", row_number().over(Window.partitionBy("qid")
         .orderBy(desc("sim_raw"), asc("neighbor_id"))))
       .where(col("rn") <= 5)
       .select(col("qid"), col("neighbor_id"), r4(col("sim_raw")).as("sim"),
         col("rn"))
       .orderBy("qid", "rn")
-  }
 
-  /** the seed-centroid convention in ONE place (vec_id 0..15, sorted):
-    * the untrained, trained-init, and quantized-store variants must all
-    * derive their quantizer from the same rule or they silently diverge. */
-  private[graft] def seedCentroidsVecs(
-      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])])
-      : Array[(Long, Array[Double])] =
-    // Column filter, not a closure (r17, guide §6): pushes vec_id < 16
-    // into the parquet scan instead of deserializing the whole corpus
-    // per quantizer fetch (shared by the seed/trained/q8 variants).
-    rows.filter(col(rows.columns(0)) < 16).collect().sortBy(_._1)
+  /** the standard vec_id-0 query vector, memoized per (application,
+    * sfDir): every single-query ANN variant needs it, and re-collecting
+    * costs a full embeddings scan per call (review finding, r13). */
+  private def queryVec0(s: org.apache.spark.sql.SparkSession,
+      d: String): Array[Double] =
+    graft.util.Probes.memo(s, d, "query_vec0") {
+      vecsOf(s, d)
+        .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
+        .head()._2
+    }
 
-  /** deterministic untrained quantizer: the embeddings of vec_id 0..15. */
-  private[graft] def ivfSeedCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[(Long, Array[Double])] = {
-    import s.implicits._
-    seedCentroidsVecs(embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])])
-  }
-
-  val llm_ann_ivf: Q = (s, d) => ivfSearch(s, d, ivfSeedCentroids(s, d))
-
-  /** spherical k-means training for the coarse quantizer: Lloyd's
-    * iterations from the deterministic vec_id 0..15 init. Each round is
-    * ONE distributed pass — assign every vector to its nearest centroid
-    * by cosine and accumulate the per-cell sums of UNIT vectors (k×dim
-    * doubles + k longs per partition, the classic Spark k-means shape;
-    * partials folded on the driver in partition-index order so the float
-    * sums are run-to-run reproducible) — driver work stays bounded at
-    * k×partitions, regardless of corpus size. An emptied cell keeps its previous centroid (magnitude
-    * is irrelevant under cosine). At 100 TB unbalanced inverted lists
-    * wreck probe cost; training is what bounds the biggest list. */
-  /** training is deterministic (seeded init, partition-index-ordered
-    * folds), so the quantizer is memoized per (application, sfDir, iters)
-    * the way a real system trains once and ships the centroids — the
-    * trained/q8/indexed variants and repeated bench passes all reuse one
-    * training run per JVM instead of re-paying 4 distributed passes. */
-  private[graft] def trainIvfCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String, iters: Int = 4): Array[(Long, Array[Double])] = {
-    import s.implicits._
-    graft.util.Probes.memo(s, d, s"ivf_centroids_$iters")(trainIvfVecs(
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])],
-      ivfSeedCentroids(s, d).map(_._2), iters))
-  }
-
-  private[graft] def trainIvfVecs(
-      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      seed: Array[Array[Double]], iters: Int): Array[(Long, Array[Double])] = {
-    val s = rows.sparkSession
-    var cent: Array[Array[Double]] = seed
+  /** ONE Lloyd's loop for every quantizer the ANN family trains. Each
+    * round is ONE distributed pass: broadcast the centroids, assign
+    * every vector, and accumulate per-cell partials per partition (k×dim
+    * doubles + k longs — the classic Spark k-means shape, so driver work
+    * stays bounded at k×partitions regardless of corpus size). The
+    * partials are collected WITH their partition index and folded on the
+    * driver in index order: double addition is not associative, and
+    * treeAggregate's reduce merges partials in task-completion order —
+    * run-to-run jitter in centroid low bits can flip a near-tied cell
+    * assignment. An emptied cell keeps its previous centroid.
+    *
+    * `spherical` picks one of the two variants:
+    *  - spherical k-means: argmax cosine (strict `>`), sums of UNIT
+    *    vectors, and the sum itself as the new centroid (magnitude is
+    *    irrelevant under cosine);
+    *  - L2 k-means: argmin L2 ([[nearestL2]], strict `<`), raw vectors,
+    *    and the mean.
+    * Both break ties to the lowest index. AnnKernelSpec pins every
+    * coordinate against a textbook loop. */
+  private def lloyd(rows: org.apache.spark.rdd.RDD[Array[Double]],
+      seed: Array[Array[Double]], iters: Int,
+      spherical: Boolean): Array[Array[Double]] = {
+    var cent = seed
     val k = cent.length
     val dim = cent(0).length
     var it = 0
     while (it < iters) {
-      val bc = s.sparkContext.broadcast(cent)
-      // per-partition partials collected WITH their partition index and
-      // folded on the driver in index order: double addition is not
-      // associative, and treeAggregate's reduce merges partials in
-      // task-completion order — run-to-run jitter in centroid low bits
-      // can flip a near-tied cell assignment. Partials are k×dim doubles
-      // per partition (a few KB each), so the collect is bounded by
-      // partition count, not data.
-      val partials = rows.rdd.mapPartitionsWithIndex { (idx, part) =>
+      val bc = rows.sparkContext.broadcast(cent)
+      val partials = rows.mapPartitionsWithIndex { (idx, part) =>
         val c = bc.value
-        val acc = Array.fill(c.length)(new Array[Double](dim))
-        val cnt = new Array[Long](c.length)
-        part.foreach { case (_, v) =>
-          var best = 0; var bs = -2.0; var i = 0
-          while (i < c.length) {
-            val sim = cosArr(v, c(i))
-            if (sim > bs) { bs = sim; best = i }
-            i += 1
-          }
-          val n = math.sqrt(dotArr(v, v))
+        val acc = Array.fill(k)(new Array[Double](dim))
+        val cnt = new Array[Long](k)
+        part.foreach { v =>
+          val best = if (spherical) nearestCos(v, c) else nearestL2(v, c)
+          // x / 1.0 == x exactly, so the L2 sums see the raw vector
+          val n = if (spherical) math.sqrt(dotArr(v, v)) else 1.0
           var j = 0
           while (j < dim) { acc(best)(j) += v(j) / n; j += 1 }
           cnt(best) += 1
@@ -1844,12 +1798,100 @@ object Llm {
         }
       }
       cent = Array.tabulate(k) { i =>
-        if (counts(i) == 0L) cent(i) else sums(i)
+        if (counts(i) == 0L) cent(i)
+        else if (spherical) sums(i)
+        else sums(i).map(_ / counts(i))
       }
       it += 1
     }
-    cent.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    cent
   }
+
+  /** Lloyd's spherical argmax: the first index of the highest cosine
+    * (strict `>`, so a tie keeps the lowest index). */
+  private def nearestCos(v: Array[Double],
+      cents: Array[Array[Double]]): Int = {
+    var best = 0; var bs = -2.0; var i = 0
+    while (i < cents.length) {
+      val sim = cosArr(v, cents(i))
+      if (sim > bs) { bs = sim; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** the nearest code under L2: the first index of the smallest squared
+    * distance (strict `<`, so a tie keeps the lowest index). */
+  private[graft] def nearestL2(v: Array[Double],
+      cents: Array[Array[Double]]): Int = {
+    var best = 0; var bd = Double.MaxValue; var i = 0
+    while (i < cents.length) {
+      val dd = l2sqArr(v, cents(i))
+      if (dd < bd) { bd = dd; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** IVF-style approximate nearest neighbors — the scale path next to the
+    * brute-force baseline (llm_knn): a coarse quantizer of 16 deterministic
+    * centroids (the embeddings of vec_id 0..15 — no iterative training, so
+    * fully reproducible), every vector assigned to its nearest centroid
+    * (one broadcast + kernel pass), queries probe their 4 nearest cells and
+    * exact-rerank only those inverted lists. At 100 TB the assignment is
+    * one map pass and each probe touches nprobe/ncells of the data.
+    * Shared by the untrained, Lloyd's-trained, and quantized-store
+    * variants. Engine-specific traversal → no SQL oracle; the test suite
+    * measures recall against the brute-force baseline (bounded on these
+    * isotropic fixtures — noise is ANN's worst case, documented in
+    * BASELINE.md). */
+  private[graft] def ivfSearch(s: org.apache.spark.sql.SparkSession,
+      d: String, centroids: Array[(Long, Array[Double])]): DataFrame =
+    ivfSearchVecs(vecsOf(s, d), centroids)
+
+  private[graft] def ivfSearchVecs(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      centroids: Array[(Long, Array[Double])]): DataFrame =
+    top5PerQuery(probeScores(cellsOf(rows, centroids),
+      probedQueries(rows, centroids)))
+
+  /** the seed-centroid convention in ONE place (vec_id 0..15, sorted):
+    * the untrained, trained-init, and quantized-store variants must all
+    * derive their quantizer from the same rule or they silently diverge. */
+  private[graft] def seedCentroidsVecs(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])])
+      : Array[(Long, Array[Double])] =
+    // Column filter, not a closure (r17, guide §6): pushes vec_id < 16
+    // into the parquet scan instead of deserializing the whole corpus
+    // per quantizer fetch (shared by the seed/trained/q8 variants).
+    rows.filter(col(rows.columns(0)) < 16).collect().sortBy(_._1)
+
+  /** deterministic untrained quantizer: the embeddings of vec_id 0..15. */
+  private[graft] def ivfSeedCentroids(s: org.apache.spark.sql.SparkSession,
+      d: String): Array[(Long, Array[Double])] =
+    seedCentroidsVecs(vecsOf(s, d))
+
+  val llm_ann_ivf: Q = (s, d) => ivfSearch(s, d, ivfSeedCentroids(s, d))
+
+  /** spherical k-means training for the coarse quantizer: [[lloyd]]
+    * iterations from the deterministic vec_id 0..15 init. At 100 TB
+    * unbalanced inverted lists wreck probe cost; training is what bounds
+    * the biggest list. Training is deterministic (seeded init,
+    * partition-index-ordered folds), so the quantizer is memoized per
+    * (application, sfDir, iters) the way a real system trains once and
+    * ships the centroids — the trained/q8/indexed variants and repeated
+    * bench passes all reuse one training run per JVM instead of
+    * re-paying 4 distributed passes. */
+  private[graft] def trainIvfCentroids(s: org.apache.spark.sql.SparkSession,
+      d: String, iters: Int = 4): Array[(Long, Array[Double])] =
+    graft.util.Probes.memo(s, d, s"ivf_centroids_$iters")(trainIvfVecs(
+      vecsOf(s, d), ivfSeedCentroids(s, d).map(_._2), iters))
+
+  private[graft] def trainIvfVecs(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      seed: Array[Array[Double]], iters: Int): Array[(Long, Array[Double])] =
+    lloyd(rows.rdd.map(_._2), seed, iters, spherical = true)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
 
   /** the 16 trained centroid vectors (k × dim doubles, the entire
     * engine-specific output of Lloyd's) dumped for the oracle: given the
@@ -1887,17 +1929,11 @@ object Llm {
     * scan touches 4 of 16 directories — at 100 TB that ratio, not the
     * corpus size, is the probe's IO cost. */
   private[graft] def ivfIndexDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    import s.implicits._
+      d: String): String =
     Sources.builtDir(s, d, "ivf_index") { dir =>
-      val bc = s.sparkContext.broadcast(trainIvfCentroids(s, d))
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])]
-        .map { case (id, v) => (nearestCellOf(bc.value, v), id, v) }
-        .toDF("cell", "vec_id", "emb")
+      assignCells(vecsOf(s, d), trainIvfCentroids(s, d))
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
     }
-  }
 
   /** the probe read — separated so the plan test can assert partition
     * pruning on exactly the DataFrame the query executes. */
@@ -1906,9 +1942,7 @@ object Llm {
     import s.implicits._
     val dir = ivfIndexDir(s, d)
     val cent = trainIvfCentroids(s, d)
-    val qv = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
-      .as[(Long, Array[Double])].head()._2
+    val qv = queryVec0(s, d)
     val probes = probeCellsOf(cent, qv)
     val bcQ = s.sparkContext.broadcast(qv)
     s.read.parquet(dir)
@@ -1939,12 +1973,9 @@ object Llm {
     * are the existing corpus the quantizer was trained on, the odd ones
     * arrive later as a new embedding batch. */
   private[graft] def ivfIncrRows(s: org.apache.spark.sql.SparkSession,
-      d: String, parity: Int) = {
-    import s.implicits._
-    embDouble(s, d).select(col("vec_id"), col("emb"))
+      d: String, parity: Int) =
+    vecsOf(s, d)
       .where(col("vec_id") % 2 === parity)  // column filter (r17, guide §6)
-      .as[(Long, Array[Double])]
-  }
 
   /** the incremental index's coarse quantizer: Lloyd's-trained on the
     * BASE (even-id) corpus only and then frozen — new batches are
@@ -1962,16 +1993,6 @@ object Llm {
         base.filter(col("vec_id") < 32)  // pushed filter (r17, guide §6)
           .collect().sortBy(_._1).map(_._2), 4)
     }
-
-  private def assignCells(
-      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])]): DataFrame = {
-    val s = rows.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(centroids)
-    rows.map { case (id, v) => (nearestCellOf(bc.value, v), id, v) }
-      .toDF("cell", "vec_id", "emb")
-  }
 
   /** encode one batch with the FROZEN centroids and append it into the
     * cell-partitioned index at `dir` — the foreachBatch ingest kernel.
@@ -2029,25 +2050,12 @@ object Llm {
   private[graft] def ivfIncrProbeDir(s: org.apache.spark.sql.SparkSession,
       d: String, dir: String): DataFrame = {
     import s.implicits._
-    val cent = trainIvfIncrCentroids(s, d)
-    val queries = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .where(col("vec_id") < 20)  // pushed filter (r17, guide §6)
-      .as[(Long, Array[Double])]
-      .collect().sortBy(_._1).map { case (qid, qv) =>
-        (qid, qv, probeCellsOf(cent, qv).toSet)
-      }
+    val queries = probedQueries(vecsOf(s, d), trainIvfIncrCentroids(s, d))
     val allCells = queries.flatMap(_._3).toSet.toSeq.sorted
-    val bcQ = s.sparkContext.broadcast(queries)
-    s.read.parquet(dir)
+    probeScores(s.read.parquet(dir)
       .where(col("cell").isin(allCells: _*))
       .select(col("cell").cast("long"), col("vec_id"), col("emb"))
-      .as[(Long, Long, Array[Double])]
-      .flatMap { case (cell, id, v) =>
-        bcQ.value.iterator
-          .filter { case (qid, _, probes) => probes.contains(cell) && qid != id }
-          .map { case (qid, qv, _) => (qid, id, cosArr(qv, v)) }
-      }
-      .toDF("qid", "neighbor_id", "sim_raw")
+      .as[(Long, Long, Array[Double])], queries)
   }
 
   val llm_ann_incr: Q = (s, d) => {
@@ -2055,13 +2063,7 @@ object Llm {
       import s.implicits._
       trainIvfIncrCentroids(s, d).toSeq.toDF("cid", "cv")
     }
-    ivfIncrProbe(s, d)
-      .withColumn("rn", row_number().over(Window.partitionBy("qid")
-        .orderBy(desc("sim_raw"), asc("neighbor_id"))))
-      .where(col("rn") <= 5)
-      .select(col("qid"), col("neighbor_id"), r4(col("sim_raw")).as("sim"),
-        col("rn"))
-      .orderBy("qid", "rn")
+    top5PerQuery(ivfIncrProbe(s, d))
   }
 
   /** the int8 store as a typed Dataset: each vector replaced by its
@@ -2071,8 +2073,7 @@ object Llm {
   private[graft] def dequantizedVecs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.Dataset[(Long, Array[Double])] = {
     import s.implicits._
-    embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])]
+    vecsOf(s, d)
       .map { case (id, v) =>
         val vmin = v.min
         val scale = (v.max - vmin) / QuantLevels
@@ -2112,131 +2113,132 @@ object Llm {
     acc
   }
 
-  /** plain-L2 Lloyd's on one subspace — the [[trainIvfVecs]] discipline
-    * (deterministic vec_id 0..15 seed, partition-index-ordered partial
-    * folds so float sums reproduce run-to-run, empty cell keeps its
-    * centroid) with the two PQ-specific differences: assignment is
-    * argmin L2 (tie → lowest code via strict `<` over ascending codes)
-    * and the update divides by the count (means matter under L2, unlike
-    * the direction-only spherical case). */
+  private[graft] def subArr(x: Array[Double],
+      y: Array[Double]): Array[Double] =
+    Array.tabulate(x.length)(i => x(i) - y(i))
+
+  /** subspace m of a vector: coordinates [m·PqSub, (m+1)·PqSub). */
+  private def subOf(v: Array[Double], m: Int): Array[Double] =
+    v.slice(m * PqSub, (m + 1) * PqSub)
+
+  /** plain-L2 Lloyd's on one subspace (or, at full dim, the IVF-PQ coarse
+    * quantizer): [[lloyd]]'s L2 variant — argmin L2 and means, which
+    * matter under L2, unlike the direction-only spherical case. */
   private[graft] def trainPqSub(
       rows: org.apache.spark.sql.Dataset[Array[Double]],
-      seed: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
-    val s = rows.sparkSession
-    var cent = seed
-    val k = cent.length
-    val dim = cent(0).length
-    var it = 0
-    while (it < iters) {
-      val bc = s.sparkContext.broadcast(cent)
-      val partials = rows.rdd.mapPartitionsWithIndex { (idx, part) =>
-        val c = bc.value
-        val acc = Array.fill(c.length)(new Array[Double](dim))
-        val cnt = new Array[Long](c.length)
-        part.foreach { v =>
-          var best = 0; var bd = Double.MaxValue; var i = 0
-          while (i < c.length) {
-            val dd = l2sqArr(v, c(i))
-            if (dd < bd) { bd = dd; best = i }
-            i += 1
-          }
-          var j = 0
-          while (j < dim) { acc(best)(j) += v(j); j += 1 }
-          cnt(best) += 1
-        }
-        Iterator((idx, acc, cnt))
-      }.collect().sortBy(_._1)
-      bc.destroy()
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      partials.foreach { case (_, acc, cnt) =>
-        var i = 0
-        while (i < k) {
-          var j = 0
-          while (j < dim) { sums(i)(j) += acc(i)(j); j += 1 }
-          counts(i) += cnt(i); i += 1
-        }
-      }
-      cent = Array.tabulate(k) { i =>
-        if (counts(i) == 0L) cent(i)
-        else sums(i).map(_ / counts(i))
-      }
-      it += 1
-    }
-    cent
-  }
+      seed: Array[Array[Double]], iters: Int): Array[Array[Double]] =
+    lloyd(rows.rdd, seed, iters, spherical = false)
 
   /** codebooks[m][code] — one independent L2 Lloyd's run per subspace
-    * over the corpus' m-th 16-dim slices, seeded by vec_id 0..15's
-    * slices; memoized per (application, sfDir). */
-  private[graft] def trainPqCodebooks(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[Array[Array[Double]]] = {
+    * over the rows' m-th slices, seeded by the seeds' slices: the raw
+    * codebooks of [[trainPqCodebooks]] and the residual ones of
+    * [[trainIvfPq]]. */
+  private def trainBooks(
+      rows: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      seeds: Array[(Long, Array[Double])]): Array[Array[Array[Double]]] = {
+    val s = rows.sparkSession
     import s.implicits._
-    graft.util.Probes.memo(s, d, "pq_codebooks") {
-      val vecs = embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])]
-      val seeds = seedCentroidsVecs(vecs)
-      Array.tabulate(PqM) { m =>
-        trainPqSub(
-          vecs.map { case (_, v) => v.slice(m * PqSub, (m + 1) * PqSub) },
-          seeds.map(_._2.slice(m * PqSub, (m + 1) * PqSub)), iters = 4)
-      }
+    Array.tabulate(PqM) { m =>
+      trainPqSub(rows.map { case (_, v) => subOf(v, m) },
+        seeds.map { case (_, v) => subOf(v, m) }, iters = 4)
     }
+  }
+
+  /** the raw-vector codebooks, seeded by vec_id 0..15's slices;
+    * memoized per (application, sfDir). */
+  private[graft] def trainPqCodebooks(s: org.apache.spark.sql.SparkSession,
+      d: String): Array[Array[Array[Double]]] =
+    graft.util.Probes.memo(s, d, "pq_codebooks") {
+      val vecs = vecsOf(s, d)
+      trainBooks(vecs, seedCentroidsVecs(vecs))
+    }
+
+  /** the PQ encoder: per subspace, the [[nearestL2]] codebook entry. */
+  private def pqEncode(v: Array[Double],
+      books: Array[Array[Array[Double]]]): Array[Int] =
+    Array.tabulate(PqM)(m => nearestL2(subOf(v, m), books(m)))
+
+  /** the m×k ADC lookup table: lut(m)(code) = l2²(q's subspace m,
+    * books(m)(code)). */
+  private def queryLut(q: Array[Double],
+      books: Array[Array[Array[Double]]]): Array[Array[Double]] =
+    books.zipWithIndex.map { case (cb, m) =>
+      cb.map(c => l2sqArr(subOf(q, m), c))
+    }
+
+  /** the asymmetric distance of stored codes: the left fold of LUT
+    * entries over m = 0..15 — the association the oracle's `list_sum`
+    * over a `list(... ORDER BY m)` pins. */
+  private def adcOf(lut: Array[Array[Double]], codes: Array[Int]): Double = {
+    var adc = 0.0
+    var m = 0
+    while (m < PqM) { adc += lut(m)(codes(m)); m += 1 }
+    adc
   }
 
   /** codes + ADC in ONE broadcast-codebook map pass — separated so the
     * spec can drive the encoding directly. Emits every non-query
-    * vector's asymmetric distance (the left-fold over subspace LUT
-    * entries, m = 0..15 — the association the oracle pins). */
+    * vector's asymmetric distance. */
   private[graft] def pqAdc(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.Dataset[(Long, Double)] = {
     import s.implicits._
     val books = trainPqCodebooks(s, d)
-    val qv = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
-      .as[(Long, Array[Double])].head()._2
-    val lut: Array[Array[Double]] = books.zipWithIndex.map {
-      case (cb, m) =>
-        cb.map(c => l2sqArr(qv.slice(m * PqSub, (m + 1) * PqSub), c))
-    }
     val bcBooks = s.sparkContext.broadcast(books)
-    val bcLut = s.sparkContext.broadcast(lut)
-    embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])]
+    val bcLut = s.sparkContext.broadcast(queryLut(queryVec0(s, d), books))
+    vecsOf(s, d)
       .filter(_._1 != 0L)
       .map { case (id, v) =>
-        val bks = bcBooks.value
-        var adc = 0.0
-        var m = 0
-        while (m < PqM) {
-          val sub = v.slice(m * PqSub, (m + 1) * PqSub)
-          var best = 0; var bd = Double.MaxValue; var c = 0
-          while (c < PqK) {
-            val dd = l2sqArr(sub, bks(m)(c))
-            if (dd < bd) { bd = dd; best = c }
-            c += 1
-          }
-          adc += bcLut.value(m)(best)
-          m += 1
-        }
-        (id, adc)
+        (id, adcOf(bcLut.value, pqEncode(v, bcBooks.value)))
       }
   }
 
-  private[graft] def nearestL2(v: Array[Double],
-      cents: Array[Array[Double]]): Int = {
-    var best = 0; var bd = Double.MaxValue; var i = 0
-    while (i < cents.length) {
-      val dd = l2sqArr(v, cents(i))
-      if (dd < bd) { bd = dd; best = i }
-      i += 1
-    }
-    best
+  /** the exact tail every PQ-family query shares: the top-50 ADC
+    * shortlist (TakeOrderedAndProject) fetched at full precision — a
+    * broadcast join of 50 ids back to the vector store, a bounded fetch,
+    * not a second corpus scan shape — exact squared L2 to `qv` as a HOF
+    * fold, and the top 10 numbered. Shortlist columns besides
+    * neighbor_id and adc_raw (IVF-PQ's cell) ride through. */
+  private def rerankL2(s: org.apache.spark.sql.SparkSession, d: String,
+      qv: Array[Double], shortlist: DataFrame): DataFrame = {
+    val carried = shortlist.columns
+      .filterNot(Set("neighbor_id", "adc_raw")).map(col).toSeq
+    shortlist
+      .orderBy(asc("adc_raw"), asc("neighbor_id"))
+      .limit(50)
+      .join(embDouble(s, d)
+        .select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
+      .withColumn("dist_raw",
+        aggregate(zip_with(col("emb"), lit(qv), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, x) => acc + x))
+      .orderBy(asc("dist_raw"), asc("neighbor_id"))
+      .limit(10)
+      .withColumn("rn", row_number().over(
+        Window.orderBy(asc("dist_raw"), asc("neighbor_id"))))
+      .select((col("neighbor_id") +: carried) ++ Seq(
+        r4(col("adc_raw")).as("adc"), r4(col("dist_raw")).as("dist"),
+        col("rn")): _*)
+      .orderBy("rn")
   }
 
-  private[graft] def subArr(x: Array[Double],
-      y: Array[Double]): Array[Double] =
-    Array.tabulate(x.length)(i => x(i) - y(i))
+  /** a codebook set as the oracle's (m, code, cv) table — pqcent and
+    * ivfpq_rbooks. */
+  private def dumpBooks(s: org.apache.spark.sql.SparkSession, d: String,
+      name: String, books: Array[Array[Array[Double]]]): Unit =
+    dumpForOracle(s, d, name) {
+      import s.implicits._
+      books.zipWithIndex.flatMap { case (cb, m) =>
+        cb.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
+      }.toSeq.toDF("m", "code", "cv")
+    }
+
+  /** nprobe for [[llm_ann_ivfpq]]: 6 of the 16 coarse cells. Raised
+    * from 4 (r11 directive #6) after measuring recall@10 on the
+    * isotropic fixtures — 64-dim isotropic noise is the coarse
+    * quantizer's worst case (true neighbors smear across cells), so
+    * probe share is the recall lever; a real clustered corpus reaches
+    * the same recall at far lower nprobe. The oracle SQL interpolates
+    * this constant, so the two engines cannot drift. */
+  private[graft] val IvfPqProbes = 6
 
   /** IVF-PQ model: a FULL-dim L2 coarse quantizer (16 cells, the same
     * trainPqSub Lloyd's at dim 64) plus per-subspace codebooks trained
@@ -2247,21 +2249,11 @@ object Llm {
     * partition-ordered folds); memoized per (application, sfDir). At
     * 100 TB the residual relation would persist alongside the codes;
     * here each subspace pass recomputes it — bounded, fixture-sized. */
-  /** nprobe for [[llm_ann_ivfpq]]: 6 of the 16 coarse cells. Raised
-    * from 4 (r11 directive #6) after measuring recall@10 on the
-    * isotropic fixtures — 64-dim isotropic noise is the coarse
-    * quantizer's worst case (true neighbors smear across cells), so
-    * probe share is the recall lever; a real clustered corpus reaches
-    * the same recall at far lower nprobe. The oracle SQL interpolates
-    * this constant, so the two engines cannot drift. */
-  private[graft] val IvfPqProbes = 6
-
   private[graft] def trainIvfPq(s: org.apache.spark.sql.SparkSession,
       d: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     import s.implicits._
     graft.util.Probes.memo(s, d, "ivfpq_model") {
-      val vecs = embDouble(s, d).select(col("vec_id"), col("emb"))
-        .as[(Long, Array[Double])]
+      val vecs = vecsOf(s, d)
       val coarse = trainPqSub(vecs.map(_._2),
         seedCentroidsVecs(vecs).map(_._2), iters = 4)
       val bcC = s.sparkContext.broadcast(coarse)
@@ -2272,30 +2264,36 @@ object Llm {
       }.persist()
       try {
         val rseeds = resid.filter(_._1 < 16).collect().sortBy(_._1)
-        val rbooks = Array.tabulate(PqM) { m =>
-          trainPqSub(
-            resid.map(_._2.slice(m * PqSub, (m + 1) * PqSub)),
-            rseeds.map(_._2.slice(m * PqSub, (m + 1) * PqSub)),
-            iters = 4)
-        }
-        (coarse, rbooks)
+        (coarse, trainBooks(resid, rseeds))
       } finally resid.unpersist()
     }
   }
 
-  /** IVF-PQ — the two techniques COMPOSED the way a production vector
-    * index ships them (the faiss `IVFx,PQy` default): the coarse
-    * quantizer prunes the search to 4 probed cells (the IVF story:
-    * candidates ∝ probed share, not corpus), and within the probed
-    * cells the scan reads 16-byte RESIDUAL codes, scored against a
-    * per-probed-cell query LUT built from q − cc(cell) (the PQ story:
-    * m table adds per candidate, no floats). Top-50 ADC shortlist →
-    * exact full-precision rerank → top-10 with the winning cell
-    * visible. Spec asserts the residual-ADC ≡
-    * l2²(q, cc + reconstruct(codes)) identity, probe containment, and
-    * the recall floor at both SFs; full oracle via the two dumped
-    * codebook levels, the per-cell LUT and the m-ordered ADC fold
-    * replayed as SQL exactly like [[llm_ann_pq]]'s. */
+  /** [[trainIvfPq]] with both codebook levels dumped for the oracle —
+    * shared by the in-flight and indexed IVF-PQ variants. */
+  private def ivfPqModelDumped(s: org.apache.spark.sql.SparkSession,
+      d: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val model = trainIvfPq(s, d)
+    dumpForOracle(s, d, "ivfpq_coarse") {
+      import s.implicits._
+      model._1.zipWithIndex.map { case (cv, c) => (c, cv.toSeq) }
+        .toSeq.toDF("cell", "cv")
+    }
+    dumpBooks(s, d, "ivfpq_rbooks", model._2)
+    model
+  }
+
+  /** the query's [[IvfPqProbes]] nearest coarse cells (L2, tie → lowest
+    * cell), in probe order, each with its [[queryLut]] over the query
+    * residual q − cc(cell). */
+  private def ivfPqProbeLuts(qv: Array[Double], coarse: Array[Array[Double]],
+      rbooks: Array[Array[Array[Double]]])
+      : Array[(Int, Array[Array[Double]])] =
+    coarse.zipWithIndex
+      .map { case (cv, c) => (l2sqArr(qv, cv), c) }
+      .sortBy { case (dd, c) => (dd, c) }.take(IvfPqProbes)
+      .map { case (_, c) => c -> queryLut(subArr(qv, coarse(c)), rbooks) }
+
   /** ANN QUALITY EVAL as one oracle row (r13 verdict stretch #8):
     * recall@5 of every multi-query IVF family member (seed-quantizer,
     * Lloyd's-trained, int8-store) against the EXACT brute-force top-5
@@ -2329,8 +2327,7 @@ object Llm {
       e.select(col("vec_id").as("neighbor_id"), col("emb"))
         .crossJoin(broadcast(q))
         .where(col("neighbor_id") =!= col("qid"))
-        .withColumn("sim_raw", dot(col("emb"), col("qv")) /
-          (norm(col("emb")) * norm(col("qv"))))
+        .withColumn("sim_raw", cosCol(col("emb"), col("qv")))
         .withColumn("rn", row_number().over(Window.partitionBy("qid")
           .orderBy(desc("sim_raw"), asc("neighbor_id"))))
         .where(col("rn") <= 5)
@@ -2352,74 +2349,38 @@ object Llm {
       .orderBy("variant")
   }
 
+  /** IVF-PQ — the two techniques COMPOSED the way a production vector
+    * index ships them (the faiss `IVFx,PQy` default): the coarse
+    * quantizer prunes the search to the [[IvfPqProbes]] probed cells
+    * (the IVF story: candidates ∝ probed share, not corpus), and within
+    * the probed cells the scan reads 16-byte RESIDUAL codes, scored
+    * against a per-probed-cell query LUT built from q − cc(cell) (the PQ
+    * story: m table adds per candidate, no floats). Only vectors in
+    * probed cells are encoded. Top-50 ADC shortlist → exact
+    * full-precision rerank → top-10 with the winning cell visible. Spec
+    * asserts the residual-ADC ≡ l2²(q, cc + reconstruct(codes))
+    * identity, probe containment, and the recall floor at both SFs;
+    * full oracle via the two dumped codebook levels, the per-cell LUT
+    * and the m-ordered ADC fold replayed as SQL exactly like
+    * [[llm_ann_pq]]'s. */
   val llm_ann_ivfpq: Q = (s, d) => {
     import s.implicits._
-    val (coarse, rbooks) = trainIvfPq(s, d)
-    dumpForOracle(s, d, "ivfpq_coarse") {
-      coarse.zipWithIndex.map { case (cv, c) => (c, cv.toSeq) }
-        .toSeq.toDF("cell", "cv")
-    }
-    dumpForOracle(s, d, "ivfpq_rbooks") {
-      rbooks.zipWithIndex.flatMap { case (cb, m) =>
-        cb.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
-      }.toSeq.toDF("m", "code", "cv")
-    }
-    val qv = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
-      .as[(Long, Array[Double])].head()._2
-    val probes: Array[Int] = coarse.zipWithIndex
-      .map { case (cv, c) => (l2sqArr(qv, cv), c) }
-      .sortBy { case (dd, c) => (dd, c) }.take(IvfPqProbes).map(_._2)
-    val luts: Map[Int, Array[Array[Double]]] = probes.map { c =>
-      val qr = subArr(qv, coarse(c))
-      c -> rbooks.zipWithIndex.map { case (cb, m) =>
-        cb.map(rc => l2sqArr(qr.slice(m * PqSub, (m + 1) * PqSub), rc))
-      }
-    }.toMap
+    val (coarse, rbooks) = ivfPqModelDumped(s, d)
+    val qv = queryVec0(s, d)
     val bcC = s.sparkContext.broadcast(coarse)
     val bcR = s.sparkContext.broadcast(rbooks)
-    val bcL = s.sparkContext.broadcast(luts)
-    val shortlist = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .as[(Long, Array[Double])]
+    val bcL = s.sparkContext.broadcast(
+      ivfPqProbeLuts(qv, coarse, rbooks).toMap)
+    rerankL2(s, d, qv, vecsOf(s, d)
       .filter(_._1 != 0L)
       .flatMap { case (id, v) =>
         val cell = nearestL2(v, bcC.value)
-        bcL.value.get(cell) match {
-          case None => Iterator.empty
-          case Some(lut) =>
-            val rv = subArr(v, bcC.value(cell))
-            var adc = 0.0
-            var m = 0
-            while (m < PqM) {
-              val sub = rv.slice(m * PqSub, (m + 1) * PqSub)
-              var best = 0; var bd = Double.MaxValue; var c = 0
-              while (c < PqK) {
-                val dd = l2sqArr(sub, bcR.value(m)(c))
-                if (dd < bd) { bd = dd; best = c }
-                c += 1
-              }
-              adc += lut(m)(best)
-              m += 1
-            }
-            Iterator((id, cell, adc))
+        bcL.value.get(cell).iterator.map { lut =>
+          (id, cell,
+            adcOf(lut, pqEncode(subArr(v, bcC.value(cell)), bcR.value)))
         }
       }
-      .toDF("neighbor_id", "cell", "adc_raw")
-      .orderBy(asc("adc_raw"), asc("neighbor_id"))
-      .limit(50)
-    shortlist
-      .join(embDouble(s, d)
-        .select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
-      .withColumn("dist_raw",
-        aggregate(zip_with(col("emb"), lit(qv), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x))
-      .orderBy(asc("dist_raw"), asc("neighbor_id"))
-      .limit(10)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(asc("dist_raw"), asc("neighbor_id"))))
-      .select(col("neighbor_id"), col("cell"), r4(col("adc_raw")).as("adc"),
-        r4(col("dist_raw")).as("dist"), col("rn"))
-      .orderBy("rn")
+      .toDF("neighbor_id", "cell", "adc_raw"))
   }
 
   // ----- persisted + incremental IVF-PQ index (r13, r12 verdict #2) ---------
@@ -2444,18 +2405,7 @@ object Llm {
     val bcR = s.sparkContext.broadcast(rbooks)
     rows.map { case (id, v) =>
       val cell = nearestL2(v, bcC.value)
-      val rv = subArr(v, bcC.value(cell))
-      val codes = Array.tabulate(PqM) { m =>
-        val sub = rv.slice(m * PqSub, (m + 1) * PqSub)
-        var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < PqK) {
-          val dd = l2sqArr(sub, bcR.value(m)(c))
-          if (dd < bd) { bd = dd; best = c }
-          c += 1
-        }
-        best
-      }
-      (cell, id, codes)
+      (cell, id, pqEncode(subArr(v, bcC.value(cell)), bcR.value))
     }.toDF("cell", "vec_id", "codes")
   }
 
@@ -2471,19 +2421,6 @@ object Llm {
       .as[(Long, Array[Double])], coarse, rbooks)
       .write.mode("append").partitionBy("cell").parquet(dir)
   }
-
-  /** the standard vec_id-0 query vector, memoized per (application,
-    * sfDir): the shortlist probe and the rerank tail both need it, and
-    * re-collecting costs a full embeddings scan per call (review
-    * finding, r13). */
-  private def queryVec0(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[Double] =
-    graft.util.Probes.memo(s, d, "query_vec0") {
-      import s.implicits._
-      embDouble(s, d).select(col("vec_id"), col("emb"))
-        .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
-        .as[(Long, Array[Double])].head()._2
-    }
 
   /** The persisted index: the base (even-id) corpus coded and written
     * once as the cell-partitioned layout, then the odd-id batch coded
@@ -2514,28 +2451,15 @@ object Llm {
     import s.implicits._
     val dir = ivfPqIndexDir(s, d)
     val (coarse, rbooks) = trainIvfPq(s, d)
-    val qv = queryVec0(s, d)
-    val probes: Array[Int] = coarse.zipWithIndex
-      .map { case (cv, c) => (l2sqArr(qv, cv), c) }
-      .sortBy { case (dd, c) => (dd, c) }.take(IvfPqProbes).map(_._2)
-    val luts: Map[Int, Array[Array[Double]]] = probes.map { c =>
-      val qr = subArr(qv, coarse(c))
-      c -> rbooks.zipWithIndex.map { case (cb, m) =>
-        cb.map(rc => l2sqArr(qr.slice(m * PqSub, (m + 1) * PqSub), rc))
-      }
-    }.toMap
-    val bcL = s.sparkContext.broadcast(luts)
+    val luts = ivfPqProbeLuts(queryVec0(s, d), coarse, rbooks)
+    val bcL = s.sparkContext.broadcast(luts.toMap)
     s.read.parquet(dir)
-      .where(col("cell").isin(probes.map(Integer.valueOf): _*) &&
+      .where(col("cell").isin(luts.map(l => Integer.valueOf(l._1)): _*) &&
         col("vec_id") =!= 0L)
       .select(col("cell").cast("int"), col("vec_id"), col("codes"))
       .as[(Int, Long, Array[Int])]
       .map { case (cell, id, codes) =>
-        val lut = bcL.value(cell)
-        var adc = 0.0
-        var m = 0
-        while (m < PqM) { adc += lut(m)(codes(m)); m += 1 }
-        (id, cell, adc)
+        (id, cell, adcOf(bcL.value(cell), codes))
       }
       .toDF("neighbor_id", "cell", "adc_raw")
   }
@@ -2551,33 +2475,8 @@ object Llm {
     * — both the IVF pruning and the PQ compression land on disk, not
     * just in flight. */
   val llm_ann_ivfpq_indexed: Q = (s, d) => {
-    import s.implicits._
-    val (coarse, rbooks) = trainIvfPq(s, d)
-    dumpForOracle(s, d, "ivfpq_coarse") {
-      coarse.zipWithIndex.map { case (cv, c) => (c, cv.toSeq) }
-        .toSeq.toDF("cell", "cv")
-    }
-    dumpForOracle(s, d, "ivfpq_rbooks") {
-      rbooks.zipWithIndex.flatMap { case (cb, m) =>
-        cb.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
-      }.toSeq.toDF("m", "code", "cv")
-    }
-    val qv = queryVec0(s, d)
-    ivfPqIndexShortlist(s, d)
-      .orderBy(asc("adc_raw"), asc("neighbor_id"))
-      .limit(50)
-      .join(embDouble(s, d)
-        .select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
-      .withColumn("dist_raw",
-        aggregate(zip_with(col("emb"), lit(qv), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x))
-      .orderBy(asc("dist_raw"), asc("neighbor_id"))
-      .limit(10)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(asc("dist_raw"), asc("neighbor_id"))))
-      .select(col("neighbor_id"), col("cell"), r4(col("adc_raw")).as("adc"),
-        r4(col("dist_raw")).as("dist"), col("rn"))
-      .orderBy("rn")
+    ivfPqModelDumped(s, d)
+    rerankL2(s, d, queryVec0(s, d), ivfPqIndexShortlist(s, d))
   }
 
   /** Product-quantization ANN (Jégou/Douze/Schmid, public knowledge) —
@@ -2596,41 +2495,15 @@ object Llm {
     * l2²(query, reconstruct(codes)) identity.
     *
     * Full oracle via the dumped codebooks (the trained-IVF pattern):
-    * encode argmin, LUT, the 16-term ADC left-fold (`list_sum` over a
-    * `list(... ORDER BY m)` — list order = loop order), shortlist and
+    * encode argmin, LUT, the 16-term ADC left-fold, shortlist and
     * rerank all replay as SQL. 100 TB shape: training is m bounded
     * driver-folded passes; encode+ADC is ONE map pass with broadcast
-    * codebooks; the shortlist is TakeOrderedAndProject; the rerank
-    * joins 50 ids back to the vector store (a broadcast of the
-    * shortlist — bounded fetch, not a second corpus scan shape). */
+    * codebooks; the shortlist is TakeOrderedAndProject; the rerank is
+    * [[rerankL2]]'s bounded fetch. */
   val llm_ann_pq: Q = (s, d) => {
-    import s.implicits._
-    val books = trainPqCodebooks(s, d)
-    dumpForOracle(s, d, "pqcent") {
-      books.zipWithIndex.flatMap { case (cb, m) =>
-        cb.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
-      }.toSeq.toDF("m", "code", "cv")
-    }
-    val qv = embDouble(s, d).select(col("vec_id"), col("emb"))
-      .where(col("vec_id") === 0L)  // pushed filter (r17, guide §6)
-      .as[(Long, Array[Double])].head()._2
-    val shortlist = pqAdc(s, d)
-      .toDF("neighbor_id", "adc_raw")
-      .orderBy(asc("adc_raw"), asc("neighbor_id"))
-      .limit(50)
-    shortlist
-      .join(embDouble(s, d)
-        .select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
-      .withColumn("dist_raw",
-        aggregate(zip_with(col("emb"), lit(qv), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x))
-      .orderBy(asc("dist_raw"), asc("neighbor_id"))
-      .limit(10)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(asc("dist_raw"), asc("neighbor_id"))))
-      .select(col("neighbor_id"), r4(col("adc_raw")).as("adc"),
-        r4(col("dist_raw")).as("dist"), col("rn"))
-      .orderBy("rn")
+    dumpBooks(s, d, "pqcent", trainPqCodebooks(s, d))
+    rerankL2(s, d, queryVec0(s, d),
+      pqAdc(s, d).toDF("neighbor_id", "adc_raw"))
   }
 
   // ----- text analysis -----------------------------------------------------

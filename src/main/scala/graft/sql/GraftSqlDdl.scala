@@ -529,9 +529,7 @@ case class GraftAlterAddColumnsCommand(parts: Seq[String],
     cols: Seq[(String, org.apache.spark.sql.types.DataType)])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(
-        s"graft table '${parts.mkString(".")}' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     GraftTable.alterAddColumns(ref.root, cols)
     Seq.empty
   }
@@ -550,8 +548,7 @@ case class GraftAlterRenameColumnCommand(parts: Seq[String],
     oldName: String, newName: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val name = parts.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$name' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     GraftTable.alterRenameColumn(ref.root, oldName, newName)
     def sub(c: String) = if (c.equalsIgnoreCase(oldName)) newName else c
     val ref2 = ref.copy(keyCol = sub(ref.keyCol),
@@ -583,8 +580,7 @@ case class GraftAlterDropColumnsCommand(parts: Seq[String],
     names: Seq[String], ifExists: Boolean) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val name = parts.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$name' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     names.find(_.equalsIgnoreCase(ref.keyCol)).foreach(k =>
       throw new IllegalArgumentException(
         s"cannot DROP COLUMN '$k' of '$name': it is the table's key " +
@@ -705,9 +701,7 @@ case class GraftReplaceTableCommand(parts: Seq[String],
 case class GraftTruncateTableCommand(parts: Seq[String])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val name = parts.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$name' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     GraftTable.truncate(ref.root)
     Seq.empty
   }
@@ -722,9 +716,7 @@ case class GraftTruncateTableCommand(parts: Seq[String])
 case class GraftAnalyzeCommand(parts: Seq[String], cols: Seq[String],
     allColumns: Boolean) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val name = parts.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$name' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     val colNames =
       if (!allColumns) cols
       else org.apache.spark.sql.types.DataType.fromJson(
@@ -750,9 +742,7 @@ case class GraftAlterWidenTypeCommand(parts: Seq[String],
     cols: Seq[(String, org.apache.spark.sql.types.DataType)])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val name = parts.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$name' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     cols.foreach { case (c, dt) =>
       GraftTable.alterWidenColumnType(ref.root, c, dt)
     }
@@ -768,9 +758,7 @@ case class GraftAlterWidenTypeCommand(parts: Seq[String],
 case class GraftAddCheckCommand(parts: Seq[String],
     check: (String, String)) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(
-        s"graft table '${parts.mkString(".")}' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     GraftTable.addCheck(spark, ref.root, check._1, check._2)
     Seq.empty
   }
@@ -780,9 +768,7 @@ case class GraftAddCheckCommand(parts: Seq[String],
 case class GraftDropCheckCommand(parts: Seq[String], name: String,
     ifExists: Boolean) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(
-        s"graft table '${parts.mkString(".")}' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     GraftTable.dropCheck(ref.root, name, ifExists)
     Seq.empty
   }
@@ -800,8 +786,7 @@ case class GraftRenameTableCommand(parts: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     val oldKey = parts.mkString(".")
     val newKey = newName.mkString(".")
-    val ref = GraftSqlTables.lookup(parts).getOrElse(
-      throw new NoSuchElementException(s"graft table '$oldKey' not found"))
+    val ref = GraftSqlMaint.refOf(parts)
     // same one-namespace guard as CREATE, under the same shared lock so
     // the view check and the table claim are atomic vs a concurrent
     // CREATE VIEW of the target name: renaming onto a VIEW name would

@@ -617,16 +617,18 @@ private[sql] object GraftDml {
     }), s"$what must not assign the table key '$key' (graft tables are " +
       "key-addressed; changing identity is DELETE + INSERT)")
 
+  /** `a AND b AND c` → its conjuncts, left to right. */
+  def conjuncts(e: Expression): Seq[Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+      conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
+
   /** The ON condition must pin target.key = <source-side expr> in its
     * conjuncts — the keyed-upsert shape GraftTable.merge addresses
     * files by. */
   def hasKeyEquality(cond: Expression, keyAttr: Attribute,
       sourceOut: Seq[Attribute]): Boolean = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     val srcIds = sourceOut.map(_.exprId).toSet
     conjuncts(cond).exists {
       case EqualTo(l: AttributeReference, r)
@@ -1006,12 +1008,7 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     // `SET *` under `ON t.key = s.key` passes while any statement that
     // would actually re-key a matched row fails loudly
     def keyIdentityByOn(value: Expression): Boolean = {
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-          conjuncts(l) ++ conjuncts(r)
-        case x => Seq(x)
-      }
-      conjuncts(cond).exists {
+      GraftDml.conjuncts(cond).exists {
         case EqualTo(l: AttributeReference, r)
             if l.exprId == keyAttr.exprId => r.semanticEquals(value)
         case EqualTo(l, r: AttributeReference)

@@ -212,10 +212,6 @@ object GraftSqlMaint {
     require(spec.nonEmpty,
       s"OPTIMIZE $name WHERE needs a PARTITIONED table (none declared " +
         s"at $root); plain OPTIMIZE rewrites the full table")
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     def loud(c: Expression): Nothing = throw new IllegalArgumentException(
       s"OPTIMIZE $name WHERE: '${c.sql}' is not an AND-ed literal " +
         "comparison on a partition column or transform source (" +
@@ -317,7 +313,7 @@ object GraftSqlMaint {
         }
       }
     }
-    val ms = conjuncts(
+    val ms = GraftDml.conjuncts(
       spark.sessionState.sqlParser.parseExpression(whereText))
       .map(matcherOf)
     f => ms.forall(_(f))
@@ -777,13 +773,7 @@ case class GraftInsertBranchCommand(parts: Seq[String], branch: String,
       .select(tgt.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
       .persist()
     try {
-      val dup = aligned.groupBy(col(ref.keyCol)).count()
-        .where(col("count") > 1).limit(1).count()
-      require(dup == 0,
-        s"INSERT batch carries duplicate '${ref.keyCol}' keys")
-      val nulls = aligned.where(col(ref.keyCol).isNull).limit(1).count()
-      require(nulls == 0,
-        s"INSERT batch carries a NULL '${ref.keyCol}' key")
+      GraftDml.requireKeyDiscipline(ref, aligned, "INSERT")
       val clash = aligned.select(col(ref.keyCol))
         .join(GraftTable.readBranch(spark, ref.root, branch)
           .select(col(ref.keyCol)), ref.keyCol, "left_semi")
