@@ -1,7 +1,8 @@
 package graft.sql
 
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption,
-  StandardOpenOption}
+import java.nio.file.{Files, Path => JPath, Paths}
+
+import graft.table.GraftTable
 
 /** Durable, file-backed layer under the [[GraftSqlTables]] /
   * [[GraftSqlViews]] registries (r15 verdict missing #1): without it
@@ -20,11 +21,13 @@ import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption,
   * process-global pre-r16 behavior, so nothing changes for DSL-first
   * users who never configure a catalog.
   *
-  * Publish discipline mirrors the manifest kernel
-  * ([[graft.table.GraftTable]] tryCommitAt): stage the full payload to
-  * a tmp file, then either hard-link into place (create-if-absent —
-  * the CREATE claim: two processes racing one name get exactly one
-  * success) or ATOMIC_MOVE with replace (last-wins re-register).
+  * Publishes go through the table format's commit kernel
+  * ([[graft.table.GraftTable.publishIfAbsent]] /
+  * [[graft.table.GraftTable.publishReplacing]]): the full payload is
+  * staged to a tmp file, then either hard-linked into place
+  * (create-if-absent — the CREATE claim: two processes racing one name
+  * get exactly one success) or atomically renamed over the entry
+  * (last-wins re-register).
   * Readers therefore never observe a torn entry. Deletes are plain
   * unlinks. The client cache means a process that has resolved a name
   * keeps its binding until its own DDL changes it — the standard
@@ -56,36 +59,20 @@ private[sql] object GraftCatalog {
     dir.resolve(kind).resolve(s"$key.entry")
   }
 
-  private def staged(dir: JPath, kind: String, payload: String): JPath = {
-    val d = dir.resolve(kind)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".tmp-${java.util.UUID.randomUUID().toString}")
-    Files.write(tmp, payload.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    tmp
-  }
-
   /** Last-wins publish (register / rebind): atomic replace, readers see
     * the old or the new payload, never a mix. */
   private[sql] def writeThrough(kind: String, key: String,
       payload: String): Unit =
-    dirOpt.foreach { dir =>
-      val tmp = staged(dir, kind, payload)
-      Files.move(tmp, fileOf(dir, kind, key),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    dirOpt.foreach(dir => GraftTable.publishReplacing(fileOf(dir, kind, key),
+      payload.getBytes("UTF-8")))
 
   /** Create-if-absent publish (the CREATE/CTAS claim). True when the
     * claim landed — or when no catalog is configured, in which case the
     * caller's in-process claim is the whole story. */
   private[sql] def claim(kind: String, key: String,
       payload: String): Boolean =
-    dirOpt.forall { dir =>
-      val tmp = staged(dir, kind, payload)
-      try {
-        try { Files.createLink(fileOf(dir, kind, key), tmp); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } finally Files.delete(tmp)
-    }
+    dirOpt.forall(dir => GraftTable.publishIfAbsent(fileOf(dir, kind, key),
+      payload.getBytes("UTF-8")))
 
   /** True when an on-disk entry existed and is now gone. */
   private[sql] def delete(kind: String, key: String): Boolean =

@@ -719,11 +719,8 @@ case class GraftAnalyzeCommand(parts: Seq[String], cols: Seq[String],
     val ref = GraftSqlMaint.refOf(parts)
     val colNames =
       if (!allColumns) cols
-      else org.apache.spark.sql.types.DataType.fromJson(
-          GraftTable.manifest(ref.root,
-            GraftTable.latestSnapshot(ref.root)).schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fieldNames.toSeq
+      else GraftTable.schemaOf(GraftTable.manifest(ref.root,
+          GraftTable.latestSnapshot(ref.root))).fieldNames.toSeq
     GraftTable.analyzeStats(spark, ref.root, colNames)
     Seq.empty
   }

@@ -460,9 +460,7 @@ case class GraftDescribeTableCommand(parts: Seq[String])
     val ref = GraftSqlMaint.refOf(parts)
     val v = GraftTable.latestSnapshot(ref.root)
     require(v > 0, s"DESCRIBE of non-existent table at ${ref.root}")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(GraftTable.manifest(ref.root, v).schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = GraftTable.schemaOf(GraftTable.manifest(ref.root, v))
     schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       Row(i + 1, f.name, f.dataType.simpleString, f.nullable)
     }
@@ -566,9 +564,7 @@ case class GraftShowCreateCommand(parts: Seq[String])
         require(v > 0,
           s"SHOW CREATE TABLE of non-existent table at ${ref.root}")
         val m = GraftTable.manifest(ref.root, v)
-        val schema = org.apache.spark.sql.types.DataType
-          .fromJson(m.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val schema = GraftTable.schemaOf(m)
         // CHECK constraints ride in the emitted statement (name-sorted
         // for determinism) — the round-trip must reproduce enforcement,
         // not just the shape

@@ -390,39 +390,129 @@ object GraftTable {
     org.json4s.jackson.Serialization.read[Manifest](
       new String(Files.readAllBytes(manifestPath(root, v)), "UTF-8"))
 
-  /** Atomically publish `m` as snapshot `m.snapshot`. Returns true if this
-    * writer won, false if a concurrent commit already took the id. The
-    * staged temp file carries the full content BEFORE the link, so a
-    * reader can never observe a partially-written manifest. */
-  private def tryCommit(root: String, m0: Manifest): Boolean = {
-    // stamps are strictly increasing along the parent chain: two commits
-    // inside one wall-clock millisecond would otherwise tie, and
-    // timestamp AS OF (snapshotAsOf keeps the MAX eligible id) would
-    // resolve a probe of the earlier commit's stamp to the later one
-    val parentStamp =
-      if (m0.parent >= 1 && Files.exists(manifestPath(root, m0.parent)))
-        manifest(root, m0.parent).committedAtMs.getOrElse(0L)
-      else 0L
-    tryCommitAt(root, m0, manifestPath(root, m0.snapshot), parentStamp)
+  // ---- the commit kernel ----
+  //
+  // Every manifest, tag, branch-marker and catalog-entry publish stages
+  // its full content in the target's directory and then either links it
+  // into place (create-if-absent) or renames it over the target (last
+  // wins), so a reader never sees a partial file. Every table verb
+  // commits through one of two calls: the rebase loop
+  // ([[commitRebasing]]) when its file list does not depend on the
+  // parent, or one attempt ([[commitOnce]]) when it does.
+
+  /** Stage `bytes` as a `.tmp-<uuid>` file in `target`'s directory;
+    * [[removeOrphans]] sweeps one a crash left behind. */
+  private def stage(target: JPath, bytes: Array[Byte]): JPath = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+    tmp
   }
 
-  /** The one atomic-publish kernel: stamp monotone past the parent,
-    * stage the full content, hard-link into place (create-if-absent).
-    * Main commits and branch commits differ only in the target path and
-    * where the parent stamp is read from. */
-  private def tryCommitAt(root: String, m0: Manifest, target: JPath,
-      parentStamp: Long): Boolean = {
-    val m = m0.copy(committedAtMs =
-      Some(math.max(System.currentTimeMillis(), parentStamp + 1)))
-    Files.createDirectories(metaDir(root))
-    val tmp = metaDir(root).resolve(
-      s".tmp-${java.util.UUID.randomUUID().toString}")
-    Files.write(tmp, org.json4s.jackson.Serialization.write(m).getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    try {
-      try { Files.createLink(target, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { Files.delete(tmp) }
+  /** Create-if-absent publish: hard-link the staged `bytes` to `target`
+    * (POSIX link(2) fails when the name exists; a rename would silently
+    * overwrite the winner). True if this writer won. */
+  private[graft] def publishIfAbsent(target: JPath,
+      bytes: Array[Byte]): Boolean = {
+    val tmp = stage(target, bytes)
+    try { Files.createLink(target, tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.delete(tmp)
+  }
+
+  /** Last-wins publish: atomically rename the staged `bytes` over
+    * `target`; readers see the old or the new content, never a mix. */
+  private[graft] def publishReplacing(target: JPath,
+      bytes: Array[Byte]): Unit =
+    Files.move(stage(target, bytes), target,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+
+  private def jsonBytes(m: Manifest): Array[Byte] =
+    org.json4s.jackson.Serialization.write(m).getBytes("UTF-8")
+
+  /** `m` stamped with the publish-time clock, strictly past `parent`'s
+    * stamp: two commits inside one wall-clock millisecond would
+    * otherwise tie, and timestamp AS OF (snapshotAsOf keeps the MAX
+    * eligible id) would resolve a probe of the earlier commit's stamp to
+    * the later one. */
+  private def stamped(m: Manifest, parent: Option[Manifest]): Manifest =
+    m.copy(committedAtMs = Some(math.max(System.currentTimeMillis(),
+      parent.flatMap(_.committedAtMs).getOrElse(0L) + 1)))
+
+  /** Publish snapshot `m`, a child of `parent` (None for a table's first
+    * snapshot), at `target`. False if a concurrent commit already took
+    * the name. */
+  private def tryCommit(target: JPath, parent: Option[Manifest],
+      m: Manifest): Boolean =
+    publishIfAbsent(target, jsonBytes(stamped(m, parent)))
+
+  /** How many times the rebase loop re-derives a commit before giving
+    * up on a table under concurrent writers. */
+  private[table] val CommitAttempts = 20
+
+  /** The rebase loop. `attempt` reads its ref's head, derives a child
+    * of it and publishes it; it returns the id it committed (or declined
+    * at), or None when a concurrent writer took the id first, and then
+    * runs again on the new head — [[CommitAttempts]] times at most, once
+    * when the caller `pinned` its base (its guards hold for that base
+    * only). */
+  private def rebasing(verb: String, where: String, pinned: Boolean)(
+      attempt: => Option[Int]): Int = {
+    var attempts = 0
+    while (attempts < (if (pinned) 1 else CommitAttempts)) {
+      val id = attempt
+      if (id.isDefined) return id.get
+      attempts += 1
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"$verb lost $CommitAttempts commit races $where")
+  }
+
+  /** The manifest a commit derives from: snapshot `base` when pinned,
+    * else the latest. `absent` is the verb's error for a table with no
+    * snapshot. */
+  private def parentOf(root: String, absent: => String,
+      base: Option[Int] = None): Manifest = {
+    val v = base.getOrElse(latestSnapshot(root))
+    require(v > 0, absent)
+    manifest(root, v)
+  }
+
+  /** Commit a child of main's latest snapshot through [[rebasing]], for
+    * a verb whose file list does not depend on the parent. `derive`
+    * runs on every head the loop reads, so the verb's guards re-validate
+    * against a concurrent writer's commit; it returns None to decline
+    * (the head's id is returned, nothing is published). A pinned `base`
+    * that is no longer the latest fails loudly: the caller re-derives. */
+  private def commitRebasing(root: String, verb: String, absent: => String,
+      base: Option[Int] = None)(derive: Manifest => Option[Manifest]): Int =
+    rebasing(verb, s"at $root", base.isDefined) {
+      val parent = parentOf(root, absent)
+      base.filter(_ != parent.snapshot).foreach { b =>
+        throw new java.util.ConcurrentModificationException(
+          s"$verb derived against snapshot $b but latest is " +
+            s"${parent.snapshot} at $root")
+      }
+      derive(parent) match {
+        case None => Some(parent.snapshot)
+        case Some(m) => Option.when(
+          tryCommit(manifestPath(root, m.snapshot), Some(parent), m))(
+          m.snapshot)
+      }
+    }
+
+  /** Publish `m`, derived from `parent` (from [[parentOf]]), as the next
+    * snapshot in one attempt, for a verb whose file list depends on the
+    * parent (a rewrite, deletion vectors, a partition replacement): a
+    * concurrent commit makes it stale, so it fails loudly and the caller
+    * re-derives. Returns the new snapshot id. */
+  private def commitOnce(root: String, verb: String, parent: Manifest,
+      m: Manifest): Int = {
+    if (!tryCommit(manifestPath(root, m.snapshot), Some(parent), m))
+      throw new java.util.ConcurrentModificationException(
+        s"$verb derived from stale snapshot ${parent.snapshot} at $root")
+    m.snapshot
   }
 
   private def tagPath(root: String, name: String): JPath = {
@@ -443,18 +533,10 @@ object GraftTable {
       s"tag target $snapshot outside [1, ${latestSnapshot(root)}] at $root")
     require(Files.exists(manifestPath(root, snapshot)),
       s"tag target $snapshot is expired at $root")
-    val tmp = metaDir(root).resolve(
-      s".tmp-${java.util.UUID.randomUUID().toString}")
-    Files.write(tmp, s"""{"snapshot":$snapshot}""".getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    try {
-      try Files.createLink(tagPath(root, name), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(
-            s"tag '$name' already exists at $root (remove + re-tag to move)")
-      }
-    } finally Files.delete(tmp)
+    if (!publishIfAbsent(tagPath(root, name),
+        s"""{"snapshot":$snapshot}""".getBytes("UTF-8")))
+      throw new IllegalStateException(
+        s"tag '$name' already exists at $root (remove + re-tag to move)")
   }
 
   def removeTag(root: String, name: String): Boolean =
@@ -529,19 +611,13 @@ object GraftTable {
       s"branch fork point $snap outside [1, $latest] at $root")
     require(Files.exists(manifestPath(root, snap)),
       s"branch fork point $snap is expired at $root")
-    val tmp = metaDir(root).resolve(
-      s".tmp-${java.util.UUID.randomUUID().toString}")
-    Files.write(tmp, s"""{"forkedAt":$snap}""".getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    try {
-      try Files.createLink(branchMarkerPath(root, name), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(
-            s"branch '$name' already exists at $root")
-      }
-    } finally Files.delete(tmp)
+    if (!publishIfAbsent(branchMarkerPath(root, name), forkMarker(snap)))
+      throw new IllegalStateException(
+        s"branch '$name' already exists at $root")
   }
+
+  private def forkMarker(snap: Int): Array[Byte] =
+    s"""{"forkedAt":$snap}""".getBytes("UTF-8")
 
   /** Drop the branch: marker + every unpublished branch manifest. The
     * branch's data files become orphans (swept by a later vacuum) unless
@@ -613,30 +689,25 @@ object GraftTable {
     // a branch write is exactly the audit point constraints exist for:
     // enforce against the branch HEAD's constraint set before any file
     // lands (re-validated in the loop if the set moved concurrently)
-    var validated = {
-      val hm = branchHeadManifest(root, name)
-      val cs = checksOf(hm)
-      enforceChecks(df, withNotNull(schemaOf(hm), df, cs),
-        s"in the batch appended to branch '$name' at $root")
-      cs
-    }
+    val head0 = branchHeadManifest(root, name)
+    var validated = checksOf(head0)
+    enforceChecks(df, withNotNull(schemaOf(head0), df, validated),
+      s"in the batch appended to branch '$name' at $root")
     // partitioning is fixed at create, so any head's declaration works
     val entries = writeFiles(spark, root, df, localRows(df),
       statsCols, clusterCols, numFiles, bloomCols,
-      partSpec = partSpecOf(branchHeadManifest(root, name)))
-    var attempts = 0
+      partSpec = partSpecOf(head0))
     // a pinned base forgoes the rebase loop, same contract as append():
     // the caller's guards were evaluated against that exact head
-    val maxAttempts = if (baseHead.isDefined) 1 else 20
-    while (attempts < maxAttempts) {
+    rebasing("appendToBranch", s"on '$name' at $root",
+        baseHead.isDefined) {
       val head = branchHeadManifest(root, name)
       baseHead.filter(_ != head.snapshot).foreach { b =>
         throw new java.util.ConcurrentModificationException(
           s"branch append derived against head $b but branch '$name' " +
             s"head is ${head.snapshot} at $root")
       }
-      require(shape(df.schema) == shape(
-        DataType.fromJson(head.schemaJson).asInstanceOf[StructType]),
+      require(shape(df.schema) == shape(schemaOf(head)),
         s"branch append schema mismatch vs branch '$name' head at $root")
       if (checksOf(head) != validated) {
         enforceChecks(df, withNotNull(schemaOf(head), df, checksOf(head)),
@@ -644,13 +715,9 @@ object GraftTable {
         validated = checksOf(head)
       }
       val m = child(head, "branch_append", head.files ++ entries)
-      if (tryCommitAt(root, m,
-          branchManifestPath(root, name, m.snapshot),
-          head.committedAtMs.getOrElse(0L))) return m.snapshot
-      attempts += 1
+      Option.when(tryCommit(branchManifestPath(root, name, m.snapshot),
+        Some(head), m))(m.snapshot)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"appendToBranch lost 20 commit races on '$name' at $root")
   }
 
   /** REBASE the branch onto an ADVANCED main (r15 verdict stretch #7 —
@@ -685,21 +752,12 @@ object GraftTable {
     val latest = latestSnapshot(root)
     if (latest == forked) return branchHead(root, name) // already based
     val oldIds = branchCommitIds(root, name)
-    def swapMarker(): Unit = {
-      val tmp = metaDir(root).resolve(
-        s".tmp-${java.util.UUID.randomUUID().toString}")
-      Files.write(tmp, s"""{"forkedAt":$latest}""".getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      Files.move(tmp, branchMarkerPath(root, name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    def swapMarker(): Unit =
+      publishReplacing(branchMarkerPath(root, name), forkMarker(latest))
     if (oldIds.isEmpty) { swapMarker(); return latest }
     val mainHead = manifest(root, latest)
     val forkM = manifest(root, forked)
-    require(shape(DataType.fromJson(mainHead.schemaJson)
-        .asInstanceOf[StructType]) ==
-      shape(DataType.fromJson(forkM.schemaJson).asInstanceOf[StructType]),
+    require(shape(schemaOf(mainHead)) == shape(schemaOf(forkM)),
       s"cannot REBASE branch '$name' at $root: main's schema evolved " +
         "since the fork — re-create the branch from latest")
     require(partSpecOf(mainHead) == partSpecOf(forkM),
@@ -737,11 +795,8 @@ object GraftTable {
       metaDir(root).resolve(s".rebase-$name-$id.json")
     var head = mainHead
     val staged = deltas.map { case (op, d) =>
-      head = child(head, op, head.files ++ d).copy(committedAtMs =
-        Some(math.max(System.currentTimeMillis(),
-          head.committedAtMs.getOrElse(0L) + 1)))
-      Files.write(stagePath(head.snapshot),
-        org.json4s.jackson.Serialization.write(head).getBytes("UTF-8"),
+      head = stamped(child(head, op, head.files ++ d), Some(head))
+      Files.write(stagePath(head.snapshot), jsonBytes(head),
         StandardOpenOption.CREATE_NEW)
       head.snapshot
     }
@@ -1236,7 +1291,8 @@ object GraftTable {
       partitionCols = Option(spec.map(_.name).toList).filter(_.nonEmpty),
       partitionSpec = Option(spec.toList)
         .filter(_.exists(_.transform != "identity")))
-    require(tryCommit(root, m), s"concurrent create at $root")
+    require(tryCommit(manifestPath(root, 1), None, m),
+      s"concurrent create at $root")
     1
   }
 
@@ -1341,7 +1397,8 @@ object GraftTable {
     val c = Manifest(1, 0, s"clone($srcRoot@$v)", m.schemaJson,
       borrowed, checks = m.checks, partitionCols = m.partitionCols,
       partitionSpec = m.partitionSpec)
-    require(tryCommit(dstRoot, c), s"concurrent create at $dstRoot")
+    require(tryCommit(manifestPath(dstRoot, 1), None, c),
+      s"concurrent create at $dstRoot")
     1
   }
 
@@ -1368,7 +1425,7 @@ object GraftTable {
       .filter(f => !f.nullable && df.schema.fieldNames.contains(f.name))
       .map(f => s"NOT NULL(${f.name})" -> s"`${f.name}` IS NOT NULL")
 
-  private def schemaOf(m: Manifest): StructType =
+  private[graft] def schemaOf(m: Manifest): StructType =
     DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   /** The conditions merge post-image rows `updates` must pass against
@@ -1461,52 +1518,33 @@ object GraftTable {
   def addCheck(spark: SparkSession, root: String, name: String,
       cond: String): Int = {
     require(name.nonEmpty, s"empty constraint name at $root")
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
+    commitRebasing(root, "addCheck",
+        s"alter of non-existent table $root") { parent =>
       val existing = checksOf(parent)
       require(!existing.keys.exists(_.equalsIgnoreCase(name)),
         s"constraint '$name' already exists at $root")
-      requireCheckRefsExist(DataType.fromJson(parent.schemaJson)
-        .asInstanceOf[StructType], name, cond)
+      requireCheckRefsExist(schemaOf(parent), name, cond)
       enforceChecks(readEntries(spark, root, parent, parent.files),
         Map(name -> cond), s"among EXISTING rows at $root — a " +
           "constraint the current data violates is not addable")
-      val m = child(parent, s"alter_add_check($name)", parent.files)
-        .copy(checks = Some(existing + (name -> cond)))
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+      Some(child(parent, s"alter_add_check($name)", parent.files)
+        .copy(checks = Some(existing + (name -> cond))))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"addCheck lost 20 commit races at $root")
   }
 
   /** `DROP CONSTRAINT name` — pure metadata commit. */
   def dropCheck(root: String, name: String,
-      ifExists: Boolean = false): Int = {
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
+      ifExists: Boolean = false): Int =
+    commitRebasing(root, "dropCheck",
+        s"alter of non-existent table $root") { parent =>
       val existing = checksOf(parent)
       val key = existing.keys.find(_.equalsIgnoreCase(name))
-      if (key.isEmpty) {
-        if (ifExists) return v
-        throw new NoSuchElementException(
-          s"no constraint '$name' at $root " +
-            s"(have ${existing.keys.toSeq.sorted.mkString(", ")})")
-      }
-      val m = child(parent, s"alter_drop_check(${key.get})", parent.files)
-        .copy(checks = Option(existing - key.get).filter(_.nonEmpty))
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+      if (key.isEmpty && !ifExists) throw new NoSuchElementException(
+        s"no constraint '$name' at $root " +
+          s"(have ${existing.keys.toSeq.sorted.mkString(", ")})")
+      key.map(k => child(parent, s"alter_drop_check($k)", parent.files)
+        .copy(checks = Option(existing - k).filter(_.nonEmpty)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropCheck lost 20 commit races at $root")
-  }
 
   /** Append-only commit. Optimistic: on a concurrent-writer collision the
     * new files are already safely on disk and the file list is
@@ -1542,45 +1580,29 @@ object GraftTable {
       allowEvolution: Boolean = false,
       baseSnapshot: Option[Int] = None,
       streamTxn: Option[(String, Long)] = None): Int = {
+    val absent = s"append to non-existent table $root"
+    val m0 = parentOf(root, absent)
+    def replayed(m: Manifest): Boolean = streamTxn.exists { case (qid, b) =>
+      m.stream.exists(_.get(qid).exists(_ >= b))
+    }
     // replay short-circuit BEFORE any file lands: the common restart
     // case re-offers the last checkpointed batch immediately
-    streamTxn.foreach { case (qid, b) =>
-      val v0 = latestSnapshot(root)
-      require(v0 > 0, s"append to non-existent table $root")
-      if (manifest(root, v0).stream.exists(_.get(qid).exists(_ >= b)))
-        return v0
-    }
+    if (replayed(m0)) return m0.snapshot
     // CHECK constraints validate BEFORE any file lands (a rejected
     // batch strands nothing); re-validated inside the loop if a rebase
     // lands on a parent whose constraint set moved concurrently
-    var validated = {
-      val v0 = latestSnapshot(root)
-      require(v0 > 0, s"append to non-existent table $root")
-      val m0 = manifest(root, v0)
-      val cs = checksOf(m0)
-      enforceChecks(df, withNotNull(schemaOf(m0), df, cs),
-        s"in the appended batch at $root")
-      cs
-    }
+    var validated = checksOf(m0)
+    enforceChecks(df, withNotNull(schemaOf(m0), df, validated),
+      s"in the appended batch at $root")
     val entries = writeFiles(spark, root, df, localRows(df),
       statsCols, clusterCols, numFiles, bloomCols,
-      partSpec = partSpecOf(manifest(root, latestSnapshot(root))))
-    var attempts = 0
+      partSpec = partSpecOf(m0))
     // a pinned base forgoes the rebase loop: the caller's guards (e.g.
     // SQL INSERT's key-clash check) were evaluated against that exact
     // snapshot, so rebasing onto a mover could mint a duplicate key —
     // fail loudly instead, caller re-derives
-    val maxAttempts = if (baseSnapshot.isDefined) 1 else 20
-    while (attempts < maxAttempts) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"append to non-existent table $root")
-      baseSnapshot.filter(_ != v).foreach { b =>
-        throw new java.util.ConcurrentModificationException(
-          s"append derived against snapshot $b but latest is $v at $root")
-      }
-      val parent = manifest(root, v)
-      val parentShape =
-        shape(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType])
+    commitRebasing(root, "append", absent, baseSnapshot) { parent =>
+      val parentShape = shape(schemaOf(parent))
       val newShape = shape(df.schema)
       val evolved = allowEvolution && newShape != parentShape &&
         newShape.startsWith(parentShape)
@@ -1594,7 +1616,8 @@ object GraftTable {
         if (allowEvolution)
           s"schema evolution is add-only: existing columns $parentShape " +
             s"must prefix the new schema $newShape at $root"
-        else s"append schema mismatch vs snapshot $v at $root")
+        else s"append schema mismatch vs snapshot ${parent.snapshot} " +
+          s"at $root")
       if (checksOf(parent) != validated) {
         enforceChecks(df, withNotNull(schemaOf(parent), df,
           checksOf(parent)), s"in the appended batch at $root")
@@ -1603,21 +1626,15 @@ object GraftTable {
       // re-check the watermark against THIS parent: a concurrent
       // duplicate writer (two executors replaying one batch) must lose
       // inside the loop, not stack a second copy on the winner
-      streamTxn.foreach { case (qid, b) =>
-        if (parent.stream.exists(_.get(qid).exists(_ >= b))) return v
-      }
-      val m = child(parent,
+      if (replayed(parent)) None
+      else Some(child(parent,
         if (evolved) "append_evolve" else "append",
         parent.files ++ entries).copy(
         schemaJson = if (evolved) df.schema.json else parent.schemaJson,
         stream = streamTxn.map { case (qid, b) =>
           parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
-        }.orElse(parent.stream))
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+        }.orElse(parent.stream)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"append lost 20 commit races at $root")
   }
 
   /** Align an evolving batch for an add-only append/MERGE: the
@@ -1627,9 +1644,7 @@ object GraftTable {
     * plain append; one missing a parent column fails loudly here
     * instead of as a confusing prefix-rule error downstream. */
   def alignEvolved(df: DataFrame, root: String): DataFrame = {
-    val parent = DataType.fromJson(
-      manifest(root, latestSnapshot(root)).schemaJson)
-      .asInstanceOf[StructType]
+    val parent = schemaOf(manifest(root, latestSnapshot(root)))
     parent.fieldNames.filterNot(n => df.schema.fieldNames.contains(n))
       .headOption.foreach(n => throw new IllegalArgumentException(
         s"mergeSchema batch is missing table column '$n' at $root — " +
@@ -1754,21 +1769,20 @@ object GraftTable {
       commitEmpty: Boolean, allowEvolution: Boolean,
       streamTxn: Option[(String, Long)], postImageChecked: Boolean,
       updateRows: Long): Int = {
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"upsertDelete into non-existent table $root")
-    val parent = manifest(root, v)
+    val parent = parentOf(root,
+      s"upsertDelete into non-existent table $root", baseSnapshot)
+    val v = parent.snapshot
     // exactly-once streaming MERGE (append's streamTxn contract applied
     // to the upsert kernel): a crash-replayed batch whose id is already
     // in the watermark map must NOT re-apply — the merge is key-
     // addressed, so re-applying would not duplicate rows, but it WOULD
     // mint a phantom snapshot and re-fire CDC consumers. Checked against
-    // the derivation snapshot; the single-attempt tryCommit below makes
+    // the derivation snapshot; the single-attempt commit below makes
     // a concurrent duplicate writer lose cleanly too.
     streamTxn.foreach { case (qid, b) =>
       if (parent.stream.exists(_.get(qid).exists(_ >= b))) return v
     }
-    val parentSchema =
-      DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
+    val parentSchema = schemaOf(parent)
     // opt-in add-only schema evolution (append's mergeSchema contract,
     // extended to MERGE): existing columns must PREFIX the new schema;
     // the commit widens the manifest schema, rewritten survivors pad
@@ -1826,17 +1840,14 @@ object GraftTable {
           else addBounds(liveRowsOf(affected), updateRows),
           statsCols, clusterCols, numFiles, bloomCols,
           partSpec = partSpecOf(parent))
-        val m = child(parent, if (evolved) "merge_evolve" else "merge",
+        commitOnce(root, "upsertDelete", parent, child(parent,
+          if (evolved) "merge_evolve" else "merge",
           parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
           .copy(schemaJson =
             if (evolved) updates.schema.json else parent.schemaJson,
             stream = streamTxn.map { case (qid, b) =>
               parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
-            }.orElse(parent.stream))
-        if (!tryCommit(root, m))
-          throw new java.util.ConcurrentModificationException(
-            s"upsertDelete derived from stale snapshot $v at $root")
-        v + 1
+            }.orElse(parent.stream)))
       }
     }
   }
@@ -1862,30 +1873,26 @@ object GraftTable {
       df: DataFrame, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, baseSnapshot: Option[Int] = None,
       bloomCols: Seq[String] = Nil): Int = {
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"overwritePartitions into non-existent table $root")
-    val parent = manifest(root, v)
+    val parent = parentOf(root,
+      s"overwritePartitions into non-existent table $root", baseSnapshot)
     val pcols = partColsOf(parent)
     require(pcols.nonEmpty,
       s"overwritePartitions on UNPARTITIONED table $root — dynamic " +
         "partition overwrite needs declared partition columns; use " +
         "merge/delete for row-level replacement")
-    require(shape(df.schema) ==
-      shape(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]),
-      s"overwritePartitions schema mismatch vs snapshot $v at $root")
+    require(shape(df.schema) == shape(schemaOf(parent)),
+      s"overwritePartitions schema mismatch vs snapshot " +
+        s"${parent.snapshot} at $root")
     enforceChecks(df, withNotNull(schemaOf(parent), df, checksOf(parent)),
       s"in the overwrite batch at $root")
     val entries = writeFiles(spark, root, df, localRows(df),
       statsCols, clusterCols, numFiles, bloomCols,
       partSpec = partSpecOf(parent))
-    if (entries.isEmpty) return v // empty batch: nothing touched
+    if (entries.isEmpty) return parent.snapshot // nothing touched
     val touched = entries.flatMap(_.parts).toSet
-    val m = child(parent, "overwrite_partitions",
-      parent.files.filterNot(f => f.parts.exists(touched)) ++ entries)
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"overwritePartitions derived from stale snapshot $v at $root")
-    v + 1
+    commitOnce(root, "overwritePartitions", parent,
+      child(parent, "overwrite_partitions",
+        parent.files.filterNot(f => f.parts.exists(touched)) ++ entries))
   }
 
   /** Copy-on-write row-level DELETE: rows whose `keyCol` appears in
@@ -1907,14 +1914,13 @@ object GraftTable {
       keyCol: String, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, baseSnapshot: Option[Int] = None,
       bloomCols: Seq[String] = Nil): Int = {
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"delete from non-existent table $root")
-    val parent = manifest(root, v)
+    val parent = parentOf(root, s"delete from non-existent table $root",
+      baseSnapshot)
     // DV-aware, same as merge: an already-DV-deleted row neither flags
     // its file nor survives the rewrite (which materializes the DV)
     touchedKeys(parent, deleteKeys, keyCol, "delete") { keys =>
       val affectedPaths = affectedFiles(spark, root, parent, keys, keyCol)
-      if (affectedPaths.isEmpty) v // nothing matched; no empty commit
+      if (affectedPaths.isEmpty) parent.snapshot // no empty commit
       else {
         val affected = parent.files.filter(f => affectedPaths(f.path))
         val survivors =
@@ -1922,12 +1928,8 @@ object GraftTable {
         val entries = writeFiles(spark, root, survivors,
           liveRowsOf(affected), statsCols, clusterCols, numFiles, bloomCols,
           partSpec = partSpecOf(parent))
-        val m = child(parent, "delete",
-          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
-        if (!tryCommit(root, m))
-          throw new java.util.ConcurrentModificationException(
-            s"delete derived from stale snapshot $v at $root")
-        v + 1
+        commitOnce(root, "delete", parent, child(parent, "delete",
+          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries))
       }
     }
   }
@@ -2122,17 +2124,13 @@ object GraftTable {
     * uncommitted. */
   def deleteMor(spark: SparkSession, root: String, deleteKeys: DataFrame,
       keyCol: String, baseSnapshot: Option[Int] = None): Int = {
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"delete from non-existent table $root")
-    val parent = manifest(root, v)
+    val parent = parentOf(root, s"delete from non-existent table $root",
+      baseSnapshot)
     val marks = touchedKeys(parent, deleteKeys, keyCol, "delete")(
       dvMark(spark, root, parent, _, keyCol))
-    if (marks.isEmpty) return v // nothing matched; no empty commit
-    val m = child(parent, "delete_mor", applyDvMarks(root, parent, marks))
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"delete_mor derived from stale snapshot $v at $root")
-    v + 1
+    if (marks.isEmpty) return parent.snapshot // no empty commit
+    commitOnce(root, "delete_mor", parent,
+      child(parent, "delete_mor", applyDvMarks(root, parent, marks)))
   }
 
   /** MERGE-ON-READ upsert: matched base rows are deletion-vector-marked
@@ -2148,12 +2146,10 @@ object GraftTable {
       keyCol: String, statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int = 4, baseSnapshot: Option[Int] = None,
       bloomCols: Seq[String] = Nil): Int = {
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"merge into non-existent table $root")
-    val parent = manifest(root, v)
-    require(shape(updates.schema) ==
-      shape(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]),
-      s"merge schema mismatch vs snapshot $v at $root")
+    val parent = parentOf(root, s"merge into non-existent table $root",
+      baseSnapshot)
+    require(shape(updates.schema) == shape(schemaOf(parent)),
+      s"merge schema mismatch vs snapshot ${parent.snapshot} at $root")
     enforceChecks(updates, postImageChecks(parent, updates),
       s"in the merge post-image at $root")
     val marks = touchedKeys(parent, updates, keyCol, "merge")(
@@ -2161,12 +2157,8 @@ object GraftTable {
     val entries = writeFiles(spark, root, updates, localRows(updates),
       statsCols, clusterCols, numFiles, bloomCols,
       partSpec = partSpecOf(parent))
-    val m = child(parent, "merge_mor",
-      applyDvMarks(root, parent, marks) ++ entries)
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"merge_mor derived from stale snapshot $v at $root")
-    v + 1
+    commitOnce(root, "merge_mor", parent, child(parent, "merge_mor",
+      applyDvMarks(root, parent, marks) ++ entries))
   }
 
   /** Small-file compaction as a COMMIT: files of the latest snapshot
@@ -2190,9 +2182,8 @@ object GraftTable {
     // baseSnapshot pins the derivation for the race tests (merge's seam):
     // a compact derived against a superseded file set must fail loudly,
     // never silently resurrect rows a concurrent merge/delete rewrote
-    val v = baseSnapshot.getOrElse(latestSnapshot(root))
-    require(v > 0, s"compact of non-existent table $root")
-    val parent = manifest(root, v)
+    val parent = parentOf(root, s"compact of non-existent table $root",
+      baseSnapshot)
     // liveRows, not rows: a file mostly eaten by deletion vectors IS a
     // small file for layout purposes. materializeDvs additionally pulls
     // every DV'd file into the rewrite — the deferred-rewrite half of the
@@ -2206,7 +2197,7 @@ object GraftTable {
       partFilter.forall(_(f)) &&
         (f.liveRows < minRows || (materializeDvs && f.dv.nonEmpty)))
     if (small.size < 2 && !small.exists(_.dv.nonEmpty))
-      return v // nothing to gain; no empty commit
+      return parent.snapshot // nothing to gain; no empty commit
     // read through readEntries, NOT a raw parquet scan: the rewrite must
     // apply the small files' deletion vectors (materializing them), never
     // resurrect their deleted rows
@@ -2218,13 +2209,9 @@ object GraftTable {
       statsCols, clusterCols, numFiles, bloomCols, zorderCols,
       partSpec = partSpecOf(parent))
     val smallPaths = small.map(_.path).toSet
-    val m = child(parent,
+    commitOnce(root, "compact", parent, child(parent,
       if (partFilter.isDefined) "compact_where" else "compact",
-      parent.files.filterNot(f => smallPaths(f.path)) ++ entries)
-    if (!tryCommit(root, m))
-      throw new java.util.ConcurrentModificationException(
-        s"compact derived from stale snapshot $v at $root")
-    v + 1
+      parent.files.filterNot(f => smallPaths(f.path)) ++ entries))
   }
 
   /** RESTORE: roll the table back to snapshot `toSnapshot` as a NEW
@@ -2243,23 +2230,19 @@ object GraftTable {
   def restore(root: String, toSnapshot: Int): Int = {
     require(toSnapshot > 0, s"restore target must be >= 1, got $toSnapshot")
     val target = manifest(root, toSnapshot)
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
+    commitRebasing(root, "restore",
+        s"restore target $toSnapshot > latest 0") { parent =>
+      val v = parent.snapshot
       require(toSnapshot <= v, s"restore target $toSnapshot > latest $v")
-      if (toSnapshot == v) return v
       // schema/files/checks/partitioning roll back to the target, but
       // the STREAM watermark map keeps the current latest's (monotone:
       // the target's older map would re-admit already-applied batches)
-      val m = child(manifest(root, v), s"restore($toSnapshot)",
-        target.files).copy(schemaJson = target.schemaJson,
-        checks = target.checks, partitionCols = target.partitionCols,
-        partitionSpec = target.partitionSpec)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+      if (toSnapshot == v) None
+      else Some(child(parent, s"restore($toSnapshot)", target.files).copy(
+        schemaJson = target.schemaJson, checks = target.checks,
+        partitionCols = target.partitionCols,
+        partitionSpec = target.partitionSpec))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"restore lost 20 commit races at $root")
   }
 
   /** ALTER TABLE ... ADD COLUMN as a METADATA-ONLY commit: the new
@@ -2282,29 +2265,21 @@ object GraftTable {
   def alterAddColumns(root: String,
       cols: Seq[(String, DataType)]): Int = {
     require(cols.nonEmpty, s"alter with no columns at $root")
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
-      val schema =
-        DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
-      val widened = cols.foldLeft(schema) { case (s0, (name, dt)) =>
-        require(!s0.fieldNames.exists(_.equalsIgnoreCase(name)),
-          s"column '$name' already exists at $root")
-        require(!name.startsWith(DeadSentinelPrefix),
-          s"column name '$name' collides with the reserved " +
-            s"'$DeadSentinelPrefix' read-sentinel prefix")
-        s0.add(StructField(name, dt, nullable = true))
+    commitRebasing(root, "alterAddColumns",
+        s"alter of non-existent table $root") { parent =>
+      val widened = cols.foldLeft(schemaOf(parent)) {
+        case (s0, (name, dt)) =>
+          require(!s0.fieldNames.exists(_.equalsIgnoreCase(name)),
+            s"column '$name' already exists at $root")
+          require(!name.startsWith(DeadSentinelPrefix),
+            s"column name '$name' collides with the reserved " +
+              s"'$DeadSentinelPrefix' read-sentinel prefix")
+          s0.add(StructField(name, dt, nullable = true))
       }
-      val m = child(parent,
+      Some(child(parent,
         s"alter_add(${cols.map(_._1).mkString(",")})", parent.files)
-        .copy(schemaJson = widened.json)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+        .copy(schemaJson = widened.json))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"alterAddColumns lost 20 commit races at $root")
   }
 
   /** `RENAME COLUMN old TO new` as ONE metadata-only commit — zero data
@@ -2327,13 +2302,9 @@ object GraftTable {
     require(!newName.startsWith(DeadSentinelPrefix),
       s"column name '$newName' collides with the reserved " +
         s"'$DeadSentinelPrefix' read-sentinel prefix")
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
-      val schema =
-        DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
+    commitRebasing(root, "alterRenameColumn",
+        s"alter of non-existent table $root") { parent =>
+      val schema = schemaOf(parent)
       val field = schema.fields.find(_.name.equalsIgnoreCase(oldName))
         .getOrElse(throw new NoSuchElementException(
           s"no column '$oldName' at $root " +
@@ -2379,13 +2350,9 @@ object GraftTable {
         f.copy(mins = rekey(f.mins), maxs = rekey(f.maxs),
           bloom = f.bloom.map(rekey), phys = Option(ph2).filter(_.nonEmpty))
       }
-      val m = child(parent, s"alter_rename($oldName->$newName)", files2)
-        .copy(schemaJson = renamed.json)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+      Some(child(parent, s"alter_rename($oldName->$newName)", files2)
+        .copy(schemaJson = renamed.json))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"alterRenameColumn lost 20 commit races at $root")
   }
 
   /** `DROP COLUMN` as ONE metadata-only commit — zero data movement,
@@ -2408,13 +2375,9 @@ object GraftTable {
   def alterDropColumns(root: String, names: Seq[String],
       ifExists: Boolean = false): Int = {
     require(names.nonEmpty, s"alter with no columns at $root")
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
-      val schema =
-        DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
+    commitRebasing(root, "alterDropColumns",
+        s"alter of non-existent table $root") { parent =>
+      val schema = schemaOf(parent)
       val fields = names.flatMap { n =>
         val f = schema.fields.find(_.name.equalsIgnoreCase(n))
         if (f.isEmpty && !ifExists) throw new NoSuchElementException(
@@ -2422,44 +2385,42 @@ object GraftTable {
             s"(have ${schema.fieldNames.mkString(", ")})")
         f
       }.distinct
-      if (fields.isEmpty) return v // IF EXISTS and nothing matched
-      fields.map(_.name).find(n => partSpecOf(parent).exists(f =>
-          f.source.equalsIgnoreCase(n) || f.name.equalsIgnoreCase(n)))
-        .foreach(pc => throw new IllegalArgumentException(
-          s"cannot DROP COLUMN '$pc' at $root: it is a declared " +
-            "partition column or transform source (every file's k=v " +
-            "directory layout and partition pruning depend on it)"))
-      val dropNames = fields.map(_.name).toSet
-      checksOf(parent).foreach { case (n, c) =>
-        val hit = fields.map(_.name).find(f =>
-          checkRefs(c).contains(f.toLowerCase(java.util.Locale.ROOT)))
-        require(hit.isEmpty,
-          s"cannot DROP COLUMN '${hit.get}' at $root: CHECK constraint " +
-            s"'$n' ($c) references it — drop the constraint first")
+      if (fields.isEmpty) None // IF EXISTS and nothing matched
+      else {
+        fields.map(_.name).find(n => partSpecOf(parent).exists(f =>
+            f.source.equalsIgnoreCase(n) || f.name.equalsIgnoreCase(n)))
+          .foreach(pc => throw new IllegalArgumentException(
+            s"cannot DROP COLUMN '$pc' at $root: it is a declared " +
+              "partition column or transform source (every file's k=v " +
+              "directory layout and partition pruning depend on it)"))
+        val dropNames = fields.map(_.name).toSet
+        checksOf(parent).foreach { case (n, c) =>
+          val hit = fields.map(_.name).find(f =>
+            checkRefs(c).contains(f.toLowerCase(java.util.Locale.ROOT)))
+          require(hit.isEmpty,
+            s"cannot DROP COLUMN '${hit.get}' at $root: CHECK constraint " +
+              s"'$n' ($c) references it — drop the constraint first")
+        }
+        require(dropNames.size < schema.fields.length,
+          s"cannot drop every column of $root " +
+            s"(${names.mkString(", ")} leaves an empty schema)")
+        val narrowed =
+          StructType(schema.fields.filterNot(f => dropNames(f.name)))
+        val files2 = parent.files.map { f =>
+          val ph = f.phys.getOrElse(Map.empty[String, String])
+          val writeTime = fields.map(fd => ph.getOrElse(fd.name, fd.name))
+          val dead2 =
+            (f.deadPhys.getOrElse(Nil) ++ writeTime).distinct
+          f.copy(mins = f.mins -- dropNames, maxs = f.maxs -- dropNames,
+            bloom = f.bloom.map(_ -- dropNames).filter(_.nonEmpty),
+            phys = Option(ph -- dropNames).filter(_.nonEmpty),
+            deadPhys = Some(dead2))
+        }
+        Some(child(parent,
+          s"alter_drop(${fields.map(_.name).mkString(",")})", files2)
+          .copy(schemaJson = narrowed.json))
       }
-      require(dropNames.size < schema.fields.length,
-        s"cannot drop every column of $root " +
-          s"(${names.mkString(", ")} leaves an empty schema)")
-      val narrowed =
-        StructType(schema.fields.filterNot(f => dropNames(f.name)))
-      val files2 = parent.files.map { f =>
-        val ph = f.phys.getOrElse(Map.empty[String, String])
-        val writeTime = fields.map(fd => ph.getOrElse(fd.name, fd.name))
-        val dead2 =
-          (f.deadPhys.getOrElse(Nil) ++ writeTime).distinct
-        f.copy(mins = f.mins -- dropNames, maxs = f.maxs -- dropNames,
-          bloom = f.bloom.map(_ -- dropNames).filter(_.nonEmpty),
-          phys = Option(ph -- dropNames).filter(_.nonEmpty),
-          deadPhys = Some(dead2))
-      }
-      val m = child(parent,
-        s"alter_drop(${fields.map(_.name).mkString(",")})", files2)
-        .copy(schemaJson = narrowed.json)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"alterDropColumns lost 20 commit races at $root")
   }
 
   /** Iceberg's PUBLIC safe-promotion matrix, the ONLY type changes
@@ -2497,14 +2458,10 @@ object GraftTable {
     * int), and RESTORE across the widen restores the narrow schema
     * wholesale, snapshot semantics. */
   def alterWidenColumnType(root: String, name: String,
-      to: DataType): Int = {
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"alter of non-existent table $root")
-      val parent = manifest(root, v)
-      val schema =
-        DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
+      to: DataType): Int =
+    commitRebasing(root, "alterWidenColumnType",
+        s"alter of non-existent table $root") { parent =>
+      val schema = schemaOf(parent)
       val field = schema.fields.find(_.name.equalsIgnoreCase(name))
         .getOrElse(throw new NoSuchElementException(
           s"no column '$name' at $root " +
@@ -2520,16 +2477,11 @@ object GraftTable {
       // both types — the layout is invariant, so no partition guard
       val widened = StructType(schema.fields.map(f =>
         if (f.name == field.name) f.copy(dataType = to) else f))
-      val m = child(parent,
+      Some(child(parent,
         s"alter_widen(${field.name}:${field.dataType.simpleString}->" +
           s"${to.simpleString})", parent.files)
-        .copy(schemaJson = widened.json)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+        .copy(schemaJson = widened.json))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"alterWidenColumnType lost 20 commit races at $root")
-  }
 
   /** `CREATE OR REPLACE` — redefine the table WHOLESALE as ONE commit:
     * new schema, new rows, new checks, new partition spec all land
@@ -2548,8 +2500,8 @@ object GraftTable {
       zorderCols: Seq[String] = Nil,
       checks: Map[String, String] = Map.empty,
       partitionSpec: Seq[PartField] = Nil): Int = {
-    require(latestSnapshot(root) > 0,
-      s"REPLACE of non-existent table $root — use create")
+    val absent = s"REPLACE of non-existent table $root — use create"
+    require(latestSnapshot(root) > 0, absent)
     validatePartSpec(df.schema, partitionSpec, root)
     checks.keys.groupBy(_.toLowerCase(java.util.Locale.ROOT)).values
       .find(_.size > 1).foreach(dup => throw new IllegalArgumentException(
@@ -2560,22 +2512,15 @@ object GraftTable {
     val entries = writeFiles(spark, root, df, localRows(df),
       statsCols, clusterCols, numFiles, bloomCols, zorderCols,
       partitionSpec)
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      val parent = manifest(root, v)
-      val m = child(parent, "replace", entries).copy(
+    commitRebasing(root, "replaceTable", absent) { parent =>
+      Some(child(parent, "replace", entries).copy(
         schemaJson = df.schema.json,
         checks = Option(checks).filter(_.nonEmpty),
         partitionCols =
           Option(partitionSpec.map(_.name).toList).filter(_.nonEmpty),
         partitionSpec = Option(partitionSpec.toList)
-          .filter(_.exists(_.transform != "identity")))
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+          .filter(_.exists(_.transform != "identity"))))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"replaceTable lost 20 commit races at $root")
   }
 
   /** `TRUNCATE TABLE` — drop every live row as ONE metadata-only commit
@@ -2588,20 +2533,11 @@ object GraftTable {
     * here (the lakehouse TRUNCATE contract: a logical clear, not an
     * rm -rf). Optimistic like every verb; truncating an already-empty
     * table declines to commit (the no-empty-commit rule). */
-  def truncate(root: String): Int = {
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      require(v > 0, s"TRUNCATE of non-existent table $root")
-      val parent = manifest(root, v)
-      if (parent.files.isEmpty) return v
-      val m = child(parent, "truncate", Nil)
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+  def truncate(root: String): Int =
+    commitRebasing(root, "truncate",
+        s"TRUNCATE of non-existent table $root") { parent =>
+      Option.when(parent.files.nonEmpty)(child(parent, "truncate", Nil))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"truncate lost 20 commit races at $root")
-  }
 
   /** `ANALYZE TABLE` — persist optimizer statistics into the manifest
     * (r15 verdict missing #4): table-level exact live `rowCount` (the
@@ -2619,10 +2555,9 @@ object GraftTable {
     * ([[graft.sql.GraftStats]]). */
   def analyzeStats(spark: SparkSession, root: String,
       cols: Seq[String] = Nil): Int = {
-    val v0 = latestSnapshot(root)
-    require(v0 > 0, s"ANALYZE of non-existent table $root")
-    val m0 = manifest(root, v0)
-    val schema = DataType.fromJson(m0.schemaJson).asInstanceOf[StructType]
+    val absent = s"ANALYZE of non-existent table $root"
+    val m0 = parentOf(root, absent)
+    val schema = schemaOf(m0)
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"ANALYZE column '$c' is not in the schema at $root " +
         s"(have ${schema.fieldNames.mkString(", ")})"))
@@ -2673,17 +2608,10 @@ object GraftTable {
     val stats = Map(
       "rowCount" -> rows.toString,
       "sizeInBytes" -> liveBytes.toString) ++ colStats
-    var attempts = 0
-    while (attempts < 20) {
-      val v = latestSnapshot(root)
-      val parent = manifest(root, v)
-      val m = child(parent, "analyze", parent.files)
-        .copy(tableStats = Some(stats))
-      if (tryCommit(root, m)) return v + 1
-      attempts += 1
+    commitRebasing(root, "analyzeStats", absent) { parent =>
+      Some(child(parent, "analyze", parent.files)
+        .copy(tableStats = Some(stats)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"analyzeStats lost 20 commit races at $root")
   }
 
   /** Snapshot expiration + vacuum: drop every manifest with id <
@@ -2760,6 +2688,13 @@ object GraftTable {
     // referenced by any manifest (moves mint fresh names), so it is
     // pure reclaimable space; the same age gate protects an in-flight
     // writer's stage
+    // a publish that died between staging and its link or rename
+    // strands its `.tmp-` file in `_graft/`, referenced by nothing; the
+    // `.rebase-` files are rebaseBranch's recovery copy and stay
+    Option(metaDir(root).toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith(".tmp-") &&
+        f.lastModified() <= cutoff)
+      .foreach(f => Files.deleteIfExists(f.toPath))
     var removed = 0
     val rootDir = Paths.get(root)
     if (Files.isDirectory(rootDir)) {
@@ -2891,7 +2826,7 @@ object GraftTable {
 
   private[table] def readEntries(spark: SparkSession, root: String, m: Manifest,
       files: List[FileEntry]): DataFrame = {
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = schemaOf(m)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext
         .emptyRDD[org.apache.spark.sql.Row], schema)
@@ -3038,7 +2973,7 @@ object GraftTable {
   private[table] def readEntriesWithPos(spark: SparkSession, root: String,
       m: Manifest, files: List[FileEntry]): DataFrame = {
     import spark.implicits._
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = schemaOf(m)
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -3195,11 +3130,9 @@ object GraftTable {
     // restore across a same-width drop-then-add (r13 review finding).
     val namesMemo = scala.collection.mutable.Map.empty[Int, Seq[String]]
     def namesAt(w: Int): Seq[String] = namesMemo.getOrElseUpdate(w,
-      DataType.fromJson(manifest(root, w).schemaJson)
-        .asInstanceOf[StructType].fieldNames.toSeq)
+      schemaOf(manifest(root, w)).fieldNames.toSeq)
     def fieldsAt(w: Int): Map[String, DataType] =
-      DataType.fromJson(manifest(root, w).schemaJson)
-        .asInstanceOf[StructType].fields
+      schemaOf(manifest(root, w)).fields
         .map(f => f.name -> f.dataType).toMap
     val renameRe = """alter_rename\((.+)->(.+)\)""".r
     val restoreRe = """restore\((\d+)\)""".r
@@ -3282,8 +3215,7 @@ object GraftTable {
           // survivors carry their values, everything else null-fills —
           // the same only-type-equal-survives rule stepNameMap applies
           // when composing across this commit.
-          val curSchema =
-            DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
+          val curSchema = schemaOf(cur)
           val prevT = fieldsAt(v - 1)
           val oldRows = readEntries(spark, root, prev, removed)
           val oldProj = oldRows.select(curSchema.fields.toSeq.map { f =>

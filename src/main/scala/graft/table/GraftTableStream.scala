@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.StreamShim
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming offset for a [[GraftTable]]: the committed snapshot id.
   * Snapshot ids are dense, monotone, and published atomically
@@ -60,8 +60,7 @@ class GraftTableStreamProvider extends StreamSourceProvider
     val root = rootOf(parameters)
     val v = GraftTable.latestSnapshot(root)
     require(v > 0, s"no graft table at $root to stream from")
-    val base = DataType.fromJson(GraftTable.manifest(root, v).schemaJson)
-      .asInstanceOf[StructType]
+    val base = GraftTable.schemaOf(GraftTable.manifest(root, v))
     (shortName(), GraftTableSource.withCdcColumns(base, parameters))
   }
 
@@ -289,8 +288,7 @@ class GraftTableSource(spark: SparkSession, root: String,
     val v = GraftTable.latestSnapshot(root)
     require(v > 0, s"no graft table at $root to stream from")
     GraftTableSource.withCdcColumns(
-      DataType.fromJson(GraftTable.manifest(root, v).schemaJson)
-        .asInstanceOf[StructType], parameters)
+      GraftTable.schemaOf(GraftTable.manifest(root, v)), parameters)
   }
 
   override def getOffset: Option[V1Offset] = {
