@@ -2,6 +2,7 @@
 """Per-operation-kind cost table from a perfbench span trace.
 
 Usage: python3 scripts/trace_ops.py <trace.spans.jsonl> [<trace2.spans.jsonl>]
+       python3 scripts/trace_ops.py --jobs <op kind> <trace.spans.jsonl>
 
 A traced perfbench run (`perfbench/run.py --trace 1`) writes its spans to
 `.bench_build/traces/<workload>-seed<n>.spans.jsonl`: one JSON object per
@@ -16,15 +17,20 @@ the operation), the definition of perfbench's `sched.driver_gap_s`.
 
 Given a second trace (say, the parent commit's run first and a change's
 run second), it prints each operation kind's ops, jobs, wall_s and gap_s
-as "first -> second", and the totals. It only reads the traces.
+as "first -> second", and the totals.
+
+With `--jobs <op kind>` (say, `--jobs sql_merge`) it lists every operation
+of that kind with its wall milliseconds, then each Spark job it ran: the
+job id, its milliseconds and the call site of each of its stages. It only
+reads the traces.
 """
 import collections
 import json
 import sys
 
 
-def summarize(path: str) -> dict:
-    """Operation kind -> {ops, jobs, stages, wall, gap} for one trace."""
+def load(path: str) -> dict:
+    """Span id -> span for one trace."""
     spans = {}
     with open(path) as f:
         for line in f:
@@ -32,11 +38,19 @@ def summarize(path: str) -> dict:
             if line:
                 s = json.loads(line)
                 spans[s["id"]] = s
+    return spans
 
-    def op_of(s):
-        while s is not None and s["kind"] != "op":
-            s = spans.get(s["parent"])
-        return s
+
+def op_of(spans: dict, s):
+    """The operation span `s` hangs off, or None."""
+    while s is not None and s["kind"] != "op":
+        s = spans.get(s["parent"])
+    return s
+
+
+def summarize(path: str) -> dict:
+    """Operation kind -> {ops, jobs, stages, wall, gap} for one trace."""
+    spans = load(path)
 
     def covered_ms(intervals, lo, hi):
         total, cur_s, cur_e = 0, None, None
@@ -55,7 +69,7 @@ def summarize(path: str) -> dict:
     job_iv = collections.defaultdict(list)  # op id -> its job intervals
     for s in spans.values():
         if s["kind"] in ("job", "stage"):
-            op = op_of(s)
+            op = op_of(spans, s)
             if op is None:
                 continue
             k = op["name"].split(" ")[0]
@@ -111,8 +125,38 @@ def compare(first: str, second: str) -> None:
     print(f"{'total':<14}" + cells(total(a), total(b)))
 
 
+def jobs(kind: str, path: str) -> None:
+    """Each operation of `kind` with its jobs and their stages' call sites."""
+    spans = load(path)
+    ops = sorted((s for s in spans.values()
+                  if s["kind"] == "op" and s["name"].split(" ")[0] == kind),
+                 key=lambda s: s["start_ms"])
+    by_op = collections.defaultdict(list)
+    stages = collections.defaultdict(list)
+    for s in spans.values():
+        if s["kind"] == "job":
+            op = op_of(spans, s)
+            if op is not None:
+                by_op[op["id"]].append(s)
+        elif s["kind"] == "stage":
+            stages[s["parent"]].append(s)
+    for op in ops:
+        js = sorted(by_op[op["id"]], key=lambda s: (s["start_ms"], s["id"]))
+        print(f"{op['name']}: {op['end_ms'] - op['start_ms']} ms, "
+              f"{len(js)} jobs")
+        for j in js:
+            sites = [" ".join(st["name"].split(" ")[2:]) for st in
+                     sorted(stages[j["id"]], key=lambda st: st["start_ms"])]
+            print(f"  {j['name']:<10}{j['end_ms'] - j['start_ms']:>6} ms  "
+                  + "; ".join(sites))
+    if not ops:
+        print(f"no operation of kind {kind!r}")
+
+
 if __name__ == "__main__":
-    if len(sys.argv) == 2:
+    if len(sys.argv) == 4 and sys.argv[1] == "--jobs":
+        jobs(sys.argv[2], sys.argv[3])
+    elif len(sys.argv) == 2:
         show(sys.argv[1])
     elif len(sys.argv) == 3:
         compare(sys.argv[1], sys.argv[2])

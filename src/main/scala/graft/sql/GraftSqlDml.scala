@@ -2,14 +2,15 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, GenericInternalRow, InSet, InSubquery, Literal, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.{col, lit, max, sum, when}
-import org.apache.spark.sql.graft.SqlShim
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.graft.{SqlShim, WriteShim}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, NumericType}
 
 import graft.table.GraftTable
 
@@ -43,19 +44,28 @@ import graft.table.GraftTable
   * rows, duplicate upsert keys, or an insert arm re-using an existing
   * key all fail the statement.
   *
-  * Scale posture: a MERGE classifies every row with ONE join of the
-  * snapshot and the source, each side tagged with a presence marker
-  * (FULL/one-sided OUTER or INNER, by which arm classes exist) —
-  * shuffle-partitioned on whatever Catalyst picks, never a driver
-  * loop — checks every loud guard in ONE grouped aggregate over the
-  * persisted classification before any file is written, and the
-  * commits rewrite only stats/bloom-candidate files that
-  * actually hold touched keys (the DSL's two-level pruning), so cost
-  * scales with the DML's key locality, not table size. Snapshot
-  * semantics: all arms read the SAME base snapshot (captured at
-  * analysis); a MERGE lands as ONE atomic upsert+delete commit
-  * (GraftTable.upsertDelete), never a pair that could be observed
-  * half-applied.
+  * Scale posture: a MERGE or DELETE is key-addressed, so its cost
+  * scales with the statement's key locality, not table size, on one of
+  * two arms. A MERGE without a BY SOURCE arm, and a DELETE with a
+  * `key IN (<subquery>)` conjunct, probe that key source through
+  * `Probes.byBudget`; within the commit-key budget (a local relation
+  * probes with no job) the DRIVER arm prunes the target to the candidate
+  * files of those keys per key by range and bloom, scans them in ONE job,
+  * classifies the rows, folds every loud guard and evaluates the rewrite
+  * on the driver, and writes it with no further job. Over the budget,
+  * with a BY SOURCE arm, or when the candidates exceed the write budget,
+  * the DISTRIBUTED arm runs: a MERGE classifies every row with ONE join
+  * of the snapshot and the source, each side tagged with a presence
+  * marker (FULL/one-sided OUTER or INNER, by which arm classes exist) —
+  * shuffle-partitioned on whatever Catalyst picks — checks every loud
+  * guard in ONE grouped aggregate over the persisted classification
+  * before any file is written, and the commits rewrite only
+  * stats/bloom-candidate files that actually hold touched keys (the
+  * DSL's two-level pruning). Both arms check the same guards in the
+  * same order with the same messages. Snapshot semantics: all arms read
+  * the SAME base snapshot (captured at analysis); a MERGE lands as ONE
+  * atomic upsert+delete commit (GraftTable.upsertDelete), never a pair
+  * that could be observed half-applied.
   */
 object GraftSqlTables {
 
@@ -624,22 +634,29 @@ private[sql] object GraftDml {
     case x => Seq(x)
   }
 
-  /** The ON condition must pin target.key = <source-side expr> in its
-    * conjuncts — the keyed-upsert shape GraftTable.merge addresses
-    * files by. */
-  def hasKeyEquality(cond: Expression, keyAttr: Attribute,
-      sourceOut: Seq[Attribute]): Boolean = {
+  /** The source-side expression of the first ON conjunct pinning
+    * target.key = <source-side expr> — the keyed-upsert shape
+    * GraftTable.merge addresses files by, which the ON condition must
+    * have. */
+  def keyEqualityOf(cond: Expression, keyAttr: Attribute,
+      sourceOut: Seq[Attribute]): Option[Expression] = {
     val srcIds = sourceOut.map(_.exprId).toSet
-    conjuncts(cond).exists {
-      case EqualTo(l: AttributeReference, r)
-          if l.exprId == keyAttr.exprId =>
-        r.references.forall(a => srcIds.contains(a.exprId))
-      case EqualTo(l, r: AttributeReference)
-          if r.exprId == keyAttr.exprId =>
-        l.references.forall(a => srcIds.contains(a.exprId))
-      case _ => false
+    conjuncts(cond).collectFirst {
+      case EqualTo(l: AttributeReference, r) if l.exprId == keyAttr.exprId &&
+          r.references.forall(a => srcIds.contains(a.exprId)) => r
+      case EqualTo(l, r: AttributeReference) if r.exprId == keyAttr.exprId &&
+          l.references.forall(a => srcIds.contains(a.exprId)) => l
     }
   }
+
+  /** A statement over `t` at snapshot `parent` may take a driver arm: the
+    * table is flat and its key a numeric column of exactly that name, so
+    * candidate files prune per key by range and bloom
+    * (`GraftTable.scanCandidates`). */
+  def driverShaped(t: GraftSqlTarget, parent: GraftTable.Manifest): Boolean =
+    GraftTable.partSpecOf(parent).isEmpty &&
+      GraftTable.schemaOf(parent).find(_.name == t.ref.keyCol)
+        .exists(_.dataType.isInstanceOf[NumericType])
 
   def keyAttrOf(t: GraftSqlTarget): Attribute =
     t.child.output.find(_.name.equalsIgnoreCase(t.ref.keyCol)).getOrElse(
@@ -748,19 +765,65 @@ case class GraftInsertOverwriteCommand(ref: GraftSqlTables.Ref,
   }
 }
 
-/** `DELETE FROM t WHERE p` → key-addressed `GraftTable.delete` of the
-  * keys whose rows satisfy `p` against the captured snapshot.
-  * `filtered` is the Filter-over-snapshot plan built at collapse. */
+/** `DELETE FROM t WHERE p` → key-addressed delete of the keys whose rows
+  * satisfy `p` against the captured snapshot. `filtered` is the
+  * Filter-over-snapshot plan built at collapse.
+  *
+  * Driver arm: when a conjunct of `p` is `key IN (<uncorrelated
+  * subquery>)`, no other subquery remains, the table is flat with a
+  * numeric key, and the subquery's rows probe within the commit-key
+  * budget through `Probes.byBudget` (a local relation probes with no
+  * job), those values bound the doomed keys: the candidate files of
+  * just those keys are scanned once (`GraftTable.scanCandidates`), `p`
+  * — the subquery as the value set it returned — is evaluated over the
+  * scanned rows on the driver, and the one-scan commit writes the
+  * rewrite on the driver (`GraftTable.commitCandidates`). Any other
+  * statement, and one whose candidates exceed the write budget, commits
+  * the keys of the filtered snapshot through `GraftTable.delete`. */
 case class GraftDeleteCommand(t: GraftSqlTarget, filtered: LogicalPlan)
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftDml._
+    val keyAttr = keyAttrOf(t)
     // no persist: GraftTable.delete evaluates its key input once (its
     // key probe caches it), which also freezes a nondeterministic
     // predicate (rand()); the delete dedups keys
-    commitDelete(spark, t, SqlShim.ofRows(spark, filtered)
-      .select(c(keyAttrOf(t)).as(t.ref.keyCol)))
+    def viaKeys(): Unit = commitDelete(spark, t, SqlShim.ofRows(spark,
+      filtered).select(c(keyAttr).as(t.ref.keyCol)))
+    val cond = filtered match { case Filter(cd, _) => cd }
+    lazy val parent = GraftTable.manifest(t.ref.root, t.snapshot)
+    val bound = conjuncts(cond).collectFirst {
+      case in @ InSubquery(Seq(k: AttributeReference), q)
+          if k.exprId == keyAttr.exprId && q.outerAttrs.isEmpty => in
+    }.filter(in => driverShaped(t, parent) &&
+      !cond.exists(e => e.isInstanceOf[SubqueryExpression] &&
+        !in.query.fastEquals(e)))
+    bound match {
+      case None => viaKeys()
+      case Some(in) =>
+        graft.util.Probes.byBudget(SqlShim.ofRows(spark, in.query.plan),
+            GraftTable.commitKeyBudget.value, null) { rows =>
+          val values = rows.map(_.get(0))
+          GraftTable.scanCandidates(spark, t.ref.root, parent, t.ref.keyCol,
+              values.filter(_ != null).distinct.toSeq, 0L) match {
+            case None => viaKeys()
+            case Some(scan) =>
+              val set = InSet(keyAttr,
+                values.map(Literal.create(_, keyAttr.dataType).value).toSet)
+              val doomed = SqlShim.ofRows(spark, Project(Seq(keyAttr),
+                Filter(cond.transform { case e if e eq in => set },
+                  LocalRelation(t.child.output,
+                    (0 until scan.size).map(scan.data))))).collect()
+              GraftTable.commitCandidates(spark, t.ref.root, scan,
+                doomed.iterator.map(r => GraftTable.keyValue(r.get(0)))
+                  .filter(_ != null).toSet, Vector.empty, scan.schema,
+                t.ref.statsCols, t.ref.clusterCols, t.ref.numFiles,
+                t.ref.bloomCols, "delete", "delete",
+                commitEmpty = false)(identity)
+          }
+        } { _ => viaKeys() }
+    }
     Seq.empty
   }
 }
@@ -784,11 +847,19 @@ case class GraftUpdateCommand(t: GraftSqlTarget,
 }
 
 /** `MERGE INTO t USING s ON cond WHEN ...` — every row classified by
-  * ONE presence-marker join of the captured snapshot and the source
-  * into one persisted tagged frame, every loud guard checked by ONE
-  * grouped aggregate over it, then at most one atomic upsert+delete
-  * commit. See the module doc for the key-addressed contract and its
-  * loud requires. */
+  * its presence markers and arms, every loud guard checked before any
+  * file is written, then at most one atomic upsert+delete commit, on one
+  * of two arms. A statement with no NOT MATCHED BY SOURCE arm, no schema
+  * evolution and no subquery, over a flat table with a numeric key,
+  * probes its source through `Probes.byBudget`; within the commit-key
+  * budget it takes the driver arm ([[GraftMergeCommand.driver]]: one scan
+  * of the candidate files of the source's ON-key values, the guards
+  * folded on the driver, the one-scan commit). Any other statement, an
+  * over-budget source, and candidates over the write budget take the
+  * distributed arm ([[GraftMergeCommand.distributed]]: one
+  * presence-marker join into one persisted tagged frame, one grouped
+  * guard aggregate, `GraftTable.upsertDeleteKernel`). See the module
+  * doc for the key-addressed contract and its loud requires. */
 case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     extends LeafRunnableCommand {
 
@@ -891,19 +962,20 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     }
   }
 
-  /** Classify every row of `joined` (the ONE marker-column join of
-    * snapshot and source) and freeze the result: the persisted tagged
-    * frame (caller unpersists) carries per row the first-matching arm's
-    * index in `arms` (matched arms first, then NOT MATCHED, then NOT
-    * MATCHED BY SOURCE — each class dispatches only over its own arms,
-    * chosen by the presence markers, never by column nullness), whether
-    * the row is a target⋈source match, and the full post-image in the
-    * target schema (casts + aliases applied). Only rows some arm fired
-    * on — plus every match when the cardinality rule applies — are kept.
-    * Persisting freezes arm conditions, assignments and the source
-    * itself: the guard aggregate and the commit each read the frame, and
-    * a nondeterministic condition, value or source must classify each
-    * row exactly once, never roll it into both (or neither) set.
+  /** Classify every row of `joined` (the marker-column join of
+    * snapshot and source): the tagged frame carries per row the
+    * first-matching arm's index in `arms` (matched arms first, then NOT
+    * MATCHED, then NOT MATCHED BY SOURCE — each class dispatches only
+    * over its own arms, chosen by the presence markers, never by column
+    * nullness), whether the row is a target⋈source match, and the full
+    * post-image in the target schema (casts + aliases applied). Only
+    * rows some arm fired on — plus every match when the cardinality rule
+    * applies — are kept.
+    * The caller freezes it (the distributed arm persists it, the driver
+    * arm collects it), which freezes arm conditions, assignments and the
+    * source itself: the guards and the commit each read the frame, and a
+    * nondeterministic condition, value or source must classify each row
+    * exactly once, never roll it into both (or neither) set.
     *
     * The post-image key is the TARGET key wherever a target row exists
     * (a matched arm may assign the key only as the ON-proven identity,
@@ -955,7 +1027,6 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
     joined.withColumn(ActCol, act)
       .where(if (keepMatches) fired || (inT && inS) else fired)
       .select(((inT && inS).as(MatchCol) +: col(ActCol) +: post): _*)
-      .persist()
   }
 
   override def run(spark: SparkSession): Seq[Row] = {
@@ -998,7 +1069,8 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       extras.map(_.name.toLowerCase(java.util.Locale.ROOT)).toSet
     val tgtOut = tgtOut0 ++ extras
     val keyAttr = keyAttrOf(t)
-    require(hasKeyEquality(cond, keyAttr, srcOut),
+    val onKey = keyEqualityOf(cond, keyAttr, srcOut)
+    require(onKey.isDefined,
       s"MERGE INTO a graft table requires `target.${t.ref.keyCol} = " +
         "<source expression>` among the ON conjuncts (the storage merge " +
         "is key-addressed)")
@@ -1041,13 +1113,103 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       case _ => ()
     }
 
-    // ONE join classifies every row: each side carries a presence
-    // marker, so after the join a row is matched (both markers), NOT
-    // MATCHED (source only) or NOT MATCHED BY SOURCE (target only) by
-    // marker, whatever its columns hold. The join keeps exactly the
-    // sides some arm reads: FULL OUTER with both unmatched classes, an
-    // outer join keeping the target (by-source arms) or the source
-    // (insert arms) with one, INNER otherwise.
+    // ONE join classifies every row on the distributed arm: each side
+    // carries a presence marker, so after the join a row is matched (both
+    // markers), NOT MATCHED (source only) or NOT MATCHED BY SOURCE
+    // (target only) by marker, whatever its columns hold; the driver arm
+    // builds the same marked rows from the candidate files' rows
+    val arms =
+      expanded(matchedActions, tgtOut, srcOut, extras)
+        .map { case (cd, as) => Arm(Arm.Matched, cd, as) } ++
+      expanded(notMatchedActions, tgtOut, srcOut, extras)
+        .map { case (cd, as) => Arm(Arm.NotMatched, cd, as) } ++
+      expanded(notMatchedBySourceActions, tgtOut, srcOut)
+        .map { case (cd, as) => Arm(Arm.BySource, cd, as) }
+    val parent = GraftTable.manifest(t.ref.root, t.snapshot)
+    // BY SOURCE arms read every target row, schema evolution and a
+    // subquery need the plan path; the rest probe the source
+    val onDriver = notMatchedBySourceActions.isEmpty && extras.isEmpty &&
+      driverShaped(t, parent) &&
+      !(cond +: arms.flatMap(a => a.cond.toSeq ++
+        a.assigns.toSeq.flatten.map(_.value)))
+        .exists(_.exists(_.isInstanceOf[SubqueryExpression]))
+    def dist(src: LogicalPlan): Unit =
+      distributed(spark, src, parent, arms, tgtOut, keyAttr, extras,
+        extraNames)
+    if (!onDriver) dist(source)
+    else graft.util.Probes.byBudget(SqlShim.ofRows(spark, source),
+        GraftTable.commitKeyBudget.value, null) { rows =>
+      // the source's rows, so neither arm evaluates it again
+      val local = LocalRelation.fromExternalRows(source.output, rows.toSeq)
+      if (!driver(spark, local, parent, onKey.get, arms, tgtOut, keyAttr))
+        dist(local)
+    } { _ => dist(source) }
+    Seq.empty
+  }
+
+  private def armsWhere(arms: Seq[Arm])(p: Arm => Boolean): Column =
+    col(ActCol).isin(arms.zipWithIndex.collect { case (a, i) if p(a) => i }: _*)
+
+  /** One row per row of `tagged`: its post-image key, 1/0 flags for a
+    * match, an insert, an upsert and a delete, and per condition of
+    * `checks` whether the row is an upsert violating it — the rows both
+    * arms fold into [[requireGuards]]' counts. */
+  private def flagsOf(tagged: DataFrame, arms: Seq[Arm],
+      checks: Seq[(String, String)]): DataFrame = {
+    val one = (b: Column) => when(b, 1L).otherwise(0L)
+    val isUpsert = armsWhere(arms)(_.assigns.isDefined)
+    tagged.select((Seq(col(t.ref.keyCol).as(GuardKey),
+      one(col(MatchCol)).as("m"),
+      one(armsWhere(arms)(_.cls == Arm.NotMatched)).as("ins"),
+      lit(0L).as("live"), one(isUpsert).as("up"),
+      one(armsWhere(arms)(_.assigns.isEmpty)).as("del")) ++
+      checks.indices.map(i =>
+        one(isUpsert && GraftTable.violates(checks(i)._2)).as(s"chk$i"))): _*)
+  }
+
+  /** Every loud guard, in ONE order on both arms, so the same guard wins
+    * when several fire. `n` counts over the classified rows, per
+    * post-image key: 0 any key matched more than once (cardinality),
+    * 1 any insert of a live target key, 2 any NULL insert key, 3 any
+    * duplicate upsert key, 4 any key both upserted and deleted; 5 and 6
+    * the upsert and delete rows; 7 + i the upserts violating `checks(i)`.
+    * NULL keys equal nothing, like the equi-joins these rules are defined
+    * by, except that a NULL insert key is its own failure and duplicate
+    * NULL upserts still count. */
+  private def requireGuards(n: Int => Long,
+      checks: Seq[(String, String)]): Unit = {
+    // SQL cardinality rule: a target row matches at most one source row
+    require(n(0) == 0, "MERGE cardinality violation: a target row " +
+      "matches more than one source row")
+    // an insert arm must not re-use a live key (the key-addressed
+    // upsert would silently REPLACE the existing row) nor mint a NULL
+    // key (unaddressable forever: every later key-addressed statement
+    // equi-joins on the key and skips it)
+    require(n(1) == 0, "MERGE insert arm produced a key that " +
+      "already exists in the target (matched by a failing extra " +
+      "ON conjunct?)")
+    require(n(2) == 0, "MERGE insert arm produced a NULL key")
+    require(n(3) == 0, "MERGE produced duplicate upsert keys")
+    // a key in both sets would make the atomic rewrite re-add the row
+    // the delete side meant to drop
+    require(n(4) == 0,
+      "MERGE produced a key in both the upsert and delete sets")
+    GraftTable.requireNoViolations(checks, i => n(7 + i),
+      s"in the merge post-image at ${t.ref.root}")
+  }
+
+  /** The distributed arm: ONE presence-marker join of the snapshot and
+    * `src` (the source plan, or the source's probed rows), classified
+    * into one persisted tagged frame, every guard counted in ONE grouped
+    * aggregate over it before any file is written, then at most one
+    * atomic upsert+delete commit through `GraftTable.upsertDeleteKernel`.
+    * The join keeps exactly the sides some arm reads: FULL OUTER with
+    * both unmatched classes, an outer join keeping the target (by-source
+    * arms) or the source (insert arms) with one, INNER otherwise. */
+  private def distributed(spark: SparkSession, src: LogicalPlan,
+      parent: GraftTable.Manifest, arms: Seq[Arm], tgtOut: Seq[Attribute],
+      keyAttr: Attribute, extras: Seq[Attribute],
+      extraNames: Set[String]): Unit = {
     val marked = (p: LogicalPlan, mark: String) =>
       Project(p.output :+ Alias(Literal.TrueLiteral, mark)(), p)
     val joinType = (notMatchedActions.nonEmpty,
@@ -1058,49 +1220,23 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
       case (false, false) => Inner
     }
     val joined = SqlShim.ofRows(spark, Join(marked(t.child, TgtMark),
-      marked(source, SrcMark), joinType, Some(cond), JoinHint.NONE))
-    val arms =
-      expanded(matchedActions, tgtOut, srcOut, extras)
-        .map { case (cd, as) => Arm(Arm.Matched, cd, as) } ++
-      expanded(notMatchedActions, tgtOut, srcOut, extras)
-        .map { case (cd, as) => Arm(Arm.NotMatched, cd, as) } ++
-      expanded(notMatchedBySourceActions, tgtOut, srcOut)
-        .map { case (cd, as) => Arm(Arm.BySource, cd, as) }
+      marked(src, SrcMark), joinType, Some(cond), JoinHint.NONE))
     // the persisted frame is the statement's only materialization: the
     // source (and every arm condition and value) is evaluated once, as
     // the join that builds it runs
     val tagged = applyActions(joined, arms, tgtOut, keyAttr,
       keepMatches = matchedActions.nonEmpty, extraNames = extraNames)
+      .persist()
     try {
-      def armsWhere(p: Arm => Boolean): Column = col(ActCol).isin(
-        arms.zipWithIndex.collect { case (a, i) if p(a) => i }: _*)
-      val isUpsert = armsWhere(_.assigns.isDefined)
-      val isDelete = armsWhere(_.assigns.isEmpty)
-      val isInsert = armsWhere(_.cls == Arm.NotMatched)
-      // every loud guard and both emptiness counts in ONE grouped
-      // aggregate, before any file is written. Per post-image key:
-      // matches (cardinality), inserts vs live target keys (clash — the
-      // target-key leg joins only when an insert arm exists), upserts
-      // (duplicates), deletes (overlap) and upsert rows violating each
-      // CHECK / NOT NULL condition. NULL keys equal nothing,
-      // like the equi-joins these rules are defined by, except that a
-      // NULL insert key is its own failure and duplicate NULL upserts
-      // still count.
-      val one = (b: Column) => when(b, 1L).otherwise(0L)
-      val updates =
-        tagged.where(isUpsert).select(tgtOut.map(a => col(a.name)): _*)
+      val updates = tagged.where(armsWhere(arms)(_.assigns.isDefined))
+        .select(tgtOut.map(a => col(a.name)): _*)
       // the post-image CHECK and NOT NULL conditions the commit kernel
       // would enforce in a job of its own, counted per upsert row here
-      val checks = GraftTable.postImageChecks(
-        GraftTable.manifest(t.ref.root, t.snapshot), updates)
-        .toSeq.sortBy(_._1)
+      val checks =
+        GraftTable.postImageChecks(parent, updates).toSeq.sortBy(_._1)
       val chk = checks.indices.map(i => s"chk$i")
-      val flags = tagged.select((Seq(col(t.ref.keyCol).as(GuardKey),
-        one(col(MatchCol)).as("m"), one(isInsert).as("ins"),
-        lit(0L).as("live"), one(isUpsert).as("up"),
-        one(isDelete).as("del")) ++ checks.zip(chk).map {
-          case ((_, cd), a) => one(isUpsert && GraftTable.violates(cd)).as(a)
-        }): _*)
+      val flags = flagsOf(tagged, arms, checks)
+      // the live-key leg joins only when an insert arm exists
       val keyed =
         if (notMatchedActions.isEmpty) flags
         else flags.unionByName(SqlShim.ofRows(spark, t.child).select((Seq(
@@ -1112,6 +1248,7 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
         (Seq(sum("ins").as("ins"), sum("live").as("live"),
           sum("up").as("up"), sum("del").as("del")) ++
           chk.map(a => sum(a).as(a))): _*)
+      val one = (b: Column) => when(b, 1L).otherwise(0L)
       val anyOf = (b: Column) => max(one(b))
       val g = perKey.agg(
         anyOf(col("m") > 1), // 0
@@ -1122,37 +1259,124 @@ case class GraftMergeCommand(t: GraftSqlTarget, merge: MergeIntoTable)
           sum("up"), sum("del")) ++ // 5, 6
           chk.map(a => sum(a))): _*).head() // 7..
       val n = (i: Int) => if (g.isNullAt(i)) 0L else g.getLong(i)
-      // SQL cardinality rule: a target row matches at most one source row
-      require(n(0) == 0, "MERGE cardinality violation: a target row " +
-        "matches more than one source row")
-      // an insert arm must not re-use a live key (the key-addressed
-      // upsert would silently REPLACE the existing row) nor mint a NULL
-      // key (unaddressable forever: every later key-addressed statement
-      // equi-joins on the key and skips it)
-      require(n(1) == 0, "MERGE insert arm produced a key that " +
-        "already exists in the target (matched by a failing extra " +
-        "ON conjunct?)")
-      require(n(2) == 0, "MERGE insert arm produced a NULL key")
-      require(n(3) == 0, "MERGE produced duplicate upsert keys")
-      // a key in both sets would make the atomic rewrite re-add the row
-      // the delete side meant to drop
-      require(n(4) == 0,
-        "MERGE produced a key in both the upsert and delete sets")
-      GraftTable.requireNoViolations(checks, i => n(7 + i),
-        s"in the merge post-image at ${t.ref.root}")
+      requireGuards(n, checks)
       // ONE commit for the whole statement, derived against the
       // ANALYSIS-time snapshot: a merge-then-delete pair could be
       // observed (or die) half-applied, and a concurrent commit in
       // between must fail the optimistic check loudly
       if (n(5) > 0 || n(6) > 0)
         GraftTable.upsertDeleteKernel(spark, t.ref.root, updates,
-          tagged.where(isDelete).select(col(t.ref.keyCol).as(t.ref.keyCol)),
+          tagged.where(armsWhere(arms)(_.assigns.isEmpty))
+            .select(col(t.ref.keyCol).as(t.ref.keyCol)),
           t.ref.keyCol, t.ref.statsCols, t.ref.clusterCols,
           t.ref.numFiles, baseSnapshot = Some(t.snapshot),
           bloomCols = t.ref.bloomCols, commitEmpty = false,
           allowEvolution = extras.nonEmpty, streamTxn = None,
           postImageChecked = true, updateRows = n(5))
     } finally tagged.unpersist()
-    Seq.empty
+  }
+
+  /** The driver arm, over the source's probed rows `src`, with no job of
+    * its own beyond the one scan (and, only for an insert key outside
+    * the ON-key values, one live-key lookup): the target is pruned to
+    * the candidate files of the source's ON-key values (`onKey` over
+    * each source row) by per-key range and bloom and scanned once
+    * (`GraftTable.scanCandidates`); each source row pairs with the
+    * scanned rows of its key, the ON condition decides each pair, and
+    * the marked rows — matches, plus the unmatched source rows when an
+    * insert arm exists — classify through the same [[applyActions]] on
+    * the driver (Catalyst folds every step over a local relation). The
+    * flags fold into [[requireGuards]] per key; the commit is the
+    * one-scan commit (`GraftTable.commitCandidates`). False, having
+    * committed nothing, when the candidates' live rows exceed the write
+    * budget. */
+  private def driver(spark: SparkSession, src: LocalRelation,
+      parent: GraftTable.Manifest, onKey: Expression, arms: Seq[Arm],
+      tgtOut: Seq[Attribute], keyAttr: Attribute): Boolean = {
+    val onKeys = SqlShim.ofRows(spark,
+      Project(Seq(Alias(onKey, GuardKey)()), src)).collect().map(_.get(0))
+    GraftTable.scanCandidates(spark, t.ref.root, parent, t.ref.keyCol,
+        onKeys.filter(_ != null).distinct.toSeq, src.data.length) match {
+      case None => false
+      case Some(scan) =>
+        val srcIdx = AttributeReference("__graft_src", IntegerType,
+          nullable = false)()
+        val attrs = (t.child.output :+
+          AttributeReference(TgtMark, BooleanType)()) ++ src.output :+
+          AttributeReference(SrcMark, BooleanType)() :+ srcIdx
+        def marked(tgt: Option[Int], i: Int): InternalRow =
+          new GenericInternalRow((tgt.fold(
+              Seq.fill[Any](scan.schema.length + 1)(null))(j =>
+              scan.data(j).toSeq(scan.schema) :+ true) ++
+            src.data(i).toSeq(src.schema) :+ true :+ i).toArray)
+        val byKey = (0 until scan.size).filter(scan.key(_) != null)
+          .groupBy(scan.key)
+        val pairs = onKeys.indices.flatMap(i => Option(onKeys(i)).toSeq
+          .flatMap(k => byKey.getOrElse(GraftTable.keyValue(k), Nil))
+          .map(j => marked(Some(j), i)))
+        val matches = WriteShim.collectInternal(SqlShim.ofRows(spark,
+          Filter(cond, LocalRelation(attrs, pairs))))
+        val unmatched =
+          if (notMatchedActions.isEmpty) Nil
+          else {
+            val hit = matches.map(_.getInt(attrs.length - 1)).toSet
+            src.data.indices.filterNot(hit).map(marked(None, _))
+          }
+        val classified = applyActions(SqlShim.ofRows(spark,
+          LocalRelation(attrs, matches.toSeq ++ unmatched)), arms, tgtOut,
+          keyAttr, keepMatches = matchedActions.nonEmpty,
+          extraNames = Set.empty)
+        // collected once: every later frame reads these rows, so a
+        // nondeterministic condition or value classifies each row once
+        val tagged = SqlShim.ofRows(spark, LocalRelation(
+          classified.queryExecution.analyzed.output,
+          WriteShim.collectInternal(classified).toSeq))
+        val updates = tagged.where(armsWhere(arms)(_.assigns.isDefined))
+          .select(tgtOut.map(a => col(a.name)): _*)
+        val checks =
+          GraftTable.postImageChecks(parent, updates).toSeq.sortBy(_._1)
+        // the flags summed per post-image key (NULL one key, as in a
+        // grouped aggregate) and over the statement
+        final class PerKey(val value: Any) { var m, ins, up, del = 0L }
+        val perKey = scala.collection.mutable.LinkedHashMap[Any, PerKey]()
+        val counts = new Array[Long](7 + checks.size)
+        flagsOf(tagged, arms, checks).collect().foreach { r =>
+          val c = perKey.getOrElseUpdate(GraftTable.keyValue(r.get(0)),
+            new PerKey(r.get(0)))
+          c.m += r.getAs[Long]("m")
+          c.ins += r.getAs[Long]("ins")
+          c.up += r.getAs[Long]("up")
+          c.del += r.getAs[Long]("del")
+          counts(5) += r.getAs[Long]("up")
+          counts(6) += r.getAs[Long]("del")
+          checks.indices.foreach(i => counts(7 + i) += r.getAs[Long](s"chk$i"))
+        }
+        def any(p: (Any, PerKey) => Boolean): Long =
+          if (perKey.exists { case (k, c) => p(k, c) }) 1L else 0L
+        // looked up only when the cardinality guard holds
+        lazy val live = GraftTable.liveKeysAmong(spark, t.ref.root, scan,
+          t.ref.keyCol, perKey.collect {
+            case (k, c) if k != null && c.ins > 0 => c.value }.toSeq)
+        requireGuards({
+          case 0 => any((_, c) => c.m > 1)
+          case 1 => any((k, c) => k != null && c.ins > 0 && live(k))
+          case 2 => any((k, c) => k == null && c.ins > 0)
+          case 3 => any((_, c) => c.up > 1)
+          case 4 => any((k, c) => k != null && c.up > 0 && c.del > 0)
+          case i => counts(i)
+        }, checks)
+        if (counts(5) > 0 || counts(6) > 0) {
+          val deletes = tagged.where(armsWhere(arms)(_.assigns.isEmpty))
+          GraftTable.commitCandidates(spark, t.ref.root, scan,
+            (updates.select(col(t.ref.keyCol)).collect() ++
+              deletes.select(col(t.ref.keyCol)).collect()).iterator
+              .map(r => GraftTable.keyValue(r.get(0))).filter(_ != null)
+              .toSet, WriteShim.collectInternal(updates).toIndexedSeq,
+            updates.schema, t.ref.statsCols, t.ref.clusterCols,
+            t.ref.numFiles, t.ref.bloomCols, "upsertDelete", "merge",
+            commitEmpty = false)(identity)
+        }
+        true
+    }
   }
 }

@@ -953,13 +953,7 @@ object GraftTable {
       numFiles: Int, bloomCols: Seq[String],
       zorderCols: Seq[String] = Nil,
       partSpec: Seq[PartField]): List[FileEntry] = {
-    // string stats would silently read back as 0.0 bounds through the
-    // double-typed min/max maps and mis-prune — strings get bloom
-    // skipping (readWhereKeyInStr), never range stats
-    statsCols.find(c =>
-        df.schema(c).dataType == org.apache.spark.sql.types.StringType)
-      .foreach(c => throw new IllegalArgumentException(
-        s"statsCols must be numeric; '$c' is a string (use bloomCols)"))
+    requireNumericStats(df.schema, statsCols)
     if (partSpec.nonEmpty)
       return writeFilesPartitioned(spark, root, df, statsCols,
         clusterCols, numFiles, bloomCols, zorderCols, partSpec)
@@ -991,6 +985,16 @@ object GraftTable {
     fileEntries(root, spark.read.schema(df.schema).parquet(dir), statsCols,
       bloomCols, partitioned = false)
   }
+
+  /** String stats would silently read back as 0.0 bounds through the
+    * double-typed min/max maps and mis-prune — strings get bloom
+    * skipping (readWhereKeyInStr), never range stats. */
+  private def requireNumericStats(schema: StructType,
+      statsCols: Seq[String]): Unit =
+    statsCols.find(c =>
+        schema(c).dataType == org.apache.spark.sql.types.StringType)
+      .foreach(c => throw new IllegalArgumentException(
+        s"statsCols must be numeric; '$c' is a string (use bloomCols)"))
 
   /** The manifest entries of the files one distributed-arm write just
     * landed, read back through `scan`: per file the row count, min/max
@@ -1040,31 +1044,43 @@ object GraftTable {
       .sortBy(_.path)
   }
 
-  /** [[writeFiles]]' driver arm. Collects `df` in one job (none for a
-    * local relation) and splits the rows into at most `numFiles` files
-    * the way the distributed arm's partitioning does: with
-    * `clusterCols`, sorted in Spark's own ascending, nulls-first order
-    * and cut into contiguous chunks of near-equal size — a cut moves past
-    * rows whose cluster key equals the row before it, so equal keys
-    * share a file as they do under range partitioning; without them,
-    * dealt round-robin like `repartition(numFiles)`, so every file spans
-    * the commit's whole range. Each file lands under a fresh
-    * `data/c-<uuid>/`, written by the writer Spark's own write tasks
-    * use, over `schema.asNullable`, after the schema checks
-    * `df.write.parquet` runs: both arms accept and reject the same
-    * frames. Zero rows write no file. */
+  /** [[writeFiles]]' driver arm: `df`'s rows collected in one job (none
+    * for a local relation), after the schema checks, and written by
+    * [[writeRowsOnDriver]]. */
   private def writeFilesOnDriver(spark: SparkSession, root: String,
       df: DataFrame, statsCols: Seq[String], clusterCols: Seq[String],
+      numFiles: Int, bloomCols: Seq[String]): List[FileEntry] =
+    writeRowsOnDriver(spark, root, df.schema,
+      org.apache.spark.sql.graft.WriteShim.collectInternal(df), statsCols,
+      clusterCols, numFiles, bloomCols)
+
+  /** Write `rows` (of `schema`) as at most `numFiles` files on the driver
+    * and return their entries, splitting them the way the distributed
+    * arm's partitioning does: with `clusterCols`, sorted in Spark's own
+    * ascending, nulls-first order and cut into contiguous chunks of
+    * near-equal size — a cut moves past rows whose cluster key equals the
+    * row before it, so equal keys share a file as they do under range
+    * partitioning; without them, dealt round-robin like
+    * `repartition(numFiles)`, so every file spans the commit's whole
+    * range. Each file lands under a fresh `data/c-<uuid>/`, written by
+    * the writer Spark's own write tasks use, over `schema.asNullable`,
+    * after the schema checks `df.write.parquet` runs (before `rows` is
+    * evaluated): both arms accept and reject the same frames. The writer
+    * opens its files through [[DriverWriteFs]], so a file costs no
+    * `chmod` process and no `.crc` sidecar. Zero rows write no file. */
+  private def writeRowsOnDriver(spark: SparkSession, root: String,
+      schema: StructType,
+      rowsOf: => IndexedSeq[org.apache.spark.sql.catalyst.InternalRow],
+      statsCols: Seq[String], clusterCols: Seq[String],
       numFiles: Int, bloomCols: Seq[String]): List[FileEntry] = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending,
       BoundReference, InterpretedOrdering, SortOrder}
     val format = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat()
-    val schema = df.schema
     org.apache.spark.sql.graft.WriteShim.verifyWriteSchema(spark, format,
       schema)
     require(numFiles > 0, s"Number of partitions ($numFiles) must be positive.")
-    val rows = org.apache.spark.sql.graft.WriteShim.collectInternal(df)
+    val rows = rowsOf
     val n = rows.length
     val k = math.min(numFiles, n)
     val chunks =
@@ -1088,8 +1104,11 @@ object GraftTable {
           case Seq(a, b) if b > a => sorted.slice(a, b).toSeq
         }.toSeq
       }
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      org.apache.spark.sql.graft.WriteShim.hadoopConf(spark))
+    val conf = org.apache.spark.sql.graft.WriteShim.hadoopConf(spark)
+    conf.setClassLoader(classOf[DriverWriteFs].getClassLoader)
+    conf.set("fs.file.impl", classOf[DriverWriteFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
     val dataSchema = org.apache.spark.sql.graft.WriteShim.asNullable(schema)
     val factory = format.prepareWrite(spark, job, Map.empty, dataSchema)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
@@ -1819,35 +1838,47 @@ object GraftTable {
       // deleted — readEntries* apply the parent's deletion vectors, and
       // the copy-on-write rewrite therefore MATERIALIZES them (new
       // entries carry no DV)
-      val affectedPaths = affectedFiles(spark, root, parent, touched, keyCol)
-      if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) v
-      else {
-        val affected = parent.files.filter(f => affectedPaths(f.path))
-        val survivors =
-          if (affected.isEmpty) updates
+      // a flat commit on the key arm's driver side whose candidates fit
+      // the write budget takes the one-scan arm; any other, two scans
+      val finish = (m: Manifest) => m.copy(
+        schemaJson = if (evolved) updates.schema.json else parent.schemaJson,
+        stream = streamTxn.map { case (qid, b) =>
+          parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
+        }.orElse(parent.stream))
+      val op = if (evolved) "merge_evolve" else "merge"
+      scanOf(spark, root, parent, touched, keyCol, updateRows) match {
+        case Some((scan, keys)) =>
+          commitCandidates(spark, root, scan, keys,
+            org.apache.spark.sql.graft.WriteShim.collectInternal(updates)
+              .toIndexedSeq, updates.schema, statsCols, clusterCols,
+            numFiles, bloomCols, "upsertDelete", op, commitEmpty)(finish)
+        case None =>
+          val affectedPaths =
+            affectedFiles(spark, root, parent, touched, keyCol)
+          if (!commitEmpty && affectedPaths.isEmpty && updates.isEmpty) v
           else {
-            val base0 = readEntries(spark, root, parent, affected)
-            // evolved commit: rewritten survivors pad the new columns
-            // NULL (rows that never received the column — Delta's
-            // autoMerge semantics); untouched files stay bytes-identical
-            // and read NULL via the absent-column path
-            val base = extraFields.foldLeft(base0)((acc, f) =>
-              acc.withColumn(f.name, lit(null).cast(f.dataType)))
-            touched.untouched(base).unionByName(updates)
+            val affected = parent.files.filter(f => affectedPaths(f.path))
+            val survivors =
+              if (affected.isEmpty) updates
+              else {
+                val base0 = readEntries(spark, root, parent, affected)
+                // evolved commit: rewritten survivors pad the new columns
+                // NULL (rows that never received the column — Delta's
+                // autoMerge semantics); untouched files stay
+                // bytes-identical and read NULL via the absent-column path
+                val base = extraFields.foldLeft(base0)((acc, f) =>
+                  acc.withColumn(f.name, lit(null).cast(f.dataType)))
+                touched.untouched(base).unionByName(updates)
+              }
+            val entries = writeFiles(spark, root, survivors,
+              if (affected.isEmpty) updateRows
+              else addBounds(liveRowsOf(affected), updateRows),
+              statsCols, clusterCols, numFiles, bloomCols,
+              partSpec = partSpecOf(parent))
+            commitOnce(root, "upsertDelete", parent, finish(child(parent,
+              op, parent.files.filterNot(f => affectedPaths(f.path)) ++
+                entries)))
           }
-        val entries = writeFiles(spark, root, survivors,
-          if (affected.isEmpty) updateRows
-          else addBounds(liveRowsOf(affected), updateRows),
-          statsCols, clusterCols, numFiles, bloomCols,
-          partSpec = partSpecOf(parent))
-        commitOnce(root, "upsertDelete", parent, child(parent,
-          if (evolved) "merge_evolve" else "merge",
-          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries)
-          .copy(schemaJson =
-            if (evolved) updates.schema.json else parent.schemaJson,
-            stream = streamTxn.map { case (qid, b) =>
-              parent.stream.getOrElse(Map.empty[String, Long]) + (qid -> b)
-            }.orElse(parent.stream)))
       }
     }
   }
@@ -1919,17 +1950,25 @@ object GraftTable {
     // DV-aware, same as merge: an already-DV-deleted row neither flags
     // its file nor survives the rewrite (which materializes the DV)
     touchedKeys(parent, deleteKeys, keyCol, "delete") { keys =>
-      val affectedPaths = affectedFiles(spark, root, parent, keys, keyCol)
-      if (affectedPaths.isEmpty) parent.snapshot // no empty commit
-      else {
-        val affected = parent.files.filter(f => affectedPaths(f.path))
-        val survivors =
-          keys.untouched(readEntries(spark, root, parent, affected))
-        val entries = writeFiles(spark, root, survivors,
-          liveRowsOf(affected), statsCols, clusterCols, numFiles, bloomCols,
-          partSpec = partSpecOf(parent))
-        commitOnce(root, "delete", parent, child(parent, "delete",
-          parent.files.filterNot(f => affectedPaths(f.path)) ++ entries))
+      scanOf(spark, root, parent, keys, keyCol, 0L) match {
+        case Some((scan, touched)) =>
+          commitCandidates(spark, root, scan, touched, Vector.empty,
+            scan.schema, statsCols, clusterCols, numFiles, bloomCols,
+            "delete", "delete", commitEmpty = false)(identity)
+        case None =>
+          val affectedPaths =
+            affectedFiles(spark, root, parent, keys, keyCol)
+          if (affectedPaths.isEmpty) parent.snapshot // no empty commit
+          else {
+            val affected = parent.files.filter(f => affectedPaths(f.path))
+            val survivors =
+              keys.untouched(readEntries(spark, root, parent, affected))
+            val entries = writeFiles(spark, root, survivors,
+              liveRowsOf(affected), statsCols, clusterCols, numFiles,
+              bloomCols, partSpec = partSpecOf(parent))
+            commitOnce(root, "delete", parent, child(parent, "delete",
+              parent.files.filterNot(f => affectedPaths(f.path)) ++ entries))
+          }
       }
     }
   }
@@ -1964,6 +2003,8 @@ object GraftTable {
     * the driver. */
   private final class DriverKeys(val candidates: List[FileEntry],
       keyCol: String, keys: Seq[Any]) extends TouchedKeys {
+    /** The keys as [[keyValue]]s. */
+    lazy val set: Set[Any] = keys.iterator.map(keyValue).toSet
     private def in = col(keyCol).isin(keys: _*)
     def matching(df: DataFrame): DataFrame = df.where(in)
     def untouched(df: DataFrame): DataFrame =
@@ -1993,49 +2034,33 @@ object GraftTable {
     * built on the driver (a local relation) probes with no job at all.
     *
     * Within the budget, the driver arm chooses candidate files PER KEY,
-    * with zero jobs: a file is a candidate when some key falls in its
-    * [min,max] of `keyCol` and, when the file carries a bloom for an
-    * integral key column, the key passes it (the build's
-    * `bloomPositions` over the key cast to long, so no false negative).
-    * Over the budget, the distributed arm persists the distinct key set
-    * and takes [[keyCandidates]]' overall range (one aggregate). Per-key
-    * candidates are a subset of the range candidates that keeps every
-    * file holding a key, so after the exact check both arms touch the
-    * same files. The key type is checked before the probe, and an
-    * all-null key set fails with the same message on both arms. */
+    * with zero jobs ([[perKeyCandidates]]: range, then bloom). On a flat
+    * table whose candidates' manifest live rows (plus the rows the commit
+    * adds) fit [[writeRowBudget]], the commit then takes the ONE-SCAN arm
+    * ([[scanOf]]): the candidates' rows, DV-aware with `__rel`, are
+    * collected in one job, and the exact check, the survivors and the
+    * rewrite all derive from them on the driver ([[commitCandidates]]) —
+    * no second scan, and the write runs no job. Otherwise the exact
+    * check scans the candidates ([[affectedFiles]]) and the rewrite reads
+    * the affected files again. Over the budget, the distributed arm
+    * persists the distinct key set and takes [[keyCandidates]]' overall
+    * range (one aggregate). Per-key candidates are a subset of the range
+    * candidates that keeps every file holding a key, so after the exact
+    * check every arm touches the same files. The key type is checked
+    * before the probe, and an all-null key set fails with the same
+    * message on both arms. */
   private def touchedKeys[R](parent: Manifest, keys: DataFrame,
       keyCol: String, what: String)(body: TouchedKeys => R): R = {
     val keyType = keys.schema(keyCol).dataType
     requireNumericKey(keyType, keyCol, what)
-    val integral = keyType match {
-      case org.apache.spark.sql.types.ByteType |
-          org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     graft.util.Probes.byBudget(keys.select(col(keyCol)),
         commitKeyBudget.value, null) { rows =>
       val distinct = rows.iterator.map(_.get(0)).distinct.toArray
       val ks = distinct.filter(_ != null)
       if (ks.isEmpty && distinct.nonEmpty)
         throw allNullKeys(keyCol, what, distinct.length)
-      val values = ks.map(_.asInstanceOf[Number].doubleValue)
-      val probes =
-        if (integral) ks.map(k => bloomPositions(k.asInstanceOf[Number]
-          .longValue))
-        else Array.empty[Array[Int]]
-      val candidates = parent.files.filter { f =>
-        val (lo, hi) = (f.mins.get(keyCol), f.maxs.get(keyCol))
-        lazy val bloom = if (!integral) None
-          else f.bloom.flatMap(_.get(keyCol))
-            .map(java.util.Base64.getDecoder.decode)
-        values.indices.exists { i =>
-          lo.forall(_ <= values(i)) && hi.forall(_ >= values(i)) &&
-            bloom.forall(bloomHas(_, probes(i)))
-        }
-      }
-      body(new DriverKeys(candidates, keyCol, ks.toSeq))
+      body(new DriverKeys(perKeyCandidates(parent.files, keyCol, keyType,
+        ks.toSeq), keyCol, ks.toSeq))
     } { ds =>
       // the distinct key set, built once for the key-range agg, the
       // affected-file semi-join and the survivor anti-join
@@ -2043,6 +2068,38 @@ object GraftTable {
       try body(new DistKeys(keyCandidates(parent, distinct, keyCol, what),
         keyCol, distinct))
       finally distinct.unpersist()
+    }
+  }
+
+  /** The driver arm's first pruning level, zero I/O: the files of `files`
+    * where some of the non-NULL `keys` (external values of a numeric
+    * key column of type `keyType`) falls in the file's [min,max] of
+    * `keyCol` and, when the file carries a bloom for an integral key
+    * column, passes it (the build's `bloomPositions` over the key cast to
+    * long, so no false negative). Keeps every file holding a key. */
+  private def perKeyCandidates(files: List[FileEntry], keyCol: String,
+      keyType: DataType, keys: Seq[Any]): List[FileEntry] = {
+    val integral = keyType match {
+      case org.apache.spark.sql.types.ByteType |
+          org.apache.spark.sql.types.ShortType |
+          org.apache.spark.sql.types.IntegerType |
+          org.apache.spark.sql.types.LongType => true
+      case _ => false
+    }
+    val values = keys.map(_.asInstanceOf[Number].doubleValue).toArray
+    val probes =
+      if (integral) keys.map(k => bloomPositions(k.asInstanceOf[Number]
+        .longValue)).toArray
+      else Array.empty[Array[Int]]
+    files.filter { f =>
+      val (lo, hi) = (f.mins.get(keyCol), f.maxs.get(keyCol))
+      lazy val bloom = if (!integral) None
+        else f.bloom.flatMap(_.get(keyCol))
+          .map(java.util.Base64.getDecoder.decode)
+      values.indices.exists { i =>
+        lo.forall(_ <= values(i)) && hi.forall(_ >= values(i)) &&
+          bloom.forall(bloomHas(_, probes(i)))
+      }
     }
   }
 
@@ -2070,6 +2127,143 @@ object GraftTable {
         readEntriesWithPos(spark, root, parent, keys.candidates)
           .select(col(keyCol), col("__rel")))
       .select("__rel"))
+
+  /** A key as the driver arms compare keys, Spark's equality on a numeric
+    * key column for an internal (`Decimal`) or external value alike:
+    * integral keys as Long, floating ones as Double with -0.0 as 0.0 and
+    * every NaN one value, decimals without trailing zeros. */
+  private[graft] def keyValue(v: Any): Any = v match {
+    case null => null
+    case d: org.apache.spark.sql.types.Decimal =>
+      d.toJavaBigDecimal.stripTrailingZeros
+    case d: java.math.BigDecimal => d.stripTrailingZeros
+    case d @ (_: java.lang.Double | _: java.lang.Float) =>
+      val x = d.asInstanceOf[Number].doubleValue
+      if (x.isNaN) NaNKey else if (x == 0.0) 0.0 else x
+    case n: java.lang.Number => n.longValue
+    case other => other
+  }
+
+  private case object NaNKey
+
+  /** The one scan of a driver-arm commit: every live row (DV-aware) of
+    * the parent's candidate `files`, collected in ONE job (none when no
+    * file is a candidate), each in schema order followed by its file's
+    * `__rel`. Affected files, survivors and the rows to write all derive
+    * from it on the driver ([[commitCandidates]]). */
+  private[graft] final class CandidateRows(val parent: Manifest,
+      keyCol: String, val files: List[FileEntry],
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow]) {
+    val schema: StructType = schemaOf(parent)
+    private val keyIdx = schema.fieldIndex(keyCol)
+    private val keyType = schema(keyIdx).dataType
+    def size: Int = rows.length
+    /** Row `i` without its `__rel`, in schema order. */
+    def data(i: Int): org.apache.spark.sql.catalyst.InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array.tabulate[Any](schema.length)(j =>
+          rows(i).get(j, schema(j).dataType)))
+    def rel(i: Int): String = rows(i).getUTF8String(schema.length).toString
+    /** Row `i`'s key as a [[keyValue]]. */
+    def key(i: Int): Any =
+      if (rows(i).isNullAt(keyIdx)) null
+      else keyValue(rows(i).get(keyIdx, keyType))
+    /** The keys of the scanned rows. */
+    lazy val keys: Set[Any] = (0 until size).iterator.map(key).toSet
+  }
+
+  /** The one scan of a commit over the flat `parent` whose candidate
+    * `files` hold at most [[writeRowBudget]] live rows (per the manifest)
+    * together with `extraRows` more rows the commit adds; None otherwise,
+    * and on a partitioned table, which keeps the two-scan path. */
+  private def scanFiles(spark: SparkSession, root: String, parent: Manifest,
+      keyCol: String, files: List[FileEntry],
+      extraRows: Long): Option[CandidateRows] =
+    if (partSpecOf(parent).nonEmpty ||
+        addBounds(liveRowsOf(files), extraRows) > writeRowBudget.value) None
+    else Some(new CandidateRows(parent, keyCol, files,
+      if (files.isEmpty) Array.empty
+      else org.apache.spark.sql.graft.WriteShim.collectInternal(
+        readEntriesWithPos(spark, root, parent, files).select(
+          (schemaOf(parent).fieldNames :+ "__rel").map(n =>
+            col("`" + n.replace("`", "``") + "`")): _*))))
+
+  /** [[scanFiles]] over the candidates of the touched-key set: the one
+    * scan when `keys` took the driver arm, with the keys as
+    * [[keyValue]]s. */
+  private def scanOf(spark: SparkSession, root: String, parent: Manifest,
+      keys: TouchedKeys, keyCol: String,
+      extraRows: Long): Option[(CandidateRows, Set[Any])] = keys match {
+    case d: DriverKeys =>
+      scanFiles(spark, root, parent, keyCol, d.candidates, extraRows)
+        .map(_ -> d.set)
+    case _ => None
+  }
+
+  /** [[scanFiles]] over the per-key candidates of `keys` (non-NULL
+    * external values of the numeric `keyCol`), for a SQL verb that
+    * resolved its key set on the driver. */
+  private[graft] def scanCandidates(spark: SparkSession, root: String,
+      parent: Manifest, keyCol: String, keys: Seq[Any],
+      extraRows: Long): Option[CandidateRows] =
+    scanFiles(spark, root, parent, keyCol, perKeyCandidates(parent.files,
+      keyCol, schemaOf(parent)(keyCol).dataType, keys), extraRows)
+
+  /** The [[keyValue]]s of those of `keys` (non-NULL external values)
+    * that some live row of `scan`'s parent holds: the scanned rows
+    * answer for every key whose candidates were all scanned; the other
+    * candidates of the rest are scanned for them (one job, none when
+    * there are none). */
+  private[graft] def liveKeysAmong(spark: SparkSession, root: String,
+      scan: CandidateRows, keyCol: String, keys: Seq[Any]): Set[Any] = {
+    val scanned = scan.files.map(_.path).toSet
+    val rest = keys.filterNot(k => scan.keys(keyValue(k)))
+    val others = perKeyCandidates(
+      scan.parent.files.filterNot(f => scanned(f.path)), keyCol,
+      scan.schema(keyCol).dataType, rest)
+    val found =
+      if (others.isEmpty) Set.empty[Any]
+      else readEntriesWithPos(spark, root, scan.parent, others)
+        .select(col(keyCol)).where(col(keyCol).isin(rest: _*)).collect()
+        .iterator.map(r => keyValue(r.get(0))).toSet
+    keys.iterator.map(keyValue).filter(k => scan.keys(k) || found(k)).toSet
+  }
+
+  /** The copy-on-write commit of the one-scan arm, with no job of its
+    * own: the affected files are the scanned files holding a row whose
+    * key is `touched` ([[keyValue]]s); their survivors (rows with an
+    * untouched or NULL key, padded NULL to `writeSchema`'s evolution
+    * columns) and `updates` (rows of `writeSchema`) are written on the
+    * driver ([[writeRowsOnDriver]]) and committed once against the
+    * scan's parent as `finish` of the child manifest. Nothing affected
+    * and no updates declines to commit, unless `commitEmpty`. */
+  private[graft] def commitCandidates(spark: SparkSession, root: String,
+      scan: CandidateRows, touched: Set[Any],
+      updates: IndexedSeq[org.apache.spark.sql.catalyst.InternalRow],
+      writeSchema: StructType, statsCols: Seq[String],
+      clusterCols: Seq[String], numFiles: Int, bloomCols: Seq[String],
+      verb: String, op: String, commitEmpty: Boolean)(
+      finish: Manifest => Manifest): Int = {
+    val parent = scan.parent
+    def hit(i: Int): Boolean = { val k = scan.key(i); k != null && touched(k) }
+    val affected = (0 until scan.size).filter(hit).map(scan.rel).toSet
+    if (!commitEmpty && affected.isEmpty && updates.isEmpty) parent.snapshot
+    else {
+      requireNumericStats(writeSchema, statsCols)
+      val pad = Array.fill[Any](writeSchema.length - scan.schema.length)(null)
+      val survivors = (0 until scan.size)
+        .filter(i => affected(scan.rel(i)) && !hit(i)).map { i =>
+          val row = scan.data(i)
+          if (pad.isEmpty) row
+          else new org.apache.spark.sql.catalyst.expressions
+            .GenericInternalRow(row.toSeq(scan.schema).toArray ++ pad)
+        }
+      val entries = writeRowsOnDriver(spark, root, writeSchema,
+        survivors ++ updates, statsCols, clusterCols, numFiles, bloomCols)
+      commitOnce(root, verb, parent, finish(child(parent, op,
+        parent.files.filterNot(f => affected(f.path)) ++ entries)))
+    }
+  }
 
   /** Mark rows of the candidate files whose `keyCol` is touched as
     * deleted, by (file, row ordinal). Returns the per-file NEW ordinals
