@@ -27,8 +27,9 @@ import graft.util.Tables
   *    PageRank graph.
   *
   * Scale posture: the edge derivation is one shuffle on the order key +
-  * one distinct; every iterative op below follows the repo's loop
-  * invariant (localCheckpoint per round via [[graft.util.Iterate]]),
+  * one distinct; every iterative op below runs on the one fixpoint
+  * kernel ([[graft.util.Iterate.fixpoint]]: checkpoint per round,
+  * release of the superseded round, the bound, the registration),
   * budget-dispatched ops go through [[graft.util.Probes.byBudget]], and
   * loops coalesce to a few partitions below 1M edges
   * ([[graft.util.Iterate.coalesceSmall]]) — above that the
@@ -136,29 +137,16 @@ object Graph {
       // empty graph (possible at tiny SF): empty result, stable schema
       Seq.empty[(Long, Int)].toDF("node", "hops")
     } else {
-      val seed = seedRow.getLong(0)
-      var visited = graft.util.Iterate.checkpoint(
-        Seq((seed, 0)).toDF("node", "hops"))
-      // the frontier must be checkpointed too: the next round's plan
-      // reads it, so it cannot reference blocks the round releases
-      var frontier = visited
-      for (h <- 1 to 4) {
-        val nextF = graft.util.Iterate.checkpoint(
-          frontier._1.select(col("node").as("v"))
+      // one state: visited, whose round-(h-1) rows are the frontier
+      graft.util.Iterate.rounds("graph_bfs",
+          Seq((seedRow.getLong(0), 0)).toDF("node", "hops"), 4) {
+        (visited, round) =>
+          visited.union(visited.where(col("hops") === round.n - 1)
+            .select(col("node").as("v"))
             .join(g, "v").select(col("u").as("node")).distinct()
-            .join(visited._1, Seq("node"), "left_anti")
-            .withColumn("hops", lit(h)))
-        val grown = graft.util.Iterate.checkpoint(
-          visited._1.union(nextF._1))
-        if (frontier._2 ne visited._2)
-          frontier._2.unpersist(blocking = false)
-        visited._2.unpersist(blocking = false)
-        frontier = nextF
-        visited = grown
-      }
-      frontier._2.unpersist(blocking = false)
-      graft.util.Iterate.registerResult("graph_bfs", visited._2)
-      visited._1.orderBy("node")
+            .join(visited, Seq("node"), "left_anti")
+            .withColumn("hops", lit(round.n)))
+      }.orderBy("node")
     }
   }
 
@@ -235,22 +223,16 @@ object Graph {
       val deg = g.groupBy(col("v").as("node"))
         .agg(count(lit(1)).as("od"))
       val nodes = g.select(col("v").as("node")).distinct()
-      var cur = graft.util.Iterate.checkpoint(
-        nodes.withColumn("rank", lit(1000000000000L)))
-      for (_ <- 1 to 8) {
-        val share = cur._1.join(deg, "node")
+      graft.util.Iterate.rounds("graph_pagerank",
+          nodes.withColumn("rank", lit(1000000000000L)), 8) { (cur, _) =>
+        val share = cur.join(deg, "node")
           .select(col("node").as("v"), expr("rank div od").as("c"))
         val contrib = share.join(g, "v")
           .groupBy(col("u").as("node")).agg(sum(col("c")).as("inc"))
-        val next = graft.util.Iterate.checkpoint(
-          nodes.join(contrib, Seq("node"), "left")
-            .select(col("node"), (lit(150000000000L) +
-              expr("coalesce(inc, 0L) * 85 div 100")).as("rank")))
-        cur._2.unpersist(blocking = false)
-        cur = next
-      }
-      graft.util.Iterate.registerResult("graph_pagerank", cur._2)
-      cur._1.orderBy(desc("rank"), asc("node"))
+        nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"), (lit(150000000000L) +
+            expr("coalesce(inc, 0L) * 85 div 100")).as("rank"))
+      }.orderBy(desc("rank"), asc("node"))
     }
   }
 
@@ -380,7 +362,7 @@ object Graph {
     * peel runs as a driver loop over the collected edge set (identical
     * integer logic, arm-equality-tested); above it, each round is one
     * degree aggregation + two semi-joins back onto the edge list, with
-    * localCheckpoint + count per the repo's loop invariant. */
+    * a checkpoint + count on the fixpoint kernel. */
   val graph_kcore: Q = (s, d) =>
     kcoreOf(s, supplierEdges(s, d, 59), Llm.CcDriverBudgetEdges,
       memoKey = "graph_kcore|" + d)
@@ -420,35 +402,29 @@ object Graph {
       .groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
 
   private def kcoreDistributed(edges: DataFrame, n0: Long): DataFrame = {
-    var cur = graft.util.Iterate.checkpoint(
-      graft.util.Iterate.coalesceSmall(edges, n0))
     var size = n0
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      val keep = cur._1.select(col("a").as("v"))
-        .unionAll(cur._1.select(col("b").as("v")))
+    // the bound trips on a CHANGING round past KcoreMaxRounds: round
+    // KcoreMaxRounds + 1 may still run to confirm the fixpoint
+    graft.util.Iterate.fixpoint("graph_kcore",
+        graft.util.Iterate.coalesceSmall(edges, n0), KcoreMaxRounds + 1,
+        s"2-core peel exceeded $KcoreMaxRounds rounds — raise " +
+          "KcoreMaxRounds AND the oracle unroll together") { (cur, _) =>
+      val keep = cur.select(col("a").as("v"))
+        .unionAll(cur.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("dg"))
         .where(col("dg") >= 2).select("v")
-      val next = graft.util.Iterate.checkpoint(
-        cur._1
-          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-          .select("a", "b"))
-      val nsize = next._1.count()
-      changed = nsize != size
-      if (changed) {
-        rounds += 1
-        require(rounds <= KcoreMaxRounds,
-          s"2-core peel exceeded $KcoreMaxRounds rounds — raise " +
-            "KcoreMaxRounds AND the oracle unroll together")
+      cur
+        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
+        .select("a", "b")
+    } { (_, next, r) =>
+      r > 0 && {
+        val nsize = next.count()
+        val same = nsize == size
+        size = nsize
+        same
       }
-      cur._2.unpersist(blocking = false)
-      cur = next
-      size = nsize
-    }
-    graft.util.Iterate.registerResult("graph_kcore", cur._2)
-    cur._1.select(explode(array(col("a"), col("b"))).as("node"))
+    }._1.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("core_deg"))
       .orderBy("node")
   }
@@ -471,7 +447,7 @@ object Graph {
     * above it each round is one join of the adjacency with the label
     * relation, one (node, label) count, and one row_number window —
     * shuffle keys node then (node, label), the Pregel-style cost —
-    * localCheckpointed per the repo's loop invariant. The oracle unrolls
+    * checkpointed by the fixpoint kernel. The oracle unrolls
     * the same 4 rounds as chained CTEs. */
   val graph_lpa: Q = (s, d) => lpaLabels(s, d, 11).orderBy("node")
 
@@ -532,24 +508,18 @@ object Graph {
         .join(nodes, Seq("node"), "left_anti").limit(1).count() == 0,
         "lpaOf requires a symmetrized adjacency: every target node " +
           "must also appear as a source (run symmetrize() first)")
-      var cur = graft.util.Iterate.checkpoint(
-        nodes.withColumn("lbl", col("node")))
-      for (_ <- 1 to LpaRounds) {
+      graft.util.Iterate.rounds("graph_lpa",
+          nodes.withColumn("lbl", col("node")), LpaRounds) { (cur, _) =>
         val freq = g
-          .join(cur._1.select(col("node").as("u"), col("lbl")), "u")
+          .join(cur.select(col("node").as("u"), col("lbl")), "u")
           .groupBy(col("v"), col("lbl"))
           .agg(count(lit(1)).as("c"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("v").orderBy(desc("c"), asc("lbl"))
-        val next = graft.util.Iterate.checkpoint(
-          freq.withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1)
-            .select(col("v").as("node"), col("lbl")))
-        cur._2.unpersist(blocking = false)
-        cur = next
-      }
-      graft.util.Iterate.registerResult("graph_lpa", cur._2)
-      cur._1.select(col("node"), col("lbl").as("label")).orderBy("node")
+        freq.withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1)
+          .select(col("v").as("node"), col("lbl"))
+      }.select(col("node"), col("lbl").as("label")).orderBy("node")
     }
   }
 
@@ -675,9 +645,9 @@ object Graph {
     * bounded: k is FIXED, so the plan is k−1 static join+distinct
     * levels (each level dedups before the next expands — the
     * semi-naive discipline; without the per-level distinct a dense
-    * level multiplies paths combinatorially), the frontier
-    * localCheckpointed between levels per the repo's iterative-plan
-    * invariant. Zero-out-degree nodes report 0 via the node-relation
+    * level multiplies paths combinatorially), each level checkpointed
+    * by the fixpoint kernel (the iterative-plan invariant).
+    * Zero-out-degree nodes report 0 via the node-relation
     * left join, never drop out. k is 2 BY MEASUREMENT: the m=23
     * directed graph carries a giant SCC (24.7k edges at sf0.1), so the
     * ≤3 closure is ~n·|reach| ≈ millions of pairs (measured ~4 s) for
@@ -726,27 +696,19 @@ object Graph {
       }
       s.createDataset(out.toSeq).toDF("node", s"n_reach$k")
     } { raw =>
-      // small, reused k+1 times: materialize once, truncate lineage;
-      // superseded frontiers release their blocks, the two relations the
-      // RESULT reads (edges + final walk) outlive the loop and are
-      // released by the NEXT invocation (the Iterate.registerResult
-      // contract every Graph loop follows — review finding, r13)
-      val e = graft.util.Iterate.checkpoint(raw.toDF().distinct())
-      var walk = e
-      for (_ <- 2 to k) {
-        val next = graft.util.Iterate.checkpoint(
-          walk._1.union(
-            walk._1.as("w").join(e._1.as("x"), col("w.t") === col("x.s"))
-              .select(col("w.s").as("s"), col("x.t").as("t")))
-            .distinct())
-        if (walk._2 ne e._2) walk._2.unpersist(blocking = false)
-        walk = next
+      // e is read by every level: a loop input, cached for the loop; the
+      // final walk contains e, so it alone yields the node set
+      val e = raw.toDF().distinct()
+      val walk = graft.util.Iterate.rounds("graph_reach", e, k - 1,
+          inputs = Seq(e)) { (walk, _) =>
+        walk.union(
+          walk.as("w").join(e.as("x"), col("w.t") === col("x.s"))
+            .select(col("w.s").as("s"), col("x.t").as("t")))
+          .distinct()
       }
-      val nodes = e._1.select(col("s").as("node"))
-        .union(e._1.select(col("t").as("node"))).distinct()
-      graft.util.Iterate.registerResult("graph_reach_edges", e._2)
-      graft.util.Iterate.registerResult("graph_reach_walk", walk._2)
-      nodes.join(walk._1.groupBy("s").agg(count(lit(1)).as("n")),
+      val nodes = walk.select(col("s").as("node"))
+        .union(walk.select(col("t").as("node"))).distinct()
+      nodes.join(walk.groupBy("s").agg(count(lit(1)).as("n")),
           nodes("node") === col("s"), "left")
         .select(col("node"),
           coalesce(col("n"), lit(0L)).as(s"n_reach$k"))
@@ -762,7 +724,7 @@ object Graph {
           .as[(Long, Long)],
         driverBudgetEdges, memoKey) { es =>
       s.createDataset(tarjanScc(es)).toDF("node", "scc")
-    }(edges => sccDistributed(s, edges.toDF()))
+    }(edges => sccDistributed(edges.toDF()))
   }
 
   /** Iterative (explicit-stack) Tarjan — the driver arm. Linear in
@@ -824,111 +786,60 @@ object Graph {
     * matches, so progress is guaranteed; real-world graphs shed most
     * SCCs per round (the FW-BW observation), while an adversarially
     * id-ordered chain degrades toward one SCC per round — the loud
-    * 128-round bound names that case instead of hanging. Per round:
-    * two min-propagation fixpoints (one hash-join + one aggregate per
-    * hop, O(longest chain) hops), every loop state localCheckpoint'd
-    * per the repo invariant. Nothing wider than (node, label) ever
-    * shuffles. */
-  private[graft] def sccDistributed(s: SparkSession,
-      edgesAll: DataFrame): DataFrame = {
-    val sp = s
-    import sp.implicits._
-    var (edges, edgesR) = graft.util.Iterate.checkpoint(edgesAll)
-    var (remaining, remR) = graft.util.Iterate.checkpoint(
-      edges.select(col("s").as("node"))
-        .union(edges.select(col("t").as("node"))).distinct())
-    var (done, doneR) = graft.util.Iterate.checkpoint(
-      sp.emptyDataset[(Long, Long)].toDF("node", "scc"))
-    var round = 0
-    // registered flips only after the result RDD is handed to the
-    // result registry: every loud exit (the 128-round bound, a failed
-    // propagation) must release the accumulated done blocks too, per
-    // the unpersist-in-finally invariant (review finding, r13)
-    var registered = false
-    try {
-      while (remaining.limit(1).count() > 0) {
-        require(round < 128,
-          "sccDistributed exceeded 128 pivot rounds — adversarially " +
-            "chain-ordered ids; raise the driver budget for this graph")
-        val (f, fR) = minReach(edges, remaining, forward = true, "fmin")
-        val mChkR = try {
-          val (b, bR) = minReach(edges, remaining, forward = false, "bmin")
-          try {
-            graft.util.Iterate.checkpoint(f.join(b, "node")
-              .where(col("fmin") === col("bmin"))
-              .select(col("node"), col("fmin").as("scc")))
-          } finally bR.unpersist(blocking = false)
-        } finally fR.unpersist(blocking = false)
-        val (mChk, mR) = mChkR
-        val (nextDone, nextDoneR) =
-          graft.util.Iterate.checkpoint(done.union(mChk))
-        val (nextRem, nextRemR) = graft.util.Iterate.checkpoint(
-          remaining.join(mChk, Seq("node"), "left_anti"))
-        val (nextEdges, nextEdgesR) = graft.util.Iterate.checkpoint(
-          edges.join(nextRem.select(col("node").as("s")), Seq("s"), "left_semi")
-            .join(nextRem.select(col("node").as("t")), Seq("t"), "left_semi")
-            .select("s", "t"))
-        mR.unpersist(blocking = false)
-        doneR.unpersist(blocking = false); done = nextDone; doneR = nextDoneR
-        remR.unpersist(blocking = false)
-        remaining = nextRem; remR = nextRemR
-        edgesR.unpersist(blocking = false)
-        edges = nextEdges; edgesR = nextEdgesR
-        round += 1
-      }
-      graft.util.Iterate.registerResult("graph_scc", doneR)
-      registered = true
-      done
-    } finally {
-      remR.unpersist(blocking = false)
-      edgesR.unpersist(blocking = false)
-      if (!registered) doneR.unpersist(blocking = false)
-    }
-  }
+    * 128-round bound names that case instead of hanging. The round
+    * state is one (node, scc) relation, scc null while the node
+    * remains; each round caches the edges among the remaining nodes
+    * and runs two min-propagation fixpoints over them (one hash-join +
+    * one aggregate per hop, O(longest chain) hops), nested loops of
+    * the same kernel. Nothing wider than (node, label) ever shuffles. */
+  private[graft] def sccDistributed(edges: DataFrame): DataFrame =
+    graft.util.Iterate.fixpoint("graph_scc",
+        edges.select(col("s").as("node"))
+          .union(edges.select(col("t").as("node"))).distinct()
+          .select(col("node"), lit(null).cast("long").as("scc")),
+        128,
+        "sccDistributed exceeded 128 pivot rounds — adversarially " +
+          "chain-ordered ids; raise the driver budget for this graph") {
+      (lbl, round) =>
+        val remaining = lbl.where(col("scc").isNull).select("node")
+        val live = round.cache(edges
+          .join(remaining.select(col("node").as("s")), Seq("s"), "left_semi")
+          .join(remaining.select(col("node").as("t")), Seq("t"), "left_semi")
+          .select("s", "t"))
+        val f = minReach(round, live, remaining, forward = true, "fmin")
+        val b = minReach(round, live, remaining, forward = false, "bmin")
+        val matched = f.join(b, "node").where(col("fmin") === col("bmin"))
+          .select(col("node"), col("fmin").as("m"))
+        lbl.join(matched, Seq("node"), "left")
+          .select(col("node"), coalesce(col("scc"), col("m")).as("scc"))
+    } { (_, lbl, _) =>
+      lbl.where(col("scc").isNull).limit(1).count() == 0
+    }._1
 
   /** Fixpoint of lbl(v) = min(v, min over v→u of lbl(u)) restricted to
     * `nodes` — the min node reachable along the edge direction
     * (`forward = false` flips the edges for backward reach). One
     * equi-join + one aggregate per hop; converges in O(longest
-    * shortest-path chain) hops, loudly bounded. */
-  private def minReach(edgesIn: DataFrame, nodes: DataFrame,
-      forward: Boolean, out: String)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    // the forward direction reads the caller's already-checkpointed
-    // edges verbatim — re-checkpointing it would materialize a
-    // redundant full copy per round (review finding, r13); only the
-    // flipped set needs its own checkpoint
-    val (e, eR) =
-      if (forward) (edgesIn, None)
-      else {
-        val c = graft.util.Iterate.checkpoint(
-          edgesIn.select(col("t").as("s"), col("s").as("t")))
-        (c._1, Some(c._2))
-      }
-    var (lbl, lblR) = graft.util.Iterate.checkpoint(
-      nodes.select(col("node"), col("node").as("m")))
-    try {
-      var changed = 1L
-      var hops = 0
-      while (changed > 0) {
-        require(hops < 256,
-          "minReach exceeded 256 hops — cycle bookkeeping broke")
+    * shortest-path chain) hops, loudly bounded. A nested loop of
+    * `round`, which releases its result. */
+  private def minReach(round: graft.util.Iterate.Round, edges: DataFrame,
+      nodes: DataFrame, forward: Boolean, out: String): DataFrame = {
+    val e =
+      if (forward) edges
+      else edges.select(col("t").as("s"), col("s").as("t"))
+    round.fixpoint(nodes.select(col("node"), col("node").as("m")), 256,
+        "minReach exceeded 256 hops — cycle bookkeeping broke") {
+      (lbl, _) =>
         val pulled = e
           .join(lbl.select(col("node").as("t"), col("m").as("tm")), "t")
           .groupBy(col("s").as("node")).agg(min(col("tm")).as("pm"))
-        val next = lbl.join(pulled, Seq("node"), "left")
+        lbl.join(pulled, Seq("node"), "left")
           .select(col("node"),
             least(col("m"), coalesce(col("pm"), col("m"))).as("m"))
-        val (nChk, nR) = graft.util.Iterate.checkpoint(next)
-        changed = nChk.join(
-            lbl.select(col("node"), col("m").as("m0")), "node")
-          .where(col("m") < col("m0")).limit(1).count()
-        lblR.unpersist(blocking = false)
-        lbl = nChk; lblR = nR
-        hops += 1
-      }
-      (lbl.select(col("node"), col("m").as(out)), lblR)
-    } finally eR.foreach(_.unpersist(blocking = false))
+    } { (lbl, next, r) =>
+      r > 0 && next.join(lbl.select(col("node"), col("m").as("m0")), "node")
+        .where(col("m") < col("m0")).limit(1).count() == 0
+    }.select(col("node"), col("m").as(out))
   }
 
   /** The persisted SCC-condensation edge relation (cs, ct — distinct
@@ -1039,39 +950,23 @@ object Graph {
   }
 
   private def topoLayersDistributed(comps: DataFrame,
-      ced: DataFrame): DataFrame = {
-    var (lay, layR) = graft.util.Iterate.checkpoint(
-      comps.select(col("scc"), lit(0).as("layer")))
-    var registered = false
-    try {
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0) {
-        require(rounds < 128,
-          "topoLayersDistributed exceeded 128 relaxation rounds — the " +
-            "condensation holds a cycle or a >128-layer chain")
-        val pushed = ced
-          .join(lay.select(col("scc").as("cs"), col("layer").as("ls")),
-            "cs")
-          .groupBy(col("ct").as("scc"))
-          .agg(max(col("ls") + 1).as("pushed"))
-        val next = lay.join(pushed, Seq("scc"), "left")
-          .select(col("scc"),
-            greatest(col("layer"), coalesce(col("pushed"), col("layer")))
-              .as("layer"))
-        val (nChk, nR) = graft.util.Iterate.checkpoint(next)
-        changed = nChk.join(
-            lay.select(col("scc"), col("layer").as("l0")), "scc")
-          .where(col("layer") > col("l0")).limit(1).count()
-        layR.unpersist(blocking = false)
-        lay = nChk; layR = nR
-        rounds += 1
-      }
-      graft.util.Iterate.registerResult("graph_topo", layR)
-      registered = true
-      lay
-    } finally if (!registered) layR.unpersist(blocking = false)
-  }
+      ced: DataFrame): DataFrame =
+    graft.util.Iterate.fixpoint("graph_topo",
+        comps.select(col("scc"), lit(0).as("layer")), 128,
+        "topoLayersDistributed exceeded 128 relaxation rounds — the " +
+          "condensation holds a cycle or a >128-layer chain") { (lay, _) =>
+      val pushed = ced
+        .join(lay.select(col("scc").as("cs"), col("layer").as("ls")), "cs")
+        .groupBy(col("ct").as("scc"))
+        .agg(max(col("ls") + 1).as("pushed"))
+      lay.join(pushed, Seq("scc"), "left")
+        .select(col("scc"),
+          greatest(col("layer"), coalesce(col("pushed"), col("layer")))
+            .as("layer"))
+    } { (lay, next, r) =>
+      r > 0 && next.join(lay.select(col("scc"), col("layer").as("l0")), "scc")
+        .where(col("layer") > col("l0")).limit(1).count() == 0
+    }._1
 
   /** The weighted directed derivation: the same m=23 orientation as
     * [[directedSupplierEdges]], but each edge carries the co-order
@@ -1134,7 +1029,7 @@ object Graph {
     * it additionally tracks the minimum HOP count among min-distance
     * paths to certify the [[SsspUnrollRounds]] bound); distributed
     * Bellman–Ford min-relaxation rounds above (each round one shuffle
-    * join on the frontier + one min-aggregate, localCheckpointed per
+    * join on the frontier + one min-aggregate, checkpointed per
     * the iterative invariant, loudly bounded). Exact BIGINT distances
     * end to end — no float discipline needed. Oracle: the identical
     * Bellman–Ford UNROLLED [[SsspUnrollRounds]] rounds as chained CTEs
@@ -1219,38 +1114,25 @@ object Graph {
   /** Distributed arm: Bellman–Ford min-relaxation to fixpoint, one
     * shuffle join + one min-aggregate per round, loudly bounded by the
     * shared unroll constant. */
-  private def ssspDistributed(edges: DataFrame, src: Long): DataFrame = {
-    var (dist, distR) = graft.util.Iterate.checkpoint(
-      edges.sparkSession.range(1).select(lit(src).as("node"),
-        lit(0L).as("dist")))
-    var registered = false
-    try {
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0) {
-        require(rounds < SsspUnrollRounds,
-          s"ssspDistributed exceeded $SsspUnrollRounds relaxation " +
-            "rounds — raise SsspUnrollRounds in lockstep with the oracle")
+  private def ssspDistributed(edges: DataFrame, src: Long): DataFrame =
+    graft.util.Iterate.fixpoint("graph_sssp",
+        edges.sparkSession.range(1).select(lit(src).as("node"),
+          lit(0L).as("dist")),
+        SsspUnrollRounds,
+        s"ssspDistributed exceeded $SsspUnrollRounds relaxation " +
+          "rounds — raise SsspUnrollRounds in lockstep with the oracle") {
+      (dist, _) =>
         val relaxed = dist.join(edges, dist("node") === edges("s"))
           .select(col("t").as("node"), (col("dist") + col("w")).as("nd"))
-        val next = dist.select(col("node"), col("dist").as("nd"))
+        dist.select(col("node"), col("dist").as("nd"))
           .union(relaxed)
           .groupBy("node").agg(min(col("nd")).as("dist"))
-        val (nChk, nR) = graft.util.Iterate.checkpoint(next)
-        changed = nChk.join(
-            dist.select(col("node"), col("dist").as("d0")),
-            Seq("node"), "left")
-          .where(col("d0").isNull || col("dist") < col("d0"))
-          .limit(1).count()
-        distR.unpersist(blocking = false)
-        dist = nChk; distR = nR
-        rounds += 1
-      }
-      graft.util.Iterate.registerResult("graph_sssp", distR)
-      registered = true
-      dist
-    } finally if (!registered) distR.unpersist(blocking = false)
-  }
+    } { (dist, next, r) =>
+      r > 0 && next.join(dist.select(col("node"), col("dist").as("d0")),
+          Seq("node"), "left")
+        .where(col("d0").isNull || col("dist") < col("d0"))
+        .limit(1).count() == 0
+    }._1
 
   /** Source-set size for [[graph_closeness]]: the S smallest node ids —
     * deterministic in both engines (a total order, no sampling seed).
@@ -1317,44 +1199,32 @@ object Graph {
 
   /** Distributed arm: ONE Bellman–Ford min-relaxation fixpoint over
     * (src, node)-keyed state — all sources relax together, each round
-    * one shuffle join + one min-aggregate, localCheckpointed per the
+    * one shuffle join + one min-aggregate, checkpointed per the
     * iterative invariant, loudly bounded by the shared unroll constant. */
   private def closenessDistributed(s: SparkSession, edges: DataFrame,
       srcs: Seq[Long]): DataFrame = {
     val sp = s
     import sp.implicits._
-    var (dist, distR) = graft.util.Iterate.checkpoint(
-      srcs.toDF("src").select(col("src"), col("src").as("node"),
-        lit(0L).as("dist")))
-    var registered = false
-    try {
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0) {
-        require(rounds < SsspUnrollRounds,
-          s"closenessDistributed exceeded $SsspUnrollRounds relaxation " +
-            "rounds — raise SsspUnrollRounds in lockstep with the oracle")
+    graft.util.Iterate.fixpoint("graph_closeness",
+        srcs.toDF("src").select(col("src"), col("src").as("node"),
+          lit(0L).as("dist")),
+        SsspUnrollRounds,
+        s"closenessDistributed exceeded $SsspUnrollRounds relaxation " +
+          "rounds — raise SsspUnrollRounds in lockstep with the oracle") {
+      (dist, _) =>
         val relaxed = dist.join(edges, dist("node") === edges("s"))
           .select(col("src"), col("t").as("node"),
             (col("dist") + col("w")).as("nd"))
-        val next = dist.select(col("src"), col("node"),
-            col("dist").as("nd"))
+        dist.select(col("src"), col("node"), col("dist").as("nd"))
           .union(relaxed)
           .groupBy("src", "node").agg(min(col("nd")).as("dist"))
-        val (nChk, nR) = graft.util.Iterate.checkpoint(next)
-        changed = nChk.join(
-            dist.select(col("src"), col("node"), col("dist").as("d0")),
-            Seq("src", "node"), "left")
-          .where(col("d0").isNull || col("dist") < col("d0"))
-          .limit(1).count()
-        distR.unpersist(blocking = false)
-        dist = nChk; distR = nR
-        rounds += 1
-      }
-      graft.util.Iterate.registerResult("graph_closeness", distR)
-      registered = true
-      dist
-    } finally if (!registered) distR.unpersist(blocking = false)
+    } { (dist, next, r) =>
+      r > 0 && next.join(
+          dist.select(col("src"), col("node"), col("dist").as("d0")),
+          Seq("src", "node"), "left")
+        .where(col("d0").isNull || col("dist") < col("d0"))
+        .limit(1).count() == 0
+    }._1
   }
 
   val queries: Seq[(String, Q)] = Seq(

@@ -1048,16 +1048,16 @@ object Relational {
     * < 10. Each customer walks to its ROOT ancestor, emitting (key,
     * root, depth).
     *
-    * Loop shape (the repo's iterative invariant): the edge relation is
-    * cached once; each round joins the still-walking frontier to it —
-    * one keyed shuffle, or a broadcast when the edge side fits — and
-    * localCheckpoints (lineage cut per CLAUDE.md; a recursive self-join
-    * otherwise grows the plan exponentially). The frontier only
-    * SHRINKS (rows retire as they reach a root), so rounds =
-    * O(hierarchy depth) with monotonically falling cost — the same
-    * convergence-counted loop as connected components, no fixed round
-    * bound. The oracle is DuckDB's native WITH RECURSIVE over the same
-    * edge relation. */
+    * Loop shape: a [[graft.util.Iterate.fixpoint]] loop over the cached
+    * edge relation; each round joins the still-walking frontier to it —
+    * one keyed shuffle, or a broadcast when the edge side fits. The
+    * frontier only SHRINKS (rows retire as they reach a root), so
+    * rounds = O(hierarchy depth) with monotonically falling cost — the
+    * same convergence-counted loop as connected components. Its bound,
+    * 19 rounds, is one past the longest walk any Long key can take (a
+    * 19-digit key reaches a root in 18 `div 10` steps), so no valid
+    * input can trip it. The oracle is DuckDB's native WITH RECURSIVE
+    * over the same edge relation. */
   val rel_recursive: Q = (s, d) =>
     relRecursiveOf(s, d, Llm.CcDriverBudgetEdges)
 
@@ -1094,21 +1094,16 @@ object Relational {
           expr("c_custkey div 10").as("parent"))
       val base = keys.select(col("c_custkey").as("key"),
         col("c_custkey").as("node"), lit(0).as("depth"))
-      var cur = graft.util.Iterate.checkpoint(base)
-      var walking = cur._1.where(col("node") >= 10).count()
-      while (walking > 0) {
-        val done = cur._1.where(col("node") < 10)
-        val step = cur._1.where(col("node") >= 10)
+      graft.util.Iterate.fixpoint("rel_recursive", base, 19,
+          "rel_recursive exceeded 19 rounds — every Long key reaches a " +
+            "root within 18 div-10 steps, so the parent derivation no " +
+            "longer matches the oracle's recursive CTE") { (cur, _) =>
+        cur.where(col("node") < 10).unionAll(cur.where(col("node") >= 10)
           .join(edges, col("node") === col("child"))
           .select(col("key"), col("parent").as("node"),
-            (col("depth") + 1).as("depth"))
-        val next = graft.util.Iterate.checkpoint(done.unionAll(step))
-        cur._2.unpersist(blocking = false)
-        cur = next
-        walking = cur._1.where(col("node") >= 10).count()
-      }
-      graft.util.Iterate.registerResult("rel_recursive", cur._2)
-      cur._1.select(col("key"), col("node").as("root"), col("depth"))
+            (col("depth") + 1).as("depth")))
+      } { (_, cur, _) => cur.where(col("node") >= 10).count() == 0 }
+        ._1.select(col("key"), col("node").as("root"), col("depth"))
         .orderBy("key")
     }
   }

@@ -279,52 +279,23 @@ object Sources {
     val norm = tasks.select("gid", "parent")
       .join(gids, col("parent") === col("pg"), "left")
       .select(col("gid"), col("pg").as("parent"))
-      .cache()
     val parentOf = norm.select(col("gid").as("rg"), col("parent").as("rp"))
-    // localCheckpoint per round truncates lineage — the self-join doubles
-    // the logical plan every round, and Catalyst's analysis on a 2^k-node
-    // plan OOMs the driver long before the round bound trips (observed on
-    // the cycle fixture). On a real cluster prefer a reliable checkpoint
-    // dir; the shape (materialize each round, plan stays O(1)) is the same.
-    // Iterate.checkpoint cuts lineage per round and releases each
-    // superseded round's blocks the moment the next materializes;
-    // try/finally so the non-convergence require (cycles) can't leak the
-    // cached edge normalization into the session
-    var cur: (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) =
-      null
-    var done = false
-    try {
-      cur = graft.util.Iterate.checkpoint(norm.select(col("gid"),
-        coalesce(col("parent"), col("gid")).as("root")))
-      def unresolvedCount(m: DataFrame): Long =
-        m.join(parentOf, col("root") === col("rg"))
-          .where(col("rp").isNotNull).count()
-      var unresolved = unresolvedCount(cur._1)
-      var rounds = 0
-      while (unresolved > 0) {
-        require(rounds < 12,
-          s"root resolution did not converge within depth 2^12: $unresolved " +
-            "chains unresolved — parent cycle or pathological nesting")
-        val hop = cur._1.select(col("gid").as("hg"), col("root").as("hr"))
-        val next = graft.util.Iterate.checkpoint(
-          cur._1.join(hop, col("root") === col("hg"))
-            .select(col("gid"), col("hr").as("root")))
-        unresolved = unresolvedCount(next._1)
-        cur._2.unpersist(blocking = false)
-        cur = next
-        rounds += 1
-      }
-      done = true
-      // bound retention to one live result across repeated invocations
-      // (Bench runs this three times per JVM)
-      graft.util.Iterate.registerResult("asana_roots", cur._2)
-      cur._1
-    } finally {
-      norm.unpersist()
-      // only a thrown round (cycle) releases the in-flight mapping; the
-      // returned result keeps its blocks
-      if (!done && cur != null) cur._2.unpersist(blocking = false)
-    }
+    var unresolved = 0L
+    // norm is read by the seed and every convergence test: a loop input
+    graft.util.Iterate.fixpoint("asana_roots",
+        norm.select(col("gid"), coalesce(col("parent"), col("gid")).as("root")),
+        12,
+        s"root resolution did not converge within depth 2^12: $unresolved " +
+          "chains unresolved — parent cycle or pathological nesting",
+        inputs = Seq(norm)) { (cur, _) =>
+      val hop = cur.select(col("gid").as("hg"), col("root").as("hr"))
+      cur.join(hop, col("root") === col("hg"))
+        .select(col("gid"), col("hr").as("root"))
+    } { (_, cur, _) =>
+      unresolved = cur.join(parentOf, col("root") === col("rg"))
+        .where(col("rp").isNotNull).count()
+      unresolved == 0
+    }._1
   }
 
   /** Subtask-hierarchy flattening: every task resolved to its ROOT task

@@ -2845,10 +2845,15 @@ object GraftTable {
     // borrowed (absolute-path) entries of a shallow clone are NOT owned:
     // vacuum on the clone must never reach into the source's storage
     val owned = dead.filterNot(_.startsWith("/"))
-    owned.foreach { p =>
-      Files.deleteIfExists(Paths.get(root, p)); ()
-    }
+    owned.foreach(p => deleteWithCrc(Paths.get(root, p)))
     owned.size
+  }
+
+  /** Delete a data file or dv sidecar together with the Hadoop checksum
+    * sidecar (`.<name>.crc`) the distributed writer leaves next to it. */
+  private def deleteWithCrc(f: java.nio.file.Path): Unit = {
+    Files.deleteIfExists(f)
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
   }
 
   /** Delete data files referenced by NO live manifest — the leftovers of
@@ -2863,10 +2868,11 @@ object GraftTable {
     * — an in-flight writer has landed its files but not yet linked its
     * manifest, and sweeping those would break its commit. Production
     * formats use the same age heuristic; 0 (sweep everything, test-only)
-    * must only be used when no writer can be in flight. Commit dirs left
-    * empty (nothing live, e.g. only a _SUCCESS marker remains) are
-    * removed with their markers. Returns the number of data files
-    * deleted. */
+    * must only be used when no writer can be in flight. A swept file
+    * takes its `.crc` sidecar with it; commit dirs left with no data
+    * file and nothing younger than the cutoff (e.g. only _SUCCESS/.crc
+    * markers remain) are removed with their markers. Returns the number
+    * of data files deleted. */
   def removeOrphans(root: String, olderThanMs: Long): Int = {
     val latest = latestSnapshot(root)
     val live = ((1 to latest)
@@ -2915,9 +2921,10 @@ object GraftTable {
         .filter(Files.isRegularFile(_)).toList
       // parquet data files and .bin dv sidecars are sweep candidates
       // (a crashed delete_mor strands its sidecar exactly like a crashed
-      // write strands its parquet); _SUCCESS/.crc markers stay while ANY
-      // data in the dir is live (a live file's checksum must not be
-      // stranded) and go only with a dead dir
+      // write strands its parquet), each swept with its .crc; a live
+      // file keeps its own. A dir with no data file left and nothing
+      // younger than the cutoff (e.g. one expireSnapshots emptied down
+      // to _SUCCESS/.crc markers) goes whole
       val parquets = files.filter { f =>
         val n = f.getFileName.toString
         n.endsWith(".parquet") || n.endsWith(".bin")
@@ -2926,8 +2933,9 @@ object GraftTable {
         live(rootPath.relativize(f).toString) ||
           Files.getLastModifiedTime(f).toMillis > cutoff
       }
-      sweep.foreach { f => Files.delete(f); removed += 1 }
-      if (kept.isEmpty && sweep.nonEmpty)
+      sweep.foreach { f => deleteWithCrc(f); removed += 1 }
+      if (kept.isEmpty && files.forall(f => !Files.exists(f) ||
+          Files.getLastModifiedTime(f).toMillis <= cutoff))
         Files.walk(cd).iterator().asScala.toList.reverse
           .foreach(p => Files.deleteIfExists(p))
     }
