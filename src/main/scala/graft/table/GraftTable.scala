@@ -1258,9 +1258,8 @@ object GraftTable {
       }
       finally graft.util.AppCleanup.recursiveDelete(stagePath.toFile)
     if (moved.isEmpty) return Nil
-    fileEntries(root, spark.read.schema(df.schema)
-        .option("basePath", s"$root/data")
-        .parquet(moved.map(r => s"$root/$r"): _*),
+    fileEntries(root, ManifestFileIndex.scan(spark, df.schema,
+        moved.map(r => s"$root/$r"), Some(s"$root/data")),
       statsCols, bloomCols, partitioned = true)
   }
 
@@ -3026,6 +3025,14 @@ object GraftTable {
     readEntries(spark, root, m, m.files)
   }
 
+  /** The rows of `files` (entries of manifest `m`) under `m`'s logical
+    * schema: the one read every table verb, time-travel and CDC read,
+    * `readWhere*` and SQL target shares. Files without a deletion vector
+    * scan through [[readPhysical]]; a DV-carrying file list goes through
+    * [[readEntriesWithPos]], which drops the deleted ordinals. Either way
+    * the scan is planned from the manifest entries alone
+    * ([[ManifestFileIndex]]): building the frame lists no directory and
+    * runs no Spark job. */
   private[table] def readEntries(spark: SparkSession, root: String, m: Manifest,
       files: List[FileEntry]): DataFrame = {
     val schema = schemaOf(m)
@@ -3063,7 +3070,14 @@ object GraftTable {
     * from the file — the vectorized scan then presents it as NULL, the
     * same shape an added-after-write column gets. Without the second
     * clause the physical schema would carry DUPLICATE names and the scan
-    * would fail outright on a legal DDL sequence. */
+    * would fail outright on a legal DDL sequence.
+    *
+    * Every epoch's scan is planned from the entries themselves through
+    * [[ManifestFileIndex]] — one `stat` per file, no path resolution,
+    * listing or listing job — never by `spark.read.parquet` of the
+    * manifest's paths. Flat and partitioned tables share that one path:
+    * a partitioned table's index carries `basePath = <root>/data`, so
+    * Spark infers the k=v columns from the files' directories. */
   private def readPhysical(spark: SparkSession, root: String,
       schema: StructType, files: List[FileEntry],
       project: DataFrame => DataFrame = identity,
@@ -3083,26 +3097,24 @@ object GraftTable {
     // not just registered names (the rule is a no-op on other plans)
     if (hidden.nonEmpty) graft.sql.GraftPartPrune.ensure(spark)
     // partitioned tables scan with basePath so Spark's partition
-    // discovery fills the k=v columns and the FileScan carries real
+    // inference fills the k=v columns and the FileScan carries real
     // PartitionFilters; the base is derived per FILE because a shallow
     // clone's borrowed entries live under the SOURCE's data dir
-    def baseOf(f: FileEntry): String =
-      if (partSpec.isEmpty) ""
+    def baseOf(f: FileEntry): Option[String] =
+      if (partSpec.isEmpty) None
       else {
         val full = dataPath(root, f.path)
-        full.substring(0, full.length - relSuffix(full).length) + "data"
+        Some(full.substring(0, full.length - relSuffix(full).length) +
+          "data")
       }
-    def scan(key: (Map[String, String], String),
+    def scan(key: (Map[String, String], Option[String]),
         fs: List[FileEntry]): DataFrame = {
       val (ph, base) = key
       val physData = schema.fields.map(f =>
         ph.get(f.name).map(p => f.copy(name = p)).getOrElse(f))
       val physSchema = StructType(physData ++ hidden)
-      val reader0 = spark.read.schema(physSchema)
-      val reader =
-        if (partSpec.isEmpty) reader0 else reader0.option("basePath", base)
-      val projected = project(
-        reader.parquet(fs.map(f => dataPath(root, f.path)): _*))
+      val projected = project(ManifestFileIndex.scan(spark, physSchema,
+        fs.map(f => dataPath(root, f.path)), base))
       // partition columns come back at the END of the scan output
       // regardless of their declared position — reorder into schema
       // order (plus the projected extras) BEFORE the positional relabel,
@@ -3283,10 +3295,19 @@ object GraftTable {
     * append-only history this is EXACT row-level CDC (appended files hold
     * exactly the appended rows); across a merge the granularity is the
     * rewritten file (its unchanged survivor rows reappear), which is the
-    * standard file-format CDC contract absent row-level delete vectors. */
+    * standard file-format CDC contract absent row-level delete vectors.
+    * `fromSnapshot = 0` is the empty parent (full history, as in
+    * [[changesBetweenRows]]); `fromSnapshot = toSnapshot` is empty. A
+    * reversed range fails: the files of `toSnapshot` missing from a LATER
+    * snapshot are not changes between them. */
   def changesBetween(spark: SparkSession, root: String, fromSnapshot: Int,
       toSnapshot: Int): DataFrame = {
-    val from = manifest(root, fromSnapshot).files.map(_.path).toSet
+    require(fromSnapshot >= 0 && fromSnapshot <= toSnapshot,
+      s"need 0 <= fromSnapshot <= toSnapshot, got $fromSnapshot, " +
+        s"$toSnapshot")
+    val from =
+      if (fromSnapshot == 0) Set.empty[String]
+      else manifest(root, fromSnapshot).files.map(_.path).toSet
     val to = manifest(root, toSnapshot)
     readEntries(spark, root, to, to.files.filterNot(f => from(f.path)))
   }

@@ -20,8 +20,9 @@ import org.apache.spark.sql.util.SchemaUtils
   *     a file writer takes: no round trip through external types.
   *   - `hadoopConf` — the session's Hadoop configuration, the one a
   *     write job starts from.
-  *   - `asNullable` — the schema a file write declares: every field,
-  *     nested ones included, nullable.
+  *   - `asNullable` — the schema a file write declares, and the data
+  *     schema of a file scan ([[graft.table.ManifestFileIndex]]): every
+  *     field, nested ones included, nullable.
   *   - `verifyWriteSchema` — the schema checks a file-format write runs
   *     before any row: empty schemas, duplicate column names, data types
   *     the format does not support, and field names it rejects.
